@@ -5,19 +5,25 @@ import scala.io.Source
 import org.apache.spark.sql.SparkSession
 
 import graft.model.SumRecord
-import graft.service.SumService
+import graft.service.{SumApi, SumGrpcClient, SumService}
 
-/** Interactive/scripted CLI over [[graft.service.SumService]], mirroring
-  * the reference's sumcli verb set (cmd/sumcli/handlers/handlers.go:30-53):
+/** Interactive/scripted CLI over [[graft.service.SumApi]], mirroring the
+  * reference's sumcli verb set (cmd/sumcli/handlers/handlers.go:30-53):
   * info, record CRUD (create/read/update/delete/list/find), oracle
-  * read/find/list plus run, help, quit. Node-management verbs are
-  * intentionally absent: the reference's node membership maps to Spark's
-  * executor lifecycle (SURVEY.md §2.5), not to an API.
+  * create/read/find/list/delete plus run, help, quit. Node-management
+  * verbs are intentionally absent: the reference's node membership maps
+  * to Spark's executor lifecycle (SURVEY.md §2.5), not to an API.
+  *
+  * Locally the verbs drive an in-process [[graft.service.SumService]];
+  * with `--connect host:port` they drive a running [[graft.Serve]] daemon
+  * over gRPC through a [[graft.service.SumGrpcClient]] — the sumcli ->
+  * sumd topology — and print the same JSON.
   *
   * One command per line, pipe-friendly:
   * {{{
   *   echo "create-record 1,2,3 k=v
   *         run 1 1 0.5" | sbt "runMain graft.Cli"
+  *   echo "info" | sbt "runMain graft.Cli --connect 127.0.0.1:8585"
   * }}}
   * Responses print as single-line JSON (the service's response envelopes).
   */
@@ -90,18 +96,22 @@ object Cli {
     case other => other.toString
   }
 
-  def dispatch(svc: SumService, line: String): Option[String] = {
+  def dispatch(svc: SumApi, line: String): Option[String] = {
     val parts = line.trim.split("\\s+").toSeq
     if (parts.isEmpty || parts.head.isEmpty) return Some("")
     try dispatchParsed(svc, parts)
     catch {
+      // A daemon that is down is not a usage error: the client's message
+      // names the address it could not reach.
+      case e: java.io.IOException =>
+        Some(s"""{"success":false,"msg":"${esc(String.valueOf(e.getMessage))}"}""")
       case e: Exception =>
         Some(s"""{"success":false,"msg":"bad arguments for ${parts.head}: ${
           esc(String.valueOf(e.getMessage))} (try help)"}""")
     }
   }
 
-  private def dispatchParsed(svc: SumService, parts: Seq[String]): Option[String] = {
+  private def dispatchParsed(svc: SumApi, parts: Seq[String]): Option[String] = {
     parts.head match {
       case "quit" | "exit" => None
       case "help" => Some(Help)
@@ -120,17 +130,11 @@ object Cli {
         Some(json(svc.listRecords(parts(1).toLong, parts(2).toLong)))
       case "find-records" => Some(json(svc.findRecords(parts(1), parts(2))))
       case "create-oracle" =>
-        // Oracle code is everything after the name — compiled at create
-        // (the reference's CreateOracle(code) contract), dispatched by
-        // language: a JS program runs in the graft.oracle.js interpreter,
-        // anything else is SQL.
-        val code = parts.drop(2).mkString(" ")
-        Some(json(graft.oracle.OracleCompiler.compile(svc.spark, parts(1), code)
-            .flatMap(svc.oracles.create) match {
-          case Left(err) => graft.service.OracleResponse(success = false, err)
-          case Right(o)  => graft.service.OracleResponse(success = true,
-            o.id.toString, Some(o))
-        }))
+        // Oracle code is everything after the name, compiled where it is
+        // stored (the reference's CreateOracle(code) contract): a JS
+        // program runs in the graft.oracle.js interpreter, anything else
+        // is SQL.
+        Some(json(svc.createOracle(parts(1), parts.drop(2).mkString(" "))))
       case "read-oracle" => Some(json(svc.readOracle(parts(1).toLong)))
       case "find-oracle" => Some(json(svc.findOracle(parts(1))))
       case "list-oracles" =>
@@ -142,9 +146,8 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    // Remote mode: `--connect http://host:port` (or SPARK_GRAFT_CONNECT)
-    // speaks to a running graft.Serve daemon over the wire — the sumcli
-    // -> sumd topology — and needs no SparkSession of its own.
+    // `--connect host:port` (or SPARK_GRAFT_CONNECT) speaks to a running
+    // graft.Serve daemon over gRPC and needs no SparkSession of its own.
     val connectIdx = args.indexOf("--connect")
     val connect = if (connectIdx >= 0 && args.length > connectIdx + 1)
       Some(args(connectIdx + 1)) else sys.env.get("SPARK_GRAFT_CONNECT")
@@ -154,16 +157,13 @@ object Cli {
       if (scriptArgs.nonEmpty) Source.fromFile(scriptArgs.head).getLines()
       else Source.stdin.getLines()
 
-    connect match {
-      case Some(base) =>
-        println(s"graft cli — connected to $base; `help` for verbs")
-        var running = true
-        while (running && lines.hasNext) {
-          RemoteCli.dispatch(base, lines.next()) match {
-            case Some(out) => if (out.nonEmpty) println(out)
-            case None => running = false
-          }
-        }
+    val (svc, banner, close) = connect match {
+      case Some(address) =>
+        val i = address.lastIndexOf(':')
+        val port = address.drop(i + 1).toIntOption
+        require(i > 0 && port.isDefined, s"--connect takes host:port, got $address")
+        val client = new SumGrpcClient(address.take(i), port.get)
+        (client, s"connected to $address", () => client.close())
       case None =>
         val spark = SparkSession.builder()
           .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
@@ -172,129 +172,16 @@ object Cli {
           .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
           .getOrCreate()
         spark.sparkContext.setLogLevel("ERROR")
-        val svc = SumService(spark)
-        println("graft cli — canonical oracles registered; `help` for verbs")
-        var running = true
-        while (running && lines.hasNext) {
-          dispatch(svc, lines.next()) match {
-            case Some(out) => if (out.nonEmpty) println(out)
-            case None => running = false
-          }
-        }
-        spark.stop()
+        (SumService(spark), "canonical oracles registered", () => spark.stop())
     }
-  }
-}
-
-/** The same verb set translated to [[graft.service.SumServer]] RPC posts —
-  * sumcli against a running sumd (cmd/sumcli). Responses are the wire
-  * JSON; `run` additionally opens the gzip envelope client-side so the
-  * printed form matches the local CLI's.
-  */
-object RemoteCli {
-  import org.json4s._
-  import org.json4s.jackson.JsonMethods
-
-  private def post(base: String, rpc: String, body: String): String = {
-    val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest.newBuilder(
-        java.net.URI.create(s"$base/$rpc"))
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      .header("Content-Type", "application/json").build()
-    client.send(req,
-      java.net.http.HttpResponse.BodyHandlers.ofString()).body()
-  }
-
-  private def jstr(s: String): String =
-    JsonMethods.compact(JsonMethods.render(JString(s)))
-
-  def dispatch(base: String, line: String): Option[String] = {
-    val parts = line.trim.split("\\s+").toSeq
-    if (parts.isEmpty || parts.head.isEmpty) return Some("")
-    try dispatchParsed(base, parts)
-    catch {
-      // Argument-shape problems report as user error; transport failures
-      // (daemon down, refused connection, timeouts) surface as what they
-      // are — masking them as "bad arguments" sent users to `help` when
-      // the daemon was simply not running.
-      case e @ (_: java.io.IOException | _: InterruptedException) =>
-        Some(s"""{"success":false,"msg":"cannot reach daemon at $base: ${
-          jsonEscape(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))}"}""")
-      case _: NumberFormatException | _: IllegalArgumentException |
-          _: IndexOutOfBoundsException =>
-        Some(s"""{"success":false,"msg":"bad arguments for ${parts.head} (try help)"}""")
+    println(s"graft cli — $banner; `help` for verbs")
+    var running = true
+    while (running && lines.hasNext) {
+      dispatch(svc, lines.next()) match {
+        case Some(out) => if (out.nonEmpty) println(out)
+        case None => running = false
+      }
     }
-  }
-
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def dispatchParsed(base: String, parts: Seq[String]): Option[String] = {
-    def record(dataArg: String, metaArgs: Seq[String], id: Long): String = {
-      val data = dataArg.split(",").filter(_.nonEmpty).map(_.toFloat)
-      val meta = metaArgs.map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"metadata must be k=v, got: $kv")
-        s"${jstr(kv.take(i))}:${jstr(kv.drop(i + 1))}"
-      }.mkString(",")
-      s"""{"id":$id,"data":[${data.mkString(",")}],"meta":{$meta}}"""
-    }
-    parts.head match {
-      case "quit" | "exit" => None
-      case "help" => Some("remote verbs are identical to local ones; see `help` locally")
-      case "info" => Some(post(base, "Info", "{}"))
-      case "create-record" =>
-        Some(post(base, "CreateRecord", record(parts(1), parts.drop(2), 0L)))
-      case "read-record" =>
-        Some(post(base, "ReadRecord", s"""{"id":${parts(1).toLong}}"""))
-      case "update-record" =>
-        Some(post(base, "UpdateRecord",
-          record(parts(2), parts.drop(3), parts(1).toLong)))
-      case "delete-record" =>
-        Some(post(base, "DeleteRecord", s"""{"id":${parts(1).toLong}}"""))
-      case "list-records" =>
-        Some(post(base, "ListRecords",
-          s"""{"page":${parts(1).toLong},"per_page":${parts(2).toLong}}"""))
-      case "find-records" =>
-        Some(post(base, "FindRecords",
-          s"""{"meta":${jstr(parts(1))},"value":${jstr(parts(2))}}"""))
-      case "create-oracle" =>
-        Some(post(base, "CreateOracle",
-          s"""{"name":${jstr(parts(1))},"code":${jstr(parts.drop(2).mkString(" "))}}"""))
-      case "read-oracle" =>
-        Some(post(base, "ReadOracle", s"""{"id":${parts(1).toLong}}"""))
-      case "find-oracle" =>
-        Some(post(base, "FindOracle", s"""{"name":${jstr(parts(1))}}"""))
-      case "list-oracles" =>
-        Some(post(base, "ListOracles",
-          s"""{"page":${parts(1).toLong},"per_page":${parts(2).toLong}}"""))
-      case "delete-oracle" =>
-        Some(post(base, "DeleteOracle", s"""{"id":${parts(1).toLong}}"""))
-      case "run" =>
-        val argsJson = parts.drop(2).map(jstr).mkString(",")
-        val raw = post(base, "Run",
-          s"""{"oracle_id":${parts(1).toLong},"args":[$argsJson]}""")
-        // Open the envelope so the printed form matches the local CLI.
-        val parsed = JsonMethods.parse(raw)
-        val opened = parsed \ "data" match {
-          case JObject(_) =>
-            val compressed = (parsed \ "data" \ "compressed") == JBool(true)
-            val bytes = java.util.Base64.getDecoder.decode(
-              (parsed \ "data" \ "payload").asInstanceOf[JString].s)
-            new String(graft.oracle.Payload.open(
-              graft.oracle.Payload.Envelope(compressed, bytes)), "UTF-8")
-          case _ => "null"
-        }
-        val success = JsonMethods.compact(JsonMethods.render(parsed \ "success"))
-        val msg = JsonMethods.compact(JsonMethods.render(parsed \ "msg"))
-        Some(s"""{"success":$success,"msg":$msg,"data":$opened}""")
-      case other =>
-        Some(s"""{"success":false,"msg":"unknown command: $other (try help)"}""")
-    }
+    close()
   }
 }

@@ -2,17 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.service.{SumGrpcServer, SumServer, SumService}
+import graft.service.{SumGrpcServer, SumService}
 
 /** The daemon entry point — the reference's `sumd` (cmd/sumd/main.go):
   * start a Spark session, stand up [[graft.service.SumService]] with the
-  * canonical oracles registered, and serve the 14 RPC shapes on a socket
-  * until killed. Pair with `graft.Cli --connect http://host:port` for the
-  * sumcli topology.
+  * canonical oracles registered, and serve `sum.SumService` over gRPC on
+  * one loopback port until killed. Pair with
+  * `graft.Cli --connect 127.0.0.1:8585` for the sumcli topology.
   *
   * {{{
   *   sbt "runMain graft.Serve 8585"         # or SPARK_GRAFT_PORT
-  *   echo "info" | sbt "runMain graft.Cli --connect http://127.0.0.1:8585/sum.SumService"
+  *   echo "info" | sbt "runMain graft.Cli --connect 127.0.0.1:8585"
   * }}}
   */
 object Serve {
@@ -27,23 +27,14 @@ object Serve {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val service = SumService(spark)
-    val server = new SumServer(service, port)
-    server.start()
-    // The reference's actual framing, served alongside HTTP+JSON: gRPC +
-    // sum.proto on the next port (SPARK_GRAFT_GRPC_PORT overrides).
     // SPARK_GRAFT_CREDS mirrors sumd's -creds flag (cmd/sumd/main.go:32):
-    // a directory with cert.pem + key.pem; when set, the gRPC socket
-    // serves TLS.
+    // a directory with cert.pem + key.pem; when set, the socket serves TLS.
     val creds = sys.env.get("SPARK_GRAFT_CREDS")
-    val grpcServer = new SumGrpcServer(service,
-      sys.env.get("SPARK_GRAFT_GRPC_PORT").map(_.toInt).getOrElse(port + 1),
-      creds)
-    grpcServer.start()
-    println(s"graft serving at ${server.baseUrl} " +
-      s"(grpc: 127.0.0.1:${grpcServer.boundPort}" +
-      creds.map(c => s", tls creds $c").getOrElse("") + ")")
-    sys.addShutdownHook { grpcServer.stop(); server.stop(); spark.stop() }
+    val server = new SumGrpcServer(SumService(spark), port, creds)
+    server.start()
+    println(s"graft serving sum.SumService at 127.0.0.1:${server.boundPort}" +
+      creds.map(c => s" (tls creds $c)").getOrElse(""))
+    sys.addShutdownHook { server.stop(); spark.stop() }
     Thread.currentThread.join()
   }
 }

@@ -80,19 +80,20 @@ object Merge {
       case None => defaultMerger(results)
     }
 
-  /** First non-finite double anywhere in a result tree — JSON cannot
-    * carry NaN/Inf, so marshaling fails like Go's encoding/json does on
+  /** The marshal error for a result JSON cannot carry: the first NaN or
+    * infinity anywhere in the tree fails like Go's encoding/json does on
     * the reference node (service_test.go:677-684).
     */
-  private[oracle] def firstNonFinite(v: JValue): Option[Double] = v match {
+  def unsupportedValue(v: JValue): Option[String] =
+    firstNonFinite(v).map(d => "json: unsupported value: " +
+      (if (d.isNaN) "NaN" else if (d > 0) "+Inf" else "-Inf"))
+
+  private def firstNonFinite(v: JValue): Option[Double] = v match {
     case JDouble(d) if d.isNaN || d.isInfinite => Some(d)
     case JArray(xs)  => xs.iterator.flatMap(firstNonFinite).nextOption()
     case JObject(fs) => fs.iterator.map(_._2).flatMap(firstNonFinite).nextOption()
     case _ => None
   }
-
-  private[oracle] def nonFiniteRepr(d: Double): String =
-    if (d.isNaN) "NaN" else if (d > 0) "+Inf" else "-Inf"
 
   private def render(v: JValue): String = v match {
     case JString(s)  => s

@@ -125,13 +125,6 @@ final class OracleRegistry {
 
   def size: Int = synchronized(oracles.size)
 
-  /** Execute by id with JSON-encoded args, mirroring the node's Run path
-    * (node/service/compiled.go:44-99): decode each arg (missing -> null),
-    * run the body, fail on ctx.Error or thrown errors, return the result
-    * JSON text.
-    */
-  private def firstNonFinite(v: JValue): Option[Double] = graft.oracle.Merge.firstNonFinite(v)
-
   /** JSON-decode positional args; missing -> null (compiled.go:53-77). */
   private def decodeArgs(oracle: Oracle,
       jsonArgs: Seq[String]): Either[String, Seq[JValue]] = {
@@ -166,18 +159,17 @@ final class OracleRegistry {
         case Some(code) =>
           decodeArgs(oracle, jsonArgs).flatMap { decoded =>
             graft.oracle.js.JsOracle.runDistributed(id, code, store, decoded)
-              .flatMap { merged =>
-                graft.oracle.Merge.firstNonFinite(merged) match {
-                  case Some(d) =>
-                    Left(s"json: unsupported value: ${graft.oracle.Merge.nonFiniteRepr(d)}")
-                  case None =>
-                    Right(JsonMethods.compact(JsonMethods.render(merged)))
-                }
-              }
+              .flatMap(merged => graft.oracle.Merge.unsupportedValue(merged)
+                .toLeft(JsonMethods.compact(JsonMethods.render(merged))))
           }
       }
     }
 
+  /** Execute by id with JSON-encoded args, mirroring the node's Run path
+    * (node/service/compiled.go:44-99): decode each arg (missing -> null),
+    * run the body, fail on ctx.Error or thrown errors, return the result
+    * JSON text.
+    */
   def run(id: Long, store: RecordStore, jsonArgs: Seq[String]): Either[String, String] = {
     read(id).flatMap { oracle =>
       val decoded = decodeArgs(oracle, jsonArgs) match {
@@ -188,14 +180,8 @@ final class OracleRegistry {
       try {
         val result = oracle.body(ctx, store, decoded)
         if (ctx.isError) Left(ctx.message)
-        else firstNonFinite(result) match {
-          // JSON cannot carry NaN/Inf; the reference surfaces Go's
-          // encoding/json error verbatim (service_test.go:677-684).
-          case Some(d) =>
-            val repr = if (d.isNaN) "NaN" else if (d > 0) "+Inf" else "-Inf"
-            Left(s"json: unsupported value: $repr")
-          case None => Right(JsonMethods.compact(JsonMethods.render(result)))
-        }
+        else graft.oracle.Merge.unsupportedValue(result)
+          .toLeft(JsonMethods.compact(JsonMethods.render(result)))
       } catch {
         case OracleRunError(msg)    => Left(msg)
         case OracleBudgetError(msg) => Left(msg)

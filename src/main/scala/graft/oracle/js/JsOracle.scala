@@ -175,20 +175,14 @@ object JsOracle {
       // interpreter's bit for bit. A tripped guard (a row the
       // interpreter would error on) falls through to the interpreter so
       // the error surfaces with the reference wording.
-      // GRAFT_JS_NO_TRANSPILE forces the interpreter for A/B runs and
-      // the cross-check specs.
-      val transpiled =
-        if (sys.env.contains("GRAFT_JS_NO_TRANSPILE")) None
-        else JsCatalyst.tryCompile(c)
-          .flatMap(p => JsCatalyst.run(p, store))
-      transpiled match {
+      JsCatalyst.tryCompile(c).flatMap(p => JsCatalyst.run(p, store)) match {
         case Some(partials) => graft.oracle.Merge.merge(partials, buildMerger(c))
         case None           => runInterpreted(id, c, store, args)
       }
     }
 
   /** private[graft] so JsCatalystSpec can pin transpiled == interpreted
-    * on the same stores without an env-var round trip.
+    * on the same stores.
     */
   private[graft] def runInterpreted(id: Long, c: Compiled, store: RecordStore,
       args: Seq[JValue]): Either[String, JValue] = {
@@ -243,9 +237,8 @@ object JsOracle {
               if (ctx.isError) (false, ctx.message)
               else {
                 val json = JsInterp.toJson(result)
-                graft.oracle.Merge.firstNonFinite(json) match {
-                  case Some(d) => (false, "json: unsupported value: " +
-                    graft.oracle.Merge.nonFiniteRepr(d))
+                graft.oracle.Merge.unsupportedValue(json) match {
+                  case Some(err) => (false, err)
                   case None => (true, org.json4s.jackson.JsonMethods.compact(
                     org.json4s.jackson.JsonMethods.render(json)))
                 }

@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.json4s.JValue
 
+import graft.EngineInfo
 import graft.model.SumRecord
 import graft.oracle.{Merge, Oracle, OracleRegistry, Payload}
 
@@ -61,155 +62,45 @@ final class LocalEngine(val service: SumService) extends NodeEngine {
   def nodeOracles(): Seq[NodeEngine.NodeOracle] =
     service.oracles.list(1, 1000000L)._3.map(o =>
       NodeEngine.NodeOracle(o.id, o.name, o.code, Some(o)))
+  /** Registers the compiled oracle itself: an in-process node needs no
+    * source, so code-less programmatic oracles scatter too.
+    */
   def createOracle(o: Oracle): OracleResponse =
-    service.createOracle(o.copy(id = 0))
+    SumApi.stored(service.oracles.create(o.copy(id = 0)))
   def deleteOracle(id: Long): Unit = { service.deleteOracle(id); () }
   def run(oracleId: Long, args: Seq[String]): CallResponse =
     service.run(oracleId, args)
 }
 
-/** Remote node over the real gRPC wire — every call below is one unary
-  * exchange of sum.proto dynamic messages on the node's socket, the
-  * faces the reference master drives (Client for the public service,
+/** Remote node over the real gRPC wire — every call is one unary
+  * exchange on the node's socket through its [[SumGrpcClient]], the faces
+  * the reference master drives (Client for the public service,
   * InternalClient for with-id placement; master/node.go:24-78).
   */
 final class GrpcEngine(client: SumGrpcClient) extends NodeEngine {
-  import org.sparkproject.connect.protobuf.DynamicMessage
-  import SumProto._
-
-  private def empty = client.newMessage("Empty").build()
-  private def byId(id: Long): DynamicMessage = {
-    val b = client.newMessage("ById")
-    b.setField(b.getDescriptorForType.findFieldByName("id"),
-      java.lang.Long.valueOf(id))
-    b.build()
-  }
-  private def info(): DynamicMessage = client.call("Info", empty)
-
-  def records: Long = getLong(info(), "records")
-  def nextRecordId: Long = getLong(info(), "next_record_id")
-
-  def listRecords(page: Long, perPage: Long): Seq[SumRecord] = {
-    val b = client.newMessage("ListRequest")
-    val d = b.getDescriptorForType
-    b.setField(d.findFieldByName("page"), java.lang.Long.valueOf(page))
-    b.setField(d.findFieldByName("per_page"), java.lang.Long.valueOf(perPage))
-    val resp = client.call("ListRecords", b.build())
-    import scala.jdk.CollectionConverters._
-    resp.getField(resp.getDescriptorForType.findFieldByName("records"))
-      .asInstanceOf[java.util.List[_]].asScala.toSeq
-      .map(m => protoToRecord(m.asInstanceOf[DynamicMessage]))
-  }
-
-  private def recordResp(m: DynamicMessage): RecordResponse = {
-    val d = m.getDescriptorForType
-    val rec =
-      if (m.hasField(d.findFieldByName("record")))
-        Some(protoToRecord(m.getField(d.findFieldByName("record"))
-          .asInstanceOf[DynamicMessage]))
-      else None
-    RecordResponse(
-      m.getField(d.findFieldByName("success")).asInstanceOf[Boolean],
-      getString(m, "msg"), rec)
-  }
-
-  def createRecordWithId(r: SumRecord): RecordResponse =
-    recordResp(client.call("CreateRecordWithId", recordToProto(r)))
-
-  def createRecordsWithId(recs: Seq[SumRecord]): RecordResponse = {
-    val b = client.newMessage("Records")
-    val f = b.getDescriptorForType.findFieldByName("records")
-    recs.foreach(r => b.addRepeatedField(f, recordToProto(r)))
-    recordResp(client.call("CreateRecordsWithId", b.build()))
-  }
-
-  def deleteRecords(ids: Seq[Long]): Unit = {
-    val b = client.newMessage("RecordIds")
-    val f = b.getDescriptorForType.findFieldByName("ids")
-    ids.foreach(id => b.addRepeatedField(f, java.lang.Long.valueOf(id)))
-    client.call("DeleteRecords", b.build())
-    ()
-  }
-
-  def readRecord(id: Long): RecordResponse =
-    recordResp(client.call("ReadRecord", byId(id)))
-  def updateRecord(r: SumRecord): RecordResponse =
-    recordResp(client.call("UpdateRecord", recordToProto(r)))
-  def deleteRecord(id: Long): RecordResponse =
-    recordResp(client.call("DeleteRecord", byId(id)))
-
-  def findRecords(meta: String, value: String): FindResponse = {
-    val b = client.newMessage("ByMeta")
-    val d = b.getDescriptorForType
-    b.setField(d.findFieldByName("meta"), meta)
-    b.setField(d.findFieldByName("value"), value)
-    val m = client.call("FindRecords", b.build())
-    import scala.jdk.CollectionConverters._
-    val md = m.getDescriptorForType
-    FindResponse(
-      m.getField(md.findFieldByName("success")).asInstanceOf[Boolean],
-      getString(m, "msg"),
-      m.getField(md.findFieldByName("records"))
-        .asInstanceOf[java.util.List[_]].asScala.toSeq
-        .map(r => protoToRecord(r.asInstanceOf[DynamicMessage])))
-  }
-
-  def nodeOracles(): Seq[NodeEngine.NodeOracle] = {
-    val b = client.newMessage("ListRequest")
-    val d = b.getDescriptorForType
-    b.setField(d.findFieldByName("page"), java.lang.Long.valueOf(1L))
-    b.setField(d.findFieldByName("per_page"), java.lang.Long.valueOf(1000000L))
-    val m = client.call("ListOracles", b.build())
-    import scala.jdk.CollectionConverters._
-    m.getField(m.getDescriptorForType.findFieldByName("oracles"))
-      .asInstanceOf[java.util.List[_]].asScala.toSeq.map { om =>
-        val o = om.asInstanceOf[DynamicMessage]
-        val code = getString(o, "code")
-        NodeEngine.NodeOracle(getLong(o, "id"), getString(o, "name"),
-          if (code.isEmpty) None else Some(code), None)
-      }
-  }
-
+  def records: Long = client.info().records
+  def nextRecordId: Long = client.info().nextRecordId
+  def listRecords(page: Long, perPage: Long): Seq[SumRecord] =
+    client.listRecords(page, perPage).records
+  def createRecordWithId(r: SumRecord): RecordResponse = client.createRecordWithId(r)
+  def createRecordsWithId(recs: Seq[SumRecord]): RecordResponse =
+    client.createRecordsWithId(recs)
+  def deleteRecords(ids: Seq[Long]): Unit = { client.deleteRecords(ids); () }
+  def readRecord(id: Long): RecordResponse = client.readRecord(id)
+  def updateRecord(r: SumRecord): RecordResponse = client.updateRecord(r)
+  def deleteRecord(id: Long): RecordResponse = client.deleteRecord(id)
+  def findRecords(meta: String, value: String): FindResponse =
+    client.findRecords(meta, value)
+  def nodeOracles(): Seq[NodeEngine.NodeOracle] =
+    client.listOracles(1, 1000000L).oracles.map(o =>
+      NodeEngine.NodeOracle(o.id, o.name, o.code, None))
   def createOracle(o: Oracle): OracleResponse = o.code match {
     case None => OracleResponse(success = false,
       s"oracle ${o.name} has no source to send over the wire")
-    case Some(code) =>
-      val b = client.newMessage("Oracle")
-      val d = b.getDescriptorForType
-      b.setField(d.findFieldByName("name"), o.name)
-      b.setField(d.findFieldByName("code"), code)
-      val m = client.call("CreateOracle", b.build())
-      OracleResponse(
-        m.getField(m.getDescriptorForType.findFieldByName("success"))
-          .asInstanceOf[Boolean],
-        getString(m, "msg"), None)
+    case Some(code) => client.createOracle(o.name, code)
   }
-
-  def deleteOracle(id: Long): Unit = { client.call("DeleteOracle", byId(id)); () }
-
-  def run(oracleId: Long, args: Seq[String]): CallResponse = {
-    val b = client.newMessage("Call")
-    val d = b.getDescriptorForType
-    b.setField(d.findFieldByName("oracle_id"), java.lang.Long.valueOf(oracleId))
-    args.foreach(a => b.addRepeatedField(d.findFieldByName("args"), a))
-    val m = client.call("Run", b.build())
-    val md = m.getDescriptorForType
-    val env =
-      if (m.hasField(md.findFieldByName("data"))) {
-        val dm = m.getField(md.findFieldByName("data"))
-          .asInstanceOf[DynamicMessage]
-        val dd = dm.getDescriptorForType
-        Some(Payload.Envelope(
-          dm.getField(dd.findFieldByName("compressed")).asInstanceOf[Boolean],
-          dm.getField(dd.findFieldByName("payload"))
-            .asInstanceOf[org.sparkproject.connect.protobuf.ByteString]
-            .toByteArray))
-      } else None
-    CallResponse(
-      m.getField(md.findFieldByName("success")).asInstanceOf[Boolean],
-      getString(m, "msg"), env)
-  }
-
+  def deleteOracle(id: Long): Unit = { client.deleteOracle(id); () }
+  def run(oracleId: Long, args: Seq[String]): CallResponse = client.run(oracleId, args)
   override def close(): Unit = client.close()
 }
 
@@ -238,15 +129,20 @@ final class GrpcEngine(client: SumGrpcClient) extends NodeEngine {
   *  - `run` is the master Run pipeline (mux_runner.go:39-156): temp
   *    oracle on every node, gather, per-node failures as
   *    "Errors from nodes: [...]", merge via the stored `merge*` hook or
-  *    the tri-state default, temporaries deleted on every path.
+  *    the tri-state default, temporaries deleted on every path;
+  *  - the oracle CRUD of [[SumApi]] runs over the cage; `info` reports
+  *    the federation's record total, cage size and id watermark.
   *
-  * `compileFn` compiles absorbed/authored source on the master (the
-  * gRPC binding passes OracleCompiler.compile over its SparkSession; the
-  * default compiles the JS dialect, which is all the reference knows).
+  * `compileFn` compiles absorbed/authored source on the master (a master
+  * over a SparkSession passes OracleCompiler.compile; the default
+  * compiles the JS dialect, which is all the reference knows).
   */
 final class SumFederation(
     compileFn: (String, String) => Either[String, Oracle] =
-      (n, c) => graft.oracle.js.JsOracle.compile(n, c)) {
+      (n, c) => graft.oracle.js.JsOracle.compile(n, c)) extends RegistryOracles {
+
+  protected def compile(name: String, code: String): Either[String, Oracle] =
+    compileFn(name, code)
 
   final class FedNode(val id: Long, val name: String, val engine: NodeEngine) {
     /** Cached record count — the reference's NodeInfo.status.Records
@@ -315,12 +211,22 @@ final class SumFederation(
     }
 
   private val nodes = ArrayBuffer.empty[FedNode]
+  /** Numbers each Run's node temporaries. */
+  private val runSeq = new java.util.concurrent.atomic.AtomicLong
   private var nextNodeId = 1L
   private var nextRecId = 1L
 
   def listNodes(): Seq[FedNode] = synchronized(nodes.toSeq)
   def nextRecordId: Long = synchronized(nextRecId)
   def totalRecords: Long = listNodes().map(_.records).sum
+
+  /** Info for the master: the engine fields hold the federation's record
+    * total (cached node statuses), cage size and id watermark; a master
+    * runs no Spark jobs of its own.
+    */
+  def info(): EngineInfo = EngineInfo(EngineInfo.Version,
+    Runtime.getRuntime.availableProcessors(), totalRecords, oracles.size.toLong,
+    nextRecordId, org.apache.spark.SPARK_VERSION, activeJobs = 0, executors = 0)
 
   /** The NodeUpdater poll body (master/mux_service.go:100-108): refresh
     * every node's cached status, concurrently.
@@ -651,9 +557,12 @@ final class SumFederation(
         s"oracle $oracleId not found.", None)
       case Right(o) => o
     }
+    // Each Run's temporary carries a name no other Run uses, so concurrent
+    // Runs of the same oracle and arguments never collide with a node's
+    // duplicate rule (same name + same code or body).
     val distributed = resolveAndPatch(oracle, jsonArgs) match {
       case Left(err) => return err
-      case Right(o)  => o
+      case Right(o)  => o.copy(name = s"${o.name}#run${runSeq.incrementAndGet()}")
     }
     val snapshot = listNodes()
     // scatter concurrently (mux_runner.go:136 doParallel): each worker

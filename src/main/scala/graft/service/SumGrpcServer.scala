@@ -4,19 +4,20 @@ import java.net.InetSocketAddress
 
 import scala.jdk.CollectionConverters._
 
-import org.sparkproject.connect.grpc.{CallOptions, MethodDescriptor, ServerServiceDefinition, Status}
+import org.sparkproject.connect.grpc.{CallOptions, MethodDescriptor, ServerServiceDefinition, Status, StatusRuntimeException}
 import org.sparkproject.connect.grpc.netty.{GrpcSslContexts, NettyChannelBuilder, NettyServerBuilder}
 import org.sparkproject.connect.grpc.stub.{ClientCalls, ServerCalls, StreamObserver}
 import org.sparkproject.connect.protobuf.{ByteString, DescriptorProtos, Descriptors, DynamicMessage}
 
+import graft.EngineInfo
 import graft.model.SumRecord
-import graft.oracle.{Oracle, Payload, SqlOracle}
+import graft.oracle.{Oracle, OracleRunError, Payload}
 
-/** The reference's ACTUAL wire protocol: `sum.SumService` over gRPC +
-  * protobuf (proto/sum.proto:5-25; served by sumd, cmd/sumd/main.go:
-  * 100-121) — so a stock protobuf client speaking sum.proto connects to
-  * this engine directly, closing the one surface gap the HTTP+JSON binding
-  * ([[SumServer]]) left open.
+/** The reference's wire protocol: `sum.SumService` over gRPC + protobuf
+  * (proto/sum.proto:5-25; served by sumd, cmd/sumd/main.go:100-121) — so
+  * a stock protobuf client speaking sum.proto connects to this engine
+  * directly. It is graft's one transport: [[SumGrpcServer]] serves it,
+  * [[SumGrpcClient]] speaks it.
   *
   * No protobuf toolchain ships in this container, so nothing is generated:
   * the message types are DECLARED at runtime (a `FileDescriptorProto`
@@ -33,9 +34,10 @@ import graft.oracle.{Oracle, Payload, SqlOracle}
   * ride the gzip-over-2KiB `Data` envelope (node/service/service.go:
   * 106-124), and errors are `{success:false, msg}` RESPONSES with the
   * store's exact strings, never gRPC status errors — matching the
-  * reference's error-as-response contract. `CreateOracle` code is SQL
-  * (compile-at-create, [[SqlOracle]]) instead of JavaScript — the same
-  * deliberate surface change as the HTTP binding (SURVEY.md §7.4.2).
+  * reference's error-as-response contract. `CreateOracle` code is the
+  * reference's JavaScript or, as a deliberate extension, SQL
+  * (SURVEY.md §7.4.2); both compile at create
+  * ([[graft.oracle.OracleCompiler]]).
   */
 object SumProto {
 
@@ -254,6 +256,40 @@ object SumProto {
     m.getField(m.getDescriptorForType.findFieldByName(name))
       .asInstanceOf[java.util.List[_]].asScala.toSeq.map(_.asInstanceOf[String])
 
+  def getBool(m: DynamicMessage, name: String): Boolean =
+    m.getField(m.getDescriptorForType.findFieldByName(name))
+      .asInstanceOf[java.lang.Boolean].booleanValue
+
+  /** A message-typed field, None when unset. */
+  def getMessage(m: DynamicMessage, name: String): Option[DynamicMessage] = {
+    val f = m.getDescriptorForType.findFieldByName(name)
+    if (m.hasField(f)) Some(m.getField(f).asInstanceOf[DynamicMessage]) else None
+  }
+
+  def getMessages(m: DynamicMessage, name: String): Seq[DynamicMessage] =
+    m.getField(m.getDescriptorForType.findFieldByName(name))
+      .asInstanceOf[java.util.List[_]].asScala.toSeq
+      .map(_.asInstanceOf[DynamicMessage])
+
+  /** A `name` message with the given fields set: a Seq fills a repeated
+    * field, an Option sets its field only when defined, and Scala
+    * primitives box to the Java types the protobuf runtime expects (uint64
+    * fields take Longs).
+    */
+  def build(name: String, fields: (String, Any)*): DynamicMessage = {
+    val d = descriptor(name)
+    val b = DynamicMessage.newBuilder(d)
+    fields.foreach { case (f, v) =>
+      val fd = d.findFieldByName(f)
+      v match {
+        case xs: Seq[_] => xs.foreach(x => b.addRepeatedField(fd, x.asInstanceOf[AnyRef]))
+        case o: Option[_] => o.foreach(x => b.setField(fd, x.asInstanceOf[AnyRef]))
+        case x => b.setField(fd, x.asInstanceOf[AnyRef])
+      }
+    }
+    b.build()
+  }
+
   // ---- model <-> proto -----------------------------------------------------
 
   def recordToProto(r: SumRecord): DynamicMessage = {
@@ -291,20 +327,53 @@ object SumProto {
     SumRecord(getLong(m, "id"), data, shape, meta)
   }
 
-  def oracleToProto(o: Oracle): DynamicMessage = {
-    val d = descriptor("Oracle")
-    DynamicMessage.newBuilder(d)
-      .setField(d.findFieldByName("id"), java.lang.Long.valueOf(o.id))
-      .setField(d.findFieldByName("name"), o.name)
-      .setField(d.findFieldByName("code"), o.code.getOrElse(""))
-      .build()
+  def oracleToProto(o: Oracle): DynamicMessage =
+    build("Oracle", "id" -> o.id, "name" -> o.name, "code" -> o.code.getOrElse(""))
+
+  /** A wire `Oracle` as the model type: id, name and source (empty code
+    * reads as none). The wire carries no body, so this oracle runs only
+    * on the server that stores it, through `Run`.
+    */
+  def protoToOracle(m: DynamicMessage): Oracle = {
+    val name = getString(m, "name")
+    Oracle(getLong(m, "id"), name, Seq.empty,
+      (_, _, _) => throw OracleRunError(s"oracle $name runs on its server"),
+      code = Some(getString(m, "code")).filter(_.nonEmpty))
   }
+
+  /** ServerInfo from the engine snapshot. */
+  def infoToProto(i: EngineInfo): DynamicMessage =
+    build("ServerInfo", "version" -> i.version,
+      "os" -> sys.props.getOrElse("os.name", ""),
+      "arch" -> sys.props.getOrElse("os.arch", ""),
+      "cpus" -> i.cpus.toLong, "max_cpus" -> i.cpus.toLong,
+      "pid" -> ProcessHandle.current().pid(),
+      "records" -> i.records, "oracles" -> i.oracles,
+      "backend" -> s"spark-${i.sparkVersion}",
+      "next_record_id" -> i.nextRecordId)
+
+  /** The engine snapshot back from ServerInfo; the Spark status-tracker
+    * counts do not cross the wire.
+    */
+  def protoToInfo(m: DynamicMessage): EngineInfo =
+    EngineInfo(getString(m, "version"), getLong(m, "cpus").toInt,
+      getLong(m, "records"), getLong(m, "oracles"), getLong(m, "next_record_id"),
+      getString(m, "backend").stripPrefix("spark-"), activeJobs = 0, executors = 0)
 }
 
-/** gRPC binding of [[SumService]] on a loopback Netty socket — see
-  * [[SumProto]] for the wire contract. Port 0 binds an ephemeral port
-  * (read it back from [[boundPort]]), matching [[SumServer]]'s lifecycle
-  * API so the daemon can serve both transports side by side.
+
+/** gRPC server on a loopback Netty socket — see [[SumProto]] for the wire
+  * contract. Port 0 binds an ephemeral port (read it back from
+  * [[boundPort]]).
+  *
+  * One `sum.SumService` handler table serves either face of the
+  * reference's sumd: over `service` alone the server is a single engine;
+  * with a `federation` it is a MASTER (cmd/sumd in master mode) whose
+  * record CRUD routes to nodes, whose oracle surface is the federation
+  * cage, and whose Run is the distributed scatter-merge. The internal
+  * service (with-id placement) always answers from `service`; the
+  * master service (node membership) from the federation when there is
+  * one.
   *
   * `credsPath` mirrors sumd's `-creds` flag (cmd/sumd/main.go:32,217-219):
   * a directory holding `cert.pem` + `key.pem`; when set, the socket serves
@@ -314,13 +383,6 @@ object SumProto {
   */
 final class SumGrpcServer(val service: SumService, port: Int = 0,
     credsPath: Option[String] = None,
-    /** When set, this server is a MASTER (reference cmd/sumd in master
-      * mode): node-membership RPCs attach/detach real engines through
-      * the federation, record CRUD routes to nodes, the oracle surface
-      * is the federation cage, and Run is the distributed scatter-merge.
-      * Absent (the default), the server is a single engine and behaves
-      * exactly as before.
-      */
     federation: Option[SumFederation] = None) {
 
   import SumProto._
@@ -328,114 +390,65 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
   /** grpc.MaxRecvMsgSize in sumd — 50 MiB (cmd/sumd/main.go:104-108). */
   val MaxMessageBytes: Int = 50 * 1024 * 1024
 
-  private def b(v: Boolean): java.lang.Boolean = java.lang.Boolean.valueOf(v)
-  private def l(v: Long): java.lang.Long = java.lang.Long.valueOf(v)
+  private val api: SumApi = federation.getOrElse(service)
 
-  private def recordResponse(r: RecordResponse): DynamicMessage = {
-    val d = descriptor("RecordResponse")
-    val mb = DynamicMessage.newBuilder(d)
-      .setField(d.findFieldByName("success"), b(r.success))
-      .setField(d.findFieldByName("msg"), r.msg)
-    r.record.foreach(rec =>
-      mb.setField(d.findFieldByName("record"), recordToProto(rec)))
-    mb.build()
+  private def recordResponse(r: RecordResponse): DynamicMessage =
+    build("RecordResponse", "success" -> r.success, "msg" -> r.msg,
+      "record" -> r.record.map(recordToProto))
+
+  private def oracleResponse(r: OracleResponse): DynamicMessage =
+    build("OracleResponse", "success" -> r.success, "msg" -> r.msg,
+      "oracle" -> r.oracle.map(oracleToProto))
+
+  private def nodeResponse(r: NodeResponse): DynamicMessage =
+    build("NodeResponse", "success" -> r.success, "msg" -> r.msg,
+      "nodes" -> r.nodes.map(n => build("Node", "id" -> n.id, "name" -> n.name)))
+
+  /** ListRequest paging; proto3 zero means unset: page 1, 10 per page. */
+  private def paged(m: DynamicMessage): (Long, Long) = {
+    val page = getLong(m, "page"); val perPage = getLong(m, "per_page")
+    (if (page == 0) 1 else page, if (perPage == 0) 10 else perPage)
   }
 
-  private def oracleResponse(r: OracleResponse): DynamicMessage = {
-    val d = descriptor("OracleResponse")
-    val mb = DynamicMessage.newBuilder(d)
-      .setField(d.findFieldByName("success"), b(r.success))
-      .setField(d.findFieldByName("msg"), r.msg)
-    r.oracle.foreach(o => mb.setField(d.findFieldByName("oracle"), oracleToProto(o)))
-    mb.build()
-  }
-
-  private def compileOracle(m: DynamicMessage): Either[DynamicMessage, Oracle] =
-    graft.oracle.OracleCompiler.compile(
-      service.spark, getString(m, "name"), getString(m, "code"))
-      .left.map(msg => oracleResponse(OracleResponse(success = false, msg)))
-
-  /** RPC name -> handler. Same dispatch semantics as the HTTP binding —
-    * notably errors stay error RESPONSES ({success:false, msg}), and
-    * oracle code compiles at create.
+  /** RPC name -> handler: errors stay error RESPONSES ({success:false,
+    * msg}), and oracle code compiles at create.
     */
   private val handlers: Map[String, DynamicMessage => DynamicMessage] = Map(
-    "CreateRecord" -> (m => recordResponse(service.createRecord(protoToRecord(m)))),
-    "UpdateRecord" -> (m => recordResponse(service.updateRecord(protoToRecord(m)))),
-    "ReadRecord" -> (m => recordResponse(service.readRecord(getLong(m, "id")))),
-    "DeleteRecord" -> (m => recordResponse(service.deleteRecord(getLong(m, "id")))),
+    "CreateRecord" -> (m => recordResponse(api.createRecord(protoToRecord(m)))),
+    "UpdateRecord" -> (m => recordResponse(api.updateRecord(protoToRecord(m)))),
+    "ReadRecord" -> (m => recordResponse(api.readRecord(getLong(m, "id")))),
+    "DeleteRecord" -> (m => recordResponse(api.deleteRecord(getLong(m, "id")))),
     "ListRecords" -> { m =>
-      val page = getLong(m, "page"); val perPage = getLong(m, "per_page")
-      val p = service.listRecords(if (page == 0) 1 else page,
-        if (perPage == 0) 10 else perPage)
-      val d = descriptor("RecordListResponse")
-      val mb = DynamicMessage.newBuilder(d)
-        .setField(d.findFieldByName("total"), l(p.total))
-        .setField(d.findFieldByName("pages"), l(p.pages))
-      val f = d.findFieldByName("records")
-      p.records.foreach(r => mb.addRepeatedField(f, recordToProto(r)))
-      mb.build()
+      val (page, perPage) = paged(m)
+      val p = api.listRecords(page, perPage)
+      build("RecordListResponse", "total" -> p.total, "pages" -> p.pages,
+        "records" -> p.records.map(recordToProto))
     },
     "FindRecords" -> { m =>
-      val r = service.findRecords(getString(m, "meta"), getString(m, "value"))
-      val d = descriptor("FindResponse")
-      val mb = DynamicMessage.newBuilder(d)
-        .setField(d.findFieldByName("success"), b(r.success))
-        .setField(d.findFieldByName("msg"), r.msg)
-      val f = d.findFieldByName("records")
-      r.records.foreach(rec => mb.addRepeatedField(f, recordToProto(rec)))
-      mb.build()
+      val r = api.findRecords(getString(m, "meta"), getString(m, "value"))
+      build("FindResponse", "success" -> r.success, "msg" -> r.msg,
+        "records" -> r.records.map(recordToProto))
     },
-    "CreateOracle" -> (m => compileOracle(m).fold(identity,
-      o => oracleResponse(service.createOracle(o)))),
-    "UpdateOracle" -> (m => compileOracle(m).fold(identity,
-      o => oracleResponse(service.updateOracle(o.copy(id = getLong(m, "id")))))),
-    "ReadOracle" -> (m => oracleResponse(service.readOracle(getLong(m, "id")))),
-    "DeleteOracle" -> (m => oracleResponse(service.deleteOracle(getLong(m, "id")))),
-    "FindOracle" -> (m => oracleResponse(service.findOracle(getString(m, "name")))),
+    "CreateOracle" -> (m => oracleResponse(
+      api.createOracle(getString(m, "name"), getString(m, "code")))),
+    "UpdateOracle" -> (m => oracleResponse(api.updateOracle(
+      getLong(m, "id"), getString(m, "name"), getString(m, "code")))),
+    "ReadOracle" -> (m => oracleResponse(api.readOracle(getLong(m, "id")))),
+    "DeleteOracle" -> (m => oracleResponse(api.deleteOracle(getLong(m, "id")))),
+    "FindOracle" -> (m => oracleResponse(api.findOracle(getString(m, "name")))),
     "ListOracles" -> { m =>
-      val page = getLong(m, "page"); val perPage = getLong(m, "per_page")
-      val r = service.listOracles(if (page == 0) 1 else page,
-        if (perPage == 0) 10 else perPage)
-      val d = descriptor("OracleListResponse")
-      val mb = DynamicMessage.newBuilder(d)
-        .setField(d.findFieldByName("total"), l(r.total))
-        .setField(d.findFieldByName("pages"), l(r.pages))
-      val f = d.findFieldByName("oracles")
-      r.oracles.foreach(o => mb.addRepeatedField(f, SumProto.oracleToProto(o)))
-      mb.build()
+      val (page, perPage) = paged(m)
+      val r = api.listOracles(page, perPage)
+      build("OracleListResponse", "total" -> r.total, "pages" -> r.pages,
+        "oracles" -> r.oracles.map(oracleToProto))
     },
     "Run" -> { m =>
-      val r = service.run(getLong(m, "oracle_id"), getStrings(m, "args"))
-      val d = descriptor("CallResponse")
-      val mb = DynamicMessage.newBuilder(d)
-        .setField(d.findFieldByName("success"), b(r.success))
-        .setField(d.findFieldByName("msg"), r.msg)
-      r.data.foreach { env =>
-        val dd = descriptor("Data")
-        mb.setField(d.findFieldByName("data"), DynamicMessage.newBuilder(dd)
-          .setField(dd.findFieldByName("compressed"), b(env.compressed))
-          .setField(dd.findFieldByName("payload"), ByteString.copyFrom(env.payload))
-          .build())
-      }
-      mb.build()
+      val r = api.run(getLong(m, "oracle_id"), getStrings(m, "args"))
+      build("CallResponse", "success" -> r.success, "msg" -> r.msg,
+        "data" -> r.data.map(env => build("Data", "compressed" -> env.compressed,
+          "payload" -> ByteString.copyFrom(env.payload))))
     },
-    "Info" -> { _ =>
-      val i = service.info()
-      val d = descriptor("ServerInfo")
-      DynamicMessage.newBuilder(d)
-        .setField(d.findFieldByName("version"), i.version)
-        .setField(d.findFieldByName("os"), sys.props.getOrElse("os.name", ""))
-        .setField(d.findFieldByName("arch"), sys.props.getOrElse("os.arch", ""))
-        .setField(d.findFieldByName("cpus"), l(i.cpus.toLong))
-        .setField(d.findFieldByName("max_cpus"), l(i.cpus.toLong))
-        .setField(d.findFieldByName("pid"), l(ProcessHandle.current().pid()))
-        .setField(d.findFieldByName("records"), l(i.records))
-        .setField(d.findFieldByName("oracles"), l(i.oracles))
-        .setField(d.findFieldByName("backend"), s"spark-${i.sparkVersion}")
-        .setField(d.findFieldByName("next_record_id"), l(i.nextRecordId))
-        .build()
-    })
+    "Info" -> (_ => infoToProto(api.info())))
 
   /** sum.SumInternalService handlers (proto/sum.proto:27-31): real ops —
     * the store implements the reference's with-id/batch-rollback/bulk
@@ -445,34 +458,14 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
     Map(
       "CreateRecordWithId" ->
         (m => recordResponse(service.createRecordWithId(protoToRecord(m)))),
-      "CreateRecordsWithId" -> { m =>
-        val d = m.getDescriptorForType
-        val recs = m.getField(d.findFieldByName("records"))
-          .asInstanceOf[java.util.List[_]].asScala.toSeq
-          .map(r => protoToRecord(r.asInstanceOf[DynamicMessage]))
-        recordResponse(service.createRecordsWithId(recs))
-      },
+      "CreateRecordsWithId" -> (m => recordResponse(
+        service.createRecordsWithId(getMessages(m, "records").map(protoToRecord)))),
       "DeleteRecords" -> { m =>
-        val d = m.getDescriptorForType
-        val ids = m.getField(d.findFieldByName("ids"))
+        val ids = m.getField(m.getDescriptorForType.findFieldByName("ids"))
           .asInstanceOf[java.util.List[_]].asScala.toSeq
           .map(_.asInstanceOf[java.lang.Long].longValue())
         recordResponse(service.deleteRecords(ids))
       })
-
-  private def nodeResponse(r: NodeResponse): DynamicMessage = {
-    val d = descriptor("NodeResponse")
-    val nd = descriptor("Node")
-    val mb = DynamicMessage.newBuilder(d)
-      .setField(d.findFieldByName("success"), b(r.success))
-      .setField(d.findFieldByName("msg"), r.msg)
-    val f = d.findFieldByName("nodes")
-    r.nodes.foreach(n => mb.addRepeatedField(f, DynamicMessage.newBuilder(nd)
-      .setField(nd.findFieldByName("id"), l(n.id))
-      .setField(nd.findFieldByName("name"), n.name)
-      .build()))
-    mb.build()
-  }
 
   /** sum.SumMasterService handlers (proto/sum.proto:33-37): with a
     * federation these are REAL — AddNode dials the address and attaches
@@ -494,110 +487,6 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
         "DeleteNode" ->
           (m => nodeResponse(service.deleteNode(getLong(m, "id")))))
     }
-
-  /** Master-mode overrides of the public-service handlers: record CRUD
-    * routes to the federated nodes (mux_records.go), the oracle surface
-    * is the master cage, Run is the distributed pipeline. Everything not
-    * overridden (FindOracle etc. work on the cage the same way) is built
-    * against the cage registry below.
-    */
-  private def masterOverrides(fed: SumFederation)
-      : Map[String, DynamicMessage => DynamicMessage] = {
-    val cage = fed.oracles
-    Map(
-      "CreateRecord" ->
-        (m => recordResponse(fed.createRecord(protoToRecord(m)))),
-      "UpdateRecord" ->
-        (m => recordResponse(fed.updateRecord(protoToRecord(m)))),
-      "ReadRecord" -> (m => recordResponse(fed.readRecord(getLong(m, "id")))),
-      "DeleteRecord" ->
-        (m => recordResponse(fed.deleteRecord(getLong(m, "id")))),
-      "ListRecords" -> { m =>
-        val page = getLong(m, "page"); val perPage = getLong(m, "per_page")
-        val p = fed.listRecords(if (page == 0) 1 else page,
-          if (perPage == 0) 10 else perPage)
-        val d = descriptor("RecordListResponse")
-        val mb = DynamicMessage.newBuilder(d)
-          .setField(d.findFieldByName("total"), l(p.total))
-          .setField(d.findFieldByName("pages"), l(p.pages))
-        val f = d.findFieldByName("records")
-        p.records.foreach(r => mb.addRepeatedField(f, recordToProto(r)))
-        mb.build()
-      },
-      "FindRecords" -> { m =>
-        val r = fed.findRecords(getString(m, "meta"), getString(m, "value"))
-        val d = descriptor("FindResponse")
-        val mb = DynamicMessage.newBuilder(d)
-          .setField(d.findFieldByName("success"), b(r.success))
-          .setField(d.findFieldByName("msg"), r.msg)
-        val f = d.findFieldByName("records")
-        r.records.foreach(rec => mb.addRepeatedField(f, recordToProto(rec)))
-        mb.build()
-      },
-      "CreateOracle" -> (m => compileOracle(m).fold(identity, o =>
-        oracleResponse(cage.create(o) match {
-          case Left(err) => OracleResponse(success = false, err)
-          case Right(oc) => OracleResponse(success = true, oc.id.toString, Some(oc))
-        }))),
-      // master UpdateOracle targets the CAGE (master/mux_oracles.go:43-62),
-      // not the single-engine registry — the cage is what ReadOracle/Run
-      // serve in master mode
-      "UpdateOracle" -> (m => compileOracle(m).fold(identity, o =>
-        oracleResponse(cage.update(o.copy(id = getLong(m, "id"))) match {
-          case Left(err) => OracleResponse(success = false, err)
-          case Right(oc) => OracleResponse(success = true, oc.id.toString, Some(oc))
-        }))),
-      "ReadOracle" -> (m => oracleResponse(cage.read(getLong(m, "id")) match {
-        case Left(err) => OracleResponse(success = false, err)
-        case Right(oc) => OracleResponse(success = true, "", Some(oc))
-      })),
-      "FindOracle" -> (m => oracleResponse(
-        cage.findByName(getString(m, "name")) match {
-          case Left(err) => OracleResponse(success = false, err)
-          case Right(oc) => OracleResponse(success = true, "", Some(oc))
-        })),
-      "DeleteOracle" -> (m => oracleResponse(cage.delete(getLong(m, "id")) match {
-        case Left(err) => OracleResponse(success = false, err)
-        case Right(oc) => OracleResponse(success = true, "", Some(oc))
-      })),
-      "ListOracles" -> { m =>
-        val page = getLong(m, "page"); val perPage = getLong(m, "per_page")
-        val (total, pages, items) = cage.list(if (page == 0) 1 else page,
-          if (perPage == 0) 10 else perPage)
-        val d = descriptor("OracleListResponse")
-        val mb = DynamicMessage.newBuilder(d)
-          .setField(d.findFieldByName("total"), l(total))
-          .setField(d.findFieldByName("pages"), l(pages))
-        val f = d.findFieldByName("oracles")
-        items.foreach(o => mb.addRepeatedField(f, SumProto.oracleToProto(o)))
-        mb.build()
-      },
-      "Run" -> { m =>
-        val r = fed.run(getLong(m, "oracle_id"), getStrings(m, "args"))
-        val d = descriptor("CallResponse")
-        val mb = DynamicMessage.newBuilder(d)
-          .setField(d.findFieldByName("success"), b(r.success))
-          .setField(d.findFieldByName("msg"), r.msg)
-        r.data.foreach { env =>
-          val dd = descriptor("Data")
-          mb.setField(d.findFieldByName("data"), DynamicMessage.newBuilder(dd)
-            .setField(dd.findFieldByName("compressed"), b(env.compressed))
-            .setField(dd.findFieldByName("payload"),
-              ByteString.copyFrom(env.payload))
-            .build())
-        }
-        mb.build()
-      },
-      "Info" -> { _ =>
-        val d = descriptor("ServerInfo")
-        DynamicMessage.newBuilder(d)
-          .setField(d.findFieldByName("version"), service.info().version)
-          .setField(d.findFieldByName("records"), l(fed.totalRecords))
-          .setField(d.findFieldByName("oracles"), l(cage.size.toLong))
-          .setField(d.findFieldByName("next_record_id"), l(fed.nextRecordId))
-          .build()
-      })
-  }
 
   private def buildService(name: String, shapes: Seq[(String, (String, String))],
       fns: Map[String, DynamicMessage => DynamicMessage])
@@ -621,11 +510,10 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
   }
 
   private val server = {
-    val effective = federation.fold(handlers)(f => handlers ++ masterOverrides(f))
     val builder = NettyServerBuilder
       .forAddress(new InetSocketAddress("127.0.0.1", port))
       .maxInboundMessageSize(MaxMessageBytes)
-      .addService(buildService("sum.SumService", SumProto.rpcShapes, effective))
+      .addService(buildService("sum.SumService", SumProto.rpcShapes, handlers))
       .addService(buildService("sum.SumInternalService",
         SumProto.internalRpcShapes, internalHandlers))
       .addService(buildService("sum.SumMasterService",
@@ -659,15 +547,19 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
   def boundPort: Int = server.getPort
 }
 
-/** Minimal blocking client over the same runtime — what `sumcli` is to
-  * `sumd`. Each call is one unary gRPC exchange of [[SumProto]] dynamic
-  * messages on a shared channel: plaintext by default, TLS when
-  * `certFile` names the server certificate to trust (the
-  * NewClientTLSFromFile shape, master/node.go:64 — a self-signed server
-  * cert works because trust is pinned to the file, not a CA chain).
+/** The wire stub — what `sumcli` is to `sumd`: [[SumApi]] over gRPC, each
+  * call one unary exchange of [[SumProto]] dynamic messages on a shared
+  * channel, plus the internal with-id RPCs a master drives. Plaintext by
+  * default, TLS when `certFile` names the server certificate to trust
+  * (the NewClientTLSFromFile shape, master/node.go:64 — a self-signed
+  * server cert works because trust is pinned to the file, not a CA
+  * chain). A daemon that cannot be reached raises an IOException naming
+  * its address.
   */
 final class SumGrpcClient(host: String, port: Int,
-    certFile: Option[String] = None) {
+    certFile: Option[String] = None) extends SumApi {
+  import SumProto._
+
   private val channel = {
     val builder = NettyChannelBuilder.forAddress(host, port)
       .maxInboundMessageSize(50 * 1024 * 1024)
@@ -685,12 +577,91 @@ final class SumGrpcClient(host: String, port: Int,
   }
 
   def call(rpc: String, req: DynamicMessage): DynamicMessage =
-    ClientCalls.blockingUnaryCall(channel, SumProto.methodDescriptor(rpc),
+    try ClientCalls.blockingUnaryCall(channel, SumProto.methodDescriptor(rpc),
       CallOptions.DEFAULT, req)
+    catch {
+      case e: StatusRuntimeException
+          if e.getStatus.getCode == Status.Code.UNAVAILABLE =>
+        throw new java.io.IOException(
+          s"cannot reach daemon at $host:$port: ${e.getMessage}", e)
+    }
 
   /** Convenience builder for request messages. */
   def newMessage(messageName: String): DynamicMessage.Builder =
     DynamicMessage.newBuilder(SumProto.descriptor(messageName))
 
   def close(): Unit = { channel.shutdownNow(); () }
+
+  // ---- response decoders ---------------------------------------------------
+
+  private def recordResponse(m: DynamicMessage): RecordResponse =
+    RecordResponse(getBool(m, "success"), getString(m, "msg"),
+      getMessage(m, "record").map(protoToRecord))
+
+  private def oracleResponse(m: DynamicMessage): OracleResponse =
+    OracleResponse(getBool(m, "success"), getString(m, "msg"),
+      getMessage(m, "oracle").map(protoToOracle))
+
+  private def byId(id: Long): DynamicMessage = build("ById", "id" -> id)
+  private def paged(page: Long, perPage: Long): DynamicMessage =
+    build("ListRequest", "page" -> page, "per_page" -> perPage)
+
+  // ---- sum.SumService --------------------------------------------------------
+
+  def createRecord(r: SumRecord): RecordResponse =
+    recordResponse(call("CreateRecord", recordToProto(r)))
+  def updateRecord(r: SumRecord): RecordResponse =
+    recordResponse(call("UpdateRecord", recordToProto(r)))
+  def readRecord(id: Long): RecordResponse = recordResponse(call("ReadRecord", byId(id)))
+  def deleteRecord(id: Long): RecordResponse =
+    recordResponse(call("DeleteRecord", byId(id)))
+
+  def listRecords(page: Long, perPage: Long): RecordListResponse = {
+    val m = call("ListRecords", paged(page, perPage))
+    RecordListResponse(getLong(m, "total"), getLong(m, "pages"),
+      getMessages(m, "records").map(protoToRecord))
+  }
+
+  def findRecords(metaKey: String, value: String): FindResponse = {
+    val m = call("FindRecords", build("ByMeta", "meta" -> metaKey, "value" -> value))
+    FindResponse(getBool(m, "success"), getString(m, "msg"),
+      getMessages(m, "records").map(protoToRecord))
+  }
+
+  def createOracle(name: String, code: String): OracleResponse =
+    oracleResponse(call("CreateOracle", build("Oracle", "name" -> name, "code" -> code)))
+  def updateOracle(id: Long, name: String, code: String): OracleResponse =
+    oracleResponse(call("UpdateOracle",
+      build("Oracle", "id" -> id, "name" -> name, "code" -> code)))
+  def readOracle(id: Long): OracleResponse = oracleResponse(call("ReadOracle", byId(id)))
+  def findOracle(name: String): OracleResponse =
+    oracleResponse(call("FindOracle", build("ByName", "name" -> name)))
+  def deleteOracle(id: Long): OracleResponse =
+    oracleResponse(call("DeleteOracle", byId(id)))
+
+  def listOracles(page: Long, perPage: Long): OracleListResponse = {
+    val m = call("ListOracles", paged(page, perPage))
+    OracleListResponse(getLong(m, "total"), getLong(m, "pages"),
+      getMessages(m, "oracles").map(protoToOracle))
+  }
+
+  def run(oracleId: Long, jsonArgs: Seq[String]): CallResponse = {
+    val m = call("Run", build("Call", "oracle_id" -> oracleId, "args" -> jsonArgs))
+    CallResponse(getBool(m, "success"), getString(m, "msg"),
+      getMessage(m, "data").map(d => Payload.Envelope(getBool(d, "compressed"),
+        d.getField(d.getDescriptorForType.findFieldByName("payload"))
+          .asInstanceOf[ByteString].toByteArray)))
+  }
+
+  def info(): EngineInfo = protoToInfo(call("Info", build("Empty")))
+
+  // ---- sum.SumInternalService ------------------------------------------------
+
+  def createRecordWithId(r: SumRecord): RecordResponse =
+    recordResponse(call("CreateRecordWithId", recordToProto(r)))
+  def createRecordsWithId(recs: Seq[SumRecord]): RecordResponse =
+    recordResponse(call("CreateRecordsWithId",
+      build("Records", "records" -> recs.map(recordToProto))))
+  def deleteRecords(ids: Seq[Long]): RecordResponse =
+    recordResponse(call("DeleteRecords", build("RecordIds", "ids" -> ids)))
 }

@@ -1,11 +1,10 @@
 package graft.service
 
 import org.apache.spark.sql.SparkSession
-import org.json4s.JValue
 
 import graft.EngineInfo
 import graft.model.SumRecord
-import graft.oracle.{Oracle, OracleRegistry, Payload}
+import graft.oracle.{Oracle, OracleCompiler, OracleRegistry, Payload}
 import graft.store.{RecordStore, StoreErrors}
 
 /** Response envelopes mirroring proto/sum.proto: success flag + message,
@@ -42,11 +41,17 @@ final case class NodeResponse(success: Boolean, msg: String,
   * (Spark's driver/executor model IS the sharding layer, SURVEY.md §2.5,
   * so there is no remote node to add or delete — a wire-parity client
   * probing those RPCs gets a truthful error response, not UNIMPLEMENTED).
+  *
+  * Oracle source compiles at create over this engine's session: JS or
+  * SQL, dispatched by [[OracleCompiler]].
   */
 final class SumService(
     val spark: SparkSession,
     val store: RecordStore,
-    val oracles: OracleRegistry) {
+    val oracles: OracleRegistry) extends RegistryOracles {
+
+  protected def compile(name: String, code: String): Either[String, Oracle] =
+    OracleCompiler.compile(spark, name, code)
 
   // ---- records -----------------------------------------------------------
 
@@ -142,43 +147,6 @@ final class SumService(
       NodeResponse(success = false,
         s"node $id is the engine itself and cannot be deleted")
     else NodeResponse(success = false, s"node $id not found.")
-
-  // ---- oracles -----------------------------------------------------------
-
-  def createOracle(o: Oracle): OracleResponse =
-    oracles.create(o) match {
-      case Left(err) => OracleResponse(success = false, err)
-      case Right(oc) => OracleResponse(success = true, oc.id.toString, Some(oc))
-    }
-
-  def updateOracle(o: Oracle): OracleResponse =
-    oracles.update(o) match {
-      case Left(err) => OracleResponse(success = false, err)
-      case Right(oc) => OracleResponse(success = true, oc.id.toString, Some(oc))
-    }
-
-  def readOracle(id: Long): OracleResponse =
-    oracles.read(id) match {
-      case Left(err) => OracleResponse(success = false, err)
-      case Right(oc) => OracleResponse(success = true, "", Some(oc))
-    }
-
-  def listOracles(page: Long, perPage: Long): OracleListResponse = {
-    val (total, pages, page1) = oracles.list(page, perPage)
-    OracleListResponse(total, pages, page1)
-  }
-
-  def findOracle(name: String): OracleResponse =
-    oracles.findByName(name) match {
-      case Left(err) => OracleResponse(success = false, err)
-      case Right(oc) => OracleResponse(success = true, "", Some(oc))
-    }
-
-  def deleteOracle(id: Long): OracleResponse =
-    oracles.delete(id) match {
-      case Left(err) => OracleResponse(success = false, err)
-      case Right(oc) => OracleResponse(success = true, "", Some(oc))
-    }
 
   // ---- execution ---------------------------------------------------------
 

@@ -49,11 +49,11 @@ class CliSpec extends SparkSpec {
   }
 
   test("remote cli verbs drive a live server over the wire") {
-    val server = new graft.service.SumServer(SumService(spark))
+    val server = new graft.service.SumGrpcServer(SumService(spark))
     server.start()
+    val client = new graft.service.SumGrpcClient("127.0.0.1", server.boundPort)
     try {
-      val base = server.baseUrl
-      def run(line: String): String = RemoteCli.dispatch(base, line).get
+      def run(line: String): String = Cli.dispatch(client, line).get
 
       assert(run("info").contains("\"records\":0"))
       assert(run("create-record 3,6,9 lang=en").contains("\"msg\":\"1\""))
@@ -67,7 +67,20 @@ class CliSpec extends SparkSpec {
       val ran = run(s"run $oracleId")
       assert(ran.contains("\"data\":[{\"id\":1,\"x\":3.0},{\"id\":2,\"x\":3.0}]"))
       assert(run("read-record 666").contains("record 666 not found."))
-      assert(RemoteCli.dispatch(base, "quit").isEmpty)
-    } finally server.stop()
+      assert(Cli.dispatch(client, "quit").isEmpty)
+    } finally { client.close(); server.stop() }
+  }
+
+  test("remote cli reports a daemon that is down, not bad arguments") {
+    // bind and release an ephemeral port: nothing listens on it afterwards
+    val socket = new java.net.ServerSocket(0)
+    val port = socket.getLocalPort
+    socket.close()
+    val client = new graft.service.SumGrpcClient("127.0.0.1", port)
+    try {
+      val out = Cli.dispatch(client, "read-record 1").get
+      assert(out.contains(s"cannot reach daemon at 127.0.0.1:$port"), out)
+      assert(out.contains("\"success\":false") && !out.contains("bad arguments"), out)
+    } finally client.close()
   }
 }

@@ -30,19 +30,13 @@ class FederationProcSpec extends SparkSpec {
 
   private val NRecords = 3000
 
-  /** A free (http, grpc=http+1) port pair — Serve binds both. */
-  private def freePortPair(): Int = {
+  /** A free port for one `graft.Serve` daemon's gRPC socket. */
+  private def freePort(): Int = {
     val rnd = new scala.util.Random()
     Iterator.continually(22000 + rnd.nextInt(20000))
-      .map { base =>
-        try {
-          val a = new ServerSocket(base)
-          try {
-            val b = new ServerSocket(base + 1)
-            b.close(); a.close()
-            Some(base)
-          } finally a.close()
-        } catch { case _: java.io.IOException => None }
+      .map { port =>
+        try { new ServerSocket(port).close(); Some(port) }
+        catch { case _: java.io.IOException => None }
       }
       .collectFirst { case Some(p) => p }.get
   }
@@ -103,15 +97,15 @@ class FederationProcSpec extends SparkSpec {
   }"""
 
   test("two real node processes: rebalance, distributed Run, node death") {
-    val portA = freePortPair()
+    val portA = freePort()
     val procA = spawnNode(portA, "a")
-    val portB = freePortPair()
+    val portB = freePort()
     val procB = spawnNode(portB, "b")
     try {
-      awaitPort(portA + 1); awaitPort(portB + 1)
+      awaitPort(portA); awaitPort(portB)
 
       // Pre-seed node A over the wire: one batch RPC, ids 1..N.
-      val seedClient = new SumGrpcClient("127.0.0.1", portA + 1)
+      val seedClient = new SumGrpcClient("127.0.0.1", portA)
       val seed = new GrpcEngine(seedClient)
       val batch = (1 to NRecords).map(i =>
         SumRecord(i.toLong, Array(i.toFloat), Map("name" -> s"r$i")))
@@ -121,8 +115,8 @@ class FederationProcSpec extends SparkSpec {
 
       val fed = new SumFederation(
         (n, c) => graft.oracle.OracleCompiler.compile(spark, n, c))
-      assert(fed.addNode(s"127.0.0.1:${portA + 1}").success)
-      assert(fed.addNode(s"127.0.0.1:${portB + 1}").success)
+      assert(fed.addNode(s"127.0.0.1:${portA}").success)
+      assert(fed.addNode(s"127.0.0.1:${portB}").success)
       // Rebalance moved A's first half to B over the wire.
       assert(fed.listNodes().map(_.records).sorted ===
         Seq(NRecords / 2L, NRecords / 2L))
@@ -186,7 +180,7 @@ class FederationProcSpec extends SparkSpec {
       // ...and DeleteNode on the corpse drains what it can (nothing),
       // log-and-keep, without crashing the master op.
       val deadNodeId = fed.listNodes()
-        .find(_.name.endsWith((portB + 1).toString)).get.id
+        .find(_.name.endsWith(portB.toString)).get.id
       assert(fed.deleteNode(deadNodeId).success)
       assert(fed.listNodes().size === 1)
 

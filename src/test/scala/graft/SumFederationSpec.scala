@@ -2,8 +2,8 @@ package graft
 
 import graft.model.SumRecord
 import graft.oracle.Payload
-import graft.service.{CallResponse, FindResponse, NodeEngine, OracleResponse,
-  RecordResponse, SumFederation, SumService}
+import graft.service.{CallResponse, FindResponse, LocalEngine, NodeEngine,
+  OracleResponse, RecordResponse, SumFederation, SumService}
 
 /** End-to-end federation semantics (round-8 verdict task 8, the last
   * deliberately-red cell): add node -> records rebalance with the
@@ -250,6 +250,57 @@ class SumFederationSpec extends SparkSpec {
     val merged = org.json4s.jackson.JsonMethods.parse(
       Payload.openString(resp.data.get)).values.asInstanceOf[Map[String, Any]]
     assert(merged.keySet === Set("g1", "g2"))
+  }
+
+  test("concurrent Runs of the same oracle and arguments keep distinct node temporaries") {
+    // Every node holds its temporary until all four (two Runs x two
+    // nodes) exist at once; temporaries that collided on a node's
+    // duplicate rule would never all exist, and the second Run would fail.
+    val allCreated = new java.util.concurrent.CountDownLatch(4)
+    class GatedEngine(inner: NodeEngine) extends NodeEngine {
+      def records: Long = inner.records
+      def nextRecordId: Long = inner.nextRecordId
+      def listRecords(page: Long, perPage: Long): Seq[SumRecord] =
+        inner.listRecords(page, perPage)
+      def createRecordWithId(r: SumRecord): RecordResponse = inner.createRecordWithId(r)
+      def createRecordsWithId(recs: Seq[SumRecord]): RecordResponse =
+        inner.createRecordsWithId(recs)
+      def deleteRecords(ids: Seq[Long]): Unit = inner.deleteRecords(ids)
+      def readRecord(id: Long): RecordResponse = inner.readRecord(id)
+      def updateRecord(r: SumRecord): RecordResponse = inner.updateRecord(r)
+      def deleteRecord(id: Long): RecordResponse = inner.deleteRecord(id)
+      def findRecords(meta: String, value: String): FindResponse =
+        inner.findRecords(meta, value)
+      def nodeOracles(): Seq[NodeEngine.NodeOracle] = inner.nodeOracles()
+      def createOracle(o: graft.oracle.Oracle): OracleResponse = {
+        val r = inner.createOracle(o)
+        if (r.success) allCreated.countDown()
+        r
+      }
+      def deleteOracle(id: Long): Unit = inner.deleteOracle(id)
+      def run(oracleId: Long, args: Seq[String]): CallResponse = {
+        allCreated.await(20, java.util.concurrent.TimeUnit.SECONDS)
+        inner.run(oracleId, args)
+      }
+    }
+    val fed = new SumFederation
+    fed.attach("a", new GatedEngine(new LocalEngine(engineWith(1 to 6))))
+    fed.attach("b", new GatedEngine(new LocalEngine(engineWith(7 to 10))))
+    val oracle = fed.oracles.createJs("sumIds",
+      "function sumIds() { var all = records.All(); var t = 0; " +
+        "for (var i = 0; i < all.length; i++) t += all[i].ID; return t; } " +
+        "function mergeSums(ps) { var s = 0; " +
+        "for (var i = 0; i < ps.length; i++) s += ps[i]; return s; }")
+      .fold(m => fail(s"compile failed: $m"), identity)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val runs = Seq.fill(2)(Future(fed.run(oracle.id, Seq.empty)))
+    runs.map(Await.result(_, 60.seconds)).foreach { resp =>
+      assert(resp.success, resp.msg)
+      assert(Payload.openString(resp.data.get) === "55")
+    }
+    fed.listNodes().foreach(n => assert(n.engine.nodeOracles().isEmpty))
   }
 
   test("node status is CACHED and re-synced by the NodeUpdater poll") {

@@ -111,6 +111,46 @@ class SumGrpcServerSpec extends SparkSpec {
         data.getDescriptorForType.findFieldByName("payload"))
         .asInstanceOf[ByteString].toStringUtf8
       assert(payload === """{"2":1}""")
+      // the oracle's ctx.Error path crosses the wire wrapped in the node
+      // RPC's exact spelling (node/service/service.go:146)
+      val miss = client.newMessage("Call")
+      miss.setField(callD.findFieldByName("oracle_id"),
+        java.lang.Long.valueOf(oracleId))
+      miss.addRepeatedField(callD.findFieldByName("args"), "99")
+      miss.addRepeatedField(callD.findFieldByName("args"), "0.5")
+      val missed = client.call("Run", miss.build())
+      assert(!getBool(missed, "success"))
+      assert(SumProto.getString(missed, "msg") ===
+        s"error while running oracle $oracleId: Vector 99 not found.")
+    }
+  }
+
+  test("oracle CRUD round trip over gRPC: create, find, update, read, delete") {
+    withGrpc { client =>
+      val oracleD = SumProto.descriptor("Oracle")
+      def oracle(id: Long, code: String) = client.newMessage("Oracle")
+        .setField(oracleD.findFieldByName("id"), java.lang.Long.valueOf(id))
+        .setField(oracleD.findFieldByName("name"), "countAll")
+        .setField(oracleD.findFieldByName("code"), code).build()
+      def byId(id: Long) = client.newMessage("ById")
+        .setField(SumProto.descriptor("ById").findFieldByName("id"),
+          java.lang.Long.valueOf(id)).build()
+      val byName = client.newMessage("ByName")
+        .setField(SumProto.descriptor("ByName").findFieldByName("name"), "countAll")
+        .build()
+      val oc = client.call("CreateOracle",
+        oracle(0L, "SELECT count(*) AS n FROM records"))
+      assert(getBool(oc, "success"), SumProto.getString(oc, "msg"))
+      val id = SumProto.getLong(getMsg(oc, "oracle"), "id")
+      assert(getBool(client.call("FindOracle", byName), "success"))
+      val up = client.call("UpdateOracle",
+        oracle(id, "SELECT count(*) AS total FROM records"))
+      assert(getBool(up, "success"), SumProto.getString(up, "msg"))
+      assert(SumProto.getString(getMsg(client.call("ReadOracle", byId(id)), "oracle"),
+        "code").contains("AS total"))
+      assert(getBool(client.call("DeleteOracle", byId(id)), "success"))
+      assert(SumProto.getString(client.call("FindOracle", byName), "msg") ===
+        "oracle countAll not found.")
     }
   }
 
@@ -461,5 +501,30 @@ class SumGrpcServerSpec extends SparkSpec {
     } finally {
       client.close(); master.stop(); serverA.stop(); serverB.stop()
     }
+  }
+
+  test("a master's Info reports the federation's record total and cage size") {
+    import graft.model.SumRecord
+    import graft.service.SumFederation
+    // one in-process node with 30 records and the canonical oracles, which
+    // the master absorbs into its cage; the master's own store is empty
+    val node = SumService(spark)
+    assert(node.createRecordsWithId((1 to 30).map(i =>
+      SumRecord(i.toLong, Array(i.toFloat), Map.empty))).success)
+    val fed = new SumFederation(
+      (n, c) => graft.oracle.OracleCompiler.compile(spark, n, c))
+    assert(fed.addNode("a", node).success)
+    val master = new SumGrpcServer(
+      new SumService(spark, graft.store.RecordStore.empty(spark),
+        new graft.oracle.OracleRegistry), federation = Some(fed))
+    master.start()
+    val client = new SumGrpcClient("127.0.0.1", master.boundPort)
+    try {
+      val info = client.call("Info", client.newMessage("Empty").build())
+      assert(SumProto.getLong(info, "records") === 30L)
+      assert(fed.oracles.size > 0)
+      assert(SumProto.getLong(info, "oracles") === fed.oracles.size.toLong)
+      assert(SumProto.getLong(info, "next_record_id") === fed.nextRecordId)
+    } finally { client.close(); master.stop() }
   }
 }
