@@ -171,26 +171,24 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_cosine"
 
+  /** Positions where either side is null drop out of both vectors, so
+    * [[VectorMath.cosine]] sees exactly the pairs the generated loop sums.
+    */
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
     val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
+    val xs = Array.newBuilder[Double]
+    val ys = Array.newBuilder[Double]
     var i = 0
     while (i < n) {
       if (!a.isNullAt(i) && !b.isNullAt(i)) {
-        val x = VectorExpressions.read(a, left.dataType, i)
-        val y = VectorExpressions.read(b, right.dataType, i)
-        dot += x * y
-        na += x * x
-        nb += y * y
+        xs += VectorExpressions.read(a, left.dataType, i)
+        ys += VectorExpressions.read(b, right.dataType, i)
       }
       i += 1
     }
-    val den = math.sqrt(na) * math.sqrt(nb)
-    if (den == 0.0) 0.0 else dot / den
+    VectorMath.cosine(xs.result(), ys.result())
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

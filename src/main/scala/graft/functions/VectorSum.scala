@@ -15,25 +15,10 @@ class VectorSumAggregator extends Aggregator[Array[Float], Array[Double], Array[
 
   override def zero: Array[Double] = Array.emptyDoubleArray
 
-  private def add(buf: Array[Double], v: Array[Double]): Array[Double] = {
-    if (buf.isEmpty) v
-    else if (v.isEmpty) buf
-    else {
-      val out = new Array[Double](math.max(buf.length, v.length))
-      var i = 0
-      while (i < out.length) {
-        out(i) = (if (i < buf.length) buf(i) else 0.0) +
-          (if (i < v.length) v(i) else 0.0)
-        i += 1
-      }
-      out
-    }
-  }
-
   override def reduce(buf: Array[Double], in: Array[Float]): Array[Double] =
-    add(buf, in.map(_.toDouble))
+    VectorMath.sum(buf, VectorMath.widen(in))
 
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = add(a, b)
+  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = VectorMath.sum(a, b)
 
   override def finish(buf: Array[Double]): Array[Double] = buf
 

@@ -36,7 +36,8 @@ object CanonicalOracles {
 
   /** findSimilar(id, threshold): cosine of every other record against the
     * resolved reference record; returns {id -> similarity} for all >=
-    * threshold. Map-only scan over a broadcast one-row reference.
+    * threshold ([[RecordStore.similarTo]]: a resident scan, or a map-only
+    * scan over a broadcast one-row reference).
     */
   val findSimilar: Oracle = Oracle(0, "findSimilar", Seq("id", "threshold"),
     (ctx, store, args) => {
@@ -46,15 +47,8 @@ object CanonicalOracles {
       else store.find(id) match {
         case None => ctx.error(s"record $id not found."); JNull
         case Some(ref) =>
-          val refCol = array(ref.data.map(lit).toIndexedSeq: _*)
-          val rows = store.records
-            .filter(col("id") =!= id)
-            .select(col("id"),
-              vector.cosine(col("data"), refCol).as("sim"))
-            .filter(col("sim") >= threshold)
-            .collect()
-          JObject(rows.map(r =>
-            r.getLong(0).toString -> (JDouble(r.getDouble(1)): JValue)).toList)
+          JObject(store.similarTo(ref.data, threshold, id).map { case (i, sim) =>
+            i.toString -> (JDouble(sim): JValue) }.toList)
       }
     })
 
@@ -74,18 +68,14 @@ object CanonicalOracles {
       JArray(pairs.map(r => JArray(List(JLong(r.getLong(0)), JLong(r.getLong(1))))).toList)
     })
 
-  /** sumAllVectors: element-wise sum of every vector in the store —
-    * partial per partition, merged by the Aggregator (the reference's
-    * mergeResults reduce, master/service_legacy_test.go).
+  /** sumAllVectors: element-wise sum of every vector in the store
+    * ([[RecordStore.sumVectors]]: a resident fold, or partials per
+    * partition merged by the Aggregator — the reference's mergeResults
+    * reduce, master/service_legacy_test.go).
     */
   val sumAllVectors: Oracle = Oracle(0, "sumAllVectors", Seq.empty,
-    (_, store, _) => {
-      import store.spark.implicits._
-      val agg = new graft.functions.VectorSumAggregator().toColumn
-      val summed = store.records.map(_.data).select(agg)
-        .collect().headOption.getOrElse(Array.emptyDoubleArray)
-      JArray(summed.map(d => JDouble(d): JValue).toList)
-    },
+    (_, store, _) =>
+      JArray(store.sumVectors().map(d => JDouble(d): JValue).toList),
     // Distributed partials merge element-wise, as the reference's custom
     // `mergeResults = results.reduce(add)` does.
     merger = Some(parts => {

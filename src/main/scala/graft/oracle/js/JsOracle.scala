@@ -289,22 +289,19 @@ object JsOracle {
       "Message" -> { _ => JsStr(ctx.message) }))
 
   // ------------------------------------------------------- host: records
-  /** Driver-side `records` host over the whole store: Find is a Catalyst
-    * point lookup; All/AllBut pull through the driver cap.
+  /** Driver-side `records` host over the whole store: Find and All/AllBut
+    * are the store's point lookup and capped id-sorted read.
     */
   private def recordsHost(interp: JsInterp, store: RecordStore): JsHost = {
-    def all(): Seq[SumRecord] = {
-      import org.apache.spark.sql.functions.col
-      val cap = RecordStore.maxCollectRows(store.records.sparkSession)
-      val rows = store.records.orderBy(col("id")).limit(cap + 1).collect().toSeq
-      if (rows.length > cap)
-        throw OracleRunError(
-          s"records.All() would materialize more than $cap rows on the " +
+    def all(): Seq[SumRecord] =
+      try store.all()
+      catch {
+        case e: RecordStore.CollectCapExceeded => throw OracleRunError(
+          s"records.All() would materialize more than ${e.cap} rows on the " +
             "driver; raise graft.store.maxCollectRows, or run through " +
             "runDistributed where each partition materializes only on its " +
             "executor")
-      rows
-    }
+      }
     seqRecordsHost(interp, store.find, () => all())
   }
 

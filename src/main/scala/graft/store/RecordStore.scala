@@ -1,9 +1,13 @@
 package graft.store
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.{VectorMath, VectorSumAggregator, vector}
 import graft.model.SumRecord
 
 /** Errors with the reference's exact message strings. */
@@ -18,65 +22,122 @@ object StoreErrors {
 /** One page of a sorted record listing (node/service/records.go:66-114). */
 final case class RecordPage(total: Long, pages: Long, records: Seq[SumRecord])
 
+/** Driver-resident copy of a store's records: sorted by id (a stable sort,
+  * so records sharing an id keep their Dataset order) with the ids
+  * alongside for binary search. Immutable; a write derives the next one.
+  * Readers get the stored records themselves, which nothing mutates.
+  */
+private[store] final class Snapshot private (val rows: Array[SumRecord]) {
+  private val ids: Array[Long] = rows.map(_.id)
+
+  def size: Int = rows.length
+
+  /** The first record with this id, as the Dataset's `limit(1)` finds it. */
+  def find(id: Long): Option[SumRecord] = {
+    var lo = 0
+    var hi = ids.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (ids(mid) < id) lo = mid + 1 else hi = mid
+    }
+    if (lo < ids.length && ids(lo) == id) Some(rows(lo)) else None
+  }
+
+  /** Drop every record whose id is in `removed`, then append `added` —
+    * the snapshot form of the Dataset's anti-filter + union.
+    */
+  def change(removed: Set[Long], added: Seq[SumRecord]): Snapshot =
+    Snapshot((rows.iterator.filterNot(r => removed(r.id)) ++ added).toArray)
+}
+
+private[store] object Snapshot {
+  def apply(rows: Array[SumRecord]): Snapshot = new Snapshot(rows.sortBy(_.id))
+}
+
 /** Mutable record store with the reference's CRUD semantics
-  * (node/storage/index.go, records.go) over an immutable Spark Dataset.
+  * (node/storage/index.go, records.go) over a cached Spark Dataset, with
+  * a driver-resident snapshot of the same records beside it while the
+  * store fits the driver cap.
   *
-  * Design: copy-on-write. The current state is one cached
-  * `Dataset[SumRecord]`; every mutation derives a new Dataset (union /
-  * anti-filter / per-field coalesce) and atomically swaps it in. Sequential
-  * id assignment and the "which meta keys were ever indexed" set — the two
-  * pieces of genuinely driver-side state the reference keeps
-  * (index.go:154-172, records.go:8-48) — live here under a lock; everything
-  * else is a distributed plan. Batch mutations (createManyWithId) validate
-  * first and swap once, which is what makes the reference's rollback
-  * semantics (index.go:190-218) free: a failed batch never becomes visible.
+  * Design: copy-on-write. The store's state is one immutable value — the
+  * cached `Dataset[SumRecord]`, the next sequential id, the set of meta
+  * keys ever indexed (the reference's driver-side state,
+  * index.go:154-172, records.go:8-48) and, for a store whose record count
+  * was within [[RecordStore.MaxCollectRowsKey]] when it was built, a
+  * [[Snapshot]]. Every mutation derives a new Dataset (union /
+  * anti-filter / per-field coalesce), persists and materializes it,
+  * derives the next snapshot on the driver from the previous one plus
+  * the change, and publishes all of it in one volatile write under the
+  * lock; readers take one consistent reference with no lock. Batch
+  * mutations (createManyWithId) validate first and publish once, which
+  * is what makes the reference's rollback semantics (index.go:190-218)
+  * free: a failed batch never becomes visible.
   *
-  * At cluster scale the same class works unchanged: the Dataset is
-  * partitioned storage, point lookups are pushdown filters on the id
-  * column, and persistence is parquet (replacing the reference's
+  * Serving reads — [[find]], [[findBy]], [[list]], [[size]], [[all]],
+  * [[similarTo]], [[sumVectors]] — answer from the snapshot when there is
+  * one (no Spark job, like the reference node's in-memory index) and
+  * from plans over the Dataset otherwise. A write that takes a resident
+  * store over the cap drops the snapshot for good. [[records]] and the
+  * `*Ds` reads always return Dataset plans, so the queries, ops and
+  * distributed-oracle layers see the same distributed storage at any
+  * size: point lookups are pushdown filters on the id column, and
+  * persistence is parquet (replacing the reference's
   * one-protobuf-file-per-record layout, node/storage/saver.go:12-20).
   */
 final class RecordStore private (
     val spark: SparkSession,
-    private var ds: Dataset[SumRecord],
-    private var nextIdVal: Long,
-    private var metaKeys: Set[String]) {
+    initial: RecordStore.State) {
 
   import spark.implicits._
+  import RecordStore.{CollectCapExceeded, State, keysOf, maxCollectRows}
 
-  private def swap(next: Dataset[SumRecord]): Unit = synchronized {
+  @volatile private var state: State = initial
+
+  /** Persist and materialize `next` before dropping the old lineage,
+    * derive the snapshot and counters from the change, and publish them
+    * as one value. Returns the new record count. Callers hold the lock.
+    */
+  private def commit(next: Dataset[SumRecord], removed: Set[Long],
+      added: Seq[SumRecord]): Long = {
+    val old = state
     val cached = next.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count() // materialize before dropping the old lineage
-    val old = ds
-    ds = cached
-    old.unpersist()
+    val count = cached.count()
+    val cap = maxCollectRows(spark)
+    state = State(cached,
+      (old.nextId +: added.map(_.id + 1)).max,
+      old.metaKeys ++ added.flatMap(keysOf),
+      old.snapshot.map(_.change(removed, added)).filter(_.size <= cap))
+    old.ds.unpersist()
+    count
   }
 
-  def records: Dataset[SumRecord] = ds
+  private def sizeOf(s: State): Long = s.snapshot.fold(s.ds.count())(_.size.toLong)
 
-  /** Release the store's cached blocks (the persist taken by swap/
-    * fromDataset/load). Call when done with a short-lived store — each
+  def records: Dataset[SumRecord] = state.ds
+
+  /** Release the store's cached blocks (the persist taken by a write or
+    * a constructor). Call when done with a short-lived store — each
     * query-scoped store otherwise pins its cached dataset for the app
     * lifetime. The store must not be used afterwards.
     */
-  def close(): Unit = synchronized { ds.unpersist(); () }
+  def close(): Unit = synchronized { state.ds.unpersist(); () }
 
   /** The same records re-bucketed into `n` partitions — the Spark form of
     * the reference master's transfer/balance verbs (each partition is a
     * "node"; re-sharding is a repartition, not a data migration).
     */
-  def repartitioned(n: Int): RecordStore = synchronized {
-    new RecordStore(spark, ds.repartition(n), nextIdVal, metaKeys)
+  def repartitioned(n: Int): RecordStore = {
+    val s = state
+    new RecordStore(spark, s.copy(ds = s.ds.repartition(n)))
   }
 
-  def size: Long = ds.count()
+  def size: Long = sizeOf(state)
 
-  def nextId: Long = synchronized(nextIdVal)
+  def nextId: Long = state.nextId
 
   /** Insert with a server-assigned sequential id (index.go:154-172). */
   def create(record: SumRecord): Either[String, SumRecord] = synchronized {
-    val assigned = SumRecord.withDefaultShape(record).copy(id = nextIdVal)
-    createWithId(assigned).map { r => r }
+    createWithId(SumRecord.withDefaultShape(record).copy(id = state.nextId))
   }
 
   /** Insert with the caller's id; fails when the id exists (index.go:174-188). */
@@ -84,26 +145,25 @@ final class RecordStore private (
     val rec = SumRecord.withDefaultShape(record)
     if (find(rec.id).isDefined) Left(StoreErrors.InvalidId)
     else {
-      swap(ds.union(spark.createDataset(Seq(rec))))
-      if (rec.id >= nextIdVal) nextIdVal = rec.id + 1
-      metaKeys ++= rec.meta.keys
+      commit(state.ds.union(spark.createDataset(Seq(rec))), Set.empty, Seq(rec))
       Right(rec)
     }
   }
 
   /** Batch insert; all-or-nothing like the reference's rollback
-    * (index.go:190-218) — validation happens before the single swap.
+    * (index.go:190-218) — validation happens before the single commit.
     */
   def createManyWithId(recs: Seq[SumRecord]): Either[String, Long] = synchronized {
+    val s = state
     val normalized = recs.map(SumRecord.withDefaultShape)
     val ids = normalized.map(_.id)
-    val clash = ids.distinct.size != ids.size ||
-      ds.filter(col("id").isin(ids: _*)).limit(1).count() > 0
+    val clash = ids.distinct.size != ids.size || (s.snapshot match {
+      case Some(snap) => ids.exists(id => snap.find(id).isDefined)
+      case None => s.ds.filter(col("id").isin(ids: _*)).limit(1).count() > 0
+    })
     if (clash) Left(StoreErrors.InvalidId)
     else {
-      swap(ds.union(spark.createDataset(normalized)))
-      nextIdVal = math.max(nextIdVal, ids.max + 1)
-      metaKeys ++= normalized.flatMap(_.meta.keys)
+      commit(s.ds.union(spark.createDataset(normalized)), Set.empty, normalized)
       Right(normalized.size.toLong)
     }
   }
@@ -119,31 +179,34 @@ final class RecordStore private (
           data = if (patch.data != null && patch.data.nonEmpty) patch.data else old.data,
           shape = if (patch.shape != null && patch.shape.nonEmpty) patch.shape else old.shape,
           meta = if (patch.meta != null && patch.meta.nonEmpty) patch.meta else old.meta)
-        swap(ds.filter(col("id") =!= patch.id)
-          .union(spark.createDataset(Seq(merged))))
-        metaKeys ++= merged.meta.keys
+        commit(state.ds.filter(col("id") =!= patch.id)
+          .union(spark.createDataset(Seq(merged))), Set(patch.id), Seq(merged))
         Right(merged)
     }
   }
 
   /** Point lookup (index.go:239-248). */
-  def find(id: Long): Option[SumRecord] =
-    ds.filter(col("id") === id).limit(1).collect().headOption
+  def find(id: Long): Option[SumRecord] = {
+    val s = state
+    s.snapshot match {
+      case Some(snap) => snap.find(id)
+      case None => s.ds.filter(col("id") === id).limit(1).collect().headOption
+    }
+  }
 
   /** Remove by id, returning the removed record (index.go:253-270). */
   def delete(id: Long): Either[String, SumRecord] = synchronized {
     find(id) match {
       case None => Left(StoreErrors.recordNotFound(id))
       case Some(r) =>
-        swap(ds.filter(col("id") =!= id))
+        commit(state.ds.filter(col("id") =!= id), Set(id), Nil)
         Right(r)
     }
   }
 
   def deleteMany(ids: Seq[Long]): Long = synchronized {
     val before = size
-    swap(ds.filter(!col("id").isin(ids: _*)))
-    before - size
+    before - commit(state.ds.filter(!col("id").isin(ids: _*)), ids.toSet, Nil)
   }
 
   /** Equality filter on one metadata key. Returns None — distinct from an
@@ -156,23 +219,34 @@ final class RecordStore private (
     * when the API is pointed at corpus-scale data. The scale-safe form
     * is [[findByDs]].
     */
-  def findBy(key: String, value: String): Option[Seq[SumRecord]] =
-    findByDs(key, value).map { matched =>
-      val cap = RecordStore.maxCollectRows(spark)
-      val rows = matched.limit(cap + 1).collect().toSeq
-      if (rows.length > cap) throw new IllegalStateException(
+  def findBy(key: String, value: String): Option[Seq[SumRecord]] = {
+    val s = state
+    if (!s.metaKeys.contains(key)) None
+    else {
+      val cap = maxCollectRows(spark)
+      val rows = s.snapshot match {
+        case Some(snap) => snap.rows.iterator
+            .filter(r => r.meta != null && r.meta.get(key).contains(value))
+            .take(cap + 1).toVector
+        case None => s.ds.filter(element_at(col("meta"), key) === value)
+            .limit(cap + 1).collect().toVector
+      }
+      if (rows.length > cap) throw new CollectCapExceeded(cap,
         s"findBy matched more than $cap records; use findByDs or raise " +
           RecordStore.MaxCollectRowsKey)
-      rows
+      Some(rows)
     }
+  }
 
   /** Dataset-returning [[findBy]]: the same nil-vs-empty contract with no
     * driver materialization — compose further operators on the result at
     * any store size.
     */
-  def findByDs(key: String, value: String): Option[Dataset[SumRecord]] =
-    if (!metaKeys.contains(key)) None
-    else Some(ds.filter(element_at(col("meta"), key) === value))
+  def findByDs(key: String, value: String): Option[Dataset[SumRecord]] = {
+    val s = state
+    if (!s.metaKeys.contains(key)) None
+    else Some(s.ds.filter(element_at(col("meta"), key) === value))
+  }
 
   /** Id-sorted pagination with the reference's exact clamp/ceil/slice rules
     * (node/service/records.go:66-114): page and perPage clamp to >= 1;
@@ -180,20 +254,25 @@ final class RecordStore private (
     * with no records.
     */
   def list(pageReq: Long, perPageReq: Long): RecordPage = {
+    val s = state
     val page = math.max(pageReq, 1L)
     val perPage = math.max(perPageReq, 1L)
-    val cap = RecordStore.maxCollectRows(spark)
+    val cap = maxCollectRows(spark)
     // The page itself is driver-materialized (reference-parity), so the
     // page SIZE is what must stay bounded — not the store.
-    if (perPage > cap) throw new IllegalStateException(
+    if (perPage > cap) throw new CollectCapExceeded(cap,
       s"page size $perPage exceeds $cap; use listDs or raise " +
         RecordStore.MaxCollectRowsKey)
-    val total = size
+    val total = sizeOf(s)
     val start = (page - 1) * perPage
     val pages = total / perPage + (if (total % perPage > 0) 1 else 0)
     if (total <= start) RecordPage(total, pages, Seq.empty)
-    else RecordPage(total, pages,
-      ds.orderBy(col("id")).offset(start.toInt).limit(perPage.toInt).collect().toSeq)
+    else RecordPage(total, pages, s.snapshot match {
+      case Some(snap) => ArraySeq.unsafeWrapArray(
+        snap.rows.slice(start.toInt, math.min(start + perPage, total).toInt))
+      case None => s.ds.orderBy(col("id")).offset(start.toInt)
+          .limit(perPage.toInt).collect().toSeq
+    })
   }
 
   /** Dataset-returning [[list]]: same clamp/ceil/slice rules, but the page
@@ -201,75 +280,156 @@ final class RecordStore private (
     * the offset+limit as a single-pass skip, no driver pull).
     */
   def listDs(pageReq: Long, perPageReq: Long): (Long, Long, Dataset[SumRecord]) = {
+    val s = state
     val page = math.max(pageReq, 1L)
     val perPage = math.max(perPageReq, 1L)
-    val total = size
+    val total = sizeOf(s)
     val start = (page - 1) * perPage
     val pages = total / perPage + (if (total % perPage > 0) 1 else 0)
-    if (total <= start) (total, pages, ds.limit(0))
+    if (total <= start) (total, pages, s.ds.limit(0))
     else (total, pages,
-      ds.orderBy(col("id")).offset(start.toInt).limit(perPage.toInt))
+      s.ds.orderBy(col("id")).offset(start.toInt).limit(perPage.toInt))
+  }
+
+  /** Every record, id-sorted, on the driver — capped at
+    * [[RecordStore.MaxCollectRowsKey]] rows like [[findBy]].
+    */
+  def all(): Seq[SumRecord] = {
+    val s = state
+    val cap = maxCollectRows(spark)
+    val rows = s.snapshot match {
+      case Some(snap) => ArraySeq.unsafeWrapArray(snap.rows)
+      case None => s.ds.orderBy(col("id")).limit(cap + 1).collect().toSeq
+    }
+    if (rows.length > cap) throw new CollectCapExceeded(cap,
+      s"all() would materialize more than $cap records; use records or " +
+        "raise " + RecordStore.MaxCollectRowsKey)
+    rows
+  }
+
+  /** (id, cosine) of every record but `excludeId` whose cosine to `ref`
+    * is >= `threshold` under Spark's double ordering (NaN sorts above
+    * every number). The resident scan calls the same
+    * [[VectorMath.cosine]] the Catalyst expression does.
+    */
+  def similarTo(ref: Array[Float], threshold: Double,
+      excludeId: Long): Seq[(Long, Double)] = {
+    val s = state
+    s.snapshot match {
+      case Some(snap) =>
+        val r = VectorMath.widen(ref)
+        snap.rows.iterator
+          .filter(x => x.id != excludeId && x.data != null)
+          .map(x => (x.id, VectorMath.cosine(VectorMath.widen(x.data), r)))
+          .filter { case (_, sim) => SQLOrderingUtil.compareDoubles(sim, threshold) >= 0 }
+          .toVector
+      case None =>
+        val refCol = array(ref.map(lit).toIndexedSeq: _*)
+        s.ds.filter(col("id") =!= excludeId)
+          .select(col("id"), vector.cosine(col("data"), refCol).as("sim"))
+          .filter(col("sim") >= threshold)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toVector
+    }
+  }
+
+  /** Element-wise float64 sum of every record's vector (empty for an
+    * empty store); the resident fold adds in id order with the
+    * aggregator's own [[VectorMath.sum]].
+    */
+  def sumVectors(): Array[Double] = {
+    val s = state
+    s.snapshot match {
+      case Some(snap) => snap.rows.foldLeft(Array.emptyDoubleArray)(
+        (acc, r) => VectorMath.sum(acc, VectorMath.widen(r.data)))
+      case None => s.ds.map(_.data).select(new VectorSumAggregator().toColumn)
+          .collect().headOption.getOrElse(Array.emptyDoubleArray)
+    }
   }
 
   /** Persist as parquet (replaces the reference's .dat-per-record layout). */
   def save(path: String): Unit =
-    ds.write.mode(SaveMode.Overwrite).parquet(path)
+    state.ds.write.mode(SaveMode.Overwrite).parquet(path)
 }
 
 object RecordStore {
 
   /** Conf key capping driver-materializing record reads (default 100000):
-    * [[RecordStore.findBy]] results and [[RecordStore.list]] page sizes.
+    * [[RecordStore.findBy]] results, [[RecordStore.list]] page sizes and
+    * [[RecordStore.all]]. A store whose record count is within it when
+    * built keeps a driver-resident snapshot.
     */
   val MaxCollectRowsKey = "graft.store.maxCollectRows"
 
   private[graft] def maxCollectRows(spark: SparkSession): Int =
     spark.conf.get(MaxCollectRowsKey, "100000").toInt
 
+  /** A driver-materializing read that would pass [[MaxCollectRowsKey]]. */
+  final class CollectCapExceeded(val cap: Int, msg: String)
+      extends IllegalStateException(msg)
+
+  /** One consistent store state: readers take it whole. */
+  private[store] final case class State(ds: Dataset[SumRecord], nextId: Long,
+      metaKeys: Set[String], snapshot: Option[Snapshot])
+
+  private def keysOf(r: SumRecord): Iterable[String] =
+    if (r.meta == null) Nil else r.meta.keys
+
   def empty(spark: SparkSession): RecordStore = {
     import spark.implicits._
-    new RecordStore(spark, spark.emptyDataset[SumRecord], 1L, Set.empty)
+    new RecordStore(spark, State(spark.emptyDataset[SumRecord], 1L, Set.empty,
+      Some(Snapshot(Array.empty))))
   }
 
-  /** Wrap an existing distributed Dataset as a store WITHOUT pulling it to
-    * the driver — the ingest path for lake-resident corpora (two KB-sized
-    * aggregates compute nextId and the meta key set, as [[load]] does).
+  /** The one constructor: persist `records` and count them (which
+    * materializes the cache). Within the cap the rows come to the driver
+    * in one collect — skipped when the caller already holds them as
+    * `local` — and nextId and the meta key set derive from them; over
+    * the cap, two KB-sized aggregates compute both and the store stays
+    * on the Dataset path. nextId is max(id)+1 and the key set is rebuilt,
+    * as the reference does on boot (index.go:72-102).
+    */
+  private def build(spark: SparkSession, records: Dataset[SumRecord],
+      local: Option[Seq[SumRecord]] = None): RecordStore = {
+    import spark.implicits._
+    val ds = records.persist(StorageLevel.MEMORY_AND_DISK)
+    // An RDD count: one job, where Dataset.count adds an aggregate stage.
+    val state =
+      if (ds.queryExecution.toRdd.count() <= maxCollectRows(spark)) {
+        val snap = Snapshot(local.fold(ds.collect())(_.toArray))
+        State(ds, snap.rows.lastOption.fold(0L)(_.id) + 1,
+          snap.rows.iterator.flatMap(keysOf).toSet, Some(snap))
+      } else {
+        val maxId = ds.agg(max(col("id"))).collect().head match {
+          case row if row.isNullAt(0) => 0L
+          case row                    => row.getLong(0)
+        }
+        val keys = ds.select(explode(map_keys(col("meta"))).as("k"))
+          .distinct().as[String].collect().toSet
+        State(ds, maxId + 1, keys, None)
+      }
+    new RecordStore(spark, state)
+  }
+
+  /** Wrap an existing Dataset as a store — the ingest path for
+    * lake-resident corpora; rows reach the driver only within the cap.
     */
   def fromDataset(spark: SparkSession,
       records: Dataset[SumRecord]): RecordStore = {
     import spark.implicits._
-    val ds = records.map(SumRecord.withDefaultShape)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxId = ds.agg(max(col("id"))).collect().head match {
-      case row if row.isNullAt(0) => 0L
-      case row                    => row.getLong(0)
-    }
-    val keys = ds.select(explode(map_keys(col("meta"))).as("k"))
-      .distinct().as[String].collect().toSet
-    new RecordStore(spark, ds, maxId + 1, keys)
+    build(spark, records.map(SumRecord.withDefaultShape))
   }
 
   def fromRecords(spark: SparkSession, recs: Seq[SumRecord]): RecordStore = {
-    val s = empty(spark)
-    s.createManyWithId(recs.map(SumRecord.withDefaultShape)) match {
-      case Left(err) => throw new IllegalArgumentException(err)
-      case Right(_)  => s
-    }
+    import spark.implicits._
+    val normalized = recs.map(SumRecord.withDefaultShape)
+    if (normalized.map(_.id).distinct.size != normalized.size)
+      throw new IllegalArgumentException(StoreErrors.InvalidId)
+    build(spark, spark.createDataset(normalized), Some(normalized))
   }
 
-  /** Load a persisted store; nextId becomes max(id)+1 and the meta key set
-    * is rebuilt, as the reference does on boot (index.go:72-102).
-    */
+  /** Load a persisted store. */
   def load(spark: SparkSession, path: String): RecordStore = {
     import spark.implicits._
-    val ds = spark.read.schema(SumRecord.schema).parquet(path).as[SumRecord]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxId = ds.agg(max(col("id"))).collect().head match {
-      case row if row.isNullAt(0) => 0L
-      case row                    => row.getLong(0)
-    }
-    val keys = ds.select(explode(map_keys(col("meta"))).as("k"))
-      .distinct().as[String].collect().toSet
-    new RecordStore(spark, ds, maxId + 1, keys)
+    build(spark, spark.read.schema(SumRecord.schema).parquet(path).as[SumRecord])
   }
 }

@@ -150,4 +150,84 @@ class OracleSpec extends SparkSpec {
     assert(reg.delete(a1.id).isRight)
     assert(reg.read(a1.id) === Left(s"oracle ${a1.id} not found."))
   }
+
+  // ---- resident store parity ----------------------------------------------
+
+  /** Components are multiples of 1/64, so every float64 sum is exact and
+    * sumAllVectors can be compared exactly even though a Dataset adds its
+    * per-partition partials in another order. Ragged lengths and a zero
+    * vector exercise the sum's longer-length rule and cosine's 0.0 guard.
+    */
+  private val mixed: Seq[SumRecord] = {
+    val rnd = new scala.util.Random(7)
+    (1 to 200).map { i =>
+      val dims = if (i % 50 == 0) 3 else if (i % 70 == 0) 11 else 8
+      val data = if (i == 13) Array.fill(8)(0f)
+        else Array.fill(dims)((rnd.nextInt(513) - 256) / 64f)
+      SumRecord(i.toLong, data, Map("name" -> s"r$i"))
+    }
+  }
+
+  private val readmeFindSimilar = """function findSimilar(id, threshold) {
+  var v = records.Find(id);
+  if (v.IsNull()) { return ctx.Error("Vector " + id + " not found."); }
+  var all = records.AllBut(v);
+  var results = {};
+  for (var i = 0; i < all.length; i++) {
+    var s = v.Cosine(all[i]);
+    if (s >= threshold) results["" + all[i].ID] = s;
+  }
+  return results;
+}"""
+
+  private def suite(reg: OracleRegistry): Seq[(String, Long)] = {
+    CanonicalOracles.registerAll(reg)
+    val js = reg.createJs("findSimilarJs", readmeFindSimilar).fold(m => fail(m), identity)
+    Seq("findSimilar" -> reg.findByName("findSimilar").toOption.get.id,
+      "sumAllVectors" -> reg.findByName("sumAllVectors").toOption.get.id,
+      "findSimilarJs" -> js.id)
+  }
+
+  test("resident and Dataset-path stores give identical oracle results") {
+    val resident = RecordStore.fromRecords(spark, mixed)
+    val onDataset = withConf(RecordStore.MaxCollectRowsKey, "100")(
+      RecordStore.fromRecords(spark, mixed))
+    assert(countJobs(resident.find(1L))._2 === 0)
+    assert(countJobs(onDataset.find(1L))._2 > 0)
+    val reg = new OracleRegistry
+    val ids = suite(reg).toMap
+    def parsed(out: Either[String, String]): JValue =
+      JsonMethods.parse(out.fold(m => fail(m), identity))
+    def asMap(v: JValue) = v.asInstanceOf[JObject].obj.toMap
+    for (id <- Seq(1L, 13L, 50L, 70L, 140L); t <- Seq("-1", "0", "0.25", "0.9")) {
+      val args = Seq(id.toString, t)
+      for (name <- Seq("findSimilar", "findSimilarJs")) {
+        val (a, b) = (reg.run(ids(name), resident, args), reg.run(ids(name), onDataset, args))
+        assert(asMap(parsed(a)) === asMap(parsed(b)), s"$name($id, $t)")
+      }
+    }
+    assert(asMap(parsed(reg.run(ids("findSimilar"), resident, Seq("1", "-1")))).size === 199)
+    assert(reg.run(ids("findSimilar"), resident, Seq("999", "0")) ===
+      reg.run(ids("findSimilar"), onDataset, Seq("999", "0")))
+    assert(reg.run(ids("findSimilarJs"), resident, Seq("999", "0")) ===
+      reg.run(ids("findSimilarJs"), onDataset, Seq("999", "0")))
+    val sums = reg.run(ids("sumAllVectors"), resident, Seq.empty)
+    assert(sums === reg.run(ids("sumAllVectors"), onDataset, Seq.empty))
+    assert(parsed(sums).asInstanceOf[JArray].arr.size === 11)
+  }
+
+  test("a resident store serves reads and oracle runs with no Spark job") {
+    val store = RecordStore.fromRecords(spark, mixed)
+    val reg = new OracleRegistry
+    val ids = suite(reg).toMap
+    def jobs(f: => Any): Int = countJobs(f)._2
+    assert(jobs(store.find(42L)) === 0, "find")
+    assert(jobs(store.list(3, 25)) === 0, "list")
+    assert(jobs(store.findBy("name", "r7")) === 0, "findBy")
+    assert(jobs(store.size) === 0, "size")
+    assert(jobs(reg.run(ids("findSimilar"), store, Seq("42", "0.5"))) === 0, "findSimilar")
+    assert(jobs(reg.run(ids("sumAllVectors"), store, Seq.empty)) === 0, "sumAllVectors")
+    val (js, jsJobs) = countJobs(reg.run(ids("findSimilarJs"), store, Seq("42", "0.5")))
+    assert(js.isRight && jsJobs === 0, "stored-JS findSimilar")
+  }
 }

@@ -114,4 +114,140 @@ class RecordStoreSpec extends SparkSpec {
     assert(loaded.size === 2L && loaded.nextId === 3L)
     assert(loaded.findBy("k", "v").get.map(_.id) === Seq(1L))
   }
+
+  // ---- driver-resident snapshot -------------------------------------------
+
+  /** Seeded records whose components are multiples of 1/64: every float64
+    * sum of them is exact, so results that add in a different order (a
+    * Dataset's per-partition partials) can still be compared exactly.
+    */
+  private def seeded(n: Int): Seq[SumRecord] = {
+    val rnd = new scala.util.Random(42)
+    (1 to n).map { i =>
+      SumRecord(i.toLong, Array.fill(8)((rnd.nextInt(513) - 256) / 64f),
+        Map("bucket" -> (i % 5).toString) ++
+          (if (i % 3 == 0) Map("third" -> "yes") else Map.empty))
+    }
+  }
+
+  private def view(r: SumRecord) = (r.id, r.data.toSeq, r.shape.toSeq, r.meta)
+  private def views(rs: Seq[SumRecord]) = rs.map(view)
+
+  /** The same records twice: resident, and on the Dataset path (built
+    * with the cap below their count, then the cap restored).
+    */
+  private def residentAndNot(recs: Seq[SumRecord]): (RecordStore, RecordStore) = {
+    val resident = RecordStore.fromRecords(spark, recs)
+    val onDataset = withConf(RecordStore.MaxCollectRowsKey, (recs.size - 1).toString)(
+      RecordStore.fromRecords(spark, recs))
+    (resident, onDataset)
+  }
+
+  private def jobsOf(f: => Any): Int = countJobs(f)._2
+
+  test("resident and Dataset-path stores answer find/findBy/list/size alike") {
+    val (res, ds) = residentAndNot(seeded(60))
+    assert(jobsOf(res.find(7L)) === 0)
+    assert(jobsOf(ds.find(7L)) > 0, "the cap-built store must stay on the Dataset path")
+    (Seq(0L, 1L, 2L, 31L, 59L, 60L, 61L, -3L)).foreach { id =>
+      assert(res.find(id).map(view) === ds.find(id).map(view), s"find($id)")
+    }
+    for (key <- Seq("bucket", "third", "never"); value <- Seq("0", "3", "yes", "no"))
+      assert(res.findBy(key, value).map(rs => views(rs.sortBy(_.id))) ===
+        ds.findBy(key, value).map(rs => views(rs.sortBy(_.id))), s"findBy($key, $value)")
+    for (page <- Seq(-1L, 1L, 2L, 4L, 7L, 13L); perPage <- Seq(0L, 1L, 7L, 20L, 100L)) {
+      val (a, b) = (res.list(page, perPage), ds.list(page, perPage))
+      assert((a.total, a.pages, views(a.records)) === ((b.total, b.pages, views(b.records))),
+        s"list($page, $perPage)")
+    }
+    assert(res.size === 60L && ds.size === 60L)
+    assert(views(res.all()) === views(ds.all()))
+    assert(res.nextId === ds.nextId)
+    assert(res.similarTo(Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f), -0.5, 3L) ===
+      ds.similarTo(Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f), -0.5, 3L).sortBy(_._1))
+    assert(res.sumVectors().toSeq === ds.sumVectors().toSeq)
+  }
+
+  test("every write shows in the next find/list of a resident store, with no job") {
+    val s = RecordStore.fromRecords(spark, seeded(5))
+    def ids = s.list(1, 100).records.map(_.id)
+    def probe[T](read: => T): T = {
+      val (out, jobs) = countJobs(read)
+      assert(jobs === 0, "the store must stay resident across writes")
+      out
+    }
+
+    val created = s.create(SumRecord(0, Array(9f), Map("name" -> "c"))).toOption.get
+    assert(created.id === 6L)
+    assert(probe(s.find(6L)).map(_.meta) === Some(Map("name" -> "c")))
+    assert(probe(ids) === (1L to 6L))
+
+    assert(s.createWithId(SumRecord(10, Array(1f, 2f))).isRight)
+    assert(probe(s.find(10L)).map(_.data.toSeq) === Some(Seq(1f, 2f)))
+    assert(probe(s.size) === 7L && s.nextId === 11L)
+
+    assert(s.update(SumRecord(10, Array(3f), Array.emptyLongArray, Map.empty)).isRight)
+    assert(probe(s.find(10L)).map(_.data.toSeq) === Some(Seq(3f)))
+    assert(probe(s.list(1, 100)).records.count(_.id == 10L) === 1)
+
+    assert(s.delete(3L).isRight)
+    assert(probe(s.find(3L)) === None)
+    assert(probe(ids) === Seq(1L, 2L, 4L, 5L, 6L, 10L))
+
+    assert(s.createManyWithId(Seq(SumRecord(20, Array(1f)),
+      SumRecord(21, Array(2f), Map("fresh" -> "k")))) === Right(2L))
+    assert(probe(ids) === Seq(1L, 2L, 4L, 5L, 6L, 10L, 20L, 21L))
+    assert(probe(s.findBy("fresh", "k")).map(_.map(_.id)) === Some(Seq(21L)))
+
+    assert(s.deleteMany(Seq(1L, 20L, 999L)) === 2L)
+    assert(probe(ids) === Seq(2L, 4L, 5L, 6L, 10L, 21L))
+
+    // a rejected batch leaves the snapshot (and the Dataset) untouched
+    val before = views(s.all())
+    assert(s.createManyWithId(Seq(SumRecord(30, Array(1f)), SumRecord(21, Array(1f)))) ===
+      Left(StoreErrors.InvalidId))
+    assert(probe(views(s.all())) === before)
+    assert(probe(s.find(30L)) === None)
+    assert(s.records.count() === 6L)
+  }
+
+  test("a write that takes a resident store over the cap drops the snapshot") {
+    val s = RecordStore.fromRecords(spark, seeded(3))
+    assert(jobsOf(s.find(1L)) === 0)
+    withConf(RecordStore.MaxCollectRowsKey, "3") {
+      assert(s.create(SumRecord(0, Array(5f))).toOption.map(_.id) === Some(4L))
+    }
+    // the cap is back at its default, but residency is decided at build
+    val (found, jobs) = countJobs(s.find(4L))
+    assert(found.map(_.data.toSeq) === Some(Seq(5f)))
+    assert(jobs > 0, "an over-cap write must leave the store on the Dataset path")
+    assert(s.size === 4L && s.list(1, 10).records.map(_.id) === (1L to 4L))
+  }
+
+  test("a cap lowered after build still bounds a resident store's driver reads") {
+    val s = RecordStore.fromRecords(spark, (1 to 3).map(i =>
+      SumRecord(i.toLong, Array(1f), Map("tag" -> "same"))))
+    assert(jobsOf(s.find(1L)) === 0)
+    withConf(RecordStore.MaxCollectRowsKey, "2") {
+      val e1 = intercept[IllegalStateException](s.findBy("tag", "same"))
+      assert(e1.getMessage ===
+        "findBy matched more than 2 records; use findByDs or raise graft.store.maxCollectRows")
+      val e2 = intercept[IllegalStateException](s.list(1, 3))
+      assert(e2.getMessage ===
+        "page size 3 exceeds 2; use listDs or raise graft.store.maxCollectRows")
+      val e3 = intercept[RecordStore.CollectCapExceeded](s.all())
+      assert(e3.cap === 2)
+      val reg = new graft.oracle.OracleRegistry
+      val all = reg.createJs("allIds", """
+function allIds() {
+    var ids = [];
+    records.All().forEach(function(r) { ids.push(r.ID); });
+    return ids;
+}""").fold(m => fail(m), identity)
+      assert(reg.run(all.id, s, Seq.empty) === Left(
+        "records.All() would materialize more than 2 rows on the driver; " +
+          "raise graft.store.maxCollectRows, or run through runDistributed " +
+          "where each partition materializes only on its executor"))
+    }
+  }
 }
