@@ -3,6 +3,7 @@ package graft.service
 import scala.collection.mutable.ArrayBuffer
 
 import org.json4s.JValue
+import org.slf4j.LoggerFactory
 
 import graft.EngineInfo
 import graft.model.SumRecord
@@ -140,6 +141,7 @@ final class GrpcEngine(client: SumGrpcClient) extends NodeEngine {
 final class SumFederation(
     compileFn: (String, String) => Either[String, Oracle] =
       (n, c) => graft.oracle.js.JsOracle.compile(n, c)) extends RegistryOracles {
+  import SumFederation.{log, recordJson}
 
   protected def compile(name: String, code: String): Either[String, Oracle] =
     compileFn(name, code)
@@ -314,10 +316,10 @@ final class SumFederation(
   /** balancer.go:10-59: move the donor's FIRST n records (list page 1 is
     * id-ordered) onto the taker, create-before-delete. A DEAD peer at any
     * exchange (the list, the create, the delete) aborts THIS transfer and
-    * keeps what survived — the reference logs the error and continues
-    * (balancer.go:23-26,37-40); a raw exception here would instead crash
-    * the whole master op that triggered the balance (measured by
-    * FederationProcSpec's kill-then-DeleteNode flow).
+    * keeps what survived — like the reference, this logs a warning and
+    * continues (balancer.go:23-26,37-40); a raw exception here would
+    * instead crash the whole master op that triggered the balance
+    * (measured by FederationProcSpec's kill-then-DeleteNode flow).
     */
   private def transfer(from: FedNode, to: FedNode, nRecords: Long): Unit = {
     if (nRecords <= 0) return
@@ -325,13 +327,19 @@ final class SumFederation(
       val recs = from.engine.listRecords(page = 1, perPage = nRecords)
       if (recs.isEmpty) return
       val created = to.engine.createRecordsWithId(recs)
-      if (!created.success) return // log-and-keep the donor intact
+      if (!created.success) { // keep the donor intact
+        log.warn(s"transfer of ${recs.length} records from node ${from.id} " +
+          s"to node ${to.id} failed: ${created.msg}")
+        return
+      }
       from.engine.deleteRecords(recs.map(_.id))
       from.adjustRecords(-recs.length) // balancer.go:39/58 status accounting
       to.adjustRecords(recs.length)
       setNextIdIfHigher(recs.map(_.id).max + 1)
     } catch {
-      case scala.util.control.NonFatal(_) => () // log-and-keep
+      case scala.util.control.NonFatal(e) =>
+        log.warn(s"transfer of $nRecords records from node ${from.id} " +
+          s"to node ${to.id} failed", e)
     }
   }
 
@@ -501,8 +509,6 @@ final class SumFederation(
 
   // ---- distributed run (mux_runner.go) ------------------------------------
 
-  import SumFederation.recordJson
-
   /** mux_runner.go:49-79 + ast_raccoon PatchCode: resolve each parameter
     * the oracle uses as `records.Find(param)` against the FEDERATION
     * (master-side read fans across nodes), then patch those call sites to
@@ -620,12 +626,16 @@ final class SumFederation(
       // best-effort like the reference's deferred warn-and-continue
       // cleanup (mux_runner.go:94-101): one dead node must not strand
       // the other nodes' temporaries
-      try n.engine.deleteOracle(id) catch { case _: Exception => () }
+      try n.engine.deleteOracle(id) catch { case e: Exception =>
+        log.warn(s"could not delete Run temporary oracle $id on node ${n.id}", e)
+      }
     }
   }
 }
 
 object SumFederation {
+  private val log = LoggerFactory.getLogger(classOf[SumFederation])
+
   /** A resolved record as the master serialises it into patched code
     * (mux_runner.go:71 json.Marshal of the proto record): float data
     * widens to JSON numbers (exact — binary widening, and the node's

@@ -2,7 +2,7 @@ package graft.store
 
 import scala.collection.immutable.ArraySeq
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -55,59 +55,65 @@ private[store] object Snapshot {
 }
 
 /** Mutable record store with the reference's CRUD semantics
-  * (node/storage/index.go, records.go) over a cached Spark Dataset, with
-  * a driver-resident snapshot of the same records beside it while the
-  * store fits the driver cap.
+  * (node/storage/index.go, records.go). A store whose record count was
+  * within [[RecordStore.MaxCollectRowsKey]] when it was built is
+  * resident: its records live only in a driver-side [[Snapshot]], like
+  * the reference node's in-memory index. A larger store keeps them in a
+  * cached Spark Dataset.
   *
   * Design: copy-on-write. The store's state is one immutable value — the
-  * cached `Dataset[SumRecord]`, the next sequential id, the set of meta
-  * keys ever indexed (the reference's driver-side state,
-  * index.go:154-172, records.go:8-48) and, for a store whose record count
-  * was within [[RecordStore.MaxCollectRowsKey]] when it was built, a
-  * [[Snapshot]]. Every mutation derives a new Dataset (union /
-  * anti-filter / per-field coalesce), persists and materializes it,
-  * derives the next snapshot on the driver from the previous one plus
-  * the change, and publishes all of it in one volatile write under the
-  * lock; readers take one consistent reference with no lock. Batch
+  * records, the next sequential id and the set of meta keys ever indexed
+  * (the reference's driver-side state, index.go:154-172,
+  * records.go:8-48) — published in one volatile write under the lock;
+  * readers take one consistent reference with no lock. Each write states
+  * its change once, as (removed ids, added records): a resident store
+  * derives its next snapshot from it on the driver and starts no Spark
+  * job; a store that is, or that the write takes, over the cap derives,
+  * persists and counts the next Dataset from it. A write that takes a
+  * resident store over the cap drops the snapshot for good. Batch
   * mutations (createManyWithId) validate first and publish once, which
   * is what makes the reference's rollback semantics (index.go:190-218)
   * free: a failed batch never becomes visible.
   *
   * Serving reads — [[find]], [[findBy]], [[list]], [[size]], [[all]],
   * [[similarTo]], [[sumVectors]] — answer from the snapshot when there is
-  * one (no Spark job, like the reference node's in-memory index) and
-  * from plans over the Dataset otherwise. A write that takes a resident
-  * store over the cap drops the snapshot for good. [[records]] and the
+  * one and from plans over the Dataset otherwise. [[records]] and the
   * `*Ds` reads always return Dataset plans, so the queries, ops and
-  * distributed-oracle layers see the same distributed storage at any
-  * size: point lookups are pushdown filters on the id column, and
-  * persistence is parquet (replacing the reference's
-  * one-protobuf-file-per-record layout, node/storage/saver.go:12-20).
+  * distributed-oracle layers see the same records at any size; a
+  * resident state derives its Dataset on first use as an uncached local
+  * relation over the snapshot rows and keeps it for the state's life.
+  * Point lookups are pushdown filters on the id column, and persistence
+  * is parquet (replacing the reference's one-protobuf-file-per-record
+  * layout, node/storage/saver.go:12-20).
   */
 final class RecordStore private (
     val spark: SparkSession,
     initial: RecordStore.State) {
 
   import spark.implicits._
-  import RecordStore.{CollectCapExceeded, State, keysOf, maxCollectRows}
+  import RecordStore.{CollectCapExceeded, State, keysOf, maxCollectRows, resident}
 
   @volatile private var state: State = initial
 
-  /** Persist and materialize `next` before dropping the old lineage,
-    * derive the snapshot and counters from the change, and publish them
-    * as one value. Returns the new record count. Callers hold the lock.
+  /** Apply one write — drop the records whose id is in `removed`, then
+    * append `added` — and publish the next state. A resident store that
+    * stays within the cap derives its next snapshot with no Spark job;
+    * otherwise the next Dataset is persisted and materialized before the
+    * old cache is dropped. Returns the new record count. Callers hold
+    * the lock.
     */
-  private def commit(next: Dataset[SumRecord], removed: Set[Long],
-      added: Seq[SumRecord]): Long = {
+  private def commit(removed: Set[Long], added: Seq[SumRecord]): Long = {
     val old = state
-    val cached = next.persist(StorageLevel.MEMORY_AND_DISK)
-    val count = cached.count()
-    val cap = maxCollectRows(spark)
-    state = State(cached,
-      (old.nextId +: added.map(_.id + 1)).max,
-      old.metaKeys ++ added.flatMap(keysOf),
-      old.snapshot.map(_.change(removed, added)).filter(_.size <= cap))
-    old.ds.unpersist()
+    val nextId = (old.nextId +: added.map(_.id + 1)).max
+    val keys = old.metaKeys ++ added.flatMap(keysOf)
+    state = old.snapshot.map(_.change(removed, added))
+        .filter(_.size <= maxCollectRows(spark)) match {
+      case Some(snap) => resident(spark, snap, nextId, keys)
+      case None => new State(old.ds.filter(!col("id").isin(removed.toSeq: _*)).union(
+        spark.createDataset(added)).persist(StorageLevel.MEMORY_AND_DISK), nextId, keys, None)
+    }
+    val count = sizeOf(state) // on the Dataset path, materializes the new cache
+    if (old.snapshot.isEmpty) old.ds.unpersist()
     count
   }
 
@@ -115,12 +121,13 @@ final class RecordStore private (
 
   def records: Dataset[SumRecord] = state.ds
 
-  /** Release the store's cached blocks (the persist taken by a write or
-    * a constructor). Call when done with a short-lived store — each
-    * query-scoped store otherwise pins its cached dataset for the app
-    * lifetime. The store must not be used afterwards.
+  /** Release a Dataset-path store's cached blocks (the persist taken by
+    * a write or a constructor; a resident store caches nothing). Call when
+    * done with a short-lived store — each query-scoped store otherwise
+    * pins its cached dataset for the app lifetime. The store must not be
+    * used afterwards.
     */
-  def close(): Unit = synchronized { state.ds.unpersist(); () }
+  def close(): Unit = synchronized { if (state.snapshot.isEmpty) state.ds.unpersist() }
 
   /** The same records re-bucketed into `n` partitions — the Spark form of
     * the reference master's transfer/balance verbs (each partition is a
@@ -128,7 +135,7 @@ final class RecordStore private (
     */
   def repartitioned(n: Int): RecordStore = {
     val s = state
-    new RecordStore(spark, s.copy(ds = s.ds.repartition(n)))
+    new RecordStore(spark, new State(s.ds.repartition(n), s.nextId, s.metaKeys, s.snapshot))
   }
 
   def size: Long = sizeOf(state)
@@ -145,7 +152,7 @@ final class RecordStore private (
     val rec = SumRecord.withDefaultShape(record)
     if (find(rec.id).isDefined) Left(StoreErrors.InvalidId)
     else {
-      commit(state.ds.union(spark.createDataset(Seq(rec))), Set.empty, Seq(rec))
+      commit(Set.empty, Seq(rec))
       Right(rec)
     }
   }
@@ -163,7 +170,7 @@ final class RecordStore private (
     })
     if (clash) Left(StoreErrors.InvalidId)
     else {
-      commit(s.ds.union(spark.createDataset(normalized)), Set.empty, normalized)
+      commit(Set.empty, normalized)
       Right(normalized.size.toLong)
     }
   }
@@ -179,8 +186,7 @@ final class RecordStore private (
           data = if (patch.data != null && patch.data.nonEmpty) patch.data else old.data,
           shape = if (patch.shape != null && patch.shape.nonEmpty) patch.shape else old.shape,
           meta = if (patch.meta != null && patch.meta.nonEmpty) patch.meta else old.meta)
-        commit(state.ds.filter(col("id") =!= patch.id)
-          .union(spark.createDataset(Seq(merged))), Set(patch.id), Seq(merged))
+        commit(Set(patch.id), Seq(merged))
         Right(merged)
     }
   }
@@ -199,14 +205,14 @@ final class RecordStore private (
     find(id) match {
       case None => Left(StoreErrors.recordNotFound(id))
       case Some(r) =>
-        commit(state.ds.filter(col("id") =!= id), Set(id), Nil)
+        commit(Set(id), Nil)
         Right(r)
     }
   }
 
   def deleteMany(ids: Seq[Long]): Long = synchronized {
     val before = size
-    before - commit(state.ds.filter(!col("id").isin(ids: _*)), ids.toSet, Nil)
+    before - commit(ids.toSet, Nil)
   }
 
   /** Equality filter on one metadata key. Returns None — distinct from an
@@ -367,47 +373,59 @@ object RecordStore {
   final class CollectCapExceeded(val cap: Int, msg: String)
       extends IllegalStateException(msg)
 
-  /** One consistent store state: readers take it whole. */
-  private[store] final case class State(ds: Dataset[SumRecord], nextId: Long,
-      metaKeys: Set[String], snapshot: Option[Snapshot])
+  /** One consistent store state: readers take it whole. `dataset` is
+    * evaluated once, on first use of `ds`.
+    */
+  private[store] final class State(dataset: => Dataset[SumRecord],
+      val nextId: Long, val metaKeys: Set[String], val snapshot: Option[Snapshot]) {
+    lazy val ds: Dataset[SumRecord] = dataset
+  }
+
+  /** A resident state: its Dataset is an uncached local relation over the
+    * snapshot rows.
+    */
+  private def resident(spark: SparkSession, snap: Snapshot, nextId: Long,
+      metaKeys: Set[String]): State =
+    new State(spark.createDataset(ArraySeq.unsafeWrapArray(snap.rows))(Encoders.product[SumRecord]),
+      nextId, metaKeys, Some(snap))
 
   private def keysOf(r: SumRecord): Iterable[String] =
     if (r.meta == null) Nil else r.meta.keys
 
-  def empty(spark: SparkSession): RecordStore = {
-    import spark.implicits._
-    new RecordStore(spark, State(spark.emptyDataset[SumRecord], 1L, Set.empty,
-      Some(Snapshot(Array.empty))))
+  def empty(spark: SparkSession): RecordStore = fromRows(spark, Array.empty)
+
+  /** A resident store over `rows`; nextId is max(id)+1 and the key set
+    * is rebuilt, as the reference does on boot (index.go:72-102).
+    */
+  private def fromRows(spark: SparkSession, rows: Array[SumRecord]): RecordStore = {
+    val snap = Snapshot(rows)
+    new RecordStore(spark, resident(spark, snap,
+      snap.rows.lastOption.fold(0L)(_.id) + 1, snap.rows.iterator.flatMap(keysOf).toSet))
   }
 
-  /** The one constructor: persist `records` and count them (which
-    * materializes the cache). Within the cap the rows come to the driver
-    * in one collect — skipped when the caller already holds them as
-    * `local` — and nextId and the meta key set derive from them; over
-    * the cap, two KB-sized aggregates compute both and the store stays
-    * on the Dataset path. nextId is max(id)+1 and the key set is rebuilt,
-    * as the reference does on boot (index.go:72-102).
+  /** Persist `records` and count them (which materializes the cache).
+    * Within the cap the rows come to the driver in one collect, the cache
+    * is dropped and the store is resident; over the cap, two KB-sized
+    * aggregates compute nextId and the meta key set, and the store stays
+    * on the cached Dataset.
     */
-  private def build(spark: SparkSession, records: Dataset[SumRecord],
-      local: Option[Seq[SumRecord]] = None): RecordStore = {
+  private def build(spark: SparkSession, records: Dataset[SumRecord]): RecordStore = {
     import spark.implicits._
     val ds = records.persist(StorageLevel.MEMORY_AND_DISK)
     // An RDD count: one job, where Dataset.count adds an aggregate stage.
-    val state =
-      if (ds.queryExecution.toRdd.count() <= maxCollectRows(spark)) {
-        val snap = Snapshot(local.fold(ds.collect())(_.toArray))
-        State(ds, snap.rows.lastOption.fold(0L)(_.id) + 1,
-          snap.rows.iterator.flatMap(keysOf).toSet, Some(snap))
-      } else {
-        val maxId = ds.agg(max(col("id"))).collect().head match {
-          case row if row.isNullAt(0) => 0L
-          case row                    => row.getLong(0)
-        }
-        val keys = ds.select(explode(map_keys(col("meta"))).as("k"))
-          .distinct().as[String].collect().toSet
-        State(ds, maxId + 1, keys, None)
+    if (ds.queryExecution.toRdd.count() <= maxCollectRows(spark)) {
+      val rows = ds.collect()
+      ds.unpersist()
+      fromRows(spark, rows)
+    } else {
+      val maxId = ds.agg(max(col("id"))).collect().head match {
+        case row if row.isNullAt(0) => 0L
+        case row                    => row.getLong(0)
       }
-    new RecordStore(spark, state)
+      val keys = ds.select(explode(map_keys(col("meta"))).as("k"))
+        .distinct().as[String].collect().toSet
+      new RecordStore(spark, new State(ds, maxId + 1, keys, None))
+    }
   }
 
   /** Wrap an existing Dataset as a store — the ingest path for
@@ -424,7 +442,8 @@ object RecordStore {
     val normalized = recs.map(SumRecord.withDefaultShape)
     if (normalized.map(_.id).distinct.size != normalized.size)
       throw new IllegalArgumentException(StoreErrors.InvalidId)
-    build(spark, spark.createDataset(normalized), Some(normalized))
+    if (normalized.size <= maxCollectRows(spark)) fromRows(spark, normalized.toArray)
+    else build(spark, spark.createDataset(normalized))
   }
 
   /** Load a persisted store. */

@@ -105,14 +105,28 @@ class RecordStoreSpec extends SparkSpec {
   }
 
   test("save/load round-trip restores records, nextId, and meta keys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString + "/r"
     val s = RecordStore.empty(spark)
     s.create(SumRecord(0, Array(1f, 2f), Map("k" -> "v")))
     s.create(rec(3f))
-    s.save(dir)
-    val loaded = RecordStore.load(spark, dir)
+    val loaded = roundTrip(s)
     assert(loaded.size === 2L && loaded.nextId === 3L)
     assert(loaded.findBy("k", "v").get.map(_.id) === Seq(1L))
+  }
+
+  /** Save `s`, load it back and check the loaded store keeps its records,
+    * nextId and the findBy nil-vs-empty contract.
+    */
+  private def roundTrip(s: RecordStore): RecordStore = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString + "/r"
+    s.save(dir)
+    val loaded = RecordStore.load(spark, dir)
+    assert(views(loaded.all()) === views(s.all()))
+    assert(loaded.nextId === s.nextId)
+    val keys = s.all().flatMap(r => Option(r.meta).toSeq.flatMap(_.toSeq))
+    for ((key, value) <- keys :+ ("never" -> "x"))
+      assert(loaded.findBy(key, value).map(views) === s.findBy(key, value).map(views),
+        s"findBy($key, $value)")
+    loaded
   }
 
   // ---- driver-resident snapshot -------------------------------------------
@@ -166,49 +180,125 @@ class RecordStoreSpec extends SparkSpec {
     assert(res.similarTo(Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f), -0.5, 3L) ===
       ds.similarTo(Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f), -0.5, 3L).sortBy(_._1))
     assert(res.sumVectors().toSeq === ds.sumVectors().toSeq)
+    Seq(res, ds).foreach(assertDerivedMatches)
+  }
+
+  /** A stored-JS element-wise vector sum; distributed, each partition of
+    * `records` sums its own rows and the merger adds the partials.
+    */
+  private val jsSumCode = """
+function sumAllVectors() {
+    var sum = [];
+    records.All().forEach(function(r) {
+        add(sum, function(i) { return r.Get(i); }, r.Size);
+    });
+    return sum;
+}
+function add(sum, v, n) {
+    for (var i = 0; i < n; i++) {
+        if (i >= sum.length) sum.push(0);
+        sum[i] += v(i);
+    }
+    return sum;
+}
+function mergeNodesResults(results) {
+    var sum = [];
+    results.forEach(function(p) {
+        add(sum, function(i) { return p[i]; }, p.length);
+    });
+    return sum;
+}"""
+
+  /** The Dataset a store derives matches what its driver reads answer:
+    * `records` holds exactly the records of `all()`, a save/load round
+    * trip keeps them, and a stored-JS vector sum run per partition over
+    * `repartitioned(4)` equals `sumVectors()`.
+    */
+  private def assertDerivedMatches(s: RecordStore): Unit = {
+    import org.json4s._
+    assert(views(s.records.collect().toSeq.sortBy(_.id)) === views(s.all()))
+    roundTrip(s)
+    val reg = new graft.oracle.OracleRegistry
+    val sum = reg.createJs("sumAllVectors", jsSumCode).fold(m => fail(m), identity)
+    val out = reg.runDistributed(sum.id, s.repartitioned(4), Seq.empty)
+      .fold(m => fail(m), identity)
+    val JArray(parts) = org.json4s.jackson.JsonMethods.parse(out)
+    assert(parts.map {
+      case JDouble(d) => d
+      case JInt(i)    => i.toDouble
+      case JLong(l)   => l.toDouble
+      case other      => fail(s"non-numeric $other")
+    } === s.sumVectors().toSeq)
   }
 
   test("every write shows in the next find/list of a resident store, with no job") {
-    val s = RecordStore.fromRecords(spark, seeded(5))
-    def ids = s.list(1, 100).records.map(_.id)
-    def probe[T](read: => T): T = {
-      val (out, jobs) = countJobs(read)
-      assert(jobs === 0, "the store must stay resident across writes")
+    def probe[T](op: => T): T = {
+      val (out, jobs) = countJobs(op)
+      assert(jobs === 0, "a resident store must build, write and read with no job")
       out
     }
+    val s = probe(RecordStore.fromRecords(spark, seeded(5)))
+    def ids = s.list(1, 100).records.map(_.id)
 
-    val created = s.create(SumRecord(0, Array(9f), Map("name" -> "c"))).toOption.get
+    val created = probe(s.create(SumRecord(0, Array(9f), Map("name" -> "c")))).toOption.get
     assert(created.id === 6L)
     assert(probe(s.find(6L)).map(_.meta) === Some(Map("name" -> "c")))
     assert(probe(ids) === (1L to 6L))
 
-    assert(s.createWithId(SumRecord(10, Array(1f, 2f))).isRight)
+    assert(probe(s.createWithId(SumRecord(10, Array(1f, 2f)))).isRight)
     assert(probe(s.find(10L)).map(_.data.toSeq) === Some(Seq(1f, 2f)))
     assert(probe(s.size) === 7L && s.nextId === 11L)
 
-    assert(s.update(SumRecord(10, Array(3f), Array.emptyLongArray, Map.empty)).isRight)
+    assert(probe(s.update(SumRecord(10, Array(3f), Array.emptyLongArray, Map.empty))).isRight)
     assert(probe(s.find(10L)).map(_.data.toSeq) === Some(Seq(3f)))
     assert(probe(s.list(1, 100)).records.count(_.id == 10L) === 1)
 
-    assert(s.delete(3L).isRight)
+    assert(probe(s.delete(3L)).isRight)
     assert(probe(s.find(3L)) === None)
     assert(probe(ids) === Seq(1L, 2L, 4L, 5L, 6L, 10L))
 
-    assert(s.createManyWithId(Seq(SumRecord(20, Array(1f)),
-      SumRecord(21, Array(2f), Map("fresh" -> "k")))) === Right(2L))
+    assert(probe(s.createManyWithId(Seq(SumRecord(20, Array(1f)),
+      SumRecord(21, Array(2f), Map("fresh" -> "k"))))) === Right(2L))
     assert(probe(ids) === Seq(1L, 2L, 4L, 5L, 6L, 10L, 20L, 21L))
     assert(probe(s.findBy("fresh", "k")).map(_.map(_.id)) === Some(Seq(21L)))
 
-    assert(s.deleteMany(Seq(1L, 20L, 999L)) === 2L)
+    assert(probe(s.deleteMany(Seq(1L, 20L, 999L))) === 2L)
     assert(probe(ids) === Seq(2L, 4L, 5L, 6L, 10L, 21L))
 
     // a rejected batch leaves the snapshot (and the Dataset) untouched
     val before = views(s.all())
-    assert(s.createManyWithId(Seq(SumRecord(30, Array(1f)), SumRecord(21, Array(1f)))) ===
-      Left(StoreErrors.InvalidId))
+    assert(probe(s.createManyWithId(Seq(SumRecord(30, Array(1f)),
+      SumRecord(21, Array(1f))))) === Left(StoreErrors.InvalidId))
     assert(probe(views(s.all())) === before)
     assert(probe(s.find(30L)) === None)
     assert(s.records.count() === 6L)
+    assertDerivedMatches(s)
+  }
+
+  test("a resident store pins no cache; a Dataset-path store stays cached until close") {
+    import org.apache.spark.sql.classic.ClassicConversions._
+    import spark.implicits._
+    val cache = spark.sharedState.cacheManager
+    def cached(s: RecordStore) = cache.lookupCachedData(s.records).isDefined
+
+    val res = RecordStore.fromDataset(spark, spark.createDataset(seeded(20)))
+    assert(jobsOf(res.find(1L)) === 0)
+    assert(!cached(res), "fromDataset within the cap must drop its build cache")
+    res.create(SumRecord(0, Array(1f)))
+    res.update(SumRecord(2, Array(2f)))
+    res.delete(3L)
+    res.deleteMany(Seq(4L, 5L))
+    assert(!cached(res), "a write on a resident store must cache nothing")
+    res.close()
+
+    val over = withConf(RecordStore.MaxCollectRowsKey, "19")(
+      RecordStore.fromDataset(spark, spark.createDataset(seeded(20))))
+    assert(jobsOf(over.find(1L)) > 0, "the cap-built store must stay on the Dataset path")
+    assert(cached(over))
+    over.create(SumRecord(0, Array(1f)))
+    assert(cached(over), "a write on a Dataset-path store keeps its next Dataset cached")
+    over.close()
+    assert(!cached(over), "close must release a Dataset-path store's cache")
   }
 
   test("a write that takes a resident store over the cap drops the snapshot") {

@@ -303,6 +303,73 @@ class SumFederationSpec extends SparkSpec {
     fed.listNodes().foreach(n => assert(n.engine.nodeOracles().isEmpty))
   }
 
+  test("a failed balance transfer and a failed Run cleanup are logged, and both ops succeed") {
+    class FailingEngine(inner: NodeEngine) extends NodeEngine {
+      @volatile var refuseDeletes = false
+      def records: Long = inner.records
+      def nextRecordId: Long = inner.nextRecordId
+      def listRecords(page: Long, perPage: Long): Seq[SumRecord] =
+        inner.listRecords(page, perPage)
+      def createRecordWithId(r: SumRecord): RecordResponse = inner.createRecordWithId(r)
+      def createRecordsWithId(recs: Seq[SumRecord]): RecordResponse =
+        throw new IllegalStateException("create refused")
+      def deleteRecords(ids: Seq[Long]): Unit = inner.deleteRecords(ids)
+      def readRecord(id: Long): RecordResponse = inner.readRecord(id)
+      def updateRecord(r: SumRecord): RecordResponse = inner.updateRecord(r)
+      def deleteRecord(id: Long): RecordResponse = inner.deleteRecord(id)
+      def findRecords(meta: String, value: String): FindResponse =
+        inner.findRecords(meta, value)
+      def nodeOracles(): Seq[NodeEngine.NodeOracle] = inner.nodeOracles()
+      def createOracle(o: graft.oracle.Oracle): OracleResponse = inner.createOracle(o)
+      def deleteOracle(id: Long): Unit =
+        if (refuseDeletes) throw new IllegalStateException("delete refused")
+        else inner.deleteOracle(id)
+      def run(oracleId: Long, args: Seq[String]): CallResponse = inner.run(oracleId, args)
+    }
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val fed = new SumFederation
+    fed.addNode("a", engineWith(1 to 100))
+    val b = new FailingEngine(new LocalEngine(SumService(spark)))
+    // The appender goes on once the session exists: starting Spark
+    // reconfigures log4j and would drop it.
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(classOf[SumFederation]).asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    def warned(text: String, cause: String): Boolean = events.toArray(Array.empty[LogEvent])
+      .exists(e => e.getLevel == Level.WARN &&
+        e.getMessage.getFormattedMessage.contains(text) &&
+        Option(e.getThrown).exists(_.getMessage == cause))
+    try {
+      // attaching b rebalances 50 records onto it; b refuses the create
+      val attached = fed.attach("b", b)
+      assert(attached.success && attached.msg === "2", attached.msg)
+      assert(fed.listNodes().map(_.records) === Seq(100L, 0L)) // the donor kept its records
+      assert(warned("from node 1 to node 2 failed", "create refused"))
+
+      val oracle = fed.oracles.createJs("countAll",
+        "function countAll() { return records.All().length; } " +
+          "function mergeSums(ps) { var s = 0; " +
+          "for (var i = 0; i < ps.length; i++) s += ps[i]; return s; }")
+        .fold(m => fail(s"compile failed: $m"), identity)
+      b.refuseDeletes = true
+      val resp = fed.run(oracle.id, Seq.empty)
+      assert(resp.success, resp.msg)
+      assert(Payload.openString(resp.data.get) === "100")
+      assert(warned("on node 2", "delete refused"))
+      assert(!warned("on node 1", "delete refused"))
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   test("node status is CACHED and re-synced by the NodeUpdater poll") {
     val fed = new SumFederation
     val svc = engineWith(1 to 10)
