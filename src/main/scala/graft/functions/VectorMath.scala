@@ -1,10 +1,14 @@
 package graft.functions
 
 /** The record math shared by every engine path — the [[CosineSimilarity]]
-  * expression, the [[VectorSumAggregator]] and the store's driver-resident
-  * scans all call these, so a resident answer equals the Dataset plan's
-  * bit for bit. The expression's generated code spells out the same loop
-  * in the same operation order.
+  * expression, the [[VectorSumAggregator]], the store's driver-resident
+  * scans and the JS record methods all call these, so a resident answer
+  * equals the Dataset plan's bit for bit. The expression's generated code
+  * spells out the same loop in the same operation order.
+  *
+  * The float-array forms take a `[start, end)` range clipped to the
+  * arrays and widen each element to float64 inside the loop, so a scan
+  * over stored records allocates nothing.
   */
 object VectorMath {
 
@@ -28,6 +32,65 @@ object VectorMath {
     }
     val den = math.sqrt(na) * math.sqrt(nb)
     if (den == 0.0) 0.0 else dot / den
+  }
+
+  /** Dot product over `[start, end)` clipped to both lengths, summed in
+    * index order.
+    */
+  def dot(a: Array[Float], b: Array[Float], start: Int, end: Int): Double = {
+    val hi = math.min(end, math.min(a.length, b.length))
+    var s = 0.0
+    var i = start
+    while (i < hi) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
+  /** Cosine over `[start, end)` (node/wrapper/record.go:97-103): the dot
+    * runs over the range clipped to both lengths, each squared norm over
+    * the range clipped to its own vector's length, so a longer vector's
+    * tail still counts in its magnitude; 0.0 when either magnitude is zero.
+    * With `end` at the shorter length this is [[cosine]] on the widened
+    * arrays.
+    */
+  def cosine(a: Array[Float], b: Array[Float], start: Int, end: Int): Double = {
+    val hi = math.min(end, math.min(a.length, b.length))
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = start
+    while (i < hi) {
+      val x = a(i).toDouble
+      val y = b(i).toDouble
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    var j = i
+    val aEnd = math.min(end, a.length)
+    while (j < aEnd) { val x = a(j).toDouble; na += x * x; j += 1 }
+    j = i
+    val bEnd = math.min(end, b.length)
+    while (j < bEnd) { val y = b(j).toDouble; nb += y * y; j += 1 }
+    val den = math.sqrt(na) * math.sqrt(nb)
+    if (den == 0.0) 0.0 else dot / den
+  }
+
+  /** Weighted Jaccard over `[start, end)` clipped to both lengths, as
+    * node/wrapper/record.go computes it: m11 sums the float32 products,
+    * m10 counts the positions whose float32 sum is exactly 1.
+    */
+  def jaccard(a: Array[Float], b: Array[Float], start: Int, end: Int): Double = {
+    val hi = math.min(end, math.min(a.length, b.length))
+    var m11 = 0.0
+    var m10 = 0.0
+    var i = start
+    while (i < hi) {
+      m11 += (a(i) * b(i)).toDouble
+      if (a(i) + b(i) == 1.0f) m10 += 1
+      i += 1
+    }
+    if (m10 + m11 == 0) 0.0 else m11 / (m11 + m10)
   }
 
   /** Element-wise sum over the longer length (missing elements are 0); an

@@ -54,11 +54,22 @@ final class JsNative(val name: String, val arity: Int,
       */
     val statics: Map[String, JsVal] = Map.empty) extends JsVal
 /** A host object: named methods plus read-only properties (the wrapped
-  * `records`/`ctx`/record objects the reference exposes to oracles).
+  * `records`/`ctx`/record objects the reference exposes to oracles). The
+  * interpreter reaches members only through [[prop]], [[hasMethod]] and
+  * [[invoke]], so a subclass can serve them without the maps (the record
+  * wrapper shares one method table across every record).
   */
-final class JsHost(val hostName: String,
-    val methods: Map[String, Seq[JsVal] => JsVal],
-    val props: Map[String, () => JsVal] = Map.empty) extends JsVal
+class JsHost(val hostName: String,
+    methods: Map[String, Seq[JsVal] => JsVal],
+    props: Map[String, () => JsVal] = Map.empty) extends JsVal {
+  /** The value of property `nm`, if the host has one. */
+  def prop(nm: String): Option[JsVal] = props.get(nm).map(_())
+  def hasMethod(nm: String): Boolean = methods.contains(nm)
+  /** Call method `nm`, which [[hasMethod]] has confirmed. */
+  def invoke(nm: String, args: Seq[JsVal]): JsVal = methods(nm)(args)
+  /** `nm in host`: a property or a method. */
+  final def has(nm: String): Boolean = prop(nm).isDefined || hasMethod(nm)
+}
 
 /** A regex value (`/pat/flags` literal or `new RegExp`). `lastIndex` is
   * the ES5 stateful cursor `exec` advances on a global regex, so the
@@ -563,10 +574,10 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
       if (nm == "length") JsNum(s.s.length)
       else stringMethod(s.s, nm).orElse(protoMethod(s, nm)).getOrElse(JsUndef)
     case h: JsHost =>
-      h.props.get(nm).map(_())
-        .orElse(h.methods.get(nm).map(m =>
-          new JsNative(s"${h.hostName}.$nm", -1, m)))
-        .getOrElse(JsUndef)
+      h.prop(nm).getOrElse(
+        if (h.hasMethod(nm))
+          new JsNative(s"${h.hostName}.$nm", -1, args => h.invoke(nm, args))
+        else JsUndef)
     case re: JsRegex => nm match {
       case "source"     => JsStr(re.source)
       case "flags"      => JsStr(re.flags)
@@ -648,15 +659,12 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
         // a method call on an object binds the receiver as `this`
         callFunction(getMember(o, nm), args, thisVal = o)
       case h: JsHost =>
-        h.methods.get(nm) match {
-          case Some(m) => tick(); m(args)
+        if (h.hasMethod(nm)) { tick(); h.invoke(nm, args) }
+        else h.prop(nm) match {
+          case Some(f) => callFunction(f, args)
           case None =>
-            h.props.get(nm).map(_()) match {
-              case Some(f) => callFunction(f, args)
-              case None =>
-                throw OracleRunError(
-                  s"TypeError: '$nm' is not a function on ${h.hostName}")
-            }
+            throw OracleRunError(
+              s"TypeError: '$nm' is not a function on ${h.hostName}")
         }
       case a: JsArr =>
         arrayMethod(a, nm) match {
@@ -1139,7 +1147,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
           val d = toNum(l)
           JsBool(key == "length" ||
             (d.isWhole && d >= 0 && d < a.items.length))
-        case h: JsHost => JsBool(h.props.contains(key) || h.methods.contains(key))
+        case h: JsHost => JsBool(h.has(key))
         case _ =>
           throw OracleRunError(
             s"TypeError: cannot use 'in' operator to search for '$key' in ${typeOf(r)}")

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.json4s._
 
+import graft.functions.VectorMath
 import graft.model.SumRecord
 import graft.oracle.{Oracle, OracleContext, OracleRunError}
 import graft.store.RecordStore
@@ -28,6 +29,12 @@ import JsLang._
   * VM per run, which resets it the same way), and the entry call's result
   * is marshaled with Go's JSON conventions.
   *
+  * A record reaches JS the way record.go wraps it: one small wrapper
+  * object over the stored [[SumRecord]], with no copy of its data. The
+  * record methods live in one table shared by every wrapper, and their
+  * math reads both records' float arrays through [[VectorMath]]'s
+  * float-range kernels.
+  *
   * One deliberate difference: `record.SetData` mutates only the oracle's
   * wrapper, never the store — graft's store is an immutable Dataset with
   * explicit update verbs, while the reference's wrapper aliases the
@@ -35,6 +42,14 @@ import JsLang._
   * relies on SetData persistence.
   */
 object JsOracle {
+
+  /** The run error for runaway recursion. The interpreter recurses on the
+    * JVM stack, so a JS call chain deeper than the thread's stack ends in
+    * a StackOverflowError; every run boundary here (compile, run, merge,
+    * per-partition run) maps it to the error ES5 engines raise. sumd's
+    * otto has no such bound.
+    */
+  val StackOverflow = "RangeError: Maximum call stack size exceeded"
 
   final case class Compiled(entry: String, params: Seq[String],
       merger: Option[MergerDecl], program: Seq[Stmt])
@@ -53,7 +68,10 @@ object JsOracle {
   def compileSource(code: String): Either[String, Compiled] = {
     val program =
       try JsLang.parse(code)
-      catch { case ParseError(m) => return Left(m) }
+      catch {
+        case ParseError(m)         => return Left(m)
+        case _: StackOverflowError => return Left(StackOverflow)
+      }
     val decls = program.collect { case f: FuncDecl => f }
     decls.headOption match {
       case None => Left("expected a function declaration")
@@ -67,6 +85,7 @@ object JsOracle {
           case JsThrow(v)        => return Left(JsInterp.throwMessage(v))
           case OracleRunError(m) => return Left(m)
           case graft.oracle.OracleBudgetError(m) => return Left(m)
+          case _: StackOverflowError => return Left(StackOverflow)
           case e: Exception      => return Left(e.getMessage)
         }
         val merger = decls.drop(1)
@@ -106,6 +125,7 @@ object JsOracle {
             // an uncaught JS `throw` fails the run with the thrown value's
             // export, like otto (a thrown string is the bare string)
             case JsThrow(v) => throw OracleRunError(JsInterp.throwMessage(v))
+            case _: StackOverflowError => throw OracleRunError(StackOverflow)
           }
         },
         merger = buildMerger(c),
@@ -144,6 +164,9 @@ object JsOracle {
           case graft.oracle.OracleBudgetError(msg) =>
             throw graft.oracle.Merge.MergerFailure(
               s"unable to run merger function: $msg")
+          case _: StackOverflowError =>
+            throw graft.oracle.Merge.MergerFailure(
+              s"unable to run merger function: $StackOverflow")
         }
       if (ctx.isError)
         throw graft.oracle.Merge.MergerFailure(
@@ -247,6 +270,7 @@ object JsOracle {
               case JsThrow(v)        => (false, JsInterp.throwMessage(v))
               case OracleRunError(m) => (false, m)
               case graft.oracle.OracleBudgetError(m) => (false, m)
+              case _: StackOverflowError => (false, StackOverflow)
               // Spark-internal failures must PROPAGATE: the partition
               // iterator is a shuffle read, and a FetchFailedException
               // thrown while the oracle consumes it is Spark's stage-retry
@@ -305,13 +329,6 @@ object JsOracle {
     seqRecordsHost(interp, store.find, () => all())
   }
 
-  /** The `records` host over a pluggable record view — the partition-local
-    * form [[runDistributed]] builds on executors plugs a lazy view in here.
-    * `eachFn` (when given) backs a streaming `records.ForEach(fn)` that
-    * visits records one at a time WITHOUT materializing the view — the
-    * scale path for linear-pass oracles; elsewhere ForEach folds over the
-    * materialized view for API uniformity.
-    */
   /** Step budget granted per record the host serves: the interpreter
     * budget then bounds work per record touched, not per run, so linear
     * passes scale with the corpus (JsInterp.grantSteps). 10k steps per
@@ -320,6 +337,13 @@ object JsOracle {
     */
   private val StepsPerRecord = 10000L
 
+  /** The `records` host over a pluggable record view — the partition-local
+    * form [[runDistributed]] builds on executors plugs a lazy view in here.
+    * `eachFn` (when given) backs a streaming `records.ForEach(fn)` that
+    * visits records one at a time WITHOUT materializing the view — the
+    * scale path for linear-pass oracles; elsewhere ForEach folds over the
+    * materialized view for API uniformity.
+    */
   private def seqRecordsHost(interp: JsInterp,
       findFn: Long => Option[SumRecord],
       allFn: () => Seq[SumRecord],
@@ -327,7 +351,8 @@ object JsOracle {
     def wrapSeq(recs: Seq[SumRecord]): JsArr = {
       interp.grantSteps(StepsPerRecord * recs.length)
       val a = new JsArr
-      recs.foreach(r => a.items += recordHost(interp, Some(r)))
+      a.items.sizeHint(recs.length)
+      recs.foreach(r => a.items += new RecordHost(r))
       a
     }
     new JsHost("Records", Map(
@@ -336,7 +361,7 @@ object JsOracle {
           throw OracleRunError("TypeError: undefined is not a function"))
         val visit: SumRecord => Unit = r => {
           interp.grantSteps(StepsPerRecord)
-          interp.callFunction(fn, Seq(recordHost(interp, Some(r))))
+          interp.callFunction(fn, Seq(new RecordHost(r)))
           ()
         }
         eachFn match {
@@ -347,13 +372,13 @@ object JsOracle {
       },
       "Find" -> { args =>
         val id = toNum(args.headOption.getOrElse(JsNum(0))).toLong
-        recordHost(interp, findFn(id))
+        new RecordHost(findFn(id).orNull)
       },
       "All" -> { _ => wrapSeq(allFn()) },
       "AllBut" -> { args =>
         val excludeId = args.headOption match {
-          case Some(h: JsHost) => h.props.get("ID").map(p => toNum(p()).toLong)
-          case _               => None
+          case Some(r: RecordHost) => Some(if (r.rec == null) 0L else r.rec.id)
+          case _                   => None
         }
         wrapSeq(allFn().filterNot(r => excludeId.contains(r.id)))
       },
@@ -361,11 +386,7 @@ object JsOracle {
         // wrapper.Records.CreateRecord: wraps raw data WITHOUT storing it
         // (node/wrapper/records.go:60-66) — a scratch record for the
         // oracle's own math.
-        val data = args.headOption match {
-          case Some(a: JsArr) => a.items.map(v => toNum(v).toFloat).toArray
-          case _              => Array.empty[Float]
-        }
-        recordHost(interp, Some(SumRecord(0L, data)))
+        new RecordHost(SumRecord(0L, floatsOf(args.headOption)))
       },
       "New" -> { args =>
         // wrapper.Records.New (node/wrapper/records.go:24-26): wrap a
@@ -373,9 +394,9 @@ object JsOracle {
         // master's patched `records.New({...})` / `records.New(null)`
         // call sites (master/ast_raccoon.go:138-141). Null wraps the
         // null record (IsNull()==true), exactly WrapRecord(nil).
-        recordHost(interp, args.headOption match {
-          case Some(o: JsObj) => Some(objToRecord(o))
-          case _              => None
+        new RecordHost(args.headOption match {
+          case Some(o: JsObj) => objToRecord(o)
+          case _              => null
         })
       }))
   }
@@ -404,131 +425,103 @@ object JsOracle {
   }
 
   // -------------------------------------------------------- host: record
-  /** Wrapped record, null-record included (Find miss → IsNull()==true,
-    * node/wrapper/record.go:40-44). Math methods replicate record.go
-    * exactly: double accumulation, the cosine zero-magnitude guard, the
-    * m11/(m11+m10) jaccard with the (a+b)==1 mismatch rule.
+  /** A wrapped record: one object over the store's [[SumRecord]] (`null`
+    * is the null record a Find miss returns, node/wrapper/record.go:40-44),
+    * its methods dispatched through the one [[RecordMethods]] table.
+    * `SetData` swaps in a copy with new data for this wrapper only.
     */
-  private def recordHost(interp: JsInterp, rec0: Option[SumRecord]): JsHost = {
-    // SetData re-wraps locally, so the data is a mutable cell
-    var rec = rec0
-    def dataOf(v: JsVal): Array[Float] = v match {
-      case h: JsHost if h.hostName == "Record" =>
-        h.props.get("__data").map(_()) match {
-          case Some(a: JsArr) => a.items.map(x => toNum(x).toFloat).toArray
-          case _ => throw OracleRunError("TypeError: null record")
-        }
-      case _ => throw OracleRunError("TypeError: expected a record")
+  private final class RecordHost(var rec: SumRecord)
+      extends JsHost("Record", Map.empty) {
+    override def prop(nm: String): Option[JsVal] = nm match {
+      case "ID" | "Id" => Some(JsNum(if (rec == null) 0.0 else rec.id.toDouble))
+      case "Size" => Some(JsNum(if (rec == null) 0.0 else rec.data.length.toDouble))
+      case _ => None
     }
-    def own(): Array[Float] = rec.map(_.data).getOrElse(
-      throw OracleRunError("TypeError: null record"))
-    def dotRange(a: Array[Float], b: Array[Float], start: Int, end: Int): Double = {
-      var s = 0.0
-      var i = start
-      val hi = math.min(end, math.min(a.length, b.length))
-      while (i < hi) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-      s
-    }
-    def cosineOf(a: Array[Float], b: Array[Float], start: Int, end: Int): Double = {
-      val aMag = math.sqrt(dotRange(a, a, start, end))
-      val bMag = math.sqrt(dotRange(b, b, start, end))
-      val den = aMag * bMag
-      if (den == 0.0) 0.0 else dotRange(a, b, start, end) / den
-    }
-    def jaccardOf(a: Array[Float], b: Array[Float], start: Int, end: Int): Double = {
-      var m11 = 0.0
-      var m10 = 0.0
-      var i = start
-      val hi = math.min(end, math.min(a.length, b.length))
-      while (i < hi) {
-        m11 += (a(i) * b(i)).toDouble
-        if (a(i) + b(i) == 1.0f) m10 += 1
-        i += 1
-      }
-      if (m10 + m11 == 0) 0.0 else m11 / (m11 + m10)
-    }
-    def argNum(args: Seq[JsVal], i: Int): Int =
-      toNum(args.lift(i).getOrElse(JsNum(0))).toInt
-
-    new JsHost("Record",
-      methods = Map(
-        "IsNull" -> { _ => JsBool(rec.isEmpty) },
-        "Is" -> { args =>
-          val otherId = args.headOption match {
-            case Some(h: JsHost) if h.hostName == "Record" =>
-              h.props.get("__isnull").map(p => JsInterp.truthy(p())) match {
-                case Some(true) => None
-                case _ => h.props.get("ID").map(p => toNum(p()).toLong)
-              }
-            case _ => None
-          }
-          JsBool(rec.isDefined && otherId.contains(rec.get.id))
-        },
-        "SetData" -> { args =>
-          val data = args.headOption match {
-            case Some(a: JsArr) => a.items.map(v => toNum(v).toFloat).toArray
-            case _              => Array.empty[Float]
-          }
-          rec = rec.map(r => r.copy(data = data))
-            .orElse(Some(SumRecord(0L, data)))
-          JsUndef
-        },
-        "Get" -> { args =>
-          val data = own()
-          val i = argNum(args, 0)
-          if (i < 0 || i >= data.length)
-            throw OracleRunError(s"index $i out of range")
-          JsNum(data(i).toDouble)
-        },
-        "Meta" -> { args =>
-          val key = args.headOption.map(toStr).getOrElse("")
-          JsStr(rec.map(_.metaValue(key)).getOrElse(""))
-        },
-        "Equal" -> { args =>
-          JsBool(own().sameElements(dataOf(args.head)))
-        },
-        "Dot" -> { args =>
-          val b = dataOf(args.head)
-          JsNum(dotRange(own(), b, 0, math.max(own().length, b.length)))
-        },
-        "DotRange" -> { args =>
-          JsNum(dotRange(own(), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
-        },
-        "DotSub" -> { args =>
-          JsNum(dotRange(own(), dataOf(args.head), 0, argNum(args, 1)))
-        },
-        "Magnitude" -> { _ =>
-          val d = own()
-          JsNum(math.sqrt(dotRange(d, d, 0, d.length)))
-        },
-        "Cosine" -> { args =>
-          val b = dataOf(args.head)
-          JsNum(cosineOf(own(), b, 0, math.max(own().length, b.length)))
-        },
-        "CosineSub" -> { args =>
-          JsNum(cosineOf(own(), dataOf(args.head), 0, argNum(args, 1)))
-        },
-        "CosineRange" -> { args =>
-          JsNum(cosineOf(own(), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
-        },
-        "Jaccard" -> { args =>
-          val b = dataOf(args.head)
-          JsNum(jaccardOf(own(), b, 0, math.max(own().length, b.length)))
-        },
-        "JaccardRange" -> { args =>
-          JsNum(jaccardOf(own(), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
-        }),
-      props = Map(
-        "ID" -> (() => JsNum(rec.map(_.id.toDouble).getOrElse(0.0))),
-        "Id" -> (() => JsNum(rec.map(_.id.toDouble).getOrElse(0.0))),
-        "Size" -> (() => JsNum(rec.map(_.data.length.toDouble).getOrElse(0.0))),
-        "__isnull" -> (() => JsBool(rec.isEmpty)),
-        "__data" -> { () =>
-          val a = new JsArr
-          rec.foreach(_.data.foreach(f => a.items += JsNum(f.toDouble)))
-          a
-        }))
+    override def hasMethod(nm: String): Boolean = RecordMethods.contains(nm)
+    override def invoke(nm: String, args: Seq[JsVal]): JsVal =
+      RecordMethods(nm)(this, args)
   }
+
+  private def own(r: RecordHost): Array[Float] =
+    if (r.rec == null) throw OracleRunError("TypeError: null record")
+    else r.rec.data
+
+  /** The other record's data; a null record reads as empty. */
+  private def dataOf(v: JsVal): Array[Float] = v match {
+    case o: RecordHost => if (o.rec == null) Array.emptyFloatArray else o.rec.data
+    case _ => throw OracleRunError("TypeError: expected a record")
+  }
+
+  private def argNum(args: Seq[JsVal], i: Int): Int =
+    toNum(args.lift(i).getOrElse(JsNum(0))).toInt
+
+  private def floatsOf(v: Option[JsVal]): Array[Float] = v match {
+    case Some(a: JsArr) => a.items.map(x => toNum(x).toFloat).toArray
+    case _              => Array.emptyFloatArray
+  }
+
+  /** The record methods, shared by every wrapper in the JVM. The math is
+    * record.go's over [[VectorMath]]'s float-range kernels: float64
+    * accumulation, the cosine zero-magnitude guard, the m11/(m11+m10)
+    * jaccard with the (a+b)==1 mismatch rule. The unranged forms run to
+    * `Int.MaxValue`, which the kernels clip to each array's length.
+    */
+  private val RecordMethods: Map[String, (RecordHost, Seq[JsVal]) => JsVal] = Map(
+    "IsNull" -> { (r, _) => JsBool(r.rec == null) },
+    "Is" -> { (r, args) =>
+      JsBool(r.rec != null && (args.headOption match {
+        case Some(o: RecordHost) => o.rec != null && o.rec.id == r.rec.id
+        case _ => false
+      }))
+    },
+    "SetData" -> { (r, args) =>
+      val data = floatsOf(args.headOption)
+      r.rec = if (r.rec == null) SumRecord(0L, data) else r.rec.copy(data = data)
+      JsUndef
+    },
+    "Get" -> { (r, args) =>
+      val data = own(r)
+      val i = argNum(args, 0)
+      if (i < 0 || i >= data.length)
+        throw OracleRunError(s"index $i out of range")
+      JsNum(data(i).toDouble)
+    },
+    "Meta" -> { (r, args) =>
+      val key = args.headOption.map(toStr).getOrElse("")
+      JsStr(if (r.rec == null) "" else r.rec.metaValue(key))
+    },
+    "Equal" -> { (r, args) => JsBool(own(r).sameElements(dataOf(args.head))) },
+    "Dot" -> { (r, args) =>
+      val b = dataOf(args.head)
+      JsNum(VectorMath.dot(own(r), b, 0, Int.MaxValue))
+    },
+    "DotRange" -> { (r, args) =>
+      JsNum(VectorMath.dot(own(r), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
+    },
+    "DotSub" -> { (r, args) =>
+      JsNum(VectorMath.dot(own(r), dataOf(args.head), 0, argNum(args, 1)))
+    },
+    "Magnitude" -> { (r, _) =>
+      val d = own(r)
+      JsNum(math.sqrt(VectorMath.dot(d, d, 0, Int.MaxValue)))
+    },
+    "Cosine" -> { (r, args) =>
+      val b = dataOf(args.head)
+      JsNum(VectorMath.cosine(own(r), b, 0, Int.MaxValue))
+    },
+    "CosineSub" -> { (r, args) =>
+      JsNum(VectorMath.cosine(own(r), dataOf(args.head), 0, argNum(args, 1)))
+    },
+    "CosineRange" -> { (r, args) =>
+      JsNum(VectorMath.cosine(own(r), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
+    },
+    "Jaccard" -> { (r, args) =>
+      val b = dataOf(args.head)
+      JsNum(VectorMath.jaccard(own(r), b, 0, Int.MaxValue))
+    },
+    "JaccardRange" -> { (r, args) =>
+      JsNum(VectorMath.jaccard(own(r), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
+    })
 
   // ------------------------------------------------------------- globals
   /** The globals every VM gets: Math, and the handful of ES5 global

@@ -313,6 +313,14 @@ final class SumFederation(
     }
   }
 
+  /** Close every node's engine (a remote node's gRPC channel) and detach
+    * the nodes; the master server calls this when it stops.
+    */
+  def close(): Unit = synchronized {
+    nodes.foreach(_.engine.close())
+    nodes.clear()
+  }
+
   /** balancer.go:10-59: move the donor's FIRST n records (list page 1 is
     * id-ordered) onto the taker, create-before-delete. A DEAD peer at any
     * exchange (the list, the create, the delete) aborts THIS transfer and

@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 
 import scala.jdk.CollectionConverters._
 
+import org.slf4j.LoggerFactory
 import org.sparkproject.connect.grpc.{CallOptions, MethodDescriptor, ServerServiceDefinition, Status, StatusRuntimeException}
 import org.sparkproject.connect.grpc.netty.{GrpcSslContexts, NettyChannelBuilder, NettyServerBuilder}
 import org.sparkproject.connect.grpc.stub.{ClientCalls, ServerCalls, StreamObserver}
@@ -392,6 +393,8 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
 
   private val api: SumApi = federation.getOrElse(service)
 
+  private val log = LoggerFactory.getLogger(classOf[SumGrpcServer])
+
   private def recordResponse(r: RecordResponse): DynamicMessage =
     build("RecordResponse", "success" -> r.success, "msg" -> r.msg,
       "record" -> r.record.map(recordToProto))
@@ -501,8 +504,10 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
                 obs: StreamObserver[DynamicMessage]): Unit =
               try { obs.onNext(fn(req)); obs.onCompleted() }
               catch {
-                case e: Exception => obs.onError(Status.INTERNAL
-                  .withDescription(s"internal: ${e.getMessage}").asException())
+                case e: Exception =>
+                  log.warn(s"$name/$rpc failed", e)
+                  obs.onError(Status.INTERNAL
+                    .withDescription(s"internal: ${e.getMessage}").asException())
               }
           }))
     }
@@ -540,9 +545,11 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
     server.start()
     nodeUpdater = federation.map(_.startUpdater(5000L))
   }
+  /** Stop serving; a master also closes its federation's node channels. */
   def stop(): Unit = {
     nodeUpdater.foreach(_.close()); nodeUpdater = None
     server.shutdownNow(); server.awaitTermination()
+    federation.foreach(_.close())
   }
   def boundPort: Int = server.getPort
 }

@@ -315,18 +315,19 @@ final class RecordStore private (
 
   /** (id, cosine) of every record but `excludeId` whose cosine to `ref`
     * is >= `threshold` under Spark's double ordering (NaN sorts above
-    * every number). The resident scan calls the same
-    * [[VectorMath.cosine]] the Catalyst expression does.
+    * every number). The resident scan calls the float-range
+    * [[VectorMath.cosine]] over the common prefix, which equals the
+    * Catalyst expression's cosine on the widened arrays bit for bit.
     */
   def similarTo(ref: Array[Float], threshold: Double,
       excludeId: Long): Seq[(Long, Double)] = {
     val s = state
     s.snapshot match {
       case Some(snap) =>
-        val r = VectorMath.widen(ref)
         snap.rows.iterator
           .filter(x => x.id != excludeId && x.data != null)
-          .map(x => (x.id, VectorMath.cosine(VectorMath.widen(x.data), r)))
+          .map(x => (x.id, VectorMath.cosine(x.data, ref, 0,
+            math.min(x.data.length, ref.length))))
           .filter { case (_, sim) => SQLOrderingUtil.compareDoubles(sim, threshold) >= 0 }
           .toVector
       case None =>

@@ -218,6 +218,25 @@ function outOfRange() {
     assert(merged.nonEmpty)
   }
 
+  test("runaway JS recursion fails a partition run and a merger with a RangeError") {
+    import graft.oracle.OracleRegistry
+    import graft.oracle.js.JsOracle.StackOverflow
+    val store = mkStore(8).repartitioned(2)
+    val reg = new OracleRegistry
+    val deep = reg.createJs("deep",
+      "function deep() { return down(0); } function down(n) { return down(n + 1); }")
+      .fold(m => fail(m), identity)
+    assert(reg.runDistributed(deep.id, store, Seq.empty) === Left(
+      s"Errors from nodes: [error while running oracle ${deep.id}: $StackOverflow, " +
+        s"error while running oracle ${deep.id}: $StackOverflow]"))
+    val deepMerge = reg.createJs("deepMerge",
+      "function one() { return 1; } function down(n) { return down(n + 1); } " +
+        "function mergeAll(ps) { return down(0); }")
+      .fold(m => fail(m), identity)
+    assert(reg.runDistributed(deepMerge.id, store, Seq.empty) ===
+      Left(s"unable to run merger function: $StackOverflow"))
+  }
+
   test("partition counts merged as arrays concatenate to the full scan") {
     import spark.implicits._
     val store = mkStore(32)

@@ -233,6 +233,127 @@ function mapOfRecordNames() {
       "1", "2")(zStore) === Right("0"))
   }
 
+  /** Run `code` on the driver path and through `runDistributed` over a
+    * one-partition copy of the store; both must give `want` (a run error
+    * arrives in the master's per-node wrapping on the distributed path).
+    */
+  private def pinBoth(code: String, args: String*)(want: Either[String, String]) = {
+    assert(runJs(code, args: _*) === want, "driver path")
+    val reg = new OracleRegistry
+    val o = reg.createJs("t", code).fold(m => fail(s"compile failed: $m"), identity)
+    assert(reg.runDistributed(o.id, store.repartitioned(1), args) ===
+      want.left.map(m => s"Errors from nodes: [error while running oracle ${o.id}: $m]"),
+      "distributed path")
+  }
+
+  test("record wrapper surface: every method and prop, on both run paths") {
+    pinBoth("""function pin(idA, idB) {
+      var a = records.Find(idA), b = records.Find(idB), c = records.Find(2);
+      var short = records.CreateRecord([1, 2]);
+      var mag = a.Magnitude;
+      return {
+        isNull: a.IsNull(), is: a.Is(b), isSelf: a.Is(records.Find(idA)),
+        isNum: a.Is(5), get: a.Get(1), meta: a.Meta('name'), noMeta: a.Meta('x'),
+        eq: a.Equal(b), eqSelf: a.Equal(records.Find(idA)),
+        dot: a.Dot(b), dotRange: a.DotRange(b, 1, 3), dotSub: a.DotSub(b, 2),
+        dotWide: a.DotRange(c, 2, 99), magnitude: a.Magnitude(), magFn: mag(),
+        cos: a.Cosine(b), cosC: a.Cosine(c), cosSub: a.CosineSub(b, 2),
+        cosRange: a.CosineRange(b, 1, 3), cosEmpty: a.CosineRange(b, 5, 9),
+        cosShort: short.Cosine(a), cosLong: a.Cosine(short),
+        jac: a.Jaccard(b), jacRange: a.JaccardRange(c, 0, 2),
+        ID: a.ID, Id: a.Id, Size: a.Size, shortSize: short.Size, shortId: short.ID
+      };
+    }""", "1", "3")(Right(
+      """{"ID":1,"Id":1,"Size":3,"cos":0.3779644730092272,"cosC":1,""" +
+        """"cosEmpty":0,"cosLong":0.5976143046671968,"cosRange":0.8320502943378437,""" +
+        """"cosShort":0.5976143046671968,"cosSub":-0.4472135954999579,"dot":2,""" +
+        """"dotRange":3,"dotSub":-1,"dotWide":18,"eq":false,"eqSelf":true,"get":2,""" +
+        """"is":false,"isNull":false,"isNum":false,"isSelf":true,"jac":1,"jacRange":1,""" +
+        """"magFn":3.7416573867739413,"magnitude":3.7416573867739413,"meta":"Lorea",""" +
+        """"noMeta":"","shortId":0,"shortSize":2}"""))
+  }
+
+  test("record wrapper surface: the null record and its errors") {
+    pinBoth("""function nul() {
+      var n = records.Find(99), m = records.New(null), a = records.Find(1);
+      function err(f) { try { f(); return 'no error'; } catch (e) { return '' + e; } }
+      return {
+        findMiss: n.IsNull(), newNull: m.IsNull(), ID: n.ID, Id: n.Id, Size: n.Size,
+        meta: n.Meta('name'), aIsN: a.Is(n), nIsA: n.Is(a), nIsN: n.Is(m),
+        allBut: records.AllBut(n).length,
+        get: err(function() { return n.Get(0); }),
+        // a null record as the ARGUMENT reads as empty data
+        cosOther: a.Cosine(n), dotOther: a.Dot(m), eqOther: a.Equal(n),
+        cosOwn: err(function() { return n.Cosine(a); }),
+        magnitude: err(function() { return m.Magnitude(); }),
+        notRecord: err(function() { return a.Dot(5); }),
+        notRecordObj: err(function() { return a.Jaccard({data: [1, 2, 3]}); }),
+        eqNotRecord: err(function() { return a.Equal(Math); })
+      };
+    }""")(Right(
+      """{"ID":0,"Id":0,"Size":0,"aIsN":false,"allBut":3,"cosOther":0,""" +
+        """"cosOwn":"TypeError: null record","dotOther":0,""" +
+        """"eqNotRecord":"TypeError: expected a record","eqOther":false,""" +
+        """"findMiss":true,"get":"TypeError: null record",""" +
+        """"magnitude":"TypeError: null record","meta":"","nIsA":false,"nIsN":false,""" +
+        """"newNull":true,"notRecord":"TypeError: expected a record",""" +
+        """"notRecordObj":"TypeError: expected a record"}"""))
+    // uncaught, the same errors fail the run with their messages
+    pinBoth("function f() { return records.Find(99).Get(0); }")(
+      Left("TypeError: null record"))
+    pinBoth("function f() { return records.New(null).Cosine(records.Find(1)); }")(
+      Left("TypeError: null record"))
+    pinBoth("function f() { return records.Find(1).Cosine(7); }")(
+      Left("TypeError: expected a record"))
+  }
+
+  test("record wrapper surface: SetData is wrapper-local; New, CreateRecord, AllBut") {
+    pinBoth("""function sd() {
+      var a = records.Find(1);
+      a.SetData([9, 8]);
+      var n = records.New(null);
+      n.SetData([1, 0]);
+      return {
+        a0: a.Get(0), aSize: a.Size, aId: a.ID, aMeta: a.Meta('name'),
+        again0: records.Find(1).Get(0), againSize: records.Find(1).Size,
+        all0: records.All()[0].Get(0), dotAfter: a.Dot(records.Find(2)),
+        nNull: n.IsNull(), nId: n.ID, nSize: n.Size, nJac: n.Jaccard(n)
+      };
+    }""")(Right(
+      """{"a0":9,"aId":1,"aMeta":"Lorea","aSize":2,"again0":1,"againSize":3,""" +
+        """"all0":1,"dotAfter":50,"nId":0,"nJac":1,"nNull":false,"nSize":2}"""))
+    pinBoth("""function nw() {
+      var r = records.New({id: 2, data: [1, 2, 3], meta: {k: 'v'}});
+      var bare = records.New({});
+      var cr = records.CreateRecord([1, 2, 3]);
+      var ids = records.AllBut(r).map(function(x) { return x.ID; });
+      return {
+        id: r.ID, size: r.Size, meta: r.Meta('k'), isNull: r.IsNull(),
+        is2: r.Is(records.Find(2)), cos2: r.Cosine(records.Find(2)),
+        bareId: bare.ID, bareSize: bare.Size, bareNull: bare.IsNull(),
+        crId: cr.ID, crSize: cr.Size, crDot: cr.Dot(records.Find(1)),
+        crIs: cr.Is(records.New({id: 0})), allBut: ids,
+        allButCr: records.AllBut(cr).length, allButNum: records.AllBut(2).length
+      };
+    }""")(Right(
+      """{"allBut":[1,3],"allButCr":3,"allButNum":3,"bareId":0,"bareNull":false,""" +
+        """"bareSize":0,"cos2":1,"crDot":14,"crId":0,"crIs":true,"crSize":3,"id":2,""" +
+        """"is2":true,"isNull":false,"meta":"v","size":3}"""))
+  }
+
+  test("record wrapper surface: typeof, string form, `in` and JSON") {
+    pinBoth("""function t() {
+      var v = records.Find(1);
+      return {
+        t: typeof v, s: '' + v, hasCos: 'Cosine' in v, hasId: 'ID' in v,
+        hasX: 'Nope' in v, j: JSON.stringify({r: v, n: 1}),
+        arr: JSON.stringify([v]), undef: v.Nope === undefined
+      };
+    }""")(Right(
+      """{"arr":"[null]","hasCos":true,"hasId":true,"hasX":false,""" +
+        """"j":"{\"n\":1}","s":"[object Record]","t":"object","undef":true}"""))
+  }
+
   test("a runaway loop hits the step budget instead of wedging the server") {
     val r = runJs("function spin(){ while(true){} }")
     assert(r.isLeft)

@@ -527,4 +527,104 @@ class SumGrpcServerSpec extends SparkSpec {
       assert(SumProto.getLong(info, "next_record_id") === fed.nextRecordId)
     } finally { client.close(); master.stop() }
   }
+
+  test("runaway JS recursion fails the Run with a RangeError and the server keeps serving") {
+    import graft.oracle.js.JsOracle.StackOverflow
+    withGrpc { client =>
+      val rec = client.createOracle("rec", "function rec(n) { return rec(n + 1); }")
+      assert(rec.success, rec.msg)
+      val id = rec.oracle.get.id
+      val run = client.run(id, Seq("0"))
+      assert(!run.success)
+      assert(run.msg === s"error while running oracle $id: $StackOverflow")
+      // the same handler thread pool answers the next Run
+      val ok = client.createOracle("one", "function one() { return 1; }")
+      val next = client.run(ok.oracle.get.id, Seq.empty)
+      assert(next.success, next.msg)
+      assert(Payload.openString(next.data.get) === "1")
+      // top-level recursion overflows in the compile-time run: rejected at create
+      val top = client.createOracle("top",
+        "function f() {} function down(n) { return down(n + 1); } down(0);")
+      assert(!top.success)
+      assert(top.msg === StackOverflow)
+    }
+  }
+
+  test("a stopped master closes its remote nodes' channels") {
+    import graft.service.SumFederation
+    val nodes = Seq.fill(2)(new SumGrpcServer(SumService(spark)))
+    nodes.foreach(_.start())
+    val fed = new SumFederation
+    nodes.foreach(n => assert(fed.addNode(s"127.0.0.1:${n.boundPort}").success))
+    val engines = fed.listNodes().map(_.engine)
+    val master = new SumGrpcServer(SumService(spark), federation = Some(fed))
+    master.start()
+    try {
+      engines.foreach(e => assert(e.records >= 0L)) // live channels
+      master.stop()
+      assert(fed.listNodes().isEmpty)
+      // the node servers still run, so only a closed channel fails the call
+      engines.foreach { e =>
+        val err = intercept[java.io.IOException](e.records)
+        assert(err.getMessage.contains("Channel shutdown invoked"), err.getMessage)
+      }
+    } finally nodes.foreach(_.stop())
+  }
+
+  test("a failing handler answers INTERNAL and logs the RPC and exception at WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import graft.model.SumRecord
+    import graft.service.{FindResponse, LocalEngine, NodeEngine, RecordResponse, SumFederation}
+    // a node whose list read throws: the master's ListRecords handler fails
+    val inner = new LocalEngine(SumService(spark))
+    val refusing = new NodeEngine {
+      def records: Long = 1L
+      def nextRecordId: Long = inner.nextRecordId
+      def listRecords(page: Long, perPage: Long): Seq[SumRecord] =
+        throw new IllegalStateException("list refused")
+      def createRecordWithId(r: SumRecord): RecordResponse = inner.createRecordWithId(r)
+      def createRecordsWithId(recs: Seq[SumRecord]): RecordResponse =
+        inner.createRecordsWithId(recs)
+      def deleteRecords(ids: Seq[Long]): Unit = inner.deleteRecords(ids)
+      def readRecord(id: Long): RecordResponse = inner.readRecord(id)
+      def updateRecord(r: SumRecord): RecordResponse = inner.updateRecord(r)
+      def deleteRecord(id: Long): RecordResponse = inner.deleteRecord(id)
+      def findRecords(meta: String, value: String): FindResponse =
+        inner.findRecords(meta, value)
+      def nodeOracles(): Seq[NodeEngine.NodeOracle] = Seq.empty
+      def createOracle(o: graft.oracle.Oracle) = inner.createOracle(o)
+      def deleteOracle(id: Long): Unit = inner.deleteOracle(id)
+      def run(oracleId: Long, args: Seq[String]) = inner.run(oracleId, args)
+    }
+    val fed = new SumFederation
+    assert(fed.attach("refusing", refusing).success)
+    val master = new SumGrpcServer(SumService(spark), federation = Some(fed))
+    master.start()
+    val client = new SumGrpcClient("127.0.0.1", master.boundPort)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]
+    val capture = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(classOf[SumGrpcServer]).asInstanceOf[CoreLogger]
+    logger.addAppender(capture)
+    try {
+      val err = intercept[org.sparkproject.connect.grpc.StatusRuntimeException](
+        client.listRecords(1, 10))
+      assert(err.getStatus.getCode ===
+        org.sparkproject.connect.grpc.Status.Code.INTERNAL)
+      assert(err.getMessage.contains("list refused"))
+      assert(events.toArray(Array.empty[LogEvent]).exists(e =>
+        e.getLevel == Level.WARN &&
+          e.getMessage.getFormattedMessage === "sum.SumService/ListRecords failed" &&
+          Option(e.getThrown).exists(_.getMessage == "list refused")))
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+      client.close(); master.stop()
+    }
+  }
 }
