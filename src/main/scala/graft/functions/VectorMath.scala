@@ -8,7 +8,8 @@ package graft.functions
   *
   * The float-array forms take a `[start, end)` range clipped to the
   * arrays and widen each element to float64 inside the loop, so a scan
-  * over stored records allocates nothing.
+  * over stored records allocates nothing; [[accumulate]] sums records
+  * into one float64 array in place.
   */
 object VectorMath {
 
@@ -110,10 +111,27 @@ object VectorMath {
       out
     }
 
-  def widen(v: Array[Float]): Array[Double] = {
-    val out = new Array[Double](v.length)
-    var i = 0
-    while (i < v.length) { out(i) = v(i).toDouble; i += 1 }
-    out
-  }
+  /** Add a float32 record into a float64 running sum: [[sum]] of `acc` and
+    * the widened `v`, to the bit, written into `acc` unless `v` is longer.
+    * So a fold allocates only for its first record and for each record
+    * longer than all before it. As in [[sum]], the first record is taken
+    * as is, and a later addition runs over the longer length with 0.0 for
+    * a missing element (so a -0.0 there turns into 0.0).
+    */
+  def accumulate(acc: Array[Double], v: Array[Float]): Array[Double] =
+    if (v.isEmpty) acc
+    else if (acc.isEmpty) {
+      val out = new Array[Double](v.length)
+      var i = 0
+      while (i < v.length) { out(i) = v(i).toDouble; i += 1 }
+      out
+    } else {
+      val out =
+        if (v.length > acc.length) java.util.Arrays.copyOf(acc, v.length)
+        else acc
+      var i = 0
+      while (i < v.length) { out(i) += v(i).toDouble; i += 1 }
+      while (i < acc.length) { out(i) += 0.0; i += 1 }
+      out
+    }
 }

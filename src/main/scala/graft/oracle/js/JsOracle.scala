@@ -45,13 +45,29 @@ object JsOracle {
 
   /** The run error for runaway recursion. The interpreter recurses on the
     * JVM stack, so a JS call chain deeper than the thread's stack ends in
-    * a StackOverflowError; every run boundary here (compile, run, merge,
-    * per-partition run) maps it to the error ES5 engines raise. sumd's
-    * otto has no such bound.
+    * a StackOverflowError; every run boundary maps it to the error ES5
+    * engines raise (see [[JsFailure]]). sumd's otto has no such bound.
     */
   val StackOverflow = "RangeError: Maximum call stack size exceeded"
 
-  final case class Compiled(entry: String, params: Seq[String],
+  /** The message of a failure a JS run ends in, the one mapping every run
+    * boundary (definition-time run, entry call, merger, partition run)
+    * wraps in its own error: an uncaught JS `throw` reads as the thrown
+    * value's export, like otto (a thrown string is the bare string); a
+    * host or step-budget error as its message; runaway recursion as
+    * [[StackOverflow]]. Anything else is not a JS failure.
+    */
+  private object JsFailure {
+    def unapply(t: Throwable): Option[String] = t match {
+      case JsThrow(v)                        => Some(JsInterp.throwMessage(v))
+      case OracleRunError(m)                 => Some(m)
+      case graft.oracle.OracleBudgetError(m) => Some(m)
+      case _: StackOverflowError             => Some(StackOverflow)
+      case _                                 => None
+    }
+  }
+
+  private final case class Compiled(entry: String, params: Seq[String],
       merger: Option[MergerDecl], program: Seq[Stmt])
 
   /** The `merge*` hook's name and its single declared parameter — the
@@ -59,13 +75,13 @@ object JsOracle {
     * program source (master/mux_runner.go:169-178), so top-level code can
     * see it; we replicate that binding order.
     */
-  final case class MergerDecl(name: String, param: String)
+  private final case class MergerDecl(name: String, param: String)
 
   /** Parse + validate, mirroring the reference compiler's checks and its
     * error message for code with no function declaration
     * (node/service/compiler_test.go:15-19).
     */
-  def compileSource(code: String): Either[String, Compiled] = {
+  private def compileSource(code: String): Either[String, Compiled] = {
     val program =
       try JsLang.parse(code)
       catch {
@@ -82,11 +98,8 @@ object JsOracle {
         try {
           new JsInterp().exec(program, baseEnv())
         } catch {
-          case JsThrow(v)        => return Left(JsInterp.throwMessage(v))
-          case OracleRunError(m) => return Left(m)
-          case graft.oracle.OracleBudgetError(m) => return Left(m)
-          case _: StackOverflowError => return Left(StackOverflow)
-          case e: Exception      => return Left(e.getMessage)
+          case JsFailure(m) => return Left(m)
+          case e: Exception => return Left(e.getMessage)
         }
         val merger = decls.drop(1)
           .find(f => f.name.startsWith("merge") && f.params.size == 1)
@@ -111,26 +124,30 @@ object JsOracle {
           env.declare("records", recordsHost(interp, store))
           env.declare("ctx", ctxHost(ctx))
           try {
-            interp.exec(c.program, env)
-            c.params.zipWithIndex.foreach { case (p, i) =>
-              env.declare(p, JsInterp.fromJson(
-                args.lift(i).getOrElse(JNull)))
-            }
-            val entry = env.lookup(c.entry).getOrElse(
-              throw OracleRunError(s"ReferenceError: '${c.entry}' is not defined"))
-            val result = interp.callFunction(entry, c.params.map(p =>
-              env.lookup(p).getOrElse(JsNull)))
+            val result = callEntry(interp, env, c, args)
             if (ctx.isError) JNull else JsInterp.toJson(result)
           } catch {
-            // an uncaught JS `throw` fails the run with the thrown value's
-            // export, like otto (a thrown string is the bare string)
-            case JsThrow(v) => throw OracleRunError(JsInterp.throwMessage(v))
-            case _: StackOverflowError => throw OracleRunError(StackOverflow)
+            case JsFailure(m) => throw OracleRunError(m)
           }
         },
         merger = buildMerger(c),
         code = Some(code))
     }
+
+  /** One run of the entry on `env`, which holds the host globals: the
+    * program re-executes (top-level state resets per run), the params bind
+    * to the JSON args (missing -> null), and the entry is called.
+    */
+  private def callEntry(interp: JsInterp, env: Env, c: Compiled,
+      args: Seq[JValue]): JsVal = {
+    interp.exec(c.program, env)
+    c.params.zipWithIndex.foreach { case (p, i) =>
+      env.declare(p, JsInterp.fromJson(args.lift(i).getOrElse(JNull)))
+    }
+    val entry = env.lookup(c.entry).getOrElse(
+      throw OracleRunError(s"ReferenceError: '${c.entry}' is not defined"))
+    interp.callFunction(entry, c.params.map(p => env.lookup(p).getOrElse(JsNull)))
+  }
 
   /** The merger closure, replicating the reference merger VM
     * (master/mux_runner.go:159-193): the partials array and `ctx` are
@@ -155,18 +172,8 @@ object JsOracle {
           interp.callFunction(fn,
             Seq(env.lookup(m.param).getOrElse(arr)))
         } catch {
-          case JsThrow(v) =>
-            throw graft.oracle.Merge.MergerFailure(
-              s"unable to run merger function: ${JsInterp.throwMessage(v)}")
-          case OracleRunError(msg) =>
-            throw graft.oracle.Merge.MergerFailure(
-              s"unable to run merger function: $msg")
-          case graft.oracle.OracleBudgetError(msg) =>
-            throw graft.oracle.Merge.MergerFailure(
-              s"unable to run merger function: $msg")
-          case _: StackOverflowError =>
-            throw graft.oracle.Merge.MergerFailure(
-              s"unable to run merger function: $StackOverflow")
+          case JsFailure(msg) => throw graft.oracle.Merge.MergerFailure(
+            s"unable to run merger function: $msg")
         }
       if (ctx.isError)
         throw graft.oracle.Merge.MergerFailure(
@@ -177,11 +184,12 @@ object JsOracle {
   /** Run the entry PER PARTITION on executors — graft's mapping of the
     * reference master's scatter-gather (master/mux_runner.go:82-155):
     * each Spark partition is a "node" whose `records` host exposes only
-    * that partition's records, its JSON partial (or error) returns to the
-    * driver, and the partials fold through the stored `merge*` hook or
-    * the default tri-state merger. The driver-pull cap does NOT bound
-    * this path — a partition materializes only inside its executor task,
-    * never on the driver; only the compact JSON partial travels back.
+    * that partition's records, the interpreter runs the entry there, its
+    * JSON partial (or error) returns to the driver, and the partials fold
+    * through the stored `merge*` hook or the default tri-state merger.
+    * The driver-pull cap does NOT bound this path — a partition
+    * materializes only inside its executor task, never on the driver;
+    * only the compact JSON partial travels back.
     *
     * Per-node errors aggregate in the master's wire format:
     * "Errors from nodes: [error while running oracle <id>: <msg>, …]"
@@ -190,30 +198,8 @@ object JsOracle {
   def runDistributed(id: Long, code: String, store: RecordStore,
       args: Seq[JValue]): Either[String, JValue] =
     compileSource(code).flatMap { c =>
-      // Linear-shape fast path (JsCatalyst): a conforming scan+aggregate
-      // oracle with a canonical keyed-add merger compiles to ONE
-      // partial-aggregated groupBy instead of a per-record interpreter
-      // walk; the merger's associative-commutative integer fold makes
-      // the result decomposition-invariant, so it equals the
-      // interpreter's bit for bit. A tripped guard (a row the
-      // interpreter would error on) falls through to the interpreter so
-      // the error surfaces with the reference wording.
-      JsCatalyst.tryCompile(c).flatMap(p => JsCatalyst.run(p, store)) match {
-        case Some(partials) => graft.oracle.Merge.merge(partials, buildMerger(c))
-        case None           => runInterpreted(id, c, store, args)
-      }
-    }
-
-  /** private[graft] so JsCatalystSpec can pin transpiled == interpreted
-    * on the same stores.
-    */
-  private[graft] def runInterpreted(id: Long, c: Compiled, store: RecordStore,
-      args: Seq[JValue]): Either[String, JValue] = {
-      val program = c.program
-      val params = c.params
-      val entryName = c.entry
       val argVals: Seq[JValue] =
-        params.indices.map(i => args.lift(i).getOrElse(JNull))
+        c.params.indices.map(i => args.lift(i).getOrElse(JNull))
       val spark = store.records.sparkSession
       import spark.implicits._
       val partials: Seq[(Boolean, String)] =
@@ -249,14 +235,7 @@ object JsOracle {
           env.declare("ctx", ctxHost(ctx))
           val out =
             try {
-              interp.exec(program, env)
-              params.zipWithIndex.foreach { case (p, i) =>
-                env.declare(p, JsInterp.fromJson(argVals(i)))
-              }
-              val entry = env.lookup(entryName).getOrElse(throw OracleRunError(
-                s"ReferenceError: '$entryName' is not defined"))
-              val result = interp.callFunction(entry,
-                params.map(p => env.lookup(p).getOrElse(JsNull)))
+              val result = callEntry(interp, env, c, argVals)
               if (ctx.isError) (false, ctx.message)
               else {
                 val json = JsInterp.toJson(result)
@@ -267,10 +246,7 @@ object JsOracle {
                 }
               }
             } catch {
-              case JsThrow(v)        => (false, JsInterp.throwMessage(v))
-              case OracleRunError(m) => (false, m)
-              case graft.oracle.OracleBudgetError(m) => (false, m)
-              case _: StackOverflowError => (false, StackOverflow)
+              case JsFailure(m) => (false, m)
               // Spark-internal failures must PROPAGATE: the partition
               // iterator is a shuffle read, and a FetchFailedException
               // thrown while the oracle consumes it is Spark's stage-retry
@@ -455,6 +431,16 @@ object JsOracle {
   private def argNum(args: Seq[JsVal], i: Int): Int =
     toNum(args.lift(i).getOrElse(JsNum(0))).toInt
 
+  /** A range method's start. The float-range kernels index from it
+    * unchecked, so a negative one is refused here, with a message that
+    * does not depend on how the JVM reports an array bound.
+    */
+  private def rangeStart(args: Seq[JsVal]): Int = {
+    val start = argNum(args, 1)
+    if (start < 0) throw OracleRunError(s"RangeError: range start $start is negative")
+    start
+  }
+
   private def floatsOf(v: Option[JsVal]): Array[Float] = v match {
     case Some(a: JsArr) => a.items.map(x => toNum(x).toFloat).toArray
     case _              => Array.emptyFloatArray
@@ -496,7 +482,7 @@ object JsOracle {
       JsNum(VectorMath.dot(own(r), b, 0, Int.MaxValue))
     },
     "DotRange" -> { (r, args) =>
-      JsNum(VectorMath.dot(own(r), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
+      JsNum(VectorMath.dot(own(r), dataOf(args.head), rangeStart(args), argNum(args, 2)))
     },
     "DotSub" -> { (r, args) =>
       JsNum(VectorMath.dot(own(r), dataOf(args.head), 0, argNum(args, 1)))
@@ -513,14 +499,14 @@ object JsOracle {
       JsNum(VectorMath.cosine(own(r), dataOf(args.head), 0, argNum(args, 1)))
     },
     "CosineRange" -> { (r, args) =>
-      JsNum(VectorMath.cosine(own(r), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
+      JsNum(VectorMath.cosine(own(r), dataOf(args.head), rangeStart(args), argNum(args, 2)))
     },
     "Jaccard" -> { (r, args) =>
       val b = dataOf(args.head)
       JsNum(VectorMath.jaccard(own(r), b, 0, Int.MaxValue))
     },
     "JaccardRange" -> { (r, args) =>
-      JsNum(VectorMath.jaccard(own(r), dataOf(args.head), argNum(args, 1), argNum(args, 2)))
+      JsNum(VectorMath.jaccard(own(r), dataOf(args.head), rangeStart(args), argNum(args, 2)))
     })
 
   // ------------------------------------------------------------- globals

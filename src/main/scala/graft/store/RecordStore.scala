@@ -341,13 +341,13 @@ final class RecordStore private (
 
   /** Element-wise float64 sum of every record's vector (empty for an
     * empty store); the resident fold adds in id order with the
-    * aggregator's own [[VectorMath.sum]].
+    * aggregator's own [[VectorMath.accumulate]].
     */
   def sumVectors(): Array[Double] = {
     val s = state
     s.snapshot match {
       case Some(snap) => snap.rows.foldLeft(Array.emptyDoubleArray)(
-        (acc, r) => VectorMath.sum(acc, VectorMath.widen(r.data)))
+        (acc, r) => VectorMath.accumulate(acc, r.data))
       case None => s.ds.map(_.data).select(new VectorSumAggregator().toColumn)
           .collect().headOption.getOrElse(Array.emptyDoubleArray)
     }

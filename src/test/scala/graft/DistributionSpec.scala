@@ -6,6 +6,7 @@ import org.json4s._
 import graft.functions.vector
 import graft.model.SumRecord
 import graft.oracle.Merge
+import graft.oracle.js.JsOracle
 import graft.store.RecordStore
 
 /** Distribution parity (SURVEY.md §7.1 item 5): running an oracle as
@@ -235,6 +236,155 @@ function outOfRange() {
       .fold(m => fail(m), identity)
     assert(reg.runDistributed(deepMerge.id, store, Seq.empty) ===
       Left(s"unable to run merger function: $StackOverflow"))
+  }
+
+  // ---- keyed-count oracles (the o03 profileEvents family) over an
+  // events-like store: expected partials are computed in Scala from the
+  // same records, partitioned the same way
+
+  private val EventTypes = Array("click", "view", "purchase", "signup")
+
+  private def eventsStore(n: Int, parts: Int = 8): RecordStore =
+    RecordStore.fromRecords(spark, (0 until n).map { i =>
+      SumRecord(i.toLong, Array((i * 0.37f) % 10f, i.toFloat),
+        Map("type" -> EventTypes(i % EventTypes.length)))
+    }).repartitioned(parts)
+
+  /** Each partition's records, in partition order. */
+  private def partitions(store: RecordStore): Seq[Seq[SumRecord]] =
+    store.records.rdd.mapPartitions(it => Iterator.single(it.toVector)).collect().toSeq
+
+  /** The canonical keyed-add merger over `slots`-wide buckets. */
+  private def mergerFor(slots: Int): String = {
+    val zeros = Seq.fill(slots)("0").mkString("[", ", ", "]")
+    val adds = (0 until slots)
+      .map(i => s"out[k][$i] += p[k][$i];").mkString("\n        ")
+    s"""function mergeKeyed(results) {
+      var out = {};
+      for (var i = 0; i < results.length; i++) {
+        var p = results[i];
+        if (p === null) continue;
+        for (var k in p) {
+          if (!out[k]) out[k] = $zeros;
+          $adds
+        }
+      }
+      return out;
+    }"""
+  }
+
+  /** The merged `{type: [slot sums]}` the keyed oracles return, with the
+    * integer-valued `addends` of each record summed per type.
+    */
+  private def keyedSums(store: RecordStore)(addends: SumRecord => Seq[Double]): JValue =
+    JObject(partitions(store).flatten.groupBy(_.metaValue("type")).toList.sortBy(_._1)
+      .map { case (t, recs) =>
+        t -> (JArray(recs.map(addends).transpose.map(s => JInt(BigInt(s.sum.toLong))).toList): JValue)
+      })
+
+  test("o03 profileEvents shape: per-type counts and round sums") {
+    val code = """function profileEvents() {
+      var out = {};
+      records.ForEach(function(r) {
+        var t = r.Meta("type");
+        if (!out[t]) out[t] = [0, 0];
+        out[t][0] += 1;
+        out[t][1] += Math.round(r.Get(0) * 100);
+      });
+      return out;
+    }
+    function mergeProfiles(results) {
+      var out = {};
+      for (var i = 0; i < results.length; i++) {
+        var p = results[i];
+        if (p === null) continue;
+        for (var k in p) {
+          if (!out[k]) out[k] = [0, 0];
+          out[k][0] += p[k][0];
+          out[k][1] += p[k][1];
+        }
+      }
+      return out;
+    }"""
+    val store = eventsStore(500)
+    try {
+      // JS Math.round is floor(x + 0.5)
+      val want = keyedSums(store)(r => Seq(1.0, math.floor(r.data(0).toDouble * 100 + 0.5)))
+      assert(JsOracle.runDistributed(1, code, store, Nil) === Right(want))
+    } finally store.close()
+  }
+
+  test("conditional and arithmetic integer addends") {
+    val code = s"""function profile() {
+      var out = {};
+      records.ForEach(function(r) {
+        var t = r.Meta("type");
+        if (!out[t]) out[t] = [0, 0, 0];
+        out[t][0] += r.Get(0) > 5 ? 1 : 0;
+        out[t][1] += Math.floor(r.Get(1) / 2);
+        out[t][2] += Math.min(r.Size, 2);
+      });
+      return out;
+    }
+    ${mergerFor(3)}"""
+    val store = eventsStore(300)
+    try {
+      val want = keyedSums(store)(r => Seq(
+        if (r.data(0).toDouble > 5) 1.0 else 0.0,
+        math.floor(r.data(1).toDouble / 2),
+        math.min(r.data.length, 2).toDouble))
+      assert(JsOracle.runDistributed(1, code, store, Nil) === Right(want))
+    } finally store.close()
+  }
+
+  test("out-of-range Get fails every non-empty partition") {
+    val code = """function badGet() {
+      var out = {};
+      records.ForEach(function(r) {
+        var t = r.Meta("type");
+        if (!out[t]) out[t] = [0];
+        out[t][0] += Math.round(r.Get(7));
+      });
+      return out;
+    }
+    """ + mergerFor(1)
+    val store = eventsStore(20)
+    try {
+      val failing = partitions(store).count(_.nonEmpty)
+      assert(failing > 0)
+      assert(JsOracle.runDistributed(1, code, store, Nil) === Left(
+        Seq.fill(failing)("error while running oracle 1: index 7 out of range")
+          .mkString("Errors from nodes: [", ", ", "]")))
+    } finally store.close()
+  }
+
+  test("default merger: a key in two partitions is a merge conflict") {
+    // Without a merge* hook the tri-state default merger rejects a key
+    // defined by two partials; the first conflict in partition order and
+    // sorted-key order is the one reported.
+    val code = """function countTypes() {
+      var out = {};
+      records.ForEach(function(r) {
+        var t = r.Meta("type");
+        if (!out[t]) out[t] = [0];
+        out[t][0] += 1;
+      });
+      return out;
+    }"""
+    val store = eventsStore(97, parts = 16)
+    try {
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      val conflict = partitions(store).iterator.flatMap { recs =>
+        recs.groupBy(_.metaValue("type")).toList.sortBy(_._1).map { case (t, rs) =>
+          val prior = seen.get(t)
+          seen.getOrElseUpdate(t, rs.size)
+          prior.map(old => s"merge conflict: multiple results define key $t: " +
+            s"oldValue='[$old]', newValue='[${rs.size}]'")
+        }
+      }.collectFirst { case Some(m) => m }
+      assert(conflict.isDefined) // 97 records of 4 types over 16 partitions
+      assert(JsOracle.runDistributed(1, code, store, Nil) === Left(conflict.get))
+    } finally store.close()
   }
 
   test("partition counts merged as arrays concatenate to the full scan") {

@@ -354,6 +354,24 @@ function mapOfRecordNames() {
         """"j":"{\"n\":1}","s":"[object Record]","t":"object","undef":true}"""))
   }
 
+  test("record wrapper surface: a negative range start is a RangeError, run after run") {
+    val want = "RangeError: range start -1 is negative"
+    for (m <- Seq("DotRange", "CosineRange", "JaccardRange")) {
+      val code = s"function neg() { return records.Find(1).$m(records.Find(2), -1, 2); }"
+      pinBoth(code)(Left(want))
+      // the same message once the method is hot, not a bare
+      // ArrayIndexOutOfBoundsException whose message the JIT may drop
+      val reg = new OracleRegistry
+      val o = reg.createJs("neg", code).fold(e => fail(s"compile failed: $e"), identity)
+      (1 to 300).foreach(i => assert(reg.run(o.id, store, Nil) === Left(want), s"run $i"))
+      // JS code can catch it as a RangeError
+      pinBoth(s"""function caught() {
+        try { records.Find(1).$m(records.Find(2), -3, 2); return {e: 'no error'}; }
+        catch (e) { return {e: e.name + '|' + e.message}; }
+      }""")(Right("{\"e\":\"RangeError|range start -3 is negative\"}"))
+    }
+  }
+
   test("a runaway loop hits the step budget instead of wedging the server") {
     val r = runJs("function spin(){ while(true){} }")
     assert(r.isLeft)

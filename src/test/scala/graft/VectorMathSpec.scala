@@ -37,6 +37,30 @@ class VectorMathSpec extends AnyFunSuite {
     }
     if (m10 + m11 == 0) 0.0 else m11 / (m11 + m10)
   }
+  private def widen(v: Array[Float]): Array[Double] = {
+    val out = new Array[Double](v.length)
+    var i = 0
+    while (i < v.length) { out(i) = v(i).toDouble; i += 1 }
+    out
+  }
+  private def oldSum(a: Array[Double], b: Array[Double]): Array[Double] =
+    if (a.isEmpty) b
+    else if (b.isEmpty) a
+    else {
+      val out = new Array[Double](math.max(a.length, b.length))
+      var i = 0
+      while (i < out.length) {
+        out(i) = (if (i < a.length) a(i) else 0.0) +
+          (if (i < b.length) b(i) else 0.0)
+        i += 1
+      }
+      out
+    }
+  /** The record-sum fold of `RecordStore.sumVectors` and the
+    * aggregator's `reduce`: widen each record, then sum into a new array.
+    */
+  private def oldFold(rows: Seq[Array[Float]]): Array[Double] =
+    rows.foldLeft(Array.emptyDoubleArray)((acc, r) => oldSum(acc, widen(r)))
 
   private val special = Array(0.0f, -0.0f, Float.NaN, Float.PositiveInfinity,
     Float.NegativeInfinity, Float.MinPositiveValue, 1.0e-40f, -1.0e-39f,
@@ -87,9 +111,43 @@ class VectorMathSpec extends AnyFunSuite {
       for (a <- vs; b <- vs) {
         val n = math.min(a.length, b.length)
         assert(outcome(VectorMath.cosine(a, b, 0, n)) ===
-          outcome(VectorMath.cosine(VectorMath.widen(a), VectorMath.widen(b))),
+          outcome(VectorMath.cosine(widen(a), widen(b))),
           s"${a.toSeq} ${b.toSeq}")
       }
     }
+  }
+
+  test("in-place record sum equals the widen-then-sum fold bit for bit") {
+    def bits(v: Array[Double]): Seq[Long] = v.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val agg = new graft.functions.VectorSumAggregator
+    val firstNegZero = Seq(Array(-0.0f, 1f), Array(-0.0f), Array(2f, -0.0f, -0.0f))
+    var folds = 0
+    for (seed <- 9L to 12L) {
+      val rnd = new scala.util.Random(seed)
+      val vs = vectors(seed)
+      val runs = firstNegZero +: Seq.fill(200)(
+        Seq.fill(rnd.nextInt(8))(vs(rnd.nextInt(vs.length))))
+      for (rows <- runs) {
+        def rowBits = rows.map(_.toSeq.map(java.lang.Float.floatToRawIntBits))
+        val before = rowBits
+        val want = bits(oldFold(rows))
+        assert(bits(rows.foldLeft(Array.emptyDoubleArray)(VectorMath.accumulate)) === want,
+          rows.map(_.toSeq))
+        assert(bits(rows.foldLeft(agg.zero)(agg.reduce)) === want)
+        // the partition-partial merge still sums two in-place folds
+        val (l, r) = rows.splitAt(rows.length / 2)
+        assert(bits(agg.merge(l.foldLeft(agg.zero)(agg.reduce), r.foldLeft(agg.zero)(agg.reduce))) ===
+          bits(oldSum(oldFold(l), oldFold(r))))
+        assert(rowBits === before) // the records are read, not written
+        folds += 1
+      }
+    }
+    assert(folds > 800)
+    // the first record is taken as is, -0.0 included; a later record
+    // shorter than the sum adds 0.0 to the tail, which turns -0.0 into 0.0
+    def fold(rows: Array[Float]*) = bits(rows.foldLeft(Array.emptyDoubleArray)(VectorMath.accumulate))
+    assert(fold(Array(-0.0f, -0.0f), Array.emptyFloatArray) === bits(Array(-0.0, -0.0)))
+    assert(fold(Array(-0.0f, -0.0f), Array(1f)) === bits(Array(1.0, 0.0)))
+    assert(fold(firstNegZero: _*) === bits(Array(2.0, 1.0, 0.0)))
   }
 }
