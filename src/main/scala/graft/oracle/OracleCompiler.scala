@@ -2,6 +2,8 @@ package graft.oracle
 
 import org.apache.spark.sql.SparkSession
 
+import graft.oracle.js.{JsLang, JsOracle}
+
 /** Language dispatch for stored oracle code — the create-time entry the
   * service surfaces use.
   *
@@ -9,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * VM); graft additionally accepts SQL. Code whose first token reads as a
   * JS program (a function declaration — the only form the reference
   * accepts, node/service/compiler.go:19-52 — or a leading comment/var
-  * that precedes one) compiles through [[graft.oracle.js.JsOracle]];
+  * that precedes one) compiles through [[JsOracle]];
   * everything else is SQL ([[SqlOracle]]). Either way broken code
   * rejects AT CREATE with the compile message, per the reference's
   * CreateOracle contract.
@@ -17,18 +19,24 @@ import org.apache.spark.sql.SparkSession
 object OracleCompiler {
 
   def compile(spark: SparkSession, name: String,
-      code: String): Either[String, Oracle] =
-    if (looksLikeJs(code)) graft.oracle.js.JsOracle.compile(name, code)
-    else SqlOracle.compile(spark, name, code) match {
-      case ok @ Right(_) => ok
-      case Left(sqlErr) =>
-        // The program parsed as JS but declared no entry function AND is
-        // not valid SQL: report the reference compiler's message
-        // (node/service/compiler_test.go:15-19) rather than a confusing
-        // SQL parse error for what was clearly JS input.
-        if (parsesAsJs(code)) Left("expected a function declaration")
-        else Left(sqlErr)
+      code: String): Either[String, Oracle] = {
+    // one parse serves the dispatch and the JS compile
+    val js = parseJs(code)
+    js match {
+      case Some(program) if declaresFunction(program) =>
+        JsOracle.compile(name, code, program)
+      case _ => SqlOracle.compile(spark, name, code) match {
+        case ok @ Right(_) => ok
+        case Left(sqlErr) =>
+          // The program parsed as JS but declared no entry function AND is
+          // not valid SQL: report the reference compiler's message
+          // (node/service/compiler_test.go:15-19) rather than a confusing
+          // SQL parse error for what was clearly JS input.
+          if (js.isDefined) Left("expected a function declaration")
+          else Left(sqlErr)
+      }
     }
+  }
 
   /** JS if the whole text parses under the oracle grammar AND declares a
     * top-level function — the acceptance set of the reference compiler,
@@ -37,11 +45,12 @@ object OracleCompiler {
     * it. SQL text never parses as a JS program with a function decl.
     */
   private[graft] def looksLikeJs(code: String): Boolean =
-    try graft.oracle.js.JsLang.parse(code)
-      .exists(_.isInstanceOf[graft.oracle.js.JsLang.FuncDecl])
-    catch { case graft.oracle.js.JsLang.ParseError(_) => false }
+    parseJs(code).exists(declaresFunction)
 
-  private def parsesAsJs(code: String): Boolean =
-    try { graft.oracle.js.JsLang.parse(code); true }
-    catch { case graft.oracle.js.JsLang.ParseError(_) => false }
+  private def parseJs(code: String): Option[Seq[JsLang.Stmt]] =
+    try Some(JsLang.parse(code))
+    catch { case JsLang.ParseError(_) => None }
+
+  private def declaresFunction(program: Seq[JsLang.Stmt]): Boolean =
+    program.exists(_.isInstanceOf[JsLang.FuncDecl])
 }

@@ -31,8 +31,9 @@ final class JsObj(val fields: mutable.LinkedHashMap[String, JsVal] =
 }
 final class JsArr(val items: mutable.ArrayBuffer[JsVal] =
     mutable.ArrayBuffer.empty) extends JsVal
-final class JsFunc(val name: Option[String], val params: Seq[String],
-    val body: Seq[Stmt], val closure: JsInterp.Env) extends JsVal {
+/** A JS function: compiled code plus the frame it closes over. */
+final class JsFunc(val code: FuncCode, val closure: Frame) extends JsVal {
+  def name: Option[String] = code.name
   /** `F.prototype` — auto-created on first touch with a non-enumerable
     * `constructor` back-link (ES5 13.2), replaceable by assignment
     * (`Child.prototype = new Parent()` is the ES5 inheritance idiom).
@@ -109,16 +110,16 @@ final class JsDate(var ms: Double) extends JsVal {
 final case class JsThrow(value: JsVal) extends RuntimeException
   with scala.util.control.NoStackTrace
 
-/** Tree-walking evaluator with JS coercion semantics for the subset
-  * [[JsLang]] parses. Each run is budgeted (`maxSteps`) so a stored
-  * oracle with an accidental infinite loop cannot wedge a serving
-  * thread — the reference relies on gRPC deadlines for the same hazard.
+/** The runtime of the oracle JS subset [[JsLang]] parses: values,
+  * coercions, builtins, host dispatch and the step budget. Programs run
+  * in the form [[JsCompiler]] builds once per oracle, with identifiers
+  * resolved to frame slots and ES5 function-scoped `var`s; one
+  * interpreter serves one run, the compiled program every run.
   *
-  * Scoping is ES5 `var`: only function calls (and the program itself)
-  * create scopes, blocks do not; function DECLARATIONS hoist to the top
-  * of their scope; assignment to an undeclared name creates a global
-  * (non-strict mode), which the reference's oracles rely on
-  * (master/service_test.go:381 `result = {};`).
+  * Each run is budgeted (`maxSteps`) so a stored oracle with an
+  * accidental infinite loop cannot wedge a serving thread — the reference
+  * relies on gRPC deadlines for the same hazard. A step is a statement,
+  * an expression node, a function call, or a native or host method call.
   */
 final class JsInterp(maxSteps: Long = 50_000_000L) {
   import JsInterp._
@@ -126,7 +127,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
   private var steps = 0L
   private var budget = maxSteps
 
-  private def tick(): Unit = {
+  private[js] def tick(): Unit = {
     steps += 1
     if (steps > budget)
       // A dedicated type so a user `try { for(;;){} } catch(e) {}` cannot
@@ -148,430 +149,106 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
   def grantSteps(n: Long): Unit =
     budget = math.min(Long.MaxValue / 2, budget + math.max(0L, n))
 
-  private final case class ReturnSignal(v: JsVal) extends RuntimeException
-    with scala.util.control.NoStackTrace
-  private final case class BreakSignal(label: Option[String])
-    extends RuntimeException with scala.util.control.NoStackTrace
-  private final case class ContinueSignal(label: Option[String])
-    extends RuntimeException with scala.util.control.NoStackTrace
+  /** The value of the last `return` and the label of the last
+    * `break`/`continue` (null when unlabeled), read where the completion
+    * lands.
+    */
+  private[js] var completionValue: JsVal = JsUndef
+  private[js] var completionLabel: String = null
 
   // ------------------------------------------------------------- driving
-  /** Execute a program in `env`: hoist function declarations, run the
-    * statements.
-    */
-  def exec(stmts: Seq[Stmt], env: Env): Unit = {
-    hoist(stmts, env)
-    stmts.foreach(stmt(_, env))
-  }
-
-  private def hoist(stmts: Seq[Stmt], env: Env): Unit =
-    stmts.foreach {
-      case FuncDecl(nm, ps, body) =>
-        env.declare(nm, new JsFunc(Some(nm), ps, body, env))
-      case _ => ()
-    }
+  /** Compile and run a program in `env`. */
+  def exec(stmts: Seq[Stmt], env: Env): Unit =
+    JsCompiler.compile(stmts).run(this, env)
 
   def callFunction(f: JsVal, args: Seq[JsVal],
       thisVal: JsVal = JsUndef): JsVal = f match {
-    case fn: JsFunc =>
-      tick()
-      val frame = new Env(Some(fn.closure))
-      // EVERY frame binds `this` (undefined on plain calls), so a nested
-      // plain call never sees the enclosing method's receiver through the
-      // closure — the ES5 behavior the `var self = this` idiom exists for.
-      frame.declare("this", thisVal)
-      fn.params.zipWithIndex.foreach { case (p, i) =>
-        frame.declare(p, if (i < args.length) args(i) else JsUndef)
-      }
-      // ES5 `arguments`: every function body sees its actual-argument list
-      // unless a parameter shadows the name. Exposed as an array (otto's is
-      // array-like without the Array methods — a superset here) so the
-      // common variadic idioms (`arguments.length`, `arguments[i]`) run.
-      if (!frame.has("arguments"))
-        frame.declare("arguments",
-          new JsArr(mutable.ArrayBuffer.from(args)))
-      fn.name.foreach(nm => if (!frame.has(nm)) frame.declare(nm, fn))
-      try {
-        hoist(fn.body, frame)
-        fn.body.foreach(stmt(_, frame))
-        JsUndef
-      } catch {
-        case ReturnSignal(v) => v
-        // a break/continue naming a label that no enclosing statement
-        // declares — real engines reject it at parse; surface the same
-        // class of error rather than leaking a control signal
-        case BreakSignal(l) => throw OracleRunError(
-          s"SyntaxError: undefined label '${l.getOrElse("")}'")
-        case ContinueSignal(l) => throw OracleRunError(
-          s"SyntaxError: undefined label '${l.getOrElse("")}'")
-      }
+    // EVERY call binds `this` (undefined on plain calls), so a nested
+    // plain call never sees the enclosing method's receiver through the
+    // closure — the ES5 behavior the `var self = this` idiom exists for.
+    case fn: JsFunc => tick(); fn.code.invoke(this, fn, args, thisVal)
     case nf: JsNative => tick(); nf.fn(args)
     case other =>
       throw OracleRunError(s"TypeError: ${typeOf(other)} is not a function")
   }
 
-  // ----------------------------------------------------------- statements
-  private def stmt(s: Stmt, env: Env): Unit = {
-    tick()
-    s match {
-      case EmptyStmt       => ()
-      case _: FuncDecl     => () // hoisted
-      case ExprStmt(e)     => eval(e, env); ()
-      case VarDecl(decls) =>
-        decls.foreach { case (nm, init) =>
-          val v = init.map(eval(_, env)).getOrElse(JsUndef)
-          env.declare(nm, v)
-        }
-      case Block(stmts) =>
-        hoist(stmts, env)
-        stmts.foreach(stmt(_, env))
-      case If(c, t, e) =>
-        if (truthy(eval(c, env))) stmt(t, env) else e.foreach(stmt(_, env))
-      case loop @ (_: While | _: DoWhile | _: For | _: ForIn) =>
-        execLoop(loop, env, Set.empty)
-      case Labeled(l, body) =>
-        // ES5 12.12 label SETS: consecutive labels all attach to the
-        // same statement, so `l1: l2: while (...) { continue l1; }` must
-        // resolve at the loop. Peel every nested Labeled wrapper first.
-        var labels = Set(l)
-        var inner = body
-        while (inner.isInstanceOf[Labeled]) {
-          val wrapped = inner.asInstanceOf[Labeled]
-          labels += wrapped.label
-          inner = wrapped.body
-        }
-        inner match {
-          case loop @ (_: While | _: DoWhile | _: For | _: ForIn) =>
-            execLoop(loop, env, labels)
-          case other =>
-            // `break l` exits any labeled statement (ES5 12.12); a
-            // `continue` can only target a loop label, so one escaping
-            // here surfaces as the undefined-label error downstream
-            try stmt(other, env)
-            catch { case BreakSignal(Some(x)) if labels.contains(x) => () }
-        }
-      case Return(e) =>
-        throw ReturnSignal(e.map(eval(_, env)).getOrElse(JsUndef))
-      case Throw(e) => throw JsThrow(eval(e, env))
-      case TryStmt(body, catchParam, catchBody, finallyBody) =>
-        // `catch` sees both user throws and runtime errors (otto parity);
-        // control-flow signals and the step budget pass through. The
-        // catch param lives in a child frame so it does not leak — `var`s
-        // inside the catch body land there too, an accepted delta from
-        // ES5's function-scoped var (no reference oracle depends on it).
-        def runStmts(ss: Seq[Stmt], in: Env): Unit = {
-          hoist(ss, in)
-          ss.foreach(stmt(_, in))
-        }
-        try {
-          try runStmts(body, env)
-          catch {
-            case t @ (_: JsThrow | _: OracleRunError) if catchBody.isDefined =>
-              val cenv = new Env(Some(env))
-              cenv.declare(catchParam.get, caughtValue(t))
-              runStmts(catchBody.get, cenv)
-          }
-        } finally finallyBody.foreach(runStmts(_, env))
-      case Switch(disc, cases) =>
-        val d = eval(disc, env)
-        // ES5: test the case clauses in order (default skipped), then
-        // fall back to default; execution falls through until a break.
-        var idx = cases.indexWhere(_._1.exists(e => strictEquals(eval(e, env), d)))
-        if (idx < 0) idx = cases.indexWhere(_._1.isEmpty)
-        if (idx >= 0) {
-          // only the unlabeled break terminates the switch; a labeled one
-          // targets an enclosing labeled statement and propagates
-          try cases.drop(idx).foreach(_._2.foreach(stmt(_, env)))
-          catch { case BreakSignal(None) => () }
-        }
-      case BreakStmt(l)    => throw BreakSignal(l)
-      case ContinueStmt(l) => throw ContinueSignal(l)
-    }
-  }
-
-  /** One loop execution under a label SET (empty when unlabeled — ES5
-    * 12.12 attaches every consecutive label to the statement). An
-    * unlabeled signal or one naming any of THIS loop's labels resolves
-    * here; a signal carrying a different label propagates to the
-    * enclosing labeled statement — the ES5 12.7/12.8 semantics.
-    */
-  private def execLoop(s: Stmt, env: Env, self: Set[String]): Unit = {
-    // one body pass: true = keep looping, false = break out of this loop
-    def step(body: Stmt): Boolean =
-      try { stmt(body, env); true }
-      catch {
-        case ContinueSignal(l) if l.forall(self.contains) => true
-        case BreakSignal(l) if l.forall(self.contains)    => false
-      }
-    s match {
-      case While(c, body) =>
-        var go = true
-        while (go && truthy(eval(c, env))) go = step(body)
-      case DoWhile(body, c) =>
-        var go = true
-        while (go) go = step(body) && truthy(eval(c, env))
-      case For(init, cond, upd, body) =>
-        init.foreach(stmt(_, env))
-        var go = true
-        while (go && cond.forall(c => truthy(eval(c, env)))) {
-          go = step(body)
-          if (go) upd.foreach(eval(_, env)) // break skips upd, continue runs it
-        }
-      case ForIn(nm, declare, objE, body) =>
-        if (declare && !env.has(nm)) env.declare(nm, JsUndef)
-        val keys: Seq[String] = eval(objE, env) match {
-          case o: JsObj =>
-            // ES5 for-in: own enumerable keys, then inherited ones not
-            // shadowed; the auto-seeded `constructor` is non-enumerable.
-            val seen = mutable.LinkedHashSet.empty[String]
-            var cur = o
-            while (cur != null) {
-              cur.fields.keys.foreach(k =>
-                if (!cur.nonEnumerable.contains(k)) seen += k)
-              cur = cur.proto
-            }
-            seen.toSeq
-          case a: JsArr => a.items.indices.map(_.toString)
-          case _        => Seq.empty
-        }
-        var go = true
-        val it = keys.iterator
-        while (go && it.hasNext) {
-          assignTo(Ident(nm), JsStr(it.next()), env)
-          go = step(body)
-        }
-      case other =>
-        throw new IllegalStateException(s"not a loop: $other")
-    }
-  }
-
   /** The value a `catch` clause binds: the thrown value itself, or an
     * Error-shaped object ({name, message}) for interpreter run errors.
     */
-  private def caughtValue(t: Throwable): JsVal = t match {
+  private[js] def caughtValue(t: Throwable): JsVal = t match {
     case JsThrow(v)         => v
     case OracleRunError(m)  => errorFromMessage(m)
     case other              => errorFromMessage(String.valueOf(other.getMessage))
   }
 
-  // ---------------------------------------------------------- expressions
-  def eval(e: Expr, env: Env): JsVal = {
-    tick()
-    e match {
-      case NumLit(v)  => JsNum(v)
-      case StrLit(s)  => JsStr(s)
-      case BoolLit(b) => JsBool(b)
-      case RegexLit(pat, flags) => mkRegex(pat, flags)
-      case NullLit    => JsNull
-      case ThisExpr   => env.lookup("this").getOrElse(JsUndef)
-      case Ident("undefined") => JsUndef
-      case Ident("NaN")       => JsNum(Double.NaN)
-      case Ident("Infinity")  => JsNum(Double.PositiveInfinity)
-      case Ident(nm) =>
-        env.lookup(nm).getOrElse(
-          throw OracleRunError(s"ReferenceError: '$nm' is not defined"))
-      case ArrLit(items) =>
-        val a = new JsArr
-        items.foreach(it => a.items += eval(it, env))
-        a
-      case ObjLit(fields) =>
-        val o = new JsObj
-        fields.foreach { case (k, v) => o.fields(k) = eval(v, env) }
-        o
-      case FuncExpr(nm, ps, body) => new JsFunc(nm, ps, body, env)
-      case Member(objE, nm)       => getMember(eval(objE, env), nm)
-      case Index(objE, idxE) =>
-        val obj = eval(objE, env)
-        val idx = eval(idxE, env)
-        getIndexed(obj, idx)
-      case Call(fnE, argEs) =>
-        val args = argEs.map(eval(_, env))
-        fnE match {
-          // method call: dispatch on the receiver so host methods and
-          // array/string builtins see their object
-          case Member(objE, nm) =>
-            val obj = eval(objE, env)
-            callMethod(obj, nm, args)
-          case Index(objE, idxE) =>
-            val obj = eval(objE, env)
-            val nm = toStr(eval(idxE, env))
-            callMethod(obj, nm, args)
-          case _ => callFunction(eval(fnE, env), args)
-        }
-      case NewExpr(callee, argEs) =>
-        val args = argEs.map(eval(_, env))
-        newObject(callee, args, env)
-      case Unary(op, inner) =>
-        op match {
-          case "-" => JsNum(-toNum(eval(inner, env)))
-          case "+" => JsNum(toNum(eval(inner, env)))
-          case "!" => JsBool(!truthy(eval(inner, env)))
-          case "~" => JsNum((~toInt32(eval(inner, env))).toDouble)
-          case "void" => eval(inner, env); JsUndef
-          case "delete" =>
-            inner match {
-              case Member(objE, nm) =>
-                eval(objE, env) match {
-                  case o: JsObj => o.fields.remove(nm)
-                  case _        => ()
-                }
-              case Index(objE, idxE) =>
-                val obj = eval(objE, env)
-                val idx = eval(idxE, env)
-                obj match {
-                  case o: JsObj => o.fields.remove(toStr(idx))
-                  case a: JsArr =>
-                    // delete leaves a hole, length unchanged (ES5)
-                    val i = toNum(idx).toInt
-                    if (i >= 0 && i < a.items.length) a.items(i) = JsUndef
-                  case _ => ()
-                }
-              case _ => ()
-            }
-            JsBool(true)
-          case "typeof" =>
-            val v = inner match {
-              case Ident(nm) => env.lookup(nm).getOrElse(JsUndef)
-              case other     => eval(other, env)
-            }
-            JsStr(typeOf(v))
-        }
-      case Update(op, target, prefix) =>
-        val old = toNum(eval(target, env))
-        val nv = if (op == "++") old + 1 else old - 1
-        assignTo(target, JsNum(nv), env)
-        JsNum(if (prefix) nv else old)
-      case Binary(op, l, r) => binary(op, eval(l, env), eval(r, env))
-      case Logical("&&", l, r) =>
-        val lv = eval(l, env)
-        if (!truthy(lv)) lv else eval(r, env)
-      case Logical("||", l, r) =>
-        val lv = eval(l, env)
-        if (truthy(lv)) lv else eval(r, env)
-      case Logical(op, _, _) =>
-        throw OracleRunError(s"unsupported logical operator $op")
-      case Cond(c, t, f) =>
-        if (truthy(eval(c, env))) eval(t, env) else eval(f, env)
-      case Assign("=", target, value) =>
-        val v = eval(value, env)
-        assignTo(target, v, env)
-        v
-      case Assign(op, target, value) =>
-        val cur = eval(target, env)
-        val v = binary(op.stripSuffix("="), cur, eval(value, env))
-        assignTo(target, v, env)
-        v
-      case Comma(l, r) => eval(l, env); eval(r, env)
-    }
+  /** `new F(...)` for a user function: ES5 13.2.2 — a fresh object whose
+    * [[Prototype]] is F.prototype becomes `this`; an object return value
+    * wins over the instance, any other return is discarded. Anything but
+    * a user function is a loud TypeError rather than a silently wrong
+    * instance.
+    */
+  private[js] def construct(callee: JsVal, args: Seq[JsVal]): JsVal = callee match {
+    case f: JsFunc =>
+      val inst = new JsObj
+      inst.proto = f.prototypeRef
+      callFunction(f, args, thisVal = inst) match {
+        case o: JsObj => o
+        case a: JsArr => a
+        case _        => inst
+      }
+    case v =>
+      throw OracleRunError(s"TypeError: ${typeOf(v)} is not a constructor")
   }
 
-  /** `new` over the subset's constructible globals. User functions work
-    * as factory constructors only (must return an object — our subset has
-    * no `this`); anything else is a loud TypeError rather than a silently
-    * wrong instance.
-    */
-  private def newObject(callee: Expr, args: Seq[JsVal], env: Env): JsVal =
-    callee match {
-      case Ident(nm @ ("Error" | "TypeError" | "RangeError" | "SyntaxError"
-                     | "ReferenceError" | "EvalError" | "URIError")) =>
-        errorObj(nm, args.headOption.map(toStr).getOrElse(""))
-      case Ident("Object") => new JsObj
-      case Ident("Array") =>
-        val a = new JsArr
-        args match {
-          case Seq(JsNum(d)) =>
-            // ES5 15.4.2.2: the single numeric argument is the LENGTH —
-            // non-integer or >= 2^32 is RangeError, and valid-but-huge
-            // lengths hit the same named engine bound as the plain-call
-            // form (JsOracle's Array binding): a 2^31-slot pre-allocation
-            // must not die as a raw JVM error.
-            if (!d.isWhole || d < 0 || d >= 4294967296.0)
-              throw JsThrow(errorObj("RangeError", "Invalid array length"))
-            if (d > 16777216.0)
-              throw graft.oracle.OracleRunError(
-                s"Array length ${numToStr(d)} exceeds the engine bound " +
-                  "of 16777216 elements")
-            (0 until d.toInt).foreach(_ => a.items += JsUndef)
-          case _ => args.foreach(a.items += _)
-        }
-        a
-      case Ident("RegExp") =>
-        mkRegex(args.headOption.map(toStr).getOrElse(""),
-          args.lift(1).map(toStr).getOrElse(""))
-      case Ident("Date") =>
-        new JsDate(args match {
-          case Seq()           => System.currentTimeMillis.toDouble
-          case Seq(s: JsStr)   => dateParse(s.s)
-          case Seq(d: JsDate)  => d.ms
-          case Seq(one)        => toNum(one)
-          case fields          => dateFromFields(fields.map(toNum))
-        })
-      case other =>
-        eval(other, env) match {
-          case f: JsFunc =>
-            // ES5 13.2.2: a fresh object whose [[Prototype]] is
-            // F.prototype becomes `this`; an object return value wins
-            // over the instance, any other return is discarded.
-            val inst = new JsObj
-            inst.proto = f.prototypeRef
-            callFunction(f, args, thisVal = inst) match {
-              case o: JsObj => o
-              case a: JsArr => a
-              case _        => inst
-            }
-          case v =>
-            throw OracleRunError(s"TypeError: ${typeOf(v)} is not a constructor")
-        }
+  private[js] def setMember(obj: JsVal, nm: String, v: JsVal): Unit = obj match {
+    case o: JsObj => o.fields(nm) = v
+    case f: JsFunc if nm == "prototype" => v match {
+      case p: JsObj => f.prototypeObj = p
+      case other => throw OracleRunError(
+        "TypeError: a function prototype must be an object, got " +
+          typeOf(other))
     }
+    case re: JsRegex if nm == "lastIndex" =>
+      re.lastIndex = math.max(0, toNum(v).toInt)
+    case a: JsArr if nm == "length" =>
+      val n = toNum(v).toInt
+      if (n < a.items.length) a.items.remove(n, a.items.length - n)
+      else while (a.items.length < n) a.items += JsUndef
+    case other =>
+      throw OracleRunError(
+        s"TypeError: cannot set property '$nm' of ${typeOf(other)}")
+  }
 
-  private def assignTo(target: Expr, v: JsVal, env: Env): Unit = target match {
-    case Ident(nm) => env.assign(nm, v) // undeclared -> global (non-strict)
-    case Member(objE, nm) =>
-      eval(objE, env) match {
-        case o: JsObj => o.fields(nm) = v
-        case f: JsFunc if nm == "prototype" => v match {
-          case p: JsObj => f.prototypeObj = p
-          case other => throw OracleRunError(
-            "TypeError: a function prototype must be an object, got " +
-              typeOf(other))
-        }
-        case re: JsRegex if nm == "lastIndex" =>
-          re.lastIndex = math.max(0, toNum(v).toInt)
-        case a: JsArr if nm == "length" =>
-          val n = toNum(v).toInt
-          if (n < a.items.length) a.items.remove(n, a.items.length - n)
-          else while (a.items.length < n) a.items += JsUndef
-        case other =>
-          throw OracleRunError(
-            s"TypeError: cannot set property '$nm' of ${typeOf(other)}")
+  private[js] def setIndex(obj: JsVal, idx: JsVal, v: JsVal): Unit = obj match {
+    case a: JsArr =>
+      val i = toNum(idx).toInt
+      if (i >= 0) {
+        while (a.items.length <= i) a.items += JsUndef
+        a.items(i) = v
       }
-    case Index(objE, idxE) =>
-      val obj = eval(objE, env)
-      val idx = eval(idxE, env)
-      obj match {
-        case a: JsArr =>
-          val i = toNum(idx).toInt
-          if (i >= 0) {
-            while (a.items.length <= i) a.items += JsUndef
-            a.items(i) = v
-          }
-        case o: JsObj => o.fields(toStr(idx)) = v
-        case other =>
-          throw OracleRunError(
-            s"TypeError: cannot set index of ${typeOf(other)}")
-      }
-    case _ => throw OracleRunError("invalid assignment target")
+    case o: JsObj => o.fields(toStr(idx)) = v
+    case other =>
+      throw OracleRunError(
+        s"TypeError: cannot set index of ${typeOf(other)}")
   }
 
   // -------------------------------------------------- member/index access
-  private def getMember(obj: JsVal, nm: String): JsVal = obj match {
+  /** Property `nm` of `obj`. On an array or a string, a name that is an
+    * array index (ES5 15.4: `'1'`, not `'01'` or `'1.0'`) reads the
+    * element, so `a['1']` and a for-in key read like `a[1]`.
+    */
+  private[js] def getMember(obj: JsVal, nm: String): JsVal = obj match {
     case o: JsObj =>
       ownOrInherited(o, nm).orElse(protoMethod(o, nm)).getOrElse(JsUndef)
     case a: JsArr =>
-      if (nm == "length") JsNum(a.items.length)
+      val i = arrayIndex(nm)
+      if (i >= 0) { if (i < a.items.length) a.items(i) else JsUndef }
+      else if (nm == "length") JsNum(a.items.length)
       else arrayMethod(a, nm).orElse(protoMethod(a, nm)).getOrElse(JsUndef)
     case s: JsStr =>
-      if (nm == "length") JsNum(s.s.length)
+      val i = arrayIndex(nm)
+      if (i >= 0) { if (i < s.s.length) JsStr(s.s.charAt(i).toString) else JsUndef }
+      else if (nm == "length") JsNum(s.s.length)
       else stringMethod(s.s, nm).orElse(protoMethod(s, nm)).getOrElse(JsUndef)
     case h: JsHost =>
       h.prop(nm).getOrElse(
@@ -593,7 +270,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
       numberMethod(num.v, nm).orElse(protoMethod(num, nm)).getOrElse(JsUndef)
     case fn: JsFunc =>
       if (nm == "prototype") fn.prototypeRef
-      else if (nm == "length") JsNum(fn.params.length)
+      else if (nm == "length") JsNum(fn.code.params.length)
       else if (nm == "name") JsStr(fn.name.getOrElse(""))
       else funcProto(fn, nm).orElse(protoMethod(fn, nm)).getOrElse(JsUndef)
     case nf: JsNative =>
@@ -604,17 +281,6 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
       throw OracleRunError(
         s"TypeError: cannot read property '$nm' of ${typeOf(obj)}")
     case other => protoMethod(other, nm).getOrElse(JsUndef)
-  }
-
-  /** Own field or one inherited through the [[Prototype]] chain. */
-  private def ownOrInherited(o: JsObj, nm: String): Option[JsVal] = {
-    var cur = o
-    while (cur != null) {
-      val hit = cur.fields.get(nm)
-      if (hit.isDefined) return hit
-      cur = cur.proto
-    }
-    None
   }
 
   /** `Function.prototype.call/apply`: the first argument becomes `this`
@@ -635,7 +301,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
     case _ => None
   }
 
-  private def getIndexed(obj: JsVal, idx: JsVal): JsVal = obj match {
+  private[js] def getIndexed(obj: JsVal, idx: JsVal): JsVal = obj match {
     case a: JsArr =>
       idx match {
         case JsNum(d) if d.isWhole =>
@@ -653,7 +319,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
     case _ => getMember(obj, toStr(idx))
   }
 
-  private def callMethod(obj: JsVal, nm: String, args: Seq[JsVal]): JsVal =
+  private[js] def callMethod(obj: JsVal, nm: String, args: Seq[JsVal]): JsVal =
     obj match {
       case o: JsObj =>
         // a method call on an object binds the receiver as `this`
@@ -1098,82 +764,184 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
     case "valueOf" => Some(new JsNative("valueOf", 0, _ => JsNum(d)))
     case _ => None
   }
+}
+
+object JsInterp {
+
+  /** The global names of one run, keyed by name: the host objects and
+    * builtins, the top level's `var`s and functions, and every name an
+    * assignment to an undeclared identifier creates (non-strict ES5).
+    * Function-local names live in [[Frame]] slots instead.
+    */
+  final class Env(val parent: Option[Env]) {
+    private val names = new java.util.HashMap[String, JsVal]
+    def declare(nm: String, v: JsVal): Unit = { names.put(nm, v); () }
+    def has(nm: String): Boolean = names.containsKey(nm)
+    def lookup(nm: String): Option[JsVal] = Option(get(nm))
+    /** The value of `nm` here or in a parent; null when it is unbound. */
+    private[js] def get(nm: String): JsVal = {
+      val v = names.get(nm)
+      if (v != null || parent.isEmpty) v else parent.get.get(nm)
+    }
+    def assign(nm: String, v: JsVal): Unit = {
+      var e: Env = this
+      while (!e.names.containsKey(nm) && e.parent.isDefined) e = e.parent.get
+      e.names.put(nm, v) // unresolved lands in the root (global) frame
+      ()
+    }
+  }
+
+  private[js] val True = JsBool(true)
+  private[js] val False = JsBool(false)
+  private[js] def bool(b: Boolean): JsBool = if (b) True else False
+
+  /** `k` as an ES5 15.4 array index — `ToString(ToUint32(k)) == k`, so
+    * `'1'` but not `'01'`, `'1.0'` or `'-1'` — or -1. Indices of ten
+    * digits or more exceed every array's length, so they read as -1 too.
+    */
+  private[js] def arrayIndex(k: String): Int = {
+    val n = k.length
+    if (n == 0 || n > 9 || (n > 1 && k.charAt(0) == '0')) return -1
+    var v = 0
+    var i = 0
+    while (i < n) {
+      val c = k.charAt(i)
+      if (c < '0' || c > '9') return -1
+      v = v * 10 + (c - '0')
+      i += 1
+    }
+    v
+  }
+
+  /** `new X(...)` over the constructible globals, which the compiler
+    * binds by name: the Error family, Object, Array, RegExp and Date.
+    */
+  private[js] def newBuiltin(nm: String, args: Seq[JsVal]): JsVal = nm match {
+    case "Object" => new JsObj
+    case "Array" =>
+      val a = new JsArr
+      args match {
+        case Seq(JsNum(d)) =>
+          // ES5 15.4.2.2: the single numeric argument is the LENGTH —
+          // non-integer or >= 2^32 is RangeError, and valid-but-huge
+          // lengths hit the same named engine bound as the plain-call
+          // form (JsOracle's Array binding): a 2^31-slot pre-allocation
+          // must not die as a raw JVM error.
+          if (!d.isWhole || d < 0 || d >= 4294967296.0)
+            throw JsThrow(errorObj("RangeError", "Invalid array length"))
+          if (d > 16777216.0)
+            throw OracleRunError(
+              s"Array length ${numToStr(d)} exceeds the engine bound " +
+                "of 16777216 elements")
+          (0 until d.toInt).foreach(_ => a.items += JsUndef)
+        case _ => args.foreach(a.items += _)
+      }
+      a
+    case "RegExp" =>
+      mkRegex(args.headOption.map(toStr).getOrElse(""),
+        args.lift(1).map(toStr).getOrElse(""))
+    case "Date" =>
+      new JsDate(args match {
+        case Seq()           => System.currentTimeMillis.toDouble
+        case Seq(s: JsStr)   => dateParse(s.s)
+        case Seq(d: JsDate)  => d.ms
+        case Seq(one)        => toNum(one)
+        case fields          => dateFromFields(fields.map(toNum))
+      })
+    case _ => errorObj(nm, args.headOption.map(toStr).getOrElse(""))
+  }
 
   // ------------------------------------------------------------ operators
-  private def binary(op: String, l: JsVal, r: JsVal): JsVal = op match {
-    case "+" =>
-      (toPrimitive(l), toPrimitive(r)) match {
-        case (JsStr(a), b) => JsStr(a + toStr(b))
-        case (a, JsStr(b)) => JsStr(toStr(a) + b)
-        case (a, b)        => JsNum(toNum(a) + toNum(b))
-      }
-    case "-" => JsNum(toNum(l) - toNum(r))
-    case "*" => JsNum(toNum(l) * toNum(r))
-    case "/" => JsNum(toNum(l) / toNum(r))
-    case "%" => JsNum(toNum(l) % toNum(r))
-    case "==" => JsBool(looseEquals(l, r))
-    case "!=" => JsBool(!looseEquals(l, r))
-    case "===" => JsBool(strictEquals(l, r))
-    case "!==" => JsBool(!strictEquals(l, r))
-    case "<" | ">" | "<=" | ">=" =>
-      val res = (toPrimitive(l), toPrimitive(r)) match {
-        case (JsStr(a), JsStr(b)) =>
-          val c = a.compareTo(b)
-          op match {
-            case "<" => c < 0; case ">" => c > 0
-            case "<=" => c <= 0; case _ => c >= 0
-          }
-        case (a, b) =>
-          val (x, y) = (toNum(a), toNum(b))
-          if (x.isNaN || y.isNaN) false
-          else op match {
-            case "<" => x < y; case ">" => x > y
-            case "<=" => x <= y; case _ => x >= y
-          }
-      }
-      JsBool(res)
-    case "&" => JsNum((toInt32(l) & toInt32(r)).toDouble)
-    case "|" => JsNum((toInt32(l) | toInt32(r)).toDouble)
-    case "^" => JsNum((toInt32(l) ^ toInt32(r)).toDouble)
-    case "<<" => JsNum((toInt32(l) << (toInt32(r) & 31)).toDouble)
-    case ">>" => JsNum((toInt32(l) >> (toInt32(r) & 31)).toDouble)
-    case ">>>" =>
+  /** The function of binary operator `op`, bound once at compile time. */
+  private[js] def binaryOp(op: String): (JsVal, JsVal) => JsVal = op match {
+    case "+"   => add
+    case "-"   => (l, r) => JsNum(toNum(l) - toNum(r))
+    case "*"   => (l, r) => JsNum(toNum(l) * toNum(r))
+    case "/"   => (l, r) => JsNum(toNum(l) / toNum(r))
+    case "%"   => (l, r) => JsNum(toNum(l) % toNum(r))
+    case "=="  => (l, r) => bool(looseEquals(l, r))
+    case "!="  => (l, r) => bool(!looseEquals(l, r))
+    case "===" => (l, r) => bool(strictEquals(l, r))
+    case "!==" => (l, r) => bool(!strictEquals(l, r))
+    case "<"   => (l, r) => bool(compare(l, r) == -1)
+    case ">"   => (l, r) => bool(compare(l, r) == 1)
+    case "<="  => (l, r) => { val c = compare(l, r); bool(c == -1 || c == 0) }
+    case ">="  => (l, r) => { val c = compare(l, r); bool(c == 0 || c == 1) }
+    case "&"   => (l, r) => JsNum((toInt32(l) & toInt32(r)).toDouble)
+    case "|"   => (l, r) => JsNum((toInt32(l) | toInt32(r)).toDouble)
+    case "^"   => (l, r) => JsNum((toInt32(l) ^ toInt32(r)).toDouble)
+    case "<<"  => (l, r) => JsNum((toInt32(l) << (toInt32(r) & 31)).toDouble)
+    case ">>"  => (l, r) => JsNum((toInt32(l) >> (toInt32(r) & 31)).toDouble)
+    case ">>>" => (l, r) =>
       JsNum(((toInt32(l).toLong & 0xFFFFFFFFL) >>> (toInt32(r) & 31)).toDouble)
-    case "in" =>
-      val key = toStr(l)
-      r match {
-        case o: JsObj => JsBool(ownOrInherited(o, key).isDefined)
-        case a: JsArr =>
-          val d = toNum(l)
-          JsBool(key == "length" ||
-            (d.isWhole && d >= 0 && d < a.items.length))
-        case h: JsHost => JsBool(h.has(key))
-        case _ =>
-          throw OracleRunError(
-            s"TypeError: cannot use 'in' operator to search for '$key' in ${typeOf(r)}")
+    case "in"  => in
+    case "instanceof" => instanceOf
+    case other => throw new IllegalStateException(s"unknown binary operator $other")
+  }
+
+  private def add(l: JsVal, r: JsVal): JsVal = l match {
+    case JsNum(a) if r.isInstanceOf[JsNum] => JsNum(a + r.asInstanceOf[JsNum].v)
+    case _ =>
+      val pl = toPrimitive(l)
+      val pr = toPrimitive(r)
+      pl match {
+        case JsStr(a) => JsStr(a + toStr(pr))
+        case _ => pr match {
+          case JsStr(b) => JsStr(toStr(pl) + b)
+          case _        => JsNum(toNum(pl) + toNum(pr))
+        }
       }
-    case "instanceof" =>
-      r match {
-        // user constructor: walk the instance's [[Prototype]] chain for
-        // identity with F.prototype (never auto-create it here — a
-        // function whose prototype was never touched has no instances)
-        case f: JsFunc =>
-          var cur = l match { case o: JsObj => o.proto; case _ => null }
-          var hit = false
-          while (cur != null && !hit) {
-            hit = f.prototypeObj != null && (cur eq f.prototypeObj)
-            cur = cur.proto
-          }
-          return JsBool(hit)
-        case _ => ()
+  }
+
+  /** ES5 11.8.5 relational comparison: -1, 0 or 1, or 2 when a NaN leaves
+    * the operands unordered. Two strings compare by code units.
+    */
+  private def compare(l: JsVal, r: JsVal): Int = {
+    val pl = toPrimitive(l)
+    val pr = toPrimitive(r)
+    if (pl.isInstanceOf[JsStr] && pr.isInstanceOf[JsStr])
+      Integer.signum(pl.asInstanceOf[JsStr].s.compareTo(pr.asInstanceOf[JsStr].s))
+    else {
+      val x = toNum(pl)
+      val y = toNum(pr)
+      if (x.isNaN || y.isNaN) 2 else if (x < y) -1 else if (x > y) 1 else 0
+    }
+  }
+
+  private def in(l: JsVal, r: JsVal): JsVal = {
+    val key = toStr(l)
+    r match {
+      case o: JsObj => bool(ownOrInherited(o, key).isDefined)
+      case a: JsArr =>
+        val d = toNum(l)
+        bool(key == "length" || (d.isWhole && d >= 0 && d < a.items.length))
+      case h: JsHost => bool(h.has(key))
+      case _ =>
+        throw OracleRunError(
+          s"TypeError: cannot use 'in' operator to search for '$key' in ${typeOf(r)}")
+    }
+  }
+
+  private def instanceOf(l: JsVal, r: JsVal): JsVal = r match {
+    // user constructor: walk the instance's [[Prototype]] chain for
+    // identity with F.prototype (never auto-create it here — a function
+    // whose prototype was never touched has no instances)
+    case f: JsFunc =>
+      var cur = l match { case o: JsObj => o.proto; case _ => null }
+      var hit = false
+      while (cur != null && !hit) {
+        hit = f.prototypeObj != null && (cur eq f.prototypeObj)
+        cur = cur.proto
       }
+      bool(hit)
+    case _ =>
       val ctor = r match {
         case n: JsNative => n.name
         case h: JsHost   => h.hostName
         case _ => throw OracleRunError(
           "TypeError: right-hand side of 'instanceof' is not callable")
       }
-      JsBool(ctor match {
+      bool(ctor match {
         case "Array"    => l.isInstanceOf[JsArr]
         case "Date"     => l.isInstanceOf[JsDate]
         case "Object"   => l.isInstanceOf[JsObj] || l.isInstanceOf[JsArr] ||
@@ -1190,7 +958,6 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
         }
         case _ => false
       })
-    case other => throw OracleRunError(s"unsupported operator $other")
   }
 
   private def looseEquals(l: JsVal, r: JsVal): Boolean = (l, r) match {
@@ -1211,7 +978,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
     case _ => strictEquals(l, r)
   }
 
-  private def strictEquals(l: JsVal, r: JsVal): Boolean = (l, r) match {
+  private[js] def strictEquals(l: JsVal, r: JsVal): Boolean = (l, r) match {
     case (JsNum(a), JsNum(b))   => a == b // NaN != NaN, +0 == -0, like JS
     case (JsStr(a), JsStr(b))   => a == b
     case (JsBool(a), JsBool(b)) => a == b
@@ -1219,24 +986,16 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
     case (JsUndef, JsUndef)     => true
     case (a: AnyRef, b: AnyRef) => a eq b
   }
-}
 
-object JsInterp {
-
-  /** ES5 var scope: one frame per function call, assignment walks the
-    * chain and falls through to the GLOBAL frame when unresolved.
-    */
-  final class Env(val parent: Option[Env]) {
-    private val slots = mutable.HashMap.empty[String, JsVal]
-    def declare(nm: String, v: JsVal): Unit = slots(nm) = v
-    def has(nm: String): Boolean = slots.contains(nm)
-    def lookup(nm: String): Option[JsVal] =
-      slots.get(nm).orElse(parent.flatMap(_.lookup(nm)))
-    def assign(nm: String, v: JsVal): Unit = {
-      var e: Env = this
-      while (!e.slots.contains(nm) && e.parent.isDefined) e = e.parent.get
-      e.slots(nm) = v // unresolved lands in the root (global) frame
+  /** Own field or one inherited through the [[Prototype]] chain. */
+  private def ownOrInherited(o: JsObj, nm: String): Option[JsVal] = {
+    var cur = o
+    while (cur != null) {
+      val hit = cur.fields.get(nm)
+      if (hit.isDefined) return hit
+      cur = cur.proto
     }
+    None
   }
 
   def truthy(v: JsVal): Boolean = v match {
@@ -1272,6 +1031,7 @@ object JsInterp {
     if (d.isNaN) "NaN"
     else if (d == Double.PositiveInfinity) "Infinity"
     else if (d == Double.NegativeInfinity) "-Infinity"
+    else if (d.isWhole && math.abs(d) < 9.0e18) d.toLong.toString // exact
     else if (d.isWhole && math.abs(d) < 1e21)
       BigDecimal(d).toBigInt.toString
     else d.toString

@@ -116,6 +116,10 @@ object JsLang {
     "^=", "<<", ">>", "{", "}", "(", ")", "[", "]", ";", ",", "<", ">",
     "+", "-", "*", "/", "%", "=", "!", "?", ":", ".", "&", "|", "^", "~")
 
+  /** [[puncts]] by first character, still longest first. */
+  private val punctsByFirst: Array[Seq[String]] =
+    Array.tabulate(128)(c => puncts.filter(_.head == c))
+
   /** Token kinds after which a `/` is division, not a regex literal —
     * the previous token ended a VALUE (ident, literal, `)`, `]`, or a
     * postfix update). Everywhere else (operators, `(`, `,`, `return`,
@@ -222,7 +226,8 @@ object JsLang {
         val word = src.substring(start, i)
         emit(if (keywords(word)) word else "ident", word)
       } else {
-        puncts.find(p => src.startsWith(p, i)) match {
+        val candidates = if (c < 128) punctsByFirst(c) else Nil
+        candidates.find(p => src.startsWith(p, i)) match {
           case Some(p) => i += p.length; emit(p, p)
           case None    => err(s"unexpected character '$c'")
         }

@@ -1,6 +1,7 @@
 package graft.oracle.js
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.json4s._
 
@@ -23,11 +24,15 @@ import JsLang._
   * function whose name starts with "merge" and that takes exactly one
   * argument is the distributed-merge hook (master/ast_raccoon.go:72-87).
   *
-  * This is the same contract over [[JsInterp]]: per run, a fresh global
-  * environment gets the host objects, the program re-executes (top-level
-  * state therefore resets per run — the reference clones the compile-time
-  * VM per run, which resets it the same way), and the entry call's result
-  * is marshaled with Go's JSON conventions.
+  * This is the same contract over [[JsInterp]]. The program compiles
+  * once per oracle ([[JsCompiler]]: scopes resolved to frame slots, ES5
+  * function-scoped `var`s), and every run, merger call and partition run
+  * executes that one immutable program over fresh frames: a fresh global
+  * environment gets the host objects, the top level runs again (top-level
+  * state therefore resets per run — the reference clones the
+  * compile-time VM per run, which resets it the same way; a top level of
+  * function declarations only just binds them), and the entry call's
+  * result is marshaled with Go's JSON conventions.
   *
   * A record reaches JS the way record.go wraps it: one small wrapper
   * object over the stored [[SumRecord]], with no copy of its data. The
@@ -67,8 +72,14 @@ object JsOracle {
     }
   }
 
+  /** A validated oracle. `program` is compiled from the AST once, where
+    * the oracle is compiled, and again in each Spark task that
+    * deserializes a copy ([[runDistributed]] ships the AST).
+    */
   private final case class Compiled(entry: String, params: Seq[String],
-      merger: Option[MergerDecl], program: Seq[Stmt])
+      merger: Option[MergerDecl], ast: Seq[Stmt]) {
+    @transient lazy val program: JsProgram = JsCompiler.compile(ast)
+  }
 
   /** The `merge*` hook's name and its single declared parameter — the
     * reference sets the param as a VM GLOBAL before re-running the whole
@@ -77,34 +88,35 @@ object JsOracle {
     */
   private final case class MergerDecl(name: String, param: String)
 
-  /** Parse + validate, mirroring the reference compiler's checks and its
-    * error message for code with no function declaration
+  private def parse(code: String): Either[String, Seq[Stmt]] =
+    try Right(JsLang.parse(code))
+    catch {
+      case ParseError(m)         => Left(m)
+      case _: StackOverflowError => Left(StackOverflow)
+    }
+
+  /** Validate a parsed program, mirroring the reference compiler's checks
+    * and its error message for code with no function declaration
     * (node/service/compiler_test.go:15-19).
     */
-  private def compileSource(code: String): Either[String, Compiled] = {
-    val program =
-      try JsLang.parse(code)
-      catch {
-        case ParseError(m)         => return Left(m)
-        case _: StackOverflowError => return Left(StackOverflow)
-      }
+  private def compileSource(program: Seq[Stmt]): Either[String, Compiled] = {
     val decls = program.collect { case f: FuncDecl => f }
     decls.headOption match {
       case None => Left("expected a function declaration")
       case Some(entry) =>
-        // Definition-time run: no host globals, exactly like the
-        // reference's compile-time vm.Run (records/ctx are set per run) —
-        // `function imok(){} imnot = not_defined + 1;` rejects HERE.
-        try {
-          new JsInterp().exec(program, baseEnv())
-        } catch {
-          case JsFailure(m) => return Left(m)
-          case e: Exception => return Left(e.getMessage)
-        }
         val merger = decls.drop(1)
           .find(f => f.name.startsWith("merge") && f.params.size == 1)
           .map(f => MergerDecl(f.name, f.params.head))
-        Right(Compiled(entry.name, entry.params, merger, program))
+        val c = Compiled(entry.name, entry.params, merger, program)
+        // Definition-time run: no host globals, exactly like the
+        // reference's compile-time vm.Run (records/ctx are set per run) —
+        // `function imok(){} imnot = not_defined + 1;` rejects HERE.
+        try c.program.run(new JsInterp(), baseEnv())
+        catch {
+          case JsFailure(m) => return Left(m)
+          case e: Exception => return Left(e.getMessage)
+        }
+        Right(c)
     }
   }
 
@@ -113,7 +125,12 @@ object JsOracle {
     * merger (if declared) receives the array of partial results.
     */
   def compile(name: String, code: String): Either[String, Oracle] =
-    compileSource(code).map { c =>
+    parse(code).flatMap(compile(name, code, _))
+
+  /** [[compile]] over the already parsed `program` of `code`. */
+  def compile(name: String, code: String,
+      program: Seq[Stmt]): Either[String, Oracle] =
+    compileSource(program).map { c =>
       Oracle(
         id = 0,
         name = name,
@@ -140,7 +157,7 @@ object JsOracle {
     */
   private def callEntry(interp: JsInterp, env: Env, c: Compiled,
       args: Seq[JValue]): JsVal = {
-    interp.exec(c.program, env)
+    c.program.run(interp, env)
     c.params.zipWithIndex.foreach { case (p, i) =>
       env.declare(p, JsInterp.fromJson(args.lift(i).getOrElse(JNull)))
     }
@@ -166,7 +183,7 @@ object JsOracle {
       env.declare("ctx", ctxHost(ctx))
       val result =
         try {
-          interp.exec(c.program, env)
+          c.program.run(interp, env)
           val fn = env.lookup(m.name).getOrElse(
             throw OracleRunError(s"ReferenceError: '${m.name}' is not defined"))
           interp.callFunction(fn,
@@ -197,7 +214,7 @@ object JsOracle {
     */
   def runDistributed(id: Long, code: String, store: RecordStore,
       args: Seq[JValue]): Either[String, JValue] =
-    compileSource(code).flatMap { c =>
+    parse(code).flatMap(compileSource).flatMap { c =>
       val argVals: Seq[JValue] =
         c.params.indices.map(i => args.lift(i).getOrElse(JNull))
       val spark = store.records.sparkSession
@@ -324,11 +341,13 @@ object JsOracle {
       findFn: Long => Option[SumRecord],
       allFn: () => Seq[SumRecord],
       eachFn: Option[(SumRecord => Unit) => Unit] = None): JsHost = {
-    def wrapSeq(recs: Seq[SumRecord]): JsArr = {
-      interp.grantSteps(StepsPerRecord * recs.length)
+    /** The wrapped records of the view that `keep` accepts. */
+    def wrapAll(keep: SumRecord => Boolean): JsArr = {
+      val recs = allFn()
       val a = new JsArr
       a.items.sizeHint(recs.length)
-      recs.foreach(r => a.items += new RecordHost(r))
+      recs.foreach(r => if (keep(r)) a.items += new RecordHost(r))
+      interp.grantSteps(StepsPerRecord * a.items.length)
       a
     }
     new JsHost("Records", Map(
@@ -350,13 +369,14 @@ object JsOracle {
         val id = toNum(args.headOption.getOrElse(JsNum(0))).toLong
         new RecordHost(findFn(id).orNull)
       },
-      "All" -> { _ => wrapSeq(allFn()) },
+      "All" -> { _ => wrapAll(_ => true) },
       "AllBut" -> { args =>
-        val excludeId = args.headOption match {
-          case Some(r: RecordHost) => Some(if (r.rec == null) 0L else r.rec.id)
-          case _                   => None
+        args.headOption match {
+          case Some(r: RecordHost) =>
+            val excluded = if (r.rec == null) 0L else r.rec.id
+            wrapAll(_.id != excluded)
+          case _ => wrapAll(_ => true)
         }
-        wrapSeq(allFn().filterNot(r => excludeId.contains(r.id)))
       },
       "CreateRecord" -> { args =>
         // wrapper.Records.CreateRecord: wraps raw data WITHOUT storing it
@@ -413,9 +433,9 @@ object JsOracle {
       case "Size" => Some(JsNum(if (rec == null) 0.0 else rec.data.length.toDouble))
       case _ => None
     }
-    override def hasMethod(nm: String): Boolean = RecordMethods.contains(nm)
+    override def hasMethod(nm: String): Boolean = RecordMethods.containsKey(nm)
     override def invoke(nm: String, args: Seq[JsVal]): JsVal =
-      RecordMethods(nm)(this, args)
+      RecordMethods.get(nm)(this, args)
   }
 
   private def own(r: RecordHost): Array[Float] =
@@ -450,9 +470,11 @@ object JsOracle {
     * record.go's over [[VectorMath]]'s float-range kernels: float64
     * accumulation, the cosine zero-magnitude guard, the m11/(m11+m10)
     * jaccard with the (a+b)==1 mismatch rule. The unranged forms run to
-    * `Int.MaxValue`, which the kernels clip to each array's length.
+    * `Int.MaxValue`, which the kernels clip to each array's length. A
+    * Java map, as every record method call looks its name up twice.
     */
-  private val RecordMethods: Map[String, (RecordHost, Seq[JsVal]) => JsVal] = Map(
+  private val RecordMethods = new java.util.HashMap[String, (RecordHost, Seq[JsVal]) => JsVal](
+    Map[String, (RecordHost, Seq[JsVal]) => JsVal](
     "IsNull" -> { (r, _) => JsBool(r.rec == null) },
     "Is" -> { (r, args) =>
       JsBool(r.rec != null && (args.headOption match {
@@ -507,7 +529,7 @@ object JsOracle {
     },
     "JaccardRange" -> { (r, args) =>
       JsNum(VectorMath.jaccard(own(r), dataOf(args.head), rangeStart(args), argNum(args, 2)))
-    })
+    }).asJava)
 
   // ------------------------------------------------------------- globals
   /** The globals every VM gets: Math, and the handful of ES5 global

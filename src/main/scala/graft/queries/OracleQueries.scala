@@ -19,7 +19,7 @@ import graft.store.RecordStore
   *
   * The corpus is bounded at [[CorpusCap]] ids in BOTH engines (the
   * e-family's certification pattern): gate-SF outputs are identical, and
-  * the tree-walking interpreter arm stays constant work at any SF — the
+  * the JS interpreter arm stays constant work at any SF — the
   * scale path for these queries is the SQL/Catalyst form (v02 etc.), the
   * JS arm exists to certify engine-vs-engine equivalence.
   *

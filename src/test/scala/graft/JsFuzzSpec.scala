@@ -196,13 +196,18 @@ class JsFuzzSpec extends SparkSpec {
 
   // ------------------------------------------------------------ harness
 
-  private def checkProgram(src: String, seed: Long): Unit = {
+  /** Run one program through the contract above and return its exact
+    * outcome, one line of the recorded corpus: `compile` + the createJs
+    * rejection, `run` + the run error, or `json` + the result.
+    */
+  private def checkProgram(src: String, seed: Long): String = {
     val reg = new OracleRegistry
     try {
       reg.createJs("fz", src) match {
         case Left(msg) =>
           assert(msg != null && msg.trim.nonEmpty,
             s"EMPTY compile rejection (seed=$seed) for:\n$src")
+          s"compile\t${escape(msg)}"
         case Right(o) =>
           reg.run(o.id, store, Seq("3", "\"fuzz\"")) match {
             case Left(msg) =>
@@ -210,8 +215,10 @@ class JsFuzzSpec extends SparkSpec {
                 s"EMPTY run error (seed=$seed) for:\n$src")
               assert(!msg.startsWith("got panic of type"),
                 s"interpreter defect leaked as panic (seed=$seed): $msg\nfor:\n$src")
+              s"run\t${escape(msg)}"
             case Right(json) =>
               assert(json != null && json.nonEmpty)
+              s"json\t${escape(json)}"
           }
       }
     } catch {
@@ -222,18 +229,50 @@ class JsFuzzSpec extends SparkSpec {
     }
   }
 
+  /** One-line form of an outcome: backslash, tab, CR and newline escaped. */
+  private def escape(s: String): String =
+    s.replace("\\", "\\\\").replace("\t", "\\t")
+      .replace("\r", "\\r").replace("\n", "\\n")
+
+  /** The outcome of every seed below [[RecordedSeeds]], recorded from the
+    * AST-walking interpreter that preceded the compiled engine (`none`
+    * marks a seed the generator yields no program for). A difference from
+    * these is an engine defect, unless an ES5 fix explains it.
+    */
+  private val RecordedSeeds = 1200
+
+  private lazy val recorded: Map[Long, String] = {
+    val in = getClass.getResourceAsStream("/js-fuzz-outcomes.tsv")
+    assert(in != null, "missing test resource js-fuzz-outcomes.tsv")
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .map { line =>
+        val tab = line.indexOf('\t')
+        line.substring(0, tab).toLong -> line.substring(tab + 1)
+      }.toMap
+    finally in.close()
+  }
+
   test("1200 generated ES5 programs: run, JS-throw, or named rejection — never a raw exception") {
     val params = Gen.Parameters.default.withSize(20)
     // GRAFT_FUZZ_N widens the sweep for exploratory bursts (dev only —
-    // suite time stays bounded at the default).
+    // suite time stays bounded at the default). Seeds past the recorded
+    // corpus are checked against the contract only.
     val n = sys.env.get("GRAFT_FUZZ_N").flatMap(_.toIntOption).getOrElse(1200)
     var generated = 0
+    val mismatches = Seq.newBuilder[String]
     (0 until n).foreach { i =>
-      program.apply(params, Seed(i.toLong)).foreach { src =>
-        generated += 1
-        checkProgram(src, i.toLong)
+      val got = program.apply(params, Seed(i.toLong)) match {
+        case Some(src) =>
+          generated += 1
+          checkProgram(src, i.toLong)
+        case None => "none\t"
       }
+      if (i < RecordedSeeds && !recorded.get(i.toLong).contains(got))
+        mismatches += s"seed $i: recorded ${recorded.getOrElse(i.toLong, "<absent>")}, got $got"
     }
+    val diff = mismatches.result()
+    assert(diff.isEmpty, s"${diff.size} outcomes differ from the corpus:\n" +
+      diff.take(20).mkString("\n"))
     // Gen.apply can return None on retry exhaustion; the grammar has no
     // filters so in practice every seed yields a program — keep a floor
     // so a future generator edit cannot silently hollow the suite out.

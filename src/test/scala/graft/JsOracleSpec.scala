@@ -1047,4 +1047,93 @@ function mergeSomethingButThrowup(results) { throw "apple cider"; }""")
     granted.grantSteps(1000000L)
     granted.exec(JsLang.parse(prog), new JsInterp.Env(None)) // completes
   }
+
+  test("step accounting: each program completes at its pinned budget, not one step below") {
+    import graft.oracle.js.{JsInterp, JsLang}
+    import graft.oracle.OracleBudgetError
+    // One step per statement, per expression node, per function call and
+    // per native or host method call: the budget trips at the same step
+    // whatever the engine's internal form, so StepsPerRecord keeps its
+    // meaning. Each count is the smallest budget the program completes in.
+    val pinned = Seq(
+      810L -> "var t = 0; for (var i = 0; i < 50; i++) { t += i * 2; t -= 1; } t;",
+      2124L -> ("function fib(n) { return n < 2 ? n : fib(n - 1) + fib(n - 2); } " +
+        "var r = fib(10);"),
+      79L -> ("var a = [1, 2, 3, 4, 5]; " +
+        "var b = a.map(function (x) { return x * x; }); var s = 0; " +
+        "b.forEach(function (v, i) { s += v + i; });"),
+      115L -> """var out = 0;
+        outer: for (var i = 0; i < 6; i++) {
+          try {
+            switch (i % 3) {
+              case 0: out += 1; break;
+              case 1: out += 10; if (i > 3) break outer; continue;
+              default: throw i;
+            }
+          } catch (e) { out += e; } finally { out++; }
+        }""")
+    pinned.foreach { case (n, prog) =>
+      new JsInterp(maxSteps = n).exec(JsLang.parse(prog), new JsInterp.Env(None))
+      val e = intercept[OracleBudgetError] {
+        new JsInterp(maxSteps = n - 1).exec(JsLang.parse(prog), new JsInterp.Env(None))
+      }
+      assert(e.msg === s"oracle exceeded the ${n - 1}-step budget")
+    }
+  }
+
+  test("var is ES5 function-scoped: hoisted to the function, never reset by a bare var") {
+    // each comment gives the value before var hoisting
+    // a var shadows the outer x from the function's start ("number")
+    assert(runJs("var x = 1; function f() { var y = x; var x = 2; return typeof y; }") ===
+      Right("\"undefined\""))
+    // a repeated bare var keeps the value (null: reset to undefined)
+    assert(runJs("function f() { var a = 1; var a; return a; }") === Right("1"))
+    // a bare var in a loop body keeps the last iteration's value (NaN)
+    assert(runJs("""function f() {
+      var n = 0;
+      for (var i = 0; i < 3; i++) { var t; if (i == 0) t = 5; n += t; }
+      return n;
+    }""") === Right("15"))
+    // an assignment before its var is local too ("number": a leaked global)
+    assert(runJs("function f() { g(); return typeof x; } function g() { x = 5; var x; }") ===
+      Right("\"undefined\""))
+    // a var in a catch block belongs to the function ("undefined")
+    assert(runJs("""function f() {
+      try { throw 1; } catch (e) { var inner = 2; }
+      return typeof inner;
+    }""") === Right("\"number\""))
+    // the catch parameter itself stays scoped to its block
+    assert(runJs("""function f() {
+      var e = 'outer';
+      try { throw 'inner'; } catch (e) { var e = 'assigned'; }
+      return e;
+    }""") === Right("\"outer\""))
+  }
+
+  test("an array-index string reads the element of an array or string, on both run paths") {
+    val code = """function f() {
+      var a = [10, 20];
+      var t = 0;
+      for (var k in a) t += a[k];
+      var fs = [function () { return 7; }];
+      return ['' + [a['1'], 'abc'['1']], t, fs['0'](),
+        [a['01'], a['1.0'], a['-1'], a['2'], 'abc'['01'], 'abc'['3']]];
+    }"""
+    val one = """"20,b",30,7,[null,null,null,null,null,null]"""
+    assert(runJs(code) === Right(s"[$one]"))
+    val reg = new OracleRegistry
+    val o = reg.createJs("idx", code).fold(m => fail(m), identity)
+    val shards = store.repartitioned(2)
+    assert(reg.runDistributed(o.id, shards, Nil) === Right(s"[$one,$one]"))
+  }
+
+  test("a top-level return or stray break is a named rejection at create") {
+    val reg = new OracleRegistry
+    assert(reg.createJs("ret", "function f() {} return 1;") ===
+      Left("SyntaxError: Illegal return statement"))
+    assert(reg.createJs("brk", "function f() {} break;") ===
+      Left("SyntaxError: undefined label ''"))
+    assert(reg.createJs("lbl", "function f() {} l: { break m; }") ===
+      Left("SyntaxError: undefined label 'm'"))
+  }
 }

@@ -230,4 +230,32 @@ class OracleSpec extends SparkSpec {
     val (js, jsJobs) = countJobs(reg.run(ids("findSimilarJs"), store, Seq("42", "0.5")))
     assert(js.isRight && jsJobs === 0, "stored-JS findSimilar")
   }
+
+  test("one compiled JS oracle serves 4 concurrent runs, each over a fresh top level") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val reg = new OracleRegistry
+    val o = reg.createJs("counted", """var calls = 0;
+      function entry(x) {
+        var t = 0;
+        for (var i = 0; i < 200; i++) t += x * i;
+        return [x, t, ++calls];
+      }""").fold(m => fail(m), identity)
+    val store = store3
+    val args = (1 to 4).map(t => (0 until 25).map(i => t * 100 + i))
+    def runAll(xs: Seq[Int]) = xs.map(x => reg.run(o.id, store, Seq(x.toString)))
+    val sequential = args.map(runAll)
+    // `calls` is 1 in every result: each run starts from the top level
+    sequential.zip(args).foreach { case (rs, xs) =>
+      assert(rs === xs.map(x => Right(s"[$x,${x * 19900},1]")))
+    }
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val running = args.map(xs => pool.submit(new Callable[Seq[Either[String, String]]] {
+        def call(): Seq[Either[String, String]] = { start.await(); runAll(xs) }
+      }))
+      start.countDown()
+      assert(running.map(_.get(120, TimeUnit.SECONDS)) === sequential)
+    } finally pool.shutdownNow()
+  }
 }
