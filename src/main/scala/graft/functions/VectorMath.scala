@@ -10,12 +10,16 @@ package graft.functions
   * arrays and widen each element to float64 inside the loop, so a scan
   * over stored records allocates nothing; [[accumulate]] sums records
   * into one float64 array in place.
+  *
+  * A cosine whose norms each run over a whole vector splits into
+  * [[dot]], [[squaredNorm]] per side and [[cosineOf]]: each norm adds the
+  * same terms in the same order as the one-pass [[cosine]], so a norm
+  * cached per record (`SumRecord.squaredNorm`) gives the same bits.
   */
 object VectorMath {
 
   /** Cosine over the common prefix of two float64 vectors: dot and both
-    * squared norms in one pass, 0.0 (not NaN) when either magnitude is
-    * zero (node/wrapper/record.go:97-103).
+    * squared norms in one pass, then [[cosineOf]].
     */
   def cosine(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
@@ -31,8 +35,7 @@ object VectorMath {
       nb += y * y
       i += 1
     }
-    val den = math.sqrt(na) * math.sqrt(nb)
-    if (den == 0.0) 0.0 else dot / den
+    cosineOf(dot, na, nb)
   }
 
   /** Dot product over `[start, end)` clipped to both lengths, summed in
@@ -49,9 +52,9 @@ object VectorMath {
   /** Cosine over `[start, end)` (node/wrapper/record.go:97-103): the dot
     * runs over the range clipped to both lengths, each squared norm over
     * the range clipped to its own vector's length, so a longer vector's
-    * tail still counts in its magnitude; 0.0 when either magnitude is zero.
-    * With `end` at the shorter length this is [[cosine]] on the widened
-    * arrays.
+    * tail still counts in its magnitude; [[cosineOf]] guards a zero
+    * magnitude. With `end` at the shorter length this is [[cosine]] on the
+    * widened arrays.
     */
   def cosine(a: Array[Float], b: Array[Float], start: Int, end: Int): Double = {
     val hi = math.min(end, math.min(a.length, b.length))
@@ -73,6 +76,23 @@ object VectorMath {
     j = i
     val bEnd = math.min(end, b.length)
     while (j < bEnd) { val y = b(j).toDouble; nb += y * y; j += 1 }
+    cosineOf(dot, na, nb)
+  }
+
+  /** Sum of squares in index order: the `na` that [[cosine]] accumulates
+    * for `a` over `[0, a.length)`, to the bit.
+    */
+  def squaredNorm(a: Array[Float]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { val x = a(i).toDouble; s += x * x; i += 1 }
+    s
+  }
+
+  /** Cosine from a dot product and both squared norms, 0.0 (not NaN) when
+    * either magnitude is zero (node/wrapper/record.go:97-103).
+    */
+  def cosineOf(dot: Double, na: Double, nb: Double): Double = {
     val den = math.sqrt(na) * math.sqrt(nb)
     if (den == 0.0) 0.0 else dot / den
   }

@@ -2,6 +2,8 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
+import graft.functions.VectorMath
+
 /** The reference's one persistent data entity (proto/sum.proto:51-56):
   * a dense float32 vector with an optional n-d shape and a flat
   * string-to-string metadata map.
@@ -17,6 +19,14 @@ final case class SumRecord(
     meta: Map[String, String]) {
 
   def size: Int = data.length
+
+  /** `data`'s squared norm ([[VectorMath.squaredNorm]]),
+    * computed on first use and kept for this object's life. A record is
+    * never mutated in place, so a write makes a new object and the norm
+    * cannot go stale; a store write keeps the unchanged rows' objects and
+    * with them their norms. Not a field of the schema or the encoder.
+    */
+  @transient lazy val squaredNorm: Double = VectorMath.squaredNorm(data)
 
   /** Metadata value by key, "" when absent (node/wrapper/record.go:64-66). */
   def metaValue(key: String): String = meta.getOrElse(key, "")

@@ -538,6 +538,7 @@ object JsCompiler {
         case _             => new Const(bool(true))
       }
       case "typeof" => inner match {
+        case Ident("NaN" | "Infinity") => new Const(JsStr("number"))
         case Ident(nm) => new TypeofNameE(resolve(nm, sc))
         case other     => new TypeofE(expr(other, sc))
       }

@@ -211,7 +211,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
     case re: JsRegex if nm == "lastIndex" =>
       re.lastIndex = math.max(0, toNum(v).toInt)
     case a: JsArr if nm == "length" =>
-      val n = toNum(v).toInt
+      val n = arrayLength(toNum(v))
       if (n < a.items.length) a.items.remove(n, a.items.length - n)
       else while (a.items.length < n) a.items += JsUndef
     case other =>
@@ -219,10 +219,20 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
         s"TypeError: cannot set property '$nm' of ${typeOf(other)}")
   }
 
+  /** `obj[idx] = v`. On an array, an array index (ES5 15.4) writes the
+    * element, growing the array within [[checkArrayLength]]'s bound; any
+    * other key is a named write ([[setMember]]).
+    */
   private[js] def setIndex(obj: JsVal, idx: JsVal, v: JsVal): Unit = obj match {
     case a: JsArr =>
-      val i = toNum(idx).toInt
-      if (i >= 0) {
+      val key = idx match {
+        case JsNum(d) if d.isWhole && d >= 0 && d < 4294967295.0 => d.toLong
+        case _ => arrayIndex(toStr(idx))
+      }
+      if (key < 0) setMember(a, toStr(idx), v)
+      else {
+        checkArrayLength(key + 1.0)
+        val i = key.toInt
         while (a.items.length <= i) a.items += JsUndef
         a.items(i) = v
       }
@@ -242,12 +252,12 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
       ownOrInherited(o, nm).orElse(protoMethod(o, nm)).getOrElse(JsUndef)
     case a: JsArr =>
       val i = arrayIndex(nm)
-      if (i >= 0) { if (i < a.items.length) a.items(i) else JsUndef }
+      if (i >= 0) { if (i < a.items.length) a.items(i.toInt) else JsUndef }
       else if (nm == "length") JsNum(a.items.length)
       else arrayMethod(a, nm).orElse(protoMethod(a, nm)).getOrElse(JsUndef)
     case s: JsStr =>
       val i = arrayIndex(nm)
-      if (i >= 0) { if (i < s.s.length) JsStr(s.s.charAt(i).toString) else JsUndef }
+      if (i >= 0) { if (i < s.s.length) JsStr(s.s.charAt(i.toInt).toString) else JsUndef }
       else if (nm == "length") JsNum(s.s.length)
       else stringMethod(s.s, nm).orElse(protoMethod(s, nm)).getOrElse(JsUndef)
     case h: JsHost =>
@@ -375,9 +385,9 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
           JsBool(self match {
             case o: JsObj => o.fields.contains(key)
             case a: JsArr => key == "length" ||
-              key.toIntOption.exists(i => i >= 0 && i < a.items.length)
+              isIndexBelow(key, a.items.length)
             case s: JsStr => key == "length" ||
-              key.toIntOption.exists(i => i >= 0 && i < s.s.length)
+              isIndexBelow(key, s.s.length)
             case _ => false
           })
         }))
@@ -386,8 +396,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
           val key = toStr(args.headOption.getOrElse(JsUndef))
           JsBool(self match {
             case o: JsObj => o.fields.contains(key)
-            case a: JsArr =>
-              key.toIntOption.exists(i => i >= 0 && i < a.items.length)
+            case a: JsArr => isIndexBelow(key, a.items.length)
             case _ => false
           })
         }))
@@ -795,14 +804,13 @@ object JsInterp {
   private[js] val False = JsBool(false)
   private[js] def bool(b: Boolean): JsBool = if (b) True else False
 
-  /** `k` as an ES5 15.4 array index — `ToString(ToUint32(k)) == k`, so
-    * `'1'` but not `'01'`, `'1.0'` or `'-1'` — or -1. Indices of ten
-    * digits or more exceed every array's length, so they read as -1 too.
+  /** `k` as an ES5 15.4 array index — `ToString(ToUint32(k)) == k` and
+    * below 2^32 - 1, so `'1'` but not `'01'`, `'1.0'` or `'-1'` — or -1.
     */
-  private[js] def arrayIndex(k: String): Int = {
+  private[js] def arrayIndex(k: String): Long = {
     val n = k.length
-    if (n == 0 || n > 9 || (n > 1 && k.charAt(0) == '0')) return -1
-    var v = 0
+    if (n == 0 || n > 10 || (n > 1 && k.charAt(0) == '0')) return -1
+    var v = 0L
     var i = 0
     while (i < n) {
       val c = k.charAt(i)
@@ -810,7 +818,33 @@ object JsInterp {
       v = v * 10 + (c - '0')
       i += 1
     }
-    v
+    if (v < 4294967295L) v else -1
+  }
+
+  /** Whether `k` is an array index below `length`: an own element. */
+  private def isIndexBelow(k: String, length: Int): Boolean = {
+    val i = arrayIndex(k)
+    i >= 0 && i < length
+  }
+
+  /** The engine's memory bound on an array's length. A longer array, by
+    * construction, index write or `length` write, fails the run with a
+    * named error instead of exhausting the heap (otto materializes the Go
+    * slice and relies on per-RPC panic recovery when the node dies).
+    */
+  private def checkArrayLength(len: Double): Unit =
+    if (len > 16777216.0)
+      throw OracleRunError(s"Array length ${numToStr(len)} exceeds the engine bound " +
+        "of 16777216 elements")
+
+  /** `d` as an array length (ES5 15.4.2.2, 15.4.5.1): a RangeError unless
+    * a whole number below 2^32, then [[checkArrayLength]]'s bound.
+    */
+  private def arrayLength(d: Double): Int = {
+    if (!d.isWhole || d < 0 || d >= 4294967296.0)
+      throw JsThrow(errorObj("RangeError", "Invalid array length"))
+    checkArrayLength(d)
+    d.toInt
   }
 
   /** `new X(...)` over the constructible globals, which the compiler
@@ -822,18 +856,10 @@ object JsInterp {
       val a = new JsArr
       args match {
         case Seq(JsNum(d)) =>
-          // ES5 15.4.2.2: the single numeric argument is the LENGTH —
-          // non-integer or >= 2^32 is RangeError, and valid-but-huge
-          // lengths hit the same named engine bound as the plain-call
-          // form (JsOracle's Array binding): a 2^31-slot pre-allocation
-          // must not die as a raw JVM error.
-          if (!d.isWhole || d < 0 || d >= 4294967296.0)
-            throw JsThrow(errorObj("RangeError", "Invalid array length"))
-          if (d > 16777216.0)
-            throw OracleRunError(
-              s"Array length ${numToStr(d)} exceeds the engine bound " +
-                "of 16777216 elements")
-          (0 until d.toInt).foreach(_ => a.items += JsUndef)
+          // ES5 15.4.2.2: the single numeric argument is the LENGTH
+          // (Array(1e308) used to saturate .toInt and die in a raw
+          // 2^31-element allocation; caught by JsFuzzSpec seed 5597)
+          (0 until arrayLength(d)).foreach(_ => a.items += JsUndef)
         case _ => args.foreach(a.items += _)
       }
       a

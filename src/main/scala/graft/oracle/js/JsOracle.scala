@@ -513,9 +513,18 @@ object JsOracle {
       val d = own(r)
       JsNum(math.sqrt(VectorMath.dot(d, d, 0, Int.MaxValue)))
     },
+    // Each norm runs over its own whole vector, so two records' cached
+    // norms give the one-pass kernel's bits. A record fresh per read (a
+    // Dataset-backed store's) pays a norm pass besides the dot pass.
     "Cosine" -> { (r, args) =>
       val b = dataOf(args.head)
-      JsNum(VectorMath.cosine(own(r), b, 0, Int.MaxValue))
+      val a = own(r)
+      JsNum(args.head match {
+        case o: RecordHost if o.rec != null =>
+          VectorMath.cosineOf(VectorMath.dot(a, b, 0, Int.MaxValue),
+            r.rec.squaredNorm, o.rec.squaredNorm)
+        case _ => VectorMath.cosine(a, b, 0, Int.MaxValue)
+      })
     },
     "CosineSub" -> { (r, args) =>
       JsNum(VectorMath.cosine(own(r), dataOf(args.head), 0, argNum(args, 1)))
@@ -552,12 +561,12 @@ object JsOracle {
           JsNum(math.atan2(toNum(args.head), toNum(args(1)))) },
         "pow" -> { args =>
           JsNum(math.pow(toNum(args.head), toNum(args(1)))) },
+        // java.lang.Math's min/max: NaN if any argument is NaN, and
+        // -0 below +0 (ES5 15.8.2.11-12)
         "min" -> { args =>
-          JsNum(if (args.isEmpty) Double.PositiveInfinity
-                else args.map(toNum).min) },
+          JsNum(args.map(toNum).foldLeft(Double.PositiveInfinity)(math.min)) },
         "max" -> { args =>
-          JsNum(if (args.isEmpty) Double.NegativeInfinity
-                else args.map(toNum).max) },
+          JsNum(args.map(toNum).foldLeft(Double.NegativeInfinity)(math.max)) },
         "random" -> { _ => JsNum(rnd.nextDouble()) }),
       props = Map(
         "PI" -> (() => JsNum(math.Pi)),
@@ -680,29 +689,7 @@ object JsOracle {
         JsInterp.errorObj(nm, args.headOption.map(toStr).getOrElse(""))))
     }
     env.declare("Array", new JsNative("Array", -1,
-      args => {
-        val a = new JsArr
-        args match {
-          case Seq(JsNum(d)) =>
-            // ES5 15.4.2.2: a single numeric argument is the LENGTH and
-            // must be an integer below 2^32 — otherwise RangeError
-            // (Array(1e308) used to saturate .toInt and die in a raw
-            // 2^31-element allocation; caught by JsFuzzSpec seed 5597).
-            if (!d.isWhole || d < 0 || d >= 4294967296.0)
-              throw JsThrow(JsInterp.errorObj("RangeError",
-                "Invalid array length"))
-            // Valid-but-huge lengths are an engine memory bound, named
-            // like the driver-pull caps (a 2^31-slot pre-allocation is
-            // node death, and otto's Go panic recovery is per-RPC; here
-            // the bound fails the RUN, loudly).
-            if (d > 16777216.0)
-              throw OracleRunError(s"Array length ${JsInterp.numToStr(d)} " +
-                "exceeds the engine bound of 16777216 elements")
-            (0 until d.toInt).foreach(_ => a.items += JsUndef)
-          case _ => args.foreach(a.items += _)
-        }
-        a
-      },
+      args => JsInterp.newBuiltin("Array", args),
       statics = Map("isArray" -> new JsNative("isArray", 1,
         args => JsBool(args.headOption.exists(_.isInstanceOf[JsArr]))))))
     env.declare("Boolean", new JsNative("Boolean", 1,

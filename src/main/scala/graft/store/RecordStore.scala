@@ -315,21 +315,38 @@ final class RecordStore private (
 
   /** (id, cosine) of every record but `excludeId` whose cosine to `ref`
     * is >= `threshold` under Spark's double ordering (NaN sorts above
-    * every number). The resident scan calls the float-range
-    * [[VectorMath.cosine]] over the common prefix, which equals the
+    * every number). The cosine runs over the common prefix and equals the
     * Catalyst expression's cosine on the widened arrays bit for bit.
+    *
+    * The resident scan takes `ref`'s squared norm once per call. A row of
+    * `ref`'s length costs one [[VectorMath.dot]]: its norm is the row
+    * object's cached [[SumRecord.squaredNorm]], which a write carries over
+    * for every row it leaves unchanged. A row of another length needs the
+    * norms of the common prefix only, so it runs the one-pass
+    * [[VectorMath.cosine]] instead. Only a hit allocates.
     */
   def similarTo(ref: Array[Float], threshold: Double,
       excludeId: Long): Seq[(Long, Double)] = {
     val s = state
     s.snapshot match {
       case Some(snap) =>
-        snap.rows.iterator
-          .filter(x => x.id != excludeId && x.data != null)
-          .map(x => (x.id, VectorMath.cosine(x.data, ref, 0,
-            math.min(x.data.length, ref.length))))
-          .filter { case (_, sim) => SQLOrderingUtil.compareDoubles(sim, threshold) >= 0 }
-          .toVector
+        val rows = snap.rows
+        val nb = if (ref == null) 0.0 else VectorMath.squaredNorm(ref)
+        val hits = Vector.newBuilder[(Long, Double)]
+        var i = 0
+        while (i < rows.length) {
+          val x = rows(i)
+          val d = x.data
+          if (x.id != excludeId && d != null) {
+            val sim =
+              if (d.length == ref.length)
+                VectorMath.cosineOf(VectorMath.dot(d, ref, 0, d.length), x.squaredNorm, nb)
+              else VectorMath.cosine(d, ref, 0, math.min(d.length, ref.length))
+            if (SQLOrderingUtil.compareDoubles(sim, threshold) >= 0) hits += ((x.id, sim))
+          }
+          i += 1
+        }
+        hits.result()
       case None =>
         val refCol = array(ref.map(lit).toIndexedSeq: _*)
         s.ds.filter(col("id") =!= excludeId)

@@ -237,11 +237,12 @@ function mapOfRecordNames() {
     * one-partition copy of the store; both must give `want` (a run error
     * arrives in the master's per-node wrapping on the distributed path).
     */
-  private def pinBoth(code: String, args: String*)(want: Either[String, String]) = {
-    assert(runJs(code, args: _*) === want, "driver path")
+  private def pinBoth(code: String, args: String*)(want: Either[String, String])
+      (implicit st: RecordStore) = {
+    assert(runJs(code, args: _*)(st) === want, "driver path")
     val reg = new OracleRegistry
     val o = reg.createJs("t", code).fold(m => fail(s"compile failed: $m"), identity)
-    assert(reg.runDistributed(o.id, store.repartitioned(1), args) ===
+    assert(reg.runDistributed(o.id, st.repartitioned(1), args) ===
       want.left.map(m => s"Errors from nodes: [error while running oracle ${o.id}: $m]"),
       "distributed path")
   }
@@ -370,6 +371,84 @@ function mapOfRecordNames() {
         catch (e) { return {e: e.name + '|' + e.message}; }
       }""")(Right("{\"e\":\"RangeError|range start -3 is negative\"}"))
     }
+  }
+
+  test("record Cosine over cached norms equals CosineRange to the bit, SetData included") {
+    val ragged = RecordStore.fromRecords(spark, Seq(
+      SumRecord(1L, Array(1f, 2f, 3f)),
+      SumRecord(2L, Array(0.5f, -4f, 6f, 1e-3f, 7f)),
+      SumRecord(3L, Array(-0.0f, -0.0f)),
+      SumRecord(4L, Array(0f, 0f, 0f, 0f)),
+      SumRecord(5L, Array.emptyFloatArray),
+      SumRecord(6L, Array(2f, Float.NaN, 1f)),
+      SumRecord(7L, Array(Float.PositiveInfinity, 1f)),
+      SumRecord(8L, Array(3f, -1f, 0.25f, 9f, -2f, 4f, 8f))))
+    // the same bits as far as JS can tell: NaN matches NaN, -0 differs from 0
+    val same = "function same(x, y) { return x === y ? " +
+      "(x !== 0 || 1 / x === 1 / y) : (x !== x && y !== y); }"
+    // record 9 is a Find miss: the null record, which reads as empty
+    pinBoth(s"""function pin() {
+      $same
+      var rs = [];
+      for (var id = 1; id <= 9; id++) rs.push(records.Find(id));
+      var bad = [];
+      for (var i = 0; i < 8; i++) for (var j = 0; j < rs.length; j++)
+        if (!same(rs[i].Cosine(rs[j]), rs[i].CosineRange(rs[j], 0, 1e9))) bad.push([i + 1, j + 1]);
+      return bad;
+    }""")(Right("[]"))(ragged)
+    pinBoth(s"""function pin() {
+      $same
+      var v = records.Find(1), w = records.Find(2), before = v.Cosine(w);
+      v.SetData([1, 0, 0]);
+      var after = v.Cosine(w);
+      var ok1 = same(after, v.CosineRange(w, 0, 1e9)) && after !== before;
+      w.SetData([0, 5]);
+      var ok2 = same(v.Cosine(w), 0) && same(w.Cosine(v), w.CosineRange(v, 0, 1e9));
+      return [ok1, ok2, same(records.Find(1).Cosine(records.Find(2)), before)];
+    }""")(Right("[true,true,true]"))(ragged)
+  }
+
+  test("an index or length write past the array bound fails the run; a non-index key is a named write") {
+    val bound = "Array length %s exceeds the engine bound of 16777216 elements"
+    pinBoth("function f() { var x = []; x[2000000000] = 1; return x.length; }")(
+      Left(bound.format("2000000001")))
+    pinBoth("function f() { var x = []; x['4000000000'] = 1; return x.length; }")(
+      Left(bound.format("4000000001")))
+    pinBoth("function f() { var x = [1]; x[16777216] = 1; return x.length; }")(
+      Left(bound.format("16777217")))
+    pinBoth("function f() { var x = []; x.length = 20000000; return x.length; }")(
+      Left(bound.format("20000000")))
+    pinBoth("""function f() {
+      function err(g) { try { g(); return 'no error'; } catch (e) { return '' + e; } }
+      var a = [1, 2];
+      var x = [];
+      x[3] = 'd'; x['1'] = 'b'; x[-0] = 'a';
+      return [
+        err(function () { a[1.5] = 9; }), err(function () { a['x'] = 9; }),
+        err(function () { a['01'] = 9; }), err(function () { a[-1] = 9; }),
+        err(function () { a[4294967295] = 9; }), err(function () { a.length = -1; }),
+        err(function () { a.length = 1.5; }), err(function () { a.length = 'abc'; }),
+        a, x, a.length = '1', a];
+    }""")(Right("""["TypeError: cannot set property '1.5' of object",""" +
+      """"TypeError: cannot set property 'x' of object",""" +
+      """"TypeError: cannot set property '01' of object",""" +
+      """"TypeError: cannot set property '-1' of object",""" +
+      """"TypeError: cannot set property '4294967295' of object",""" +
+      """"RangeError: Invalid array length","RangeError: Invalid array length",""" +
+      """"RangeError: Invalid array length",[1],["a","b",null,"d"],"1",[1]]"""))
+  }
+
+  test("Math.min/max with NaN, typeof NaN/Infinity and hasOwnProperty of index names follow ES5") {
+    pinBoth("""function f() {
+      return [Math.min(1, NaN), Math.max(NaN, 1), Math.min(NaN), 1 / Math.min(0, -0),
+        1 / Math.max(-0, 0), Math.min(), Math.max(), typeof NaN, typeof Infinity,
+        typeof undefined, [1, 2].hasOwnProperty('01'), 'ab'.hasOwnProperty('01'),
+        [1, 2].hasOwnProperty('1'), 'ab'.hasOwnProperty('1'),
+        [1, 2].propertyIsEnumerable('01'), [1, 2].propertyIsEnumerable('1'),
+        [1, 2].hasOwnProperty('2'), [1, 2].hasOwnProperty('4294967294')].map(String);
+    }""")(Right("""["NaN","NaN","NaN","-Infinity","Infinity","Infinity","-Infinity",""" +
+      """"number","number","undefined","false","false","true","true","false","true",""" +
+      """"false","false"]"""))
   }
 
   test("a runaway loop hits the step budget instead of wedging the server") {

@@ -214,6 +214,22 @@ class OracleSpec extends SparkSpec {
     val sums = reg.run(ids("sumAllVectors"), resident, Seq.empty)
     assert(sums === reg.run(ids("sumAllVectors"), onDataset, Seq.empty))
     assert(parsed(sums).asInstanceOf[JArray].arr.size === 11)
+
+    // two rows of the queries' length: one holding a NaN, one all -0.0
+    // (the zero-magnitude guard); full outputs compared, errors included
+    val specials = mixed ++ Seq(
+      SumRecord(201L, Array(1f, 0.5f, Float.NaN, 2f, -1f, 0f, 3f, 0.25f)),
+      SumRecord(202L, Array.fill(8)(-0.0f)))
+    val resident2 = RecordStore.fromRecords(spark, specials)
+    val onDataset2 = withConf(RecordStore.MaxCollectRowsKey, "100")(
+      RecordStore.fromRecords(spark, specials))
+    assert(countJobs(resident2.find(1L))._2 === 0)
+    for (id <- Seq(1L, 13L, 50L, 201L, 202L); t <- Seq("-1", "0", "0.9");
+         name <- Seq("findSimilar", "findSimilarJs")) {
+      val args = Seq(id.toString, t)
+      assert(reg.run(ids(name), resident2, args) === reg.run(ids(name), onDataset2, args),
+        s"$name($id, $t)")
+    }
   }
 
   test("a resident store serves reads and oracle runs with no Spark job") {

@@ -340,4 +340,28 @@ function allIds() {
           "where each partition materializes only on its executor"))
     }
   }
+
+  test("similarTo after an update scores the new vector, not a cached norm") {
+    // brute force over the widened vectors: dot and both norms summed in
+    // index order over the common prefix
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      val n = math.min(a.length, b.length)
+      val dot = (0 until n).map(i => a(i).toDouble * b(i).toDouble).foldLeft(0.0)(_ + _)
+      val na = (0 until n).map(i => a(i).toDouble * a(i).toDouble).foldLeft(0.0)(_ + _)
+      val nb = (0 until n).map(i => b(i).toDouble * b(i).toDouble).foldLeft(0.0)(_ + _)
+      val den = math.sqrt(na) * math.sqrt(nb)
+      if (den == 0.0) 0.0 else dot / den
+    }
+    val s = RecordStore.fromRecords(spark,
+      seeded(6) :+ SumRecord(7, Array(1f, -2f, 0.5f)))
+    val ref = Array(0.25f, -1f, 2f, 0f, 3f, -0.5f, 1f, 1.5f)
+    def brute = s.all().filter(_.id != 1L).map(r => (r.id, cos(r.data, ref)))
+    assert(s.similarTo(ref, -1, 1L) === brute)
+    assert(s.update(SumRecord(4, ref.map(-_))).isRight)
+    assert(s.update(SumRecord(7, Array(2f, 2f))).isRight)
+    val after = s.similarTo(ref, -1, 1L)
+    assert(after === brute)
+    assert(after.toMap.apply(4L) === cos(ref.map(-_), ref))
+    assert(after.toMap.apply(7L) === cos(Array(2f, 2f), ref))
+  }
 }

@@ -117,6 +117,26 @@ class VectorMathSpec extends AnyFunSuite {
     }
   }
 
+  test("dot with cached squared norms equals the one-pass cosine bit for bit") {
+    def bits(f: => Double) = java.lang.Double.doubleToRawLongBits(f)
+    var sameLength = 0
+    for (seed <- 9L to 12L) {
+      val vs = vectors(seed) ++ Seq(Array(Float.NaN), Array(Float.PositiveInfinity, 1f),
+        Array(Float.NegativeInfinity, -0.0f), Array(-0.0f, -0.0f, -0.0f), Array(0f))
+      for (a <- vs; b <- vs) {
+        val split = VectorMath.cosineOf(VectorMath.dot(a, b, 0, Int.MaxValue),
+          VectorMath.squaredNorm(a), VectorMath.squaredNorm(b))
+        assert(bits(split) === bits(VectorMath.cosine(a, b, 0, Int.MaxValue)),
+          s"${a.toSeq} ${b.toSeq}")
+        if (a.length == b.length) {
+          assert(bits(split) === bits(VectorMath.cosine(a, b, 0, a.length)))
+          sameLength += 1
+        }
+      }
+    }
+    assert(sameLength > 100)
+  }
+
   test("in-place record sum equals the widen-then-sum fold bit for bit") {
     def bits(v: Array[Double]): Seq[Long] = v.toSeq.map(java.lang.Double.doubleToRawLongBits)
     val agg = new graft.functions.VectorSumAggregator
