@@ -634,28 +634,41 @@ object JsCompiler {
       ArraySeq.unsafeWrapArray(out)
     }
 
+  /** A method call `o.nm(args)`: ES5 11.2.3 evaluates the callee, its
+    * base included, before the arguments, and 11.2.1 step 5 raises the
+    * TypeError for a null or undefined base before any argument runs. An
+    * object's method is read before the arguments too, so an argument
+    * that reassigns it does not change which function is called.
+    */
+  private def callOn(ip: JsInterp, o: JsVal, nm: String, args: Array[ENode], f: Frame): JsVal =
+    o match {
+      case r: JsObj =>
+        val fn = ip.getMember(r, nm)
+        ip.callFunction(fn, evalArgs(args, ip, f), thisVal = r)
+      case JsNull | JsUndef => ip.getMember(o, nm) // throws the TypeError
+      case _ => ip.callMethod(o, nm, evalArgs(args, ip, f))
+    }
+
   private final class CallMemberE(obj: ENode, nm: String, args: Array[ENode]) extends ENode {
     def eval(ip: JsInterp, f: Frame): JsVal = {
       ip.tick()
-      val as = evalArgs(args, ip, f)
-      ip.callMethod(obj.eval(ip, f), nm, as)
+      callOn(ip, obj.eval(ip, f), nm, args, f)
     }
   }
 
   private final class CallIndexE(obj: ENode, idx: ENode, args: Array[ENode]) extends ENode {
     def eval(ip: JsInterp, f: Frame): JsVal = {
       ip.tick()
-      val as = evalArgs(args, ip, f)
       val o = obj.eval(ip, f)
-      ip.callMethod(o, toStr(idx.eval(ip, f)), as)
+      callOn(ip, o, toStr(idx.eval(ip, f)), args, f)
     }
   }
 
   private final class CallE(fn: ENode, args: Array[ENode]) extends ENode {
     def eval(ip: JsInterp, f: Frame): JsVal = {
       ip.tick()
-      val as = evalArgs(args, ip, f)
-      ip.callFunction(fn.eval(ip, f), as)
+      val callee = fn.eval(ip, f)
+      ip.callFunction(callee, evalArgs(args, ip, f))
     }
   }
 
@@ -669,8 +682,8 @@ object JsCompiler {
   private final class NewE(callee: ENode, args: Array[ENode]) extends ENode {
     def eval(ip: JsInterp, f: Frame): JsVal = {
       ip.tick()
-      val as = evalArgs(args, ip, f)
-      ip.construct(callee.eval(ip, f), as)
+      val c = callee.eval(ip, f) // ES5 11.2.2: the constructor first
+      ip.construct(c, evalArgs(args, ip, f))
     }
   }
 

@@ -732,7 +732,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
     nm match {
       case "getTime" | "valueOf" => Some(new JsNative(nm, 0, _ => JsNum(d.ms)))
       case "setTime" => Some(new JsNative("setTime", 1, args => {
-        d.ms = toNum(args.headOption.getOrElse(JsUndef))
+        d.ms = timeClip(toNum(args.headOption.getOrElse(JsUndef)))
         JsNum(d.ms)
       }))
       // UTC-pinned engine: the local getters alias getUTC* (class doc)
@@ -871,7 +871,7 @@ object JsInterp {
         case Seq()           => System.currentTimeMillis.toDouble
         case Seq(s: JsStr)   => dateParse(s.s)
         case Seq(d: JsDate)  => d.ms
-        case Seq(one)        => toNum(one)
+        case Seq(one)        => timeClip(toNum(one))
         case fields          => dateFromFields(fields.map(toNum))
       })
     case _ => errorObj(nm, args.headOption.map(toStr).getOrElse(""))
@@ -1121,7 +1121,8 @@ object JsInterp {
 
   /** Date.parse over the formats oracles see: ISO 8601 instants
     * (with offset or Z), ISO date-times without a zone (read as UTC),
-    * and bare dates. Anything else is NaN, like ES5.
+    * and bare dates. Anything else, or a time past TimeClip's range, is
+    * NaN, like ES5.
     */
   def dateParse(s: String): Double = {
     val t = s.trim
@@ -1133,7 +1134,7 @@ object JsInterp {
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli.toDouble))
       .orElse(tryParse(java.time.LocalDate.parse(t).atStartOfDay
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli.toDouble))
-      .getOrElse(Double.NaN)
+      .map(timeClip).getOrElse(Double.NaN)
   }
 
   /** Date.UTC / `new Date(y, m, d, h, mi, s, ms)` field constructor —
@@ -1162,8 +1163,24 @@ object JsInterp {
       case _: java.time.DateTimeException => return Double.NaN
       case _: ArithmeticException => return Double.NaN
     }
-    // ES5 15.9.1.14 TimeClip: beyond ±8.64e15 ms is an invalid time value
-    if (math.abs(ms) > 8.64e15) Double.NaN else ms
+    timeClip(ms)
+  }
+
+  /** ES5 15.9.1.14 TimeClip: NaN beyond ±8.64e15 ms (an invalid time
+    * value), else ToInteger, with -0 turned into +0.
+    */
+  def timeClip(ms: Double): Double =
+    if (ms.isNaN || math.abs(ms) > 8.64e15) Double.NaN
+    else (if (ms < 0) math.ceil(ms) else math.floor(ms)) + 0.0
+
+  /** ES5 15.8.2.15 Math.round: the integer closest to `d`, ties toward
+    * +Infinity. Computed from floor, since `floor(d + 0.5)` rounds
+    * 0.49999999999999994 up and loses the sign of -0 and of (-0.5, 0).
+    */
+  def round(d: Double): Double = {
+    val f = math.floor(d)
+    val r = if (d - f >= 0.5) f + 1 else f
+    if (r == 0 && (d < 0 || 1 / d < 0)) -0.0 else r // d in [-0.5, 0) or -0
   }
 
   def mkRegex(pattern: String, flags: String): JsRegex =

@@ -553,7 +553,7 @@ object JsOracle {
       methods = Map(
         n1("sqrt")(math.sqrt), n1("abs")(math.abs),
         n1("floor")(math.floor), n1("ceil")(math.ceil),
-        n1("round")(d => math.floor(d + 0.5)),
+        n1("round")(JsInterp.round),
         n1("exp")(math.exp), n1("log")(math.log),
         n1("sin")(math.sin), n1("cos")(math.cos), n1("tan")(math.tan),
         n1("asin")(math.asin), n1("acos")(math.acos), n1("atan")(math.atan),

@@ -8,7 +8,7 @@ import org.slf4j.LoggerFactory
 import org.sparkproject.connect.grpc.{CallOptions, MethodDescriptor, ServerServiceDefinition, Status, StatusRuntimeException}
 import org.sparkproject.connect.grpc.netty.{GrpcSslContexts, NettyChannelBuilder, NettyServerBuilder}
 import org.sparkproject.connect.grpc.stub.{ClientCalls, ServerCalls, StreamObserver}
-import org.sparkproject.connect.protobuf.{ByteString, DescriptorProtos, Descriptors, DynamicMessage}
+import org.sparkproject.connect.protobuf.{ByteString, DescriptorProtos, Descriptors, DynamicMessage, UnsafeByteOperations}
 
 import graft.EngineInfo
 import graft.model.SumRecord
@@ -449,7 +449,8 @@ final class SumGrpcServer(val service: SumService, port: Int = 0,
       val r = api.run(getLong(m, "oracle_id"), getStrings(m, "args"))
       build("CallResponse", "success" -> r.success, "msg" -> r.msg,
         "data" -> r.data.map(env => build("Data", "compressed" -> env.compressed,
-          "payload" -> ByteString.copyFrom(env.payload))))
+          // the envelope's array is never written after Payload.build
+          "payload" -> UnsafeByteOperations.unsafeWrap(env.payload))))
     },
     "Info" -> (_ => infoToProto(api.info())))
 

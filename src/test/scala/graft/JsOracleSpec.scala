@@ -451,6 +451,55 @@ function mapOfRecordNames() {
       """"false","false"]"""))
   }
 
+  test("calls evaluate the callee and its base before the arguments (ES5 11.2.1-11.2.3)") {
+    pinBoth("""function f() {
+      var log = [];
+      function g() { log.push('g'); return function (v) { return v; }; }
+      function h() { log.push('h'); return 1; }
+      function mk() { log.push('mk'); return function (v) { this.v = v; }; }
+      var o = {m: function () { return 1; }};
+      var p = {m: function () { return 'old'; }};
+      var q = {m: function () { return 2; }};
+      var r = [o.m(o = null), p.m(p.m = function () { return 'new'; }), q['m'](q = null)];
+      g()(h());
+      log.push('|');
+      var c = new (mk())(h());
+      r.push(c.v);
+      var errs = [];
+      try { (null).concat(notDeclaredAnywhere); } catch (e) { errs.push(e.name); }
+      try { var k = 'm'; var u; u[k](notDeclaredAnywhere); } catch (e) { errs.push(e.name); }
+      try { missingFn(notDeclaredAnywhere); } catch (e) { errs.push(e.name); }
+      return [r, log.join(','), errs].map(String);
+    }""")(Right("""["1,old,2,1","g,h,|,mk,h","TypeError,TypeError,ReferenceError"]"""))
+    // the null base fails before the undeclared argument is read, with
+    // the member read's message
+    pinBoth("function f() { return (null).concat(notDeclaredAnywhere); }")(
+      Left("TypeError: cannot read property 'concat' of object"))
+  }
+
+  test("Math.round follows ES5 15.8.2.15: ties up, -0 kept, no rounding in the addition") {
+    pinBoth("""function f() {
+      return [1 / Math.round(-0.4), Math.round(0.49999999999999994), 1 / Math.round(-0),
+        Math.round(2.5), Math.round(-2.5), 1 / Math.round(-0.5), Math.round(-0.6),
+        Math.round(NaN), Math.round(1e20), Math.round(-Infinity), Math.round(0.5),
+        Math.round(4503599627370495.5), 1 / Math.round(0.2)].map(String);
+    }""")(Right("""["-Infinity","0","-Infinity","3","-2","-Infinity","-1","NaN",""" +
+      """"100000000000000000000","-Infinity","1","4503599627370496","Infinity"]"""))
+  }
+
+  test("Date construction and setTime apply TimeClip (ES5 15.9.1.14)") {
+    pinBoth("""function f() {
+      var d = new Date(0);
+      return [new Date(1e308).getUTCFullYear(), new Date(8.64e15 + 1).getTime(),
+        new Date(1.7).getTime(), new Date(-1.7).getTime(), new Date(8.64e15).getTime(),
+        new Date(-8.64e15).getTime(), new Date(-8.64e15 - 1).getTime(),
+        1 / new Date(-0).getTime(), new Date(NaN).getTime(), new Date(Infinity).getTime(),
+        d.setTime(1.5), d.setTime(9e15), new Date('2021-03-04T05:06:07.008Z').getTime(),
+        Date.UTC(275760, 8, 13, 0, 0, 0, 1)].map(String);
+    }""")(Right("""["NaN","NaN","1","-1","8640000000000000","-8640000000000000","NaN",""" +
+      """"Infinity","NaN","NaN","1","NaN","1614834367008","NaN"]"""))
+  }
+
   test("a runaway loop hits the step budget instead of wedging the server") {
     val r = runJs("function spin(){ while(true){} }")
     assert(r.isLeft)
