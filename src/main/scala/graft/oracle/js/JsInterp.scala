@@ -200,8 +200,13 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
       throw OracleRunError(s"TypeError: ${typeOf(v)} is not a constructor")
   }
 
+  /** `obj.nm = v`. A write to a string, number or boolean base is dropped
+    * (ES5 8.7.2 PutValue, non-strict code: the property would go on a
+    * temporary wrapper object); a null or undefined base is a TypeError.
+    */
   private[js] def setMember(obj: JsVal, nm: String, v: JsVal): Unit = obj match {
     case o: JsObj => o.fields(nm) = v
+    case _: JsStr | _: JsNum | _: JsBool => ()
     case f: JsFunc if nm == "prototype" => v match {
       case p: JsObj => f.prototypeObj = p
       case other => throw OracleRunError(
@@ -237,6 +242,7 @@ final class JsInterp(maxSteps: Long = 50_000_000L) {
         a.items(i) = v
       }
     case o: JsObj => o.fields(toStr(idx)) = v
+    case _: JsStr | _: JsNum | _: JsBool => () // ES5 8.7.2, as in setMember
     case other =>
       throw OracleRunError(
         s"TypeError: cannot set index of ${typeOf(other)}")

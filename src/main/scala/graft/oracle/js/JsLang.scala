@@ -265,6 +265,26 @@ object JsLang {
       stmts.toSeq
     }
 
+    /** The first top-level function declaration — the entry the compiler
+      * picks — with the index of its `function` token. Parses only up to
+      * it.
+      */
+    def entry(): Option[(FuncDecl, Int)] = {
+      while (!at("eof")) {
+        val start = pos
+        statement() match {
+          case f: FuncDecl => return Some((f, start))
+          case _           =>
+        }
+      }
+      None
+    }
+
+    /** The labels of the labelled statements enclosing the current one,
+      * within the current function body (ES5 12.12).
+      */
+    private var labels = List.empty[String]
+
     private def statement(): Stmt = peek.kind match {
       case ";" => advance(); EmptyStmt
       case "{" => block()
@@ -403,9 +423,13 @@ object JsLang {
       case _ =>
         // labeled statement: `ident :` at statement position (ES5 12.12)
         if (at("ident") && toks(pos + 1).kind == ":") {
+          if (labels.contains(peek.text))
+            fail(s"Label '${peek.text}' has already been declared")
           val l = advance().text
           advance() // ':'
-          Labeled(l, statement())
+          labels = l :: labels
+          try Labeled(l, statement())
+          finally labels = labels.tail
         } else {
           val e = expression()
           endStatement()
@@ -432,7 +456,10 @@ object JsLang {
         while (eat(",")) params += expect("ident").text
       }
       expect(")")
-      val body = block().stmts
+      // a function body starts a fresh label set (ES5 12.12)
+      val outer = labels
+      labels = Nil
+      val body = try block().stmts finally labels = outer
       FuncExpr(nm, params.toSeq, body)
     }
 
@@ -660,45 +687,43 @@ object JsLang {
   /** Parse a program; throws [[ParseError]] on malformed input. */
   def parse(src: String): Seq[Stmt] = new Parser(lex(src)).program()
 
-  // ------------------------------------------------- record-lookup patch
-  /** A `records.Find(<ident>)` call site inside the FIRST declared
-    * function's body: exact source span [start, end) and the bare
-    * identifier argument. This is the shape the reference master's AST
-    * walk collects (master/ast_raccoon.go:157-199): a call whose
-    * whitespace-stripped callee text is exactly `records.Find` and whose
-    * single argument is an identifier — token matching gives the same
-    * set (comments/strings/regexes are already stripped by the lexer,
-    * and a `foo.records.Find` chain is excluded by the look-behind).
+  // ----------------------------------------------- record-lookup binding
+  /** A `records.Find(<ident>)` call site inside the entry's body: exact
+    * source span [start, end) and the bare identifier argument. This is
+    * the shape the reference master's AST walk collects
+    * (master/ast_raccoon.go:157-199): a call whose whitespace-stripped
+    * callee text is exactly `records.Find` and whose single argument is an
+    * identifier — token matching gives the same set (comments, strings and
+    * regexes are already stripped by the lexer, and a `foo.records.Find`
+    * chain is excluded by the look-behind).
     */
   final case class FindSite(start: Int, end: Int, arg: String)
 
-  /** All [[FindSite]]s in `src`'s first function body; empty when the
-    * source has no function or is not parseable as tokens. The walk is
+  /** The entry declaration and every [[FindSite]] in its body; None when
+    * the source declares no function or does not parse up to one. The
+    * entry is the first top-level function DECLARATION, the one the
+    * compiler calls, not the first `function` token. The walk is
     * body-only like the reference's (`ast.Walk(a, function.Body)`,
-    * ast_raccoon.go:47) — a lookup inside a merger function is NOT a
+    * ast_raccoon.go:47): a lookup inside a merger function is NOT a
     * distributable record parameter.
     */
-  def recordFindSites(src: String): Seq[FindSite] = {
+  private def entrySites(src: String): Option[(FuncDecl, Seq[FindSite])] = {
     val toks =
       try lex(src)
-      catch { case ParseError(_) => return Seq.empty }
-    val fnIdx = toks.indexWhere(_.kind == "function")
-    if (fnIdx < 0) return Seq.empty
-    var j = fnIdx
-    while (j < toks.length && toks(j).kind != "{") j += 1
-    if (j >= toks.length) return Seq.empty
+      catch { case ParseError(_) => return None }
+    val (decl, fnIdx) =
+      try new Parser(toks).entry().getOrElse(return None)
+      catch { case ParseError(_) | _: StackOverflowError => return None }
+    // the parameter list holds no brace, so the next one opens the body
+    val j = toks.indexWhere(_.kind == "{", fnIdx)
     var depth = 0
-    var bodyEnd = toks.length
     var k = j
-    var scanning = true
-    while (k < toks.length && scanning) {
-      toks(k).kind match {
-        case "{" => depth += 1
-        case "}" => depth -= 1; if (depth == 0) { bodyEnd = k; scanning = false }
-        case _   =>
-      }
+    while (k < toks.length && !(toks(k).kind == "}" && depth == 1)) {
+      if (toks(k).kind == "{") depth += 1
+      else if (toks(k).kind == "}") depth -= 1
       k += 1
     }
+    val bodyEnd = k
     val out = Seq.newBuilder[FindSite]
     var i = j + 1
     while (i + 5 < bodyEnd) {
@@ -714,35 +739,56 @@ object JsLang {
         i += 6
       } else i += 1
     }
-    out.result()
+    Some((decl, out.result()))
   }
 
-  /** Parameter positions of `params` used as `records.Find(p)` in the
-    * main function body — the reference's IsParameterPositionARecordLookup
-    * set (ast_raccoon.go:186-199).
+  /** All [[FindSite]]s in `src`'s entry body; empty when the source has
+    * no function declaration or does not parse up to one.
     */
-  def recordLookupParams(src: String, params: Seq[String]): Set[Int] = {
-    val args = recordFindSites(src).map(_.arg).toSet
-    params.zipWithIndex.collect { case (p, i) if args(p) => i }.toSet
-  }
+  def recordFindSites(src: String): Seq[FindSite] =
+    entrySites(src).fold(Seq.empty[FindSite])(_._2)
 
-  /** PatchCode (ast_raccoon.go:94-149): for each parameter position
-    * present in `resolved`, replace every `records.Find(thatParam)` call
-    * in the main body with `records.New(<resolved JSON>)`. Splices run
-    * back-to-front so spans never shift.
+  /** An oracle's federated form: `code` takes the Run's resolved records
+    * as one trailing argument, and `lookups` are the entry's parameter
+    * positions whose record it reads there, in argument order.
     */
-  def patchRecordLookups(src: String, params: Seq[String],
-      resolved: Map[Int, String]): String = {
-    if (resolved.isEmpty) return src
-    val byName = resolved.flatMap { case (i, json) =>
-      params.lift(i).map(_ -> json)
-    }
-    recordFindSites(src)
-      .filter(s => byName.contains(s.arg))
-      .sortBy(-_.start)
-      .foldLeft(src) { (code, s) =>
-        code.substring(0, s.start) +
-          s"records.New(${byName(s.arg)})" + code.substring(s.end)
+  final case class RecordBinding(code: String, lookups: Seq[Int])
+
+  /** Bind the entry's record lookups to a Run argument — the reference's
+    * PatchCode (ast_raccoon.go:94-149) without a record in the source, so
+    * one binding serves every Run. Each `records.Find(p)` of an entry
+    * parameter `p` becomes `records.New(G[k])`, k the rank of p's
+    * position in `lookups`, and a wrapper entry declared first takes the
+    * entry's parameters plus the resolved-record array R:
+    * `function W(p1, …, pn, R) { G = R; return entry(p1, …, pn); }`. The
+    * real entry therefore gets exactly its declared parameters, so its
+    * `arguments` and `this` are what a direct run gives. W, G and R are
+    * fresh names that occur nowhere in `src`, and the wrapper shares the
+    * first line, so line numbers do not move. None when the entry has no
+    * parameter lookup.
+    */
+  def bindRecordLookups(src: String): Option[RecordBinding] = {
+    val (entry, sites) = entrySites(src).getOrElse(return None)
+    val params = entry.params
+    val siteArgs = sites.map(_.arg).toSet
+    val lookups = params.indices.filter(i => siteArgs(params(i)))
+    if (lookups.isEmpty) return None
+    // a repeated parameter name reads its last position, like JS
+    val slot = lookups.zipWithIndex.map { case (i, k) => params(i) -> k }.toMap
+    def fresh(base: String): String =
+      Iterator.from(0).map(base + _).find(!src.contains(_)).get
+    val (w, g, r) = (fresh("$bindEntry"), fresh("$bindRecords"), fresh("$bindArg"))
+    val out = new StringBuilder(s"var $g = null; function $w(" +
+      (params :+ r).mkString(", ") + s") { $g = $r; return ${entry.name}(" +
+      params.mkString(", ") + "); } ")
+    var done = 0
+    sites.foreach { s =>
+      slot.get(s.arg).foreach { k =>
+        out ++= src.substring(done, s.start) ++= s"records.New($g[$k])"
+        done = s.end
       }
+    }
+    out ++= src.substring(done)
+    Some(RecordBinding(out.toString, lookups))
   }
 }

@@ -127,10 +127,11 @@ final class GrpcEngine(client: SumGrpcClient) extends NodeEngine {
   *    with not-found filtered and the reference's aggregate error
   *    formats; `findRecords` concatenates node hits; `listRecords`
   *    paginates the node-ordered global sequence;
-  *  - `run` is the master Run pipeline (mux_runner.go:39-156): temp
-  *    oracle on every node, gather, per-node failures as
+  *  - `run` is the master Run pipeline (mux_runner.go:39-156): record
+  *    lookups resolved on the master, then on every node concurrently a
+  *    temporary created, run and deleted; gather, per-node failures as
   *    "Errors from nodes: [...]", merge via the stored `merge*` hook or
-  *    the tri-state default, temporaries deleted on every path;
+  *    the tri-state default;
   *  - the oracle CRUD of [[SumApi]] runs over the cage; `info` reports
   *    the federation's record total, cage size and id watermark.
   *
@@ -517,53 +518,67 @@ final class SumFederation(
 
   // ---- distributed run (mux_runner.go) ------------------------------------
 
+  /** Each stored oracle's federated form by source text, so an update or
+    * a delete never serves a stale one: None when the entry has no
+    * record-lookup parameter (the oracle scatters as stored), otherwise
+    * the bound program compiled once, its lookup positions and the
+    * entry's parameter count.
+    */
+  private val runForms = new graft.oracle.SourceCache[Option[SumFederation.RunForm]](256)
+
+  private def runForm(oracle: Oracle, code: String): Option[SumFederation.RunForm] =
+    runForms.get(code).getOrElse {
+      val form = graft.oracle.js.JsLang.bindRecordLookups(code).map(b =>
+        SumFederation.RunForm(compileFn(oracle.name, b.code), b.lookups,
+          oracle.params.size))
+      runForms.put(code, form)
+      form
+    }
+
   /** mux_runner.go:49-79 + ast_raccoon PatchCode: resolve each parameter
     * the oracle uses as `records.Find(param)` against the FEDERATION
-    * (master-side read fans across nodes), then patch those call sites to
-    * `records.New(<resolved json>)` — a not-found record patches to
-    * `records.New(null)`, the null record — and recompile master-side so
-    * every node runs the patched code against records it may not own.
-    * Oracles without source (programmatic) or without lookup params pass
-    * through unchanged.
+    * (master-side read fans across nodes) — a not-found record resolves
+    * to null, the null record. The Run then sends the oracle's bound form
+    * ([[graft.oracle.js.JsLang.bindRecordLookups]]) with the caller's
+    * args, cut or padded with null to the entry's parameter count, and
+    * one trailing JSON array of the resolved records, so every node runs
+    * it against records it may not own. Oracles without source
+    * (programmatic) or without lookup params pass through unchanged.
     */
-  private def resolveAndPatch(oracle: Oracle,
-      jsonArgs: Seq[String]): Either[CallResponse, Oracle] = {
-    import graft.oracle.js.JsLang
-    val code = oracle.code.getOrElse(return Right(oracle))
-    val lookups = JsLang.recordLookupParams(code, oracle.params)
-    if (lookups.isEmpty) return Right(oracle)
-    var resolved = Map.empty[Int, String]
-    for ((a, i) <- jsonArgs.zipWithIndex if lookups(i)) {
-      a.trim.toLongOption.filter(_ >= 0) match {
-        case None => return Left(CallResponse(success = false,
-          // the reference's message verbatim, typo included
-          // (mux_runner.go:58)
-          s"Unable to parse record id form parameter #$i: '$a'", None))
-        case Some(recId) =>
-          val rr = readRecord(recId)
-          if (rr.success && rr.record.nonEmpty)
-            resolved += i -> recordJson(rr.record.get)
-          else if (rr.msg == s"record $recId not found.")
-            resolved += i -> "null"
-          else return Left(CallResponse(success = false,
-            s"Unable to retrieve record $recId: ${rr.msg}", None))
+  private def resolve(oracle: Oracle,
+      jsonArgs: Seq[String]): Either[CallResponse, (Oracle, Seq[String])] = {
+    val code = oracle.code.getOrElse(return Right((oracle, jsonArgs)))
+    val form = runForm(oracle, code).getOrElse(return Right((oracle, jsonArgs)))
+    val resolved = form.lookups.map { i =>
+      jsonArgs.lift(i).fold("null") { a =>
+        a.trim.toLongOption.filter(_ >= 0) match {
+          case None => return Left(CallResponse(success = false,
+            // the reference's message verbatim, typo included
+            // (mux_runner.go:58)
+            s"Unable to parse record id form parameter #$i: '$a'", None))
+          case Some(recId) =>
+            val rr = readRecord(recId)
+            if (rr.success && rr.record.nonEmpty) recordJson(rr.record.get)
+            else if (rr.msg == s"record $recId not found.") "null"
+            else return Left(CallResponse(success = false,
+              s"Unable to retrieve record $recId: ${rr.msg}", None))
+        }
       }
     }
-    if (resolved.isEmpty) return Right(oracle)
-    val patched = JsLang.patchRecordLookups(code, oracle.params, resolved)
-    compileFn(oracle.name, patched) match {
+    form.oracle match {
       case Left(err) => Left(CallResponse(success = false,
         s"Unable to patch JS code: $err", None))
-      case Right(o) => Right(o)
+      case Right(o) => Right((o, Seq.tabulate(form.arity)(i =>
+        jsonArgs.lift(i).getOrElse("null")) :+ resolved.mkString("[", ",", "]")))
     }
   }
 
-  /** mux_runner.go:39-156: resolve + patch record lookups, fan the oracle
-    * out as node-temporaries, run, gather, merge; per-node failures
-    * aggregate in the master's wire format and temporaries are deleted on
-    * every path. Nonconforming node responses (unparseable oracle id,
-    * missing payload) fold into the per-node error aggregate instead of
-    * escaping as raw exceptions.
+  /** mux_runner.go:39-156: resolve record lookups, then on every node
+    * concurrently create the oracle as a temporary, run it and delete it;
+    * gather and merge. Per-node failures aggregate in the master's wire
+    * format. Nonconforming node responses (unparseable oracle id, missing
+    * payload) fold into the per-node error aggregate instead of escaping
+    * as raw exceptions.
     */
   def run(oracleId: Long, jsonArgs: Seq[String]): CallResponse = {
     val oracle = oracles.read(oracleId) match {
@@ -571,71 +586,54 @@ final class SumFederation(
         s"oracle $oracleId not found.", None)
       case Right(o) => o
     }
-    // Each Run's temporary carries a name no other Run uses, so concurrent
-    // Runs of the same oracle and arguments never collide with a node's
-    // duplicate rule (same name + same code or body).
-    val distributed = resolveAndPatch(oracle, jsonArgs) match {
+    val (form, args) = resolve(oracle, jsonArgs) match {
       case Left(err) => return err
-      case Right(o)  => o.copy(name = s"${o.name}#run${runSeq.incrementAndGet()}")
+      case Right(fa) => fa
     }
-    val snapshot = listNodes()
-    // scatter concurrently (mux_runner.go:136 doParallel): each worker
-    // reports (its created temporary, its outcome) so cleanup never
-    // depends on shared mutation and a thrown exchange folds in as the
-    // reference's "Worker exception"
-    val scattered: Seq[(Option[(FedNode, Long)], Either[String, JValue])] =
-      doParallel(snapshot) { n =>
-        val created =
-          try Right(n.engine.createOracle(distributed))
-          catch { case e: Exception =>
-            Left(s"Worker exception: ${e.getMessage}")
-          }
-        created match {
-          case Left(msg) => (None, Left(msg))
-          case Right(or) if !or.success => (None, Left(or.msg))
-          case Right(or) => or.msg.toLongOption match {
-            case None => (None,
-              Left(s"unable to parse oracleId string '${or.msg}'"))
-            case Some(tempId) =>
-              val out =
-                try {
-                  val resp = n.engine.run(tempId, jsonArgs)
-                  if (!resp.success) Left(resp.msg)
-                  else resp.data match {
-                    case None =>
-                      Left(s"node ${n.id} returned an empty payload")
-                    case Some(env) =>
-                      Right(org.json4s.jackson.JsonMethods.parse(
-                        Payload.openString(env)))
-                  }
-                } catch { case e: Exception =>
-                  Left(s"Worker exception: ${e.getMessage}")
-                }
-              (Some((n, tempId)), out)
-          }
-        }
-      }
-    val temp = scattered.flatMap(_._1)
+    // Each Run's temporary carries a name no other Run uses, so concurrent
+    // Runs of the same oracle never collide with a node's duplicate rule
+    // (same name + same code or body).
+    val temp = form.copy(name = s"${oracle.name}#run${runSeq.incrementAndGet()}")
+    val outcomes = doParallel(listNodes())(runOnNode(_, temp, args))
+    val errs = outcomes.collect { case Left(m) => m }
+    if (errs.nonEmpty)
+      return CallResponse(success = false,
+        s"Errors from nodes: [${errs.mkString(", ")}]", None)
+    Merge.merge(outcomes.collect { case Right(v) => v }, oracle.merger) match {
+      case Left(msg) => CallResponse(success = false,
+        s"Unable to merge results from nodes: $msg", None)
+      case Right(v) => CallResponse(success = true, "",
+        Some(Payload.buildString(org.json4s.jackson.JsonMethods.compact(
+          org.json4s.jackson.JsonMethods.render(v)))))
+    }
+  }
+
+  /** One node's share of a Run, one chain of exchanges: create the
+    * temporary, run it, delete it. A thrown exchange folds in as the
+    * reference's "Worker exception"; the delete is best-effort like the
+    * reference's deferred warn-and-continue cleanup (mux_runner.go:94-101).
+    */
+  private def runOnNode(n: FedNode, temp: Oracle,
+      args: Seq[String]): Either[String, JValue] = {
+    val created =
+      try n.engine.createOracle(temp)
+      catch { case e: Exception => return Left(s"Worker exception: ${e.getMessage}") }
+    if (!created.success) return Left(created.msg)
+    val tempId = created.msg.toLongOption.getOrElse(
+      return Left(s"unable to parse oracleId string '${created.msg}'"))
     try {
-      val outcomes = scattered.map(_._2)
-      val errs = outcomes.collect { case Left(m) => m }
-      if (errs.nonEmpty)
-        return CallResponse(success = false,
-          s"Errors from nodes: [${errs.mkString(", ")}]", None)
-      val partials = outcomes.collect { case Right(v) => v }
-      Merge.merge(partials, oracle.merger) match {
-        case Left(msg) => CallResponse(success = false,
-          s"Unable to merge results from nodes: $msg", None)
-        case Right(v) => CallResponse(success = true, "",
-          Some(Payload.buildString(org.json4s.jackson.JsonMethods.compact(
-            org.json4s.jackson.JsonMethods.render(v)))))
+      val resp = n.engine.run(tempId, args)
+      if (!resp.success) Left(resp.msg)
+      else resp.data match {
+        case None => Left(s"node ${n.id} returned an empty payload")
+        case Some(env) =>
+          Right(org.json4s.jackson.JsonMethods.parse(Payload.openString(env)))
       }
-    } finally temp.foreach { case (n, id) =>
-      // best-effort like the reference's deferred warn-and-continue
-      // cleanup (mux_runner.go:94-101): one dead node must not strand
-      // the other nodes' temporaries
-      try n.engine.deleteOracle(id) catch { case e: Exception =>
-        log.warn(s"could not delete Run temporary oracle $id on node ${n.id}", e)
+    } catch { case e: Exception =>
+      Left(s"Worker exception: ${e.getMessage}")
+    } finally {
+      try n.engine.deleteOracle(tempId) catch { case e: Exception =>
+        log.warn(s"could not delete Run temporary oracle $tempId on node ${n.id}", e)
       }
     }
   }
@@ -644,11 +642,18 @@ final class SumFederation(
 object SumFederation {
   private val log = LoggerFactory.getLogger(classOf[SumFederation])
 
-  /** A resolved record as the master serialises it into patched code
+  /** A stored oracle's federated form: the bound program as compiled (or
+    * its compile error), the entry's record-lookup parameter positions and
+    * its parameter count.
+    */
+  private final case class RunForm(oracle: Either[String, Oracle],
+      lookups: Seq[Int], arity: Int)
+
+  /** A resolved record as the master sends it in a Run's record argument
     * (mux_runner.go:71 json.Marshal of the proto record): float data
     * widens to JSON numbers (exact — binary widening, and the node's
     * `records.New` narrows back with toFloat); meta strings JSON-escape
-    * through jackson, and the JS lexer's string unescape restores them.
+    * through jackson, and the node's JSON decode restores them.
     */
   private[graft] def recordJson(r: SumRecord): String = {
     import org.json4s.JsonDSL._

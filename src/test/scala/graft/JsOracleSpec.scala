@@ -1264,4 +1264,39 @@ function mergeSomethingButThrowup(results) { throw "apple cider"; }""")
     assert(reg.createJs("lbl", "function f() {} l: { break m; }") ===
       Left("SyntaxError: undefined label 'm'"))
   }
+
+  test("a nested label that reuses an enclosing label is a SyntaxError at create (ES5 12.12)") {
+    val reg = new OracleRegistry
+    assert(reg.createJs("dup", "function f() { a: { a: { break a; } } }") ===
+      Left("Line 1: Label 'a' has already been declared"))
+    assert(reg.createJs("dupLoop",
+      "function f() {}\nL1: for (;;) { if (1) { L1: while (true) break L1; } }") ===
+      Left("Line 2: Label 'L1' has already been declared"))
+    // sibling statements and a nested function body may reuse a label
+    pinBoth("""function f() {
+      var t = 0;
+      a: for (var i = 0; i < 3; i++) { t += i; if (i == 1) break a; }
+      a: { t += 10; break a; }
+      a: {
+        var g = function () { a: for (var j = 0; j < 2; j++) { t += 100; continue a; } };
+        g();
+      }
+      return [t];
+    }""")(Right("[211]"))
+  }
+
+  test("a write to a primitive base runs its right-hand side and is dropped; null and undefined throw (ES5 8.7.2)") {
+    pinBoth("""function f() {
+      var n = 0, s = 'str', x = 5, b = true;
+      s.p = (n += 1); x.p = (n += 1); b.p = (n += 1);
+      s[0] = (n += 1); x[2] = (n += 1); b['k'] = (n += 1);
+      s.length = 0; s.q += 1; x.r++;
+      return [n, s, typeof s.p, typeof x.p, typeof b.k, s[0], s.length, typeof x.r];
+    }""")(Right(
+      """[6,"str","undefined","undefined","undefined","s",3,"undefined"]"""))
+    pinBoth("function f() { var o = null; o.p = 1; }")(
+      Left("TypeError: cannot set property 'p' of object"))
+    pinBoth("function f() { var u; u[0] = 1; }")(
+      Left("TypeError: cannot set index of undefined"))
+  }
 }

@@ -155,6 +155,124 @@ class SumFederationSpec extends SparkSpec {
       bad.msg)
   }
 
+  test("a helper declared before the entry does not hide the entry's record lookups") {
+    val fed = new SumFederation
+    fed.addNode("a", engineWith(1 to 100))
+    fed.addNode("b", SumService(spark))
+    val code =
+      """var helper = function(x) { return x; };
+        |function findSimilar(id, threshold) {
+        |  var v = records.Find(id);
+        |  if (v.IsNull()) { return ctx.Error('Vector ' + id + ' not found.'); }
+        |  var all = records.AllBut(v);
+        |  var results = {};
+        |  for (var i = 0; i < all.length; i++) {
+        |    var s = helper(v.Cosine(all[i]));
+        |    if (s >= threshold) results['' + all[i].ID] = s;
+        |  }
+        |  return results;
+        |}""".stripMargin
+    val oracle = fed.oracles.createJs("findSimilar", code)
+      .fold(m => fail(s"compile failed: $m"), identity)
+    val resp = fed.run(oracle.id, Seq("42", "0.0"))
+    assert(resp.success, resp.msg)
+    val merged = org.json4s.jackson.JsonMethods.parse(
+      Payload.openString(resp.data.get)).values.asInstanceOf[Map[String, Any]]
+    assert(merged.keySet === (1 to 100).filter(_ != 42).map(_.toString).toSet)
+    fed.listNodes().foreach(n => assert(n.engine.nodeOracles().isEmpty))
+  }
+
+  test("an entry reading arguments and this answers as on one engine") {
+    val code =
+      """function probe(id, extra) {
+        |  var v = records.Find(id);
+        |  var seen = [];
+        |  for (var i = 0; i < arguments.length; i++) seen.push(arguments[i]);
+        |  return {n: arguments.length, seen: seen, self: typeof this,
+        |    id: v.ID, isNull: v.IsNull(), extra: extra};
+        |}
+        |function mergeFirst(ps) { return ps[0]; }""".stripMargin
+    val single = engineWith(1 to 10)
+    val singleId = single.createOracle("probe", code).msg.toLong
+    val fed = new SumFederation
+    fed.addNode("a", engineWith(1 to 5))
+    fed.addNode("b", engineWith(6 to 10))
+    val fedId = fed.oracles.createJs("probe", code)
+      .fold(m => fail(s"compile failed: $m"), identity).id
+    Seq(Seq("7", "\"x\""), Seq("7", "{\"k\": [1]}", "99", "not json"), Seq("7"),
+        Seq("3", ""), Seq(), Seq("11", "1")).foreach { args =>
+      val one = single.run(singleId, args)
+      val all = fed.run(fedId, args)
+      assert(one.success && all.success, s"$args: ${one.msg} / ${all.msg}")
+      assert(Payload.openString(all.data.get) === Payload.openString(one.data.get),
+        s"args $args")
+    }
+    fed.listNodes().foreach(n => assert(n.engine.nodeOracles().isEmpty))
+  }
+
+  test("an omitted lookup argument is the null record; a non-integer one keeps its message") {
+    val fed = new SumFederation
+    fed.addNode("a", engineWith(1 to 4))
+    fed.addNode("b", engineWith(5 to 8))
+    val oracle = fed.oracles.createJs("isNull",
+      "function isNull(id, k) { return records.Find(id).IsNull(); } " +
+        "function mergeAll(ps) { return ps; }")
+      .fold(m => fail(s"compile failed: $m"), identity)
+    val omitted = fed.run(oracle.id, Seq.empty)
+    assert(omitted.success, omitted.msg)
+    assert(Payload.openString(omitted.data.get) === "[true,true]")
+    val found = fed.run(oracle.id, Seq("6"))
+    assert(Payload.openString(found.data.get) === "[false,false]")
+    Seq("1.5", "-3", "\"6\"").foreach { a =>
+      assert(fed.run(oracle.id, Seq(a, "0")).msg ===
+        s"Unable to parse record id form parameter #0: '$a'")
+    }
+  }
+
+  test("after a first federated Run, further Runs compile nothing on the master or a node") {
+    import graft.oracle.OracleCompiler
+    import graft.service.SumGrpcServer
+    // node services without canonical oracles: a code-less oracle cannot
+    // cross the wire, so it would stay on its node
+    val nodes = Seq(1 to 20, 21 to 40).map { ids =>
+      val svc = new SumService(spark, graft.store.RecordStore.empty(spark),
+        new graft.oracle.OracleRegistry)
+      assert(svc.createRecordsWithId(ids.map(i =>
+        SumRecord(i.toLong, Array(i.toFloat, 1f), Map.empty))).success)
+      new SumGrpcServer(svc)
+    }
+    nodes.foreach(_.start())
+    val masterCompiles = new java.util.concurrent.atomic.AtomicInteger
+    val fed = new SumFederation((n, c) => {
+      masterCompiles.incrementAndGet()
+      OracleCompiler.compile(spark, n, c)
+    })
+    try {
+      nodes.foreach(n => assert(fed.addNode(s"127.0.0.1:${n.boundPort}").success))
+      val oracle = fed.createOracle("near",
+        "function near(id, k) { var v = records.Find(id); var out = {}; " +
+          "var all = records.AllBut(v); for (var i = 0; i < all.length; i++) " +
+          "if (v.Cosine(all[i]) > 0.9999) out['' + all[i].ID] = k; return out; }")
+      assert(oracle.success, oracle.msg)
+      val id = oracle.msg.toLong
+      val first = fed.run(id, Seq("3", "1"))
+      assert(first.success, first.msg)
+      val (compiles, hits, misses) =
+        (masterCompiles.get, OracleCompiler.jsCache.hits, OracleCompiler.jsCache.misses)
+      (1 to 3).foreach { i =>
+        val r = fed.run(id, Seq((3 + i * 10).toString, i.toString))
+        assert(r.success, r.msg)
+      }
+      assert(masterCompiles.get === compiles)
+      assert(OracleCompiler.jsCache.misses === misses)
+      assert(OracleCompiler.jsCache.hits === hits + 3 * nodes.size)
+      fed.listNodes().foreach(n => assert(n.engine.nodeOracles().isEmpty))
+    } finally {
+      fed.close()
+      nodes.foreach(_.stop())
+    }
+  }
+
   test("run folds nonconforming node responses into the error aggregate") {
     class StubEngine(idMsg: String, runResp: Long => CallResponse)
         extends NodeEngine {

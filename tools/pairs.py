@@ -1,23 +1,28 @@
 #!/usr/bin/env python3
 """Alternating parent/change benchmark pairs, scored by the claim rule.
 
-    python3 tools/pairs.py --parent <rev> --workload <w> --seeds a-b
+    python3 tools/pairs.py --parent <rev> --workload <w>[,<w>...] --seeds a-b
         [--seconds S] [--trace 0|1] [--workdir DIR]
 
 Exports `<rev>` with `git archive` into a scratch directory, then for each
-seed runs `perfbench/run.py` once on the parent tree and once on the
-current checkout (the change), alternating which side goes first. Each
-side builds and runs from its own tree, one benchmark run at a time. The
-CPU time the hypervisor stole during each run is read from /proc/stat
-deltas.
+workload and seed runs `perfbench/run.py` once on the parent tree and
+once on the current checkout (the change), alternating which side goes
+first. Each side builds and runs from its own tree, one benchmark run at
+a time. The CPU time the hypervisor stole during each run is read from
+/proc/stat deltas.
 
-For each end-to-end metric of BENCHMARK.json it prints the change's wins
-out of N pairs, both medians, the gap between them (positive when the
-change is better) and the parent's quartile spread (third minus first
-quartile) under both inclusive and exclusive quartiles. A gain is
-claimed when the change wins at least nine of ten pairs and the gap is
-larger than the parent's spread. A Markdown table of every pair follows.
-Do not edit the checkout while it runs: the change side rebuilds from it.
+For each workload and each end-to-end metric of BENCHMARK.json it prints
+the change's wins out of N pairs, both medians, the gap between them
+(positive when the change is better) and the parent's quartile spread
+(third minus first quartile) under both inclusive and exclusive
+quartiles. A gain is claimed when the change wins at least nine of ten
+pairs and the gap is larger than the parent's spread. The flags column
+says `worse` when the change's median is worse than the parent's, and
+adds `PAST BOUND` when it is worse by more than the metric's `bound` in
+BENCHMARK.json (a fraction of the parent's median), so one call checks a
+whole change against every listed workload. A Markdown table of every
+pair follows. Do not edit the checkout while it runs: the change side
+rebuilds from it.
 """
 
 import argparse
@@ -115,55 +120,52 @@ def score(metrics, pairs):
         rel = f" ({100 * gap / abs(mp):+.1f}%)" if mp else ""
         rows.append(f"| {name} | {wins}/{n} | {mp:.4g} | {mc:.4g} | "
                     f"{gap:+.4g}{rel} | {inc:.4g} | "
-                    f"{exc:.4g} | {claim(inc)} / {claim(exc)} |")
+                    f"{exc:.4g} | {claim(inc)} / {claim(exc)} | "
+                    f"{flags(gap, mp, m.get('bound'))} |")
     return rows
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--parent", required=True, help="git revision of the parent")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, help="a-b, inclusive")
-    bench = json.loads((ROOT / "BENCHMARK.json").read_text())
-    ap.add_argument("--seconds", type=float, default=bench["run_seconds"])
-    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--workdir", help="where the parent is exported (kept, "
-                    "so later calls reuse its build); default a temp dir")
-    args = ap.parse_args()
-    metrics = bench["per_layer" if args.trace else "end_to_end"]
+def flags(gap, parent_median, bound):
+    """`worse` for a change median worse than the parent's, plus `PAST
+    BOUND` when it is worse by more than `bound` times the parent's."""
+    if gap >= 0:
+        return ""
+    if bound is not None and -gap > bound * abs(parent_median):
+        return f"worse, PAST BOUND {bound:g}"
+    return "worse"
 
-    work = Path(args.workdir) if args.workdir else Path(
-        tempfile.mkdtemp(prefix="graft-pairs-"))
-    parent = work / "parent"
-    try:
-        sha = export(args.parent, parent)
-        print(f"parent {sha[:12]} in {parent}; change is {ROOT}", flush=True)
-        pairs, steals, lost = [], [], []
-        for i, seed in enumerate(seeds(args.seeds)):
-            sides = [parent, ROOT] if i % 2 == 0 else [ROOT, parent]
-            out = {t: run(t, args.workload, seed, args.seconds, args.trace)
-                   for t in sides}
-            p, c = out[parent], out[ROOT]
-            if p is None or c is None:
-                lost.append(seed)
-                continue
-            pairs.append((p, c))
-            steals.append((seed, p["steal"], c["steal"]))
-    finally:
-        if not args.workdir:
-            shutil.rmtree(work, ignore_errors=True)
+
+def pairs_for(workload, parent, args):
+    """Alternating parent/change runs of one workload: the complete pairs,
+    their steal and the seeds that lost a side."""
+    pairs, steals, lost = [], [], []
+    for i, seed in enumerate(seeds(args.seeds)):
+        sides = [parent, ROOT] if i % 2 == 0 else [ROOT, parent]
+        out = {t: run(t, workload, seed, args.seconds, args.trace)
+               for t in sides}
+        p, c = out[parent], out[ROOT]
+        if p is None or c is None:
+            lost.append(seed)
+            continue
+        pairs.append((p, c))
+        steals.append((seed, p["steal"], c["steal"]))
+    return pairs, steals, lost
+
+
+def report(workload, metrics, pairs, steals, lost, args):
     if not pairs:
-        print("no complete pair")
-        return 1
+        print(f"\n{workload}: no complete pair")
+        return
     bad = sum(not r["correct"] or r["failed"] for pc in pairs for r in pc)
-    print(f"\n{args.workload}, {len(pairs)} pairs, --seconds {args.seconds} "
+    print(f"\n{workload}, {len(pairs)} pairs, --seconds {args.seconds} "
           f"--trace {args.trace}; lost pairs {lost or 'none'}; runs with a "
           f"failed check: {bad}; steal "
           f"{100 * min(min(s[1:]) for s in steals):.2f}-"
           f"{100 * max(max(s[1:]) for s in steals):.2f}%\n")
     print("| metric | change wins | parent median | change median | gap | "
-          "parent spread (incl.) | parent spread (excl.) | claim incl. / excl. |")
-    print("|---|---|---|---|---|---|---|---|")
+          "parent spread (incl.) | parent spread (excl.) | "
+          "claim incl. / excl. | flags |")
+    print("|---|---|---|---|---|---|---|---|---|")
     print("\n".join(score(metrics, pairs)))
     names = [m["name"] for m in metrics]
     print("\n| seed | steal % parent / change | " + " | ".join(names) + " |")
@@ -172,7 +174,36 @@ def main():
         print(f"| {seed} | {100 * sp:.2f} / {100 * sc:.2f} | " + " | ".join(
             f"{p['metrics'][k]['value']:.4g} → {c['metrics'][k]['value']:.4g}"
             for k in names) + " |")
-    return 0
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", required=True, help="git revision of the parent")
+    ap.add_argument("--workload", required=True,
+                    help="a workload, or several separated by commas")
+    ap.add_argument("--seeds", required=True, help="a-b, inclusive")
+    bench = json.loads((ROOT / "BENCHMARK.json").read_text())
+    ap.add_argument("--seconds", type=float, default=bench["run_seconds"])
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--workdir", help="where the parent is exported (kept, "
+                    "so later calls reuse its build); default a temp dir")
+    args = ap.parse_args()
+    metrics = bench["per_layer" if args.trace else "end_to_end"]
+    workloads = [w for w in args.workload.split(",") if w]
+
+    work = Path(args.workdir) if args.workdir else Path(
+        tempfile.mkdtemp(prefix="graft-pairs-"))
+    parent = work / "parent"
+    try:
+        sha = export(args.parent, parent)
+        print(f"parent {sha[:12]} in {parent}; change is {ROOT}", flush=True)
+        results = [(w, pairs_for(w, parent, args)) for w in workloads]
+    finally:
+        if not args.workdir:
+            shutil.rmtree(work, ignore_errors=True)
+    for w, (pairs, steals, lost) in results:
+        report(w, metrics, pairs, steals, lost, args)
+    return 0 if all(r[0] for _, r in results) else 1
 
 
 if __name__ == "__main__":
