@@ -80,13 +80,16 @@ object Merge {
       case None => defaultMerger(results)
     }
 
-  /** The marshal error for a result JSON cannot carry: the first NaN or
-    * infinity anywhere in the tree fails like Go's encoding/json does on
-    * the reference node (service_test.go:677-684).
+  /** A Run result as wire JSON, compact, the one encoding every Run path
+    * answers with. A result JSON cannot carry fails with the marshal
+    * error: the first NaN or infinity anywhere in the tree fails like
+    * Go's encoding/json does on the reference node (service_test.go:677-684).
     */
-  def unsupportedValue(v: JValue): Option[String] =
+  def toWire(v: JValue): Either[String, String] =
     firstNonFinite(v).map(d => "json: unsupported value: " +
       (if (d.isNaN) "NaN" else if (d > 0) "+Inf" else "-Inf"))
+      .toLeft(org.json4s.jackson.JsonMethods.compact(
+        org.json4s.jackson.JsonMethods.render(v)))
 
   private def firstNonFinite(v: JValue): Option[Double] = v match {
     case JDouble(d) if d.isNaN || d.isInfinite => Some(d)

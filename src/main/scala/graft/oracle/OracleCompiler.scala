@@ -8,13 +8,13 @@ import graft.oracle.js.{JsLang, JsOracle}
   * service surfaces use.
   *
   * The reference stores JavaScript oracles (proto/sum.proto:95-99, otto
-  * VM); graft additionally accepts SQL. Code whose first token reads as a
-  * JS program (a function declaration — the only form the reference
-  * accepts, node/service/compiler.go:19-52 — or a leading comment/var
-  * that precedes one) compiles through [[JsOracle]];
-  * everything else is SQL ([[SqlOracle]]). Either way broken code
-  * rejects AT CREATE with the compile message, per the reference's
-  * CreateOracle contract.
+  * VM); graft additionally accepts SQL. Code that parses under the oracle
+  * grammar AND declares a top-level function — the acceptance set of the
+  * reference compiler, which takes any otto-legal program containing a
+  * function declaration (node/service/compiler.go:19-52) — compiles
+  * through [[JsOracle]]; everything else is SQL ([[SqlOracle]]). Either
+  * way broken code rejects AT CREATE with the compile message, per the
+  * reference's CreateOracle contract.
   */
 object OracleCompiler {
 
@@ -56,15 +56,6 @@ object OracleCompiler {
       }
     }
   }
-
-  /** JS if the whole text parses under the oracle grammar AND declares a
-    * top-level function — the acceptance set of the reference compiler,
-    * which takes any otto-legal program containing a function declaration
-    * (node/service/compiler.go:19-52) regardless of what statement opens
-    * it. SQL text never parses as a JS program with a function decl.
-    */
-  private[graft] def looksLikeJs(code: String): Boolean =
-    parseJs(code).exists(declaresFunction)
 
   private def parseJs(code: String): Option[Seq[JsLang.Stmt]] =
     try Some(JsLang.parse(code))

@@ -145,23 +145,21 @@ final class OracleRegistry {
 
   /** Master-style run: scatter the oracle to every partition ("node"),
     * gather per-partition partials, fold through the merge layer — the
-    * reference master's Run (master/mux_runner.go:82-155). Stored-JS
-    * oracles execute ON executors over partition-local record views, so
-    * the driver-pull cap never bounds them; oracles without JS code
-    * (Spark-native bodies — already distributed plans — and SQL oracles)
-    * run through [[run]].
+    * reference master's Run (master/mux_runner.go:82-155). A stored-JS
+    * oracle's compiled program executes ON executors over partition-local
+    * record views, so the driver-pull cap never bounds it; every other
+    * body (Spark-native bodies — already distributed plans — and SQL
+    * oracles) runs through [[run]].
     */
   def runDistributed(id: Long, store: RecordStore,
       jsonArgs: Seq[String]): Either[String, String] =
     read(id).flatMap { oracle =>
-      oracle.code.filter(OracleCompiler.looksLikeJs) match {
-        case None => run(id, store, jsonArgs)
-        case Some(code) =>
-          decodeArgs(oracle, jsonArgs).flatMap { decoded =>
-            graft.oracle.js.JsOracle.runDistributed(id, code, store, decoded)
-              .flatMap(merged => graft.oracle.Merge.unsupportedValue(merged)
-                .toLeft(JsonMethods.compact(JsonMethods.render(merged))))
-          }
+      oracle.body match {
+        case js: graft.oracle.js.JsOracle.Compiled =>
+          decodeArgs(oracle, jsonArgs)
+            .flatMap(graft.oracle.js.JsOracle.runDistributed(id, js, store, _))
+            .flatMap(graft.oracle.Merge.toWire)
+        case _ => run(id, store, jsonArgs)
       }
     }
 
@@ -179,9 +177,7 @@ final class OracleRegistry {
       val ctx = new OracleContext
       try {
         val result = oracle.body(ctx, store, decoded)
-        if (ctx.isError) Left(ctx.message)
-        else graft.oracle.Merge.unsupportedValue(result)
-          .toLeft(JsonMethods.compact(JsonMethods.render(result)))
+        if (ctx.isError) Left(ctx.message) else graft.oracle.Merge.toWire(result)
       } catch {
         case OracleRunError(msg)    => Left(msg)
         case OracleBudgetError(msg) => Left(msg)

@@ -787,7 +787,7 @@ object JsCompiler {
     * reference's oracles rely on (master/service_test.go:381 `result = {};`).
     */
   private final class GlobalRef(nm: String, val read: ENode) extends Ref {
-    def write(ip: JsInterp, f: Frame, v: JsVal): Unit = f.globals.assign(nm, v)
+    def write(ip: JsInterp, f: Frame, v: JsVal): Unit = f.globals.declare(nm, v)
   }
 
   private final class MemberRef(obj: ENode, nm: String) extends Ref {

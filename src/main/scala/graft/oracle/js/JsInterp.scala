@@ -786,24 +786,16 @@ object JsInterp {
   /** The global names of one run, keyed by name: the host objects and
     * builtins, the top level's `var`s and functions, and every name an
     * assignment to an undeclared identifier creates (non-strict ES5).
-    * Function-local names live in [[Frame]] slots instead.
+    * Function-local names live in [[Frame]] slots instead. A run's
+    * globals start as a copy of `initial`, which the run never writes.
     */
-  final class Env(val parent: Option[Env]) {
-    private val names = new java.util.HashMap[String, JsVal]
+  final class Env(initial: java.util.Map[String, JsVal] = java.util.Map.of()) {
+    private val names = new java.util.HashMap[String, JsVal](initial)
     def declare(nm: String, v: JsVal): Unit = { names.put(nm, v); () }
     def has(nm: String): Boolean = names.containsKey(nm)
     def lookup(nm: String): Option[JsVal] = Option(get(nm))
-    /** The value of `nm` here or in a parent; null when it is unbound. */
-    private[js] def get(nm: String): JsVal = {
-      val v = names.get(nm)
-      if (v != null || parent.isEmpty) v else parent.get.get(nm)
-    }
-    def assign(nm: String, v: JsVal): Unit = {
-      var e: Env = this
-      while (!e.names.containsKey(nm) && e.parent.isDefined) e = e.parent.get
-      e.names.put(nm, v) // unresolved lands in the root (global) frame
-      ()
-    }
+    /** The value of `nm`; null when it is unbound. */
+    private[js] def get(nm: String): JsVal = names.get(nm)
   }
 
   private[js] val True = JsBool(true)

@@ -27,12 +27,13 @@ import JsLang._
   * This is the same contract over [[JsInterp]]. The program compiles
   * once per oracle ([[JsCompiler]]: scopes resolved to frame slots, ES5
   * function-scoped `var`s), and every run, merger call and partition run
-  * executes that one immutable program over fresh frames: a fresh global
-  * environment gets the host objects, the top level runs again (top-level
-  * state therefore resets per run — the reference clones the
-  * compile-time VM per run, which resets it the same way; a top level of
-  * function declarations only just binds them), and the entry call's
-  * result is marshaled with Go's JSON conventions.
+  * executes that one immutable program over fresh frames: the globals
+  * start as a copy of one shared builtin table, with a fresh `Math` and
+  * the host objects, the top level runs again (top-level state therefore
+  * resets per run — the reference clones the compile-time VM per run,
+  * which resets it the same way; a top level of function declarations
+  * only just binds them), and the entry call's result is marshaled with
+  * Go's JSON conventions.
   *
   * A record reaches JS the way record.go wraps it: one small wrapper
   * object over the stored [[SumRecord]], with no copy of its data. The
@@ -72,13 +73,31 @@ object JsOracle {
     }
   }
 
-  /** A validated oracle. `program` is compiled from the AST once, where
-    * the oracle is compiled, and again in each Spark task that
+  /** A validated oracle, and the registry body of a JS oracle: applied,
+    * it binds the store + context as host globals and calls the entry
+    * function with the JSON args. `program` is compiled from the AST once,
+    * where the oracle is compiled, and again in each Spark task that
     * deserializes a copy ([[runDistributed]] ships the AST).
     */
-  private final case class Compiled(entry: String, params: Seq[String],
-      merger: Option[MergerDecl], ast: Seq[Stmt]) {
+  final class Compiled private[JsOracle] (val entry: String,
+      val params: Seq[String], private[JsOracle] val merger: Option[MergerDecl],
+      ast: Seq[Stmt])
+      extends ((OracleContext, RecordStore, Seq[JValue]) => JValue)
+      with Serializable {
     @transient lazy val program: JsProgram = JsCompiler.compile(ast)
+
+    def apply(ctx: OracleContext, store: RecordStore, args: Seq[JValue]): JValue = {
+      val interp = new JsInterp()
+      val env = globals()
+      env.declare("records", recordsHost(interp, store))
+      env.declare("ctx", ctxHost(ctx))
+      try {
+        val result = callEntry(interp, env, this, args)
+        if (ctx.isError) JNull else JsInterp.toJson(result)
+      } catch {
+        case JsFailure(m) => throw OracleRunError(m)
+      }
+    }
   }
 
   /** The `merge*` hook's name and its single declared parameter — the
@@ -107,11 +126,11 @@ object JsOracle {
         val merger = decls.drop(1)
           .find(f => f.name.startsWith("merge") && f.params.size == 1)
           .map(f => MergerDecl(f.name, f.params.head))
-        val c = Compiled(entry.name, entry.params, merger, program)
+        val c = new Compiled(entry.name, entry.params, merger, program)
         // Definition-time run: no host globals, exactly like the
         // reference's compile-time vm.Run (records/ctx are set per run) —
         // `function imok(){} imnot = not_defined + 1;` rejects HERE.
-        try c.program.run(new JsInterp(), baseEnv())
+        try c.program.run(new JsInterp(), globals())
         catch {
           case JsFailure(m) => return Left(m)
           case e: Exception => return Left(e.getMessage)
@@ -120,9 +139,9 @@ object JsOracle {
     }
   }
 
-  /** Compile to a registry [[Oracle]]: the body binds the store + context
-    * as host globals and calls the entry function with the JSON args; the
-    * merger (if declared) receives the array of partial results.
+  /** Compile to a registry [[Oracle]] whose body is the [[Compiled]]
+    * program; the merger (if declared) receives the array of partial
+    * results.
     */
   def compile(name: String, code: String): Either[String, Oracle] =
     parse(code).flatMap(compile(name, code, _))
@@ -130,26 +149,8 @@ object JsOracle {
   /** [[compile]] over the already parsed `program` of `code`. */
   def compile(name: String, code: String,
       program: Seq[Stmt]): Either[String, Oracle] =
-    compileSource(program).map { c =>
-      Oracle(
-        id = 0,
-        name = name,
-        params = c.params,
-        body = (ctx, store, args) => {
-          val interp = new JsInterp()
-          val env = baseEnv()
-          env.declare("records", recordsHost(interp, store))
-          env.declare("ctx", ctxHost(ctx))
-          try {
-            val result = callEntry(interp, env, c, args)
-            if (ctx.isError) JNull else JsInterp.toJson(result)
-          } catch {
-            case JsFailure(m) => throw OracleRunError(m)
-          }
-        },
-        merger = buildMerger(c),
-        code = Some(code))
-    }
+    compileSource(program).map(c =>
+      Oracle(0, name, c.params, c, buildMerger(c), Some(code)))
 
   /** One run of the entry on `env`, which holds the host globals: the
     * program re-executes (top-level state resets per run), the params bind
@@ -175,7 +176,7 @@ object JsOracle {
   private def buildMerger(c: Compiled): Option[Seq[JValue] => JValue] =
     c.merger.map { m => partials =>
       val interp = new JsInterp()
-      val env = baseEnv()
+      val env = globals()
       val ctx = new OracleContext
       val arr = new JsArr
       partials.foreach(p => arr.items += JsInterp.fromJson(p))
@@ -211,89 +212,83 @@ object JsOracle {
     * Per-node errors aggregate in the master's wire format:
     * "Errors from nodes: [error while running oracle <id>: <msg>, …]"
     * (master/mux_runner.go:120-151, pinned by service_test.go:660).
+    * `c` is the program the registry compiled; nothing is parsed here.
     */
-  def runDistributed(id: Long, code: String, store: RecordStore,
-      args: Seq[JValue]): Either[String, JValue] =
-    parse(code).flatMap(compileSource).flatMap { c =>
-      val argVals: Seq[JValue] =
-        c.params.indices.map(i => args.lift(i).getOrElse(JNull))
-      val spark = store.records.sparkSession
-      import spark.implicits._
-      val partials: Seq[(Boolean, String)] =
-        store.records.mapPartitions { it =>
-          val interp = new JsInterp()
-          val env = baseEnv()
-          val ctx = new OracleContext
-          // LAZY partition view: the partition materializes into executor
-          // heap only if the oracle actually uses random access
-          // (records.Find/All/AllBut — the reference node's all-in-memory
-          // shape, node/storage/records.go). A records.ForEach-only oracle
-          // streams the iterator directly, bounding memory at ONE record
-          // regardless of partition size.
-          var buffered: Vector[SumRecord] = null
-          var streamed = false
-          def all(): Seq[SumRecord] = {
-            if (buffered == null) {
-              if (streamed) throw OracleRunError(
-                "records.ForEach already consumed this partition's " +
-                  "stream; call Find/All/AllBut before ForEach, or use " +
-                  "ForEach exclusively")
-              buffered = it.toVector.sortBy(_.id)
-            }
-            buffered
+  def runDistributed(id: Long, c: Compiled, store: RecordStore,
+      args: Seq[JValue]): Either[String, JValue] = {
+    val argVals: Seq[JValue] =
+      c.params.indices.map(i => args.lift(i).getOrElse(JNull))
+    val spark = store.records.sparkSession
+    import spark.implicits._
+    val partials: Seq[(Boolean, String)] =
+      store.records.mapPartitions { it =>
+        val interp = new JsInterp()
+        val env = globals()
+        val ctx = new OracleContext
+        // LAZY partition view: the partition materializes into executor
+        // heap only if the oracle actually uses random access
+        // (records.Find/All/AllBut — the reference node's all-in-memory
+        // shape, node/storage/records.go). A records.ForEach-only oracle
+        // streams the iterator directly, bounding memory at ONE record
+        // regardless of partition size.
+        var buffered: Vector[SumRecord] = null
+        var streamed = false
+        def all(): Seq[SumRecord] = {
+          if (buffered == null) {
+            if (streamed) throw OracleRunError(
+              "records.ForEach already consumed this partition's " +
+                "stream; call Find/All/AllBut before ForEach, or use " +
+                "ForEach exclusively")
+            buffered = it.toVector.sortBy(_.id)
           }
-          def each(f: SumRecord => Unit): Unit =
-            if (buffered != null) buffered.foreach(f)
-            else if (streamed) throw OracleRunError(
-              "records.ForEach already consumed this partition's stream")
-            else { streamed = true; it.foreach(f) }
-          env.declare("records", seqRecordsHost(interp,
-            id => all().find(_.id == id), () => all(), Some(each)))
-          env.declare("ctx", ctxHost(ctx))
-          val out =
-            try {
-              val result = callEntry(interp, env, c, argVals)
-              if (ctx.isError) (false, ctx.message)
-              else {
-                val json = JsInterp.toJson(result)
-                graft.oracle.Merge.unsupportedValue(json) match {
-                  case Some(err) => (false, err)
-                  case None => (true, org.json4s.jackson.JsonMethods.compact(
-                    org.json4s.jackson.JsonMethods.render(json)))
-                }
-              }
-            } catch {
-              case JsFailure(m) => (false, m)
-              // Spark-internal failures must PROPAGATE: the partition
-              // iterator is a shuffle read, and a FetchFailedException
-              // thrown while the oracle consumes it is Spark's stage-retry
-              // signal — reporting it as a per-node oracle error would
-              // turn a transient, recoverable shuffle failure into a bogus
-              // "Errors from nodes" query failure (harmless in local mode,
-              // wrong on any cluster).
-              case e if e.getClass.getName.startsWith("org.apache.spark") =>
-                throw e
-              // A defect in the interpreter/host layer (e.g. an
-              // unanticipated java.time edge) must surface as the
-              // reference's per-node error, not fail the Spark task with
-              // a raw executor exception (master/mux_runner.go:120-151
-              // wraps ANY node error the same way).
-              case scala.util.control.NonFatal(e) =>
-                (false, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
-            }
-          Iterator.single(out)
-        }.collect().toSeq
-      val errors = partials.collect { case (false, m) => m }
-      if (errors.nonEmpty)
-        Left("Errors from nodes: [" +
-          errors.map(m => s"error while running oracle $id: $m")
-            .mkString(", ") + "]")
-      else {
-        val vals = partials.map { case (_, s) =>
-          org.json4s.jackson.JsonMethods.parse(s) }
-        graft.oracle.Merge.merge(vals, buildMerger(c))
-      }
+          buffered
+        }
+        def each(f: SumRecord => Unit): Unit =
+          if (buffered != null) buffered.foreach(f)
+          else if (streamed) throw OracleRunError(
+            "records.ForEach already consumed this partition's stream")
+          else { streamed = true; it.foreach(f) }
+        env.declare("records", seqRecordsHost(interp,
+          id => all().find(_.id == id), () => all(), Some(each)))
+        env.declare("ctx", ctxHost(ctx))
+        val out =
+          try {
+            val result = callEntry(interp, env, c, argVals)
+            if (ctx.isError) (false, ctx.message)
+            else graft.oracle.Merge.toWire(JsInterp.toJson(result))
+              .fold((false, _), (true, _))
+          } catch {
+            case JsFailure(m) => (false, m)
+            // Spark-internal failures must PROPAGATE: the partition
+            // iterator is a shuffle read, and a FetchFailedException
+            // thrown while the oracle consumes it is Spark's stage-retry
+            // signal — reporting it as a per-node oracle error would
+            // turn a transient, recoverable shuffle failure into a bogus
+            // "Errors from nodes" query failure (harmless in local mode,
+            // wrong on any cluster).
+            case e if e.getClass.getName.startsWith("org.apache.spark") =>
+              throw e
+            // A defect in the interpreter/host layer (e.g. an
+            // unanticipated java.time edge) must surface as the
+            // reference's per-node error, not fail the Spark task with
+            // a raw executor exception (master/mux_runner.go:120-151
+            // wraps ANY node error the same way).
+            case scala.util.control.NonFatal(e) =>
+              (false, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
+          }
+        Iterator.single(out)
+      }.collect().toSeq
+    val errors = partials.collect { case (false, m) => m }
+    if (errors.nonEmpty)
+      Left("Errors from nodes: [" +
+        errors.map(m => s"error while running oracle $id: $m")
+          .mkString(", ") + "]")
+    else {
+      val vals = partials.map { case (_, s) =>
+        org.json4s.jackson.JsonMethods.parse(s) }
+      graft.oracle.Merge.merge(vals, buildMerger(c))
     }
+  }
 
   // ----------------------------------------------------------- host: ctx
   private def ctxHost(ctx: OracleContext): JsHost =
@@ -541,43 +536,55 @@ object JsOracle {
     }).asJava)
 
   // ------------------------------------------------------------- globals
-  /** The globals every VM gets: Math, and the handful of ES5 global
-    * functions small oracles reach for.
+  /** The globals every VM gets: the shared builtins and a fresh `Math`,
+    * whose `random` is seeded 42 on each run, so runs are deterministic.
     */
-  private def baseEnv(): Env = {
-    val env = new Env(None)
-    val rnd = new java.util.Random(42) // deterministic Math.random
-    def n1(name: String)(f: Double => Double): (String, Seq[JsVal] => JsVal) =
-      name -> { args => JsNum(f(toNum(args.headOption.getOrElse(JsUndef)))) }
+  private def globals(): Env = {
+    val env = new Env(Builtins)
+    val rnd = new java.util.Random(42)
     env.declare("Math", new JsHost("Math",
-      methods = Map(
-        n1("sqrt")(math.sqrt), n1("abs")(math.abs),
-        n1("floor")(math.floor), n1("ceil")(math.ceil),
-        n1("round")(JsInterp.round),
-        n1("exp")(math.exp), n1("log")(math.log),
-        n1("sin")(math.sin), n1("cos")(math.cos), n1("tan")(math.tan),
-        n1("asin")(math.asin), n1("acos")(math.acos), n1("atan")(math.atan),
-        "atan2" -> { args =>
-          JsNum(math.atan2(toNum(args.head), toNum(args(1)))) },
-        "pow" -> { args =>
-          JsNum(math.pow(toNum(args.head), toNum(args(1)))) },
-        // java.lang.Math's min/max: NaN if any argument is NaN, and
-        // -0 below +0 (ES5 15.8.2.11-12)
-        "min" -> { args =>
-          JsNum(args.map(toNum).foldLeft(Double.PositiveInfinity)(math.min)) },
-        "max" -> { args =>
-          JsNum(args.map(toNum).foldLeft(Double.NegativeInfinity)(math.max)) },
-        "random" -> { _ => JsNum(rnd.nextDouble()) }),
-      props = Map(
-        "PI" -> (() => JsNum(math.Pi)),
-        "E"  -> (() => JsNum(math.E)),
-        "LN2"     -> (() => JsNum(math.log(2))),
-        "LN10"    -> (() => JsNum(math.log(10))),
-        "LOG2E"   -> (() => JsNum(1.0 / math.log(2))),
-        "LOG10E"  -> (() => JsNum(1.0 / math.log(10))),
-        "SQRT2"   -> (() => JsNum(math.sqrt(2))),
-        "SQRT1_2" -> (() => JsNum(math.sqrt(0.5))))))
-    env.declare("JSON", new JsHost("JSON", Map(
+      MathMethods + ("random" -> (_ => JsNum(rnd.nextDouble()))), MathProps))
+    env
+  }
+
+  private def n1(name: String)(f: Double => Double): (String, Seq[JsVal] => JsVal) =
+    name -> { args => JsNum(f(toNum(args.headOption.getOrElse(JsUndef)))) }
+
+  private val MathMethods: Map[String, Seq[JsVal] => JsVal] = Map(
+    n1("sqrt")(math.sqrt), n1("abs")(math.abs),
+    n1("floor")(math.floor), n1("ceil")(math.ceil),
+    n1("round")(JsInterp.round),
+    n1("exp")(math.exp), n1("log")(math.log),
+    n1("sin")(math.sin), n1("cos")(math.cos), n1("tan")(math.tan),
+    n1("asin")(math.asin), n1("acos")(math.acos), n1("atan")(math.atan),
+    "atan2" -> { args =>
+      JsNum(math.atan2(toNum(args.head), toNum(args(1)))) },
+    "pow" -> { args =>
+      JsNum(math.pow(toNum(args.head), toNum(args(1)))) },
+    // java.lang.Math's min/max: NaN if any argument is NaN, and
+    // -0 below +0 (ES5 15.8.2.11-12)
+    "min" -> { args =>
+      JsNum(args.map(toNum).foldLeft(Double.PositiveInfinity)(math.min)) },
+    "max" -> { args =>
+      JsNum(args.map(toNum).foldLeft(Double.NegativeInfinity)(math.max)) })
+
+  private val MathProps: Map[String, () => JsVal] = Map(
+    "PI" -> (() => JsNum(math.Pi)),
+    "E"  -> (() => JsNum(math.E)),
+    "LN2"     -> (() => JsNum(math.log(2))),
+    "LN10"    -> (() => JsNum(math.log(10))),
+    "LOG2E"   -> (() => JsNum(1.0 / math.log(2))),
+    "LOG10E"  -> (() => JsNum(1.0 / math.log(10))),
+    "SQRT2"   -> (() => JsNum(math.sqrt(2))),
+    "SQRT1_2" -> (() => JsNum(math.sqrt(0.5))))
+
+  /** Every builtin global but `Math`, built once and shared by every run
+    * and thread: each run's globals start as a copy, and JS cannot write
+    * into a [[JsNative]] or a [[JsHost]].
+    */
+  private val Builtins: java.util.Map[String, JsVal] = {
+    val env = new java.util.HashMap[String, JsVal]
+    env.put("JSON", new JsHost("JSON", Map(
       "parse" -> { args =>
         val raw = toStr(args.headOption.getOrElse(JsUndef))
         try JsInterp.fromJson(org.json4s.jackson.JsonMethods.parse(raw))
@@ -598,7 +605,7 @@ object JsOracle {
         JsInterp.jsonStringify(args.headOption.getOrElse(JsUndef), indent)
           .map(JsStr(_)).getOrElse(JsUndef)
       })))
-    env.declare("Object", new JsHost("Object", Map(
+    env.put("Object", new JsHost("Object", Map(
       "keys" -> { args =>
         val a = new JsArr
         args.headOption match {
@@ -670,13 +677,13 @@ object JsOracle {
             throw OracleRunError("URIError: URI malformed") }
         JsStr(out.toString)
       })
-    env.declare("encodeURIComponent", uriEncode("encodeURIComponent", uriMark))
-    env.declare("encodeURI", uriEncode("encodeURI", uriMark + uriReserved))
-    env.declare("decodeURIComponent", uriDecode("decodeURIComponent", ""))
-    env.declare("decodeURI", uriDecode("decodeURI", uriReserved))
-    env.declare("isNaN", new JsNative("isNaN", 1,
+    env.put("encodeURIComponent", uriEncode("encodeURIComponent", uriMark))
+    env.put("encodeURI", uriEncode("encodeURI", uriMark + uriReserved))
+    env.put("decodeURIComponent", uriDecode("decodeURIComponent", ""))
+    env.put("decodeURI", uriDecode("decodeURI", uriReserved))
+    env.put("isNaN", new JsNative("isNaN", 1,
       args => JsBool(toNum(args.headOption.getOrElse(JsUndef)).isNaN)))
-    env.declare("isFinite", new JsNative("isFinite", 1, { args =>
+    env.put("isFinite", new JsNative("isFinite", 1, { args =>
       val d = toNum(args.headOption.getOrElse(JsUndef))
       JsBool(!d.isNaN && !d.isInfinite)
     }))
@@ -685,19 +692,19 @@ object JsOracle {
     // `Array(1,2)`, `Boolean(v)`) and `instanceof X` work too.
     Seq("Error", "TypeError", "RangeError", "SyntaxError",
         "ReferenceError", "EvalError", "URIError").foreach { nm =>
-      env.declare(nm, new JsNative(nm, 1, args =>
+      env.put(nm, new JsNative(nm, 1, args =>
         JsInterp.errorObj(nm, args.headOption.map(toStr).getOrElse(""))))
     }
-    env.declare("Array", new JsNative("Array", -1,
+    env.put("Array", new JsNative("Array", -1,
       args => JsInterp.newBuiltin("Array", args),
       statics = Map("isArray" -> new JsNative("isArray", 1,
         args => JsBool(args.headOption.exists(_.isInstanceOf[JsArr]))))))
-    env.declare("Boolean", new JsNative("Boolean", 1,
+    env.put("Boolean", new JsNative("Boolean", 1,
       args => JsBool(JsInterp.truthy(args.headOption.getOrElse(JsUndef)))))
     // `new Date(...)` is interpreter-special-cased; this binding carries
     // the statics, `instanceof Date`, and the ES5 plain-call form (which
     // ignores its arguments and returns the current time as a string)
-    env.declare("Date", new JsNative("Date", -1,
+    env.put("Date", new JsNative("Date", -1,
       _ => JsStr(JsInterp.toStr(
         new JsDate(System.currentTimeMillis.toDouble))),
       statics = Map(
@@ -708,13 +715,13 @@ object JsOracle {
             JsInterp.toStr(args.headOption.getOrElse(JsUndef))))),
         "UTC" -> new JsNative("UTC", -1, args =>
           JsNum(JsInterp.dateFromFields(args.map(JsInterp.toNum)))))))
-    env.declare("RegExp", new JsNative("RegExp", 2, args =>
+    env.put("RegExp", new JsNative("RegExp", 2, args =>
       args.headOption match {
         case Some(re: JsRegex) => re // RegExp(re) returns it unchanged
         case other => JsInterp.mkRegex(other.map(toStr).getOrElse(""),
           args.lift(1).map(toStr).getOrElse(""))
       }))
-    env.declare("parseInt", new JsNative("parseInt", 2, { args =>
+    env.put("parseInt", new JsNative("parseInt", 2, { args =>
       // ES5 15.1.2.2: optional sign only at position 0, then an optional
       // 0x/0X prefix (radix absent or 16) switching to hex, then the
       // longest digit prefix valid in the radix; empty -> NaN.
@@ -738,16 +745,19 @@ object JsOracle {
         JsNum(sign * acc)
       }
     }))
-    env.declare("parseFloat", new JsNative("parseFloat", 1, { args =>
+    env.put("parseFloat", new JsNative("parseFloat", 1, { args =>
+      // ES5 15.1.2.3: the longest StrDecimalLiteral prefix, which may be
+      // a signed Infinity
       val s = toStr(args.headOption.getOrElse(JsUndef)).trim
-      val m = "^[+-]?(\\d+(\\.\\d*)?|\\.\\d+)([eE][+-]?\\d+)?".r.findFirstIn(s)
+      val m = "^[+-]?(Infinity|(\\d+(\\.\\d*)?|\\.\\d+)([eE][+-]?\\d+)?)".r.findFirstIn(s)
       JsNum(m.map(_.toDouble).getOrElse(Double.NaN))
     }))
-    env.declare("String", new JsNative("String", 1,
+    env.put("String", new JsNative("String", 1,
       args => JsStr(args.headOption.map(toStr).getOrElse("")),
       statics = Map("fromCharCode" -> new JsNative("fromCharCode", -1,
-        args => JsStr(args.map(v => toNum(v).toChar).mkString)))))
-    env.declare("Number", new JsNative("Number", 1,
+        // ES5 15.5.3.2: each code unit is ToUint16 of its argument
+        args => JsStr(args.map(v => (JsInterp.toInt32(v) & 0xFFFF).toChar).mkString)))))
+    env.put("Number", new JsNative("Number", 1,
       args => JsNum(args.headOption.map(toNum).getOrElse(0.0)),
       statics = Map(
         "MAX_VALUE" -> JsNum(Double.MaxValue),
@@ -755,6 +765,6 @@ object JsOracle {
         "POSITIVE_INFINITY" -> JsNum(Double.PositiveInfinity),
         "NEGATIVE_INFINITY" -> JsNum(Double.NegativeInfinity),
         "NaN" -> JsNum(Double.NaN))))
-    env
+    java.util.Map.copyOf(env)
   }
 }

@@ -602,9 +602,8 @@ final class SumFederation(
     Merge.merge(outcomes.collect { case Right(v) => v }, oracle.merger) match {
       case Left(msg) => CallResponse(success = false,
         s"Unable to merge results from nodes: $msg", None)
-      case Right(v) => CallResponse(success = true, "",
-        Some(Payload.buildString(org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(v)))))
+      case Right(v) => Merge.toWire(v).fold(CallResponse(success = false, _, None),
+        json => CallResponse(success = true, "", Some(Payload.buildString(json))))
     }
   }
 

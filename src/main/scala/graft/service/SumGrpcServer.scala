@@ -215,21 +215,25 @@ object SumProto {
     "ListNodes" -> ("Empty", "NodeResponse"),
     "DeleteNode" -> ("ById", "NodeResponse"))
 
-  private val allShapes: Map[String, (String, (String, String))] =
-    (rpcShapes.map { case (rpc, s) => rpc -> ("sum.SumService", s) } ++
-      internalRpcShapes.map { case (rpc, s) =>
-        rpc -> ("sum.SumInternalService", s) } ++
-      masterRpcShapes.map { case (rpc, s) =>
-        rpc -> ("sum.SumMasterService", s) }).toMap
+  /** The method descriptor of every RPC, built once: the server and every
+    * client call share this table.
+    */
+  private val methodDescriptors
+      : Map[String, MethodDescriptor[DynamicMessage, DynamicMessage]] =
+    Seq("sum.SumService" -> rpcShapes,
+        "sum.SumInternalService" -> internalRpcShapes,
+        "sum.SumMasterService" -> masterRpcShapes).flatMap { case (svc, shapes) =>
+      shapes.map { case (rpc, (in, out)) =>
+        rpc -> MethodDescriptor.newBuilder(marshaller(descriptor(in)),
+            marshaller(descriptor(out)))
+          .setType(MethodDescriptor.MethodType.UNARY)
+          .setFullMethodName(MethodDescriptor.generateFullMethodName(svc, rpc))
+          .build()
+      }
+    }.toMap
 
   def methodDescriptor(rpc: String)
-      : MethodDescriptor[DynamicMessage, DynamicMessage] = {
-    val (svc, (in, out)) = allShapes(rpc)
-    MethodDescriptor.newBuilder(marshaller(descriptor(in)), marshaller(descriptor(out)))
-      .setType(MethodDescriptor.MethodType.UNARY)
-      .setFullMethodName(MethodDescriptor.generateFullMethodName(svc, rpc))
-      .build()
-  }
+      : MethodDescriptor[DynamicMessage, DynamicMessage] = methodDescriptors(rpc)
 
   private def marshaller(d: Descriptors.Descriptor)
       : MethodDescriptor.Marshaller[DynamicMessage] =

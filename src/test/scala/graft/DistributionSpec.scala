@@ -22,6 +22,13 @@ class DistributionSpec extends SparkSpec {
         Map("name" -> s"rec$i"))
     })
 
+  /** The program the registry would hold for `code`. */
+  private def compiled(code: String): JsOracle.Compiled =
+    JsOracle.compile("t", code).map(_.body) match {
+      case Right(c: JsOracle.Compiled) => c
+      case other => fail(s"compile failed: $other")
+    }
+
   test("stored-JS oracle runs distributed: entry partials are produced ON " +
       "executors, folded by mergeNodesResults (master/mux_runner.go:82-155)") {
     import graft.oracle.OracleRegistry
@@ -310,7 +317,7 @@ function outOfRange() {
     try {
       // JS Math.round is floor(x + 0.5)
       val want = keyedSums(store)(r => Seq(1.0, math.floor(r.data(0).toDouble * 100 + 0.5)))
-      assert(JsOracle.runDistributed(1, code, store, Nil) === Right(want))
+      assert(JsOracle.runDistributed(1, compiled(code), store, Nil) === Right(want))
     } finally store.close()
   }
 
@@ -333,7 +340,7 @@ function outOfRange() {
         if (r.data(0).toDouble > 5) 1.0 else 0.0,
         math.floor(r.data(1).toDouble / 2),
         math.min(r.data.length, 2).toDouble))
-      assert(JsOracle.runDistributed(1, code, store, Nil) === Right(want))
+      assert(JsOracle.runDistributed(1, compiled(code), store, Nil) === Right(want))
     } finally store.close()
   }
 
@@ -352,7 +359,7 @@ function outOfRange() {
     try {
       val failing = partitions(store).count(_.nonEmpty)
       assert(failing > 0)
-      assert(JsOracle.runDistributed(1, code, store, Nil) === Left(
+      assert(JsOracle.runDistributed(1, compiled(code), store, Nil) === Left(
         Seq.fill(failing)("error while running oracle 1: index 7 out of range")
           .mkString("Errors from nodes: [", ", ", "]")))
     } finally store.close()
@@ -383,7 +390,7 @@ function outOfRange() {
         }
       }.collectFirst { case Some(m) => m }
       assert(conflict.isDefined) // 97 records of 4 types over 16 partitions
-      assert(JsOracle.runDistributed(1, code, store, Nil) === Left(conflict.get))
+      assert(JsOracle.runDistributed(1, compiled(code), store, Nil) === Left(conflict.get))
     } finally store.close()
   }
 

@@ -507,18 +507,18 @@ function mapOfRecordNames() {
   }
 
   test("service-surface dispatch routes JS to the interpreter, SQL to the compiler") {
-    assert(OracleCompiler.looksLikeJs("function f(){}"))
-    assert(OracleCompiler.looksLikeJs("// entry\nfunction f(){}"))
+    def isJs(code: String): Boolean = OracleCompiler.compile(spark, "d", code)
+      .exists(_.body.isInstanceOf[graft.oracle.js.JsOracle.Compiled])
+    assert(isJs("function f(){}"))
+    assert(isJs("// entry\nfunction f(){}"))
     // the reference accepts ANY otto-legal program containing a function
     // declaration, regardless of the opening statement
     // (node/service/compiler.go:19-52)
-    assert(OracleCompiler.looksLikeJs(
-      "var limit = 10;\nfunction f(){ return limit; }"))
-    assert(OracleCompiler.looksLikeJs(
-      "if (true) { }\nfunction f(){ return 1; }"))
+    assert(isJs("var limit = 10;\nfunction f(){ return limit; }"))
+    assert(isJs("if (true) { }\nfunction f(){ return 1; }"))
     // an identifier merely STARTING with "function" is not a declaration
-    assert(!OracleCompiler.looksLikeJs("SELECT functions FROM t"))
-    assert(!OracleCompiler.looksLikeJs("SELECT 1 AS one"))
+    assert(!isJs("SELECT functions FROM t"))
+    assert(!isJs("SELECT 1 AS one"))
     val viaDispatch = OracleCompiler.compile(spark, "js",
       "function one(){ return 1; }").fold(m => fail(m), identity)
     val reg = new OracleRegistry
@@ -1168,12 +1168,12 @@ function mergeSomethingButThrowup(results) { throw "apple cider"; }""")
     val prog = "var t = 0; for (var i = 0; i < 1000; i++) t += i;"
     val tight = new JsInterp(maxSteps = 500)
     val e = intercept[OracleBudgetError] {
-      tight.exec(JsLang.parse(prog), new JsInterp.Env(None))
+      tight.exec(JsLang.parse(prog), new JsInterp.Env())
     }
     assert(e.msg === "oracle exceeded the 500-step budget")
     val granted = new JsInterp(maxSteps = 500)
     granted.grantSteps(1000000L)
-    granted.exec(JsLang.parse(prog), new JsInterp.Env(None)) // completes
+    granted.exec(JsLang.parse(prog), new JsInterp.Env()) // completes
   }
 
   test("step accounting: each program completes at its pinned budget, not one step below") {
@@ -1201,9 +1201,9 @@ function mergeSomethingButThrowup(results) { throw "apple cider"; }""")
           } catch (e) { out += e; } finally { out++; }
         }""")
     pinned.foreach { case (n, prog) =>
-      new JsInterp(maxSteps = n).exec(JsLang.parse(prog), new JsInterp.Env(None))
+      new JsInterp(maxSteps = n).exec(JsLang.parse(prog), new JsInterp.Env())
       val e = intercept[OracleBudgetError] {
-        new JsInterp(maxSteps = n - 1).exec(JsLang.parse(prog), new JsInterp.Env(None))
+        new JsInterp(maxSteps = n - 1).exec(JsLang.parse(prog), new JsInterp.Env())
       }
       assert(e.msg === s"oracle exceeded the ${n - 1}-step budget")
     }
@@ -1298,5 +1298,64 @@ function mergeSomethingButThrowup(results) { throw "apple cider"; }""")
       Left("TypeError: cannot set property 'p' of object"))
     pinBoth("function f() { var u; u[0] = 1; }")(
       Left("TypeError: cannot set index of undefined"))
+  }
+
+  test("parseFloat reads a signed Infinity prefix and fromCharCode applies ToUint16 (ES5 15.1.2.3, 15.5.3.2)") {
+    pinBoth("""function f() {
+      return [parseFloat('Infinity') === Infinity, parseFloat('  -Infinity1') === -Infinity,
+        parseFloat('+Infinityx') === Infinity, isNaN(parseFloat('Inf')),
+        isNaN(parseFloat('infinity')), parseFloat('-1.5e2x'),
+        String.fromCharCode(1e10).charCodeAt(0), String.fromCharCode(65601, -1).charCodeAt(1),
+        String.fromCharCode(65.9, 72), String.fromCharCode(NaN).charCodeAt(0)];
+    }""")(Right("""[true,true,true,true,true,-150,58368,65535,"AH",0]"""))
+  }
+
+  test("the shared builtins: a run that reassigns parseInt, JSON and Math leaves the next run's intact") {
+    val use = """function use() {
+      return [parseInt('42'), JSON.stringify({a: [1]}), Math.floor(2.5), Math.max(1, 3)];
+    }"""
+    val normal = Right("""[42,"{\"a\":[1]}",2,3]""")
+    pinBoth(use)(normal)
+    // at top level: the top level runs first on every run, so the entry
+    // sees its own writes
+    pinBoth("""parseInt = null; JSON = 'j'; Math = 0;
+      function clobber() { return [parseInt, JSON, Math]; }""")(Right("""[null,"j",0]"""))
+    pinBoth(use)(normal)
+    // inside the entry, run after run
+    val inEntry = """function f() {
+      var r = [parseInt('7'), JSON.parse('[1]')[0], Math.abs(-2)];
+      parseInt = 0; JSON = 0; Math = 0;
+      return r.concat([parseInt, JSON, Math]);
+    }"""
+    pinBoth(inEntry)(Right("[7,1,2,0,0,0]"))
+    pinBoth(inEntry)(Right("[7,1,2,0,0,0]"))
+    pinBoth(use)(normal)
+    // a builtin takes no writes of its own
+    pinBoth("function f() { Math.floor = null; }")(
+      Left("TypeError: cannot set property 'floor' of object"))
+  }
+
+  test("Math.random starts from Random(42) on every run, on two threads at once") {
+    val rnd = new java.util.Random(42)
+    val want = JArray(List.fill(3)(JDouble(rnd.nextDouble())))
+    val code = "function r() { return [Math.random(), Math.random(), Math.random()]; }"
+    val reg = new OracleRegistry
+    val o = reg.createJs("r", code).fold(m => fail(s"compile failed: $m"), identity)
+    val shard = store.repartitioned(1)
+    def race(runs: Int)(run: => Either[String, String]): Unit = {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val outs = Seq.fill(2)(pool.submit(() => {
+          start.await()
+          Seq.fill(runs)(run)
+        }))
+        start.countDown()
+        outs.flatMap(_.get()).foreach(out =>
+          assert(out.map(JsonMethods.parse(_)) === Right(want)))
+      } finally pool.shutdown()
+    }
+    race(200)(reg.run(o.id, store, Nil))
+    race(3)(reg.runDistributed(o.id, shard, Nil))
   }
 }

@@ -77,6 +77,22 @@ class SumFederationSpec extends SparkSpec {
     fed.listNodes().foreach(n => assert(n.engine.nodeOracles().isEmpty))
   }
 
+  test("a merger returning NaN or an infinity fails the Run with the marshal error") {
+    val fed = new SumFederation
+    fed.addNode("a", engineWith(1 to 10))
+    fed.addNode("b", engineWith(11 to 20))
+    Seq("0 / 0" -> "NaN", "1 / 0" -> "+Inf", "-1 / 0" -> "-Inf").foreach {
+      case (expr, shown) =>
+        val oracle = fed.oracles.createJs(s"nonFinite$shown",
+          s"function count() { return records.All().length; }\n" +
+            s"function mergeBad(partials) { return $expr; }")
+          .fold(m => fail(s"compile failed: $m"), identity)
+        val resp = fed.run(oracle.id, Seq.empty)
+        assert(!resp.success && resp.msg === s"json: unsupported value: $shown")
+        assert(resp.data.isEmpty)
+    }
+  }
+
   test("distributed Run: default merger unions maps; node errors aggregate in wire format") {
     val fed = new SumFederation
     fed.addNode("a", engineWith(1 to 3))

@@ -21,7 +21,9 @@ says `worse` when the change's median is worse than the parent's, and
 adds `PAST BOUND` when it is worse by more than the metric's `bound` in
 BENCHMARK.json (a fraction of the parent's median), so one call checks a
 whole change against every listed workload. A Markdown table of every
-pair follows. Do not edit the checkout while it runs: the change side
+pair follows. The header also gives the lines the checkout adds to and
+deletes from `src/main` against the parent, and the net change (`git diff
+--numstat`; a new file counts once it is in the index). Do not edit the checkout while it runs: the change side
 rebuilds from it.
 """
 
@@ -71,6 +73,20 @@ def export(rev, dest):
         raise SystemExit(f"git archive {sha} failed")
     mark.write_text(sha)
     return sha
+
+
+def src_main_lines(sha):
+    """Lines added to and deleted from `src/main` in the checkout against
+    `sha`."""
+    out = subprocess.run(["git", "diff", "--numstat", sha, "--", "src/main"],
+                         cwd=ROOT, check=True, capture_output=True,
+                         text=True).stdout
+    added = deleted = 0
+    for line in out.splitlines():
+        a, d, _ = line.split("\t", 2)
+        if a != "-":  # a binary file has no line counts
+            added, deleted = added + int(a), deleted + int(d)
+    return added, deleted
 
 
 def run(tree, workload, seed, seconds, trace):
@@ -196,7 +212,10 @@ def main():
     parent = work / "parent"
     try:
         sha = export(args.parent, parent)
-        print(f"parent {sha[:12]} in {parent}; change is {ROOT}", flush=True)
+        added, deleted = src_main_lines(sha)
+        print(f"parent {sha[:12]} in {parent}; change is {ROOT}\n"
+              f"src/main against the parent: +{added} -{deleted} lines, "
+              f"net {added - deleted:+d}", flush=True)
         results = [(w, pairs_for(w, parent, args)) for w in workloads]
     finally:
         if not args.workdir:
