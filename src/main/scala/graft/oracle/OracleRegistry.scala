@@ -158,7 +158,6 @@ final class OracleRegistry {
         case js: graft.oracle.js.JsOracle.Compiled =>
           decodeArgs(oracle, jsonArgs)
             .flatMap(graft.oracle.js.JsOracle.runDistributed(id, js, store, _))
-            .flatMap(graft.oracle.Merge.toWire)
         case _ => run(id, store, jsonArgs)
       }
     }

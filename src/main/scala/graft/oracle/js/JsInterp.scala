@@ -1043,9 +1043,13 @@ object JsInterp {
     case o => toNum(toPrimitive(o))
   }
 
+  /** ES5 9.5 ToInt32: the integer part modulo 2^32, as a signed int. The
+    * remainder by 2^32 is exact, so magnitudes past 2^63 wrap instead of
+    * saturating in `toLong`.
+    */
   def toInt32(v: JsVal): Int = {
     val d = toNum(v)
-    if (d.isNaN || d.isInfinite) 0 else d.toLong.toInt
+    if (d.isNaN || d.isInfinite) 0 else (d % 4294967296.0).toLong.toInt
   }
 
   /** JS number formatting: integral doubles print without a decimal

@@ -204,7 +204,8 @@ object JsOracle {
     * each Spark partition is a "node" whose `records` host exposes only
     * that partition's records, the interpreter runs the entry there, its
     * JSON partial (or error) returns to the driver, and the partials fold
-    * through the stored `merge*` hook or the default tri-state merger.
+    * through the stored `merge*` hook or the default tri-state merger into
+    * the result's wire JSON.
     * The driver-pull cap does NOT bound this path — a partition
     * materializes only inside its executor task, never on the driver;
     * only the compact JSON partial travels back.
@@ -215,7 +216,7 @@ object JsOracle {
     * `c` is the program the registry compiled; nothing is parsed here.
     */
   def runDistributed(id: Long, c: Compiled, store: RecordStore,
-      args: Seq[JValue]): Either[String, JValue] = {
+      args: Seq[JValue]): Either[String, String] = {
     val argVals: Seq[JValue] =
       c.params.indices.map(i => args.lift(i).getOrElse(JNull))
     val spark = store.records.sparkSession
@@ -283,11 +284,7 @@ object JsOracle {
       Left("Errors from nodes: [" +
         errors.map(m => s"error while running oracle $id: $m")
           .mkString(", ") + "]")
-    else {
-      val vals = partials.map { case (_, s) =>
-        org.json4s.jackson.JsonMethods.parse(s) }
-      graft.oracle.Merge.merge(vals, buildMerger(c))
-    }
+    else graft.oracle.Merge.merge(partials.map(_._2), buildMerger(c)).joinRight
   }
 
   // ----------------------------------------------------------- host: ctx

@@ -2,7 +2,6 @@ package graft.service
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.json4s.JValue
 import org.slf4j.LoggerFactory
 
 import graft.EngineInfo
@@ -176,41 +175,28 @@ final class SumFederation(
 
   /** Fan-out workers (paralleliser.go): every per-node exchange in a
     * master op runs CONCURRENTLY — with N nodes a point read or a
-    * distributed Run costs one RTT, not N. Daemon cached pool: sized by
-    * the live fan-out, dies with the JVM. One deliberate delta: results
+    * distributed Run costs one RTT, not N. One deliberate delta: results
     * keep NODE ORDER (the reference appends in channel-arrival order),
     * so merges and error aggregates are deterministic — reference merge
-    * semantics never depend on arrival order.
+    * semantics never depend on arrival order. The pool is
+    * [[SumFederation.fanOutPool]]: an idle worker takes each exchange,
+    * and a worker starts only when none is idle.
     */
-  /** Bounded at 256 workers: exchanges are IO-bound, so at 1000 nodes a
-    * fan-out runs in ~4 RTT waves instead of spawning 1000 JVM threads
-    * (a goroutine is cheap; a platform thread is a megabyte of stack).
-    * No master op nests doParallel, so a bounded queue cannot deadlock.
-    */
-  private lazy val fanOutPool = {
-    // core==max with core-timeout: threads spawn on demand up to 256,
-    // queue beyond, and idle workers die after 30 s. (A core=0 pool over
-    // an unbounded queue would never grow past one thread — the
-    // ThreadPoolExecutor queue-before-grow rule.)
-    val ex = new java.util.concurrent.ThreadPoolExecutor(
-      256, 256, 30L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "fed-fanout"); t.setDaemon(true); t
-      })
-    ex.allowCoreThreadTimeOut(true)
-    ex
-  }
+  private lazy val fanOutPool = SumFederation.fanOutPool(SumFederation.MaxFanOut)
 
+  /** Live fan-out workers, busy or idle. */
+  private[graft] def fanOutWorkers: Int = fanOutPool.getPoolSize
+
+  /** `f` over every item, concurrently on the fan-out pool, in item
+    * order; a thrown `f` rethrows here.
+    */
   private def doParallel[A, T](items: Seq[A])(f: A => T): Seq[T] =
     if (items.lengthCompare(1) <= 0) items.map(f)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(fanOutPool)
-      Await.result(Future.sequence(items.map(a => Future(f(a)))),
-        Duration.Inf)
+    else items.map(a => fanOutPool.submit(new java.util.concurrent.Callable[T] {
+      def call(): T = f(a)
+    })).map { fut =>
+      try fut.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     }
 
   private val nodes = ArrayBuffer.empty[FedNode]
@@ -595,25 +581,34 @@ final class SumFederation(
     // (same name + same code or body).
     val temp = form.copy(name = s"${oracle.name}#run${runSeq.incrementAndGet()}")
     val outcomes = doParallel(listNodes())(runOnNode(_, temp, args))
-    val errs = outcomes.collect { case Left(m) => m }
-    if (errs.nonEmpty)
-      return CallResponse(success = false,
-        s"Errors from nodes: [${errs.mkString(", ")}]", None)
-    Merge.merge(outcomes.collect { case Right(v) => v }, oracle.merger) match {
-      case Left(msg) => CallResponse(success = false,
+    val merged =
+      if (outcomes.exists(_.isLeft)) None
+      else try Some(Merge.merge(outcomes.collect { case Right(t) => t }, oracle.merger))
+      catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
+    merged match {
+      case None =>
+        // a payload that is not JSON is that node's worker exception
+        val errs = outcomes.flatMap {
+          case Left(m) => Some(m)
+          case Right(t) => Merge.notJson(t).map(m => s"Worker exception: $m")
+        }
+        CallResponse(success = false,
+          s"Errors from nodes: [${errs.mkString(", ")}]", None)
+      case Some(Left(msg)) => CallResponse(success = false,
         s"Unable to merge results from nodes: $msg", None)
-      case Right(v) => Merge.toWire(v).fold(CallResponse(success = false, _, None),
+      case Some(Right(wire)) => wire.fold(CallResponse(success = false, _, None),
         json => CallResponse(success = true, "", Some(Payload.buildString(json))))
     }
   }
 
   /** One node's share of a Run, one chain of exchanges: create the
-    * temporary, run it, delete it. A thrown exchange folds in as the
+    * temporary, run it, delete it; the node's result as the wire JSON text
+    * it sent, which [[run]] merges as text. A thrown exchange folds in as the
     * reference's "Worker exception"; the delete is best-effort like the
     * reference's deferred warn-and-continue cleanup (mux_runner.go:94-101).
     */
   private def runOnNode(n: FedNode, temp: Oracle,
-      args: Seq[String]): Either[String, JValue] = {
+      args: Seq[String]): Either[String, String] = {
     val created =
       try n.engine.createOracle(temp)
       catch { case e: Exception => return Left(s"Worker exception: ${e.getMessage}") }
@@ -625,8 +620,7 @@ final class SumFederation(
       if (!resp.success) Left(resp.msg)
       else resp.data match {
         case None => Left(s"node ${n.id} returned an empty payload")
-        case Some(env) =>
-          Right(org.json4s.jackson.JsonMethods.parse(Payload.openString(env)))
+        case Some(env) => Right(Payload.openString(env))
       }
     } catch { case e: Exception =>
       Left(s"Worker exception: ${e.getMessage}")
@@ -652,15 +646,58 @@ object SumFederation {
     * (mux_runner.go:71 json.Marshal of the proto record): float data
     * widens to JSON numbers (exact — binary widening, and the node's
     * `records.New` narrows back with toFloat); meta strings JSON-escape
-    * through jackson, and the node's JSON decode restores them.
+    * through the one Jackson generator that writes the record, and the
+    * node's JSON decode restores them.
     */
   private[graft] def recordJson(r: SumRecord): String = {
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods.{compact, render}
-    compact(render(
-      ("id" -> r.id) ~
-        ("data" -> r.data.toList.map(_.toDouble)) ~
-        ("shape" -> r.shape.toList) ~
-        ("meta" -> r.meta)))
+    val w = new java.io.StringWriter(16 * r.data.length + 64)
+    val g = Merge.json.createGenerator(w)
+    g.writeStartObject()
+    g.writeNumberField("id", r.id)
+    g.writeArrayFieldStart("data")
+    r.data.foreach(f => g.writeNumber(f.toDouble))
+    g.writeEndArray()
+    g.writeArrayFieldStart("shape")
+    r.shape.foreach(l => g.writeNumber(l))
+    g.writeEndArray()
+    g.writeObjectFieldStart("meta")
+    r.meta.foreach { case (k, v) => g.writeStringField(k, v) }
+    g.writeEndObject()
+    g.writeEndObject()
+    g.close()
+    w.toString
+  }
+
+  /** Most fan-out workers alive at once: exchanges are IO-bound, so at
+    * 1000 nodes a fan-out runs in ~4 RTT waves instead of spawning 1000
+    * JVM threads (a goroutine is cheap; a platform thread is a megabyte
+    * of stack).
+    */
+  private val MaxFanOut = 256
+
+  /** Offers succeed only by handing the task straight to an idle worker,
+    * so the executor starts a worker when none is idle; `enqueue` is the
+    * plain FIFO offer.
+    */
+  private final class HandOffQueue extends java.util.concurrent.LinkedTransferQueue[Runnable] {
+    override def offer(r: Runnable): Boolean = tryTransfer(r)
+    def enqueue(r: Runnable): Unit = { super.offer(r); () }
+  }
+
+  /** A fan-out pool of at most `maxWorkers` daemon workers. A task goes
+    * to an idle worker if there is one; otherwise a new worker starts, up
+    * to `maxWorkers`; past that the task waits in FIFO order for the next
+    * free worker — never rejected, never run on the caller. A worker idle
+    * for 30 s exits. No master op nests doParallel, so a task never
+    * waits on a task queued behind it and the queue cannot deadlock.
+    */
+  private[service] def fanOutPool(maxWorkers: Int): java.util.concurrent.ThreadPoolExecutor = {
+    val queue = new HandOffQueue
+    new java.util.concurrent.ThreadPoolExecutor(
+      0, maxWorkers, 30L, java.util.concurrent.TimeUnit.SECONDS, queue,
+      (r: Runnable) => {
+        val t = new Thread(r, "fed-fanout"); t.setDaemon(true); t
+      },
+      (r: Runnable, _: java.util.concurrent.ThreadPoolExecutor) => queue.enqueue(r))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 import graft.functions.vector
 import graft.model.SumRecord
@@ -22,6 +23,9 @@ class DistributionSpec extends SparkSpec {
         Map("name" -> s"rec$i"))
     })
 
+  /** A partial as a node sends it: its wire JSON. */
+  private def wire(v: JValue): String = Merge.toWire(v).fold(m => fail(m), identity)
+
   /** The program the registry would hold for `code`. */
   private def compiled(code: String): JsOracle.Compiled =
     JsOracle.compile("t", code).map(_.body) match {
@@ -32,7 +36,6 @@ class DistributionSpec extends SparkSpec {
   test("stored-JS oracle runs distributed: entry partials are produced ON " +
       "executors, folded by mergeNodesResults (master/mux_runner.go:82-155)") {
     import graft.oracle.OracleRegistry
-    import org.json4s.jackson.JsonMethods
     val store = RecordStore.fromRecords(spark, (1 to 500).map { i =>
       SumRecord(i.toLong, Array(1f, 2f, 3f), Map("name" -> s"rec$i"))
     }).repartitioned(8)
@@ -218,8 +221,8 @@ function outOfRange() {
         id.toString -> (JDouble(sim): JValue) }.toList))
 
     // Gather: default map-union merge.
-    val merged = Merge.defaultMerger(partials).toOption.get.asInstanceOf[JObject]
-      .obj.toMap.map { case (k, JDouble(d)) => k -> d; case (k, _) => k -> 0.0 }
+    val merged = JsonMethods.parse(Merge.defaultMerger(partials.map(wire)).toOption.get)
+      .asInstanceOf[JObject].obj.toMap.map { case (k, JDouble(d)) => k -> d; case (k, _) => k -> 0.0 }
 
     assert(merged.keySet === whole.keySet)
     merged.foreach { case (k, v) => assert(math.abs(v - whole(k)) < 1e-9) }
@@ -317,7 +320,8 @@ function outOfRange() {
     try {
       // JS Math.round is floor(x + 0.5)
       val want = keyedSums(store)(r => Seq(1.0, math.floor(r.data(0).toDouble * 100 + 0.5)))
-      assert(JsOracle.runDistributed(1, compiled(code), store, Nil) === Right(want))
+      assert(JsOracle.runDistributed(1, compiled(code), store, Nil)
+        .map(JsonMethods.parse(_)) === Right(want))
     } finally store.close()
   }
 
@@ -340,7 +344,8 @@ function outOfRange() {
         if (r.data(0).toDouble > 5) 1.0 else 0.0,
         math.floor(r.data(1).toDouble / 2),
         math.min(r.data.length, 2).toDouble))
-      assert(JsOracle.runDistributed(1, compiled(code), store, Nil) === Right(want))
+      assert(JsOracle.runDistributed(1, compiled(code), store, Nil)
+        .map(JsonMethods.parse(_)) === Right(want))
     } finally store.close()
   }
 
@@ -401,9 +406,10 @@ function outOfRange() {
       .mapPartitions(it => Iterator.single(it.map(_.id).toList))
       .collect().toSeq
       .map(ids => JArray(ids.map(id => JLong(id): JValue)))
-    val merged = Merge.defaultMerger(partials).toOption.get.asInstanceOf[JArray]
+    val merged = JsonMethods.parse(Merge.defaultMerger(partials.map(wire)).toOption.get)
+      .asInstanceOf[JArray]
     assert(merged.arr.size === 32)
-    assert(merged.arr.collect { case JLong(l) => l }.toSet === (1L to 32L).toSet)
+    assert(merged.arr.collect { case JInt(l) => l.toLong }.toSet === (1L to 32L).toSet)
   }
 
   test("EngineInfo reports counts like Service.Info") {

@@ -54,11 +54,10 @@ class OracleSpec extends SparkSpec {
   }
 
   test("sumAllVectors merger folds partials element-wise") {
-    val parts = Seq(
-      JArray(List(JDouble(1.0), JDouble(2.0))),
-      JArray(List(JDouble(3.0), JDouble(4.0))))
+    val parts = Seq("[1.0,2.0]", "[3.0,4.0]")
     val merged = graft.oracle.Merge.merge(parts, CanonicalOracles.sumAllVectors.merger)
-    assert(merged === Right(JArray(List(JDouble(4.0), JDouble(6.0)))))
+    assert(merged.map(_.map(JsonMethods.parse(_))) ===
+      Right(Right(JArray(List(JDouble(4.0), JDouble(6.0))))))
   }
 
   test("mapOfRecordNames builds the id->name map") {
@@ -70,36 +69,122 @@ class OracleSpec extends SparkSpec {
   }
 
   test("default merge: maps union; duplicate key conflicts (mux_runner.go:216)") {
-    val ok = graft.oracle.Merge.defaultMerger(Seq(
-      JObject(List("a" -> JInt(1))), JObject(List("b" -> JInt(2)))))
-    assert(ok === Right(JObject(List("a" -> JInt(1), "b" -> JInt(2)))))
-    val conflict = graft.oracle.Merge.defaultMerger(Seq(
-      JObject(List("a" -> JInt(1))), JObject(List("a" -> JInt(2)))))
+    val ok = graft.oracle.Merge.defaultMerger(Seq("""{"a":1}""", """{"b":2}"""))
+    assert(ok === Right("""{"a":1,"b":2}"""))
+    val conflict = graft.oracle.Merge.defaultMerger(Seq("""{"a":1}""", """{"a":2}"""))
     assert(conflict ===
       Left("merge conflict: multiple results define key a: oldValue='1', newValue='2'"))
   }
 
   test("default merge: arrays concatenate") {
-    val merged = graft.oracle.Merge.defaultMerger(Seq(
-      JArray(List(JInt(1))), JArray(List(JInt(2), JInt(3)))))
-    assert(merged === Right(JArray(List(JInt(1), JInt(2), JInt(3)))))
+    val merged = graft.oracle.Merge.defaultMerger(Seq("[1]", "[2,3]"))
+    assert(merged === Right("[1,2,3]"))
   }
 
   test("default merge: heterogeneous types error (mux_runner.go:205)") {
-    val bad = graft.oracle.Merge.defaultMerger(Seq(JObject(Nil), JArray(Nil)))
+    val bad = graft.oracle.Merge.defaultMerger(Seq("{}", "[]"))
     assert(bad === Left(
       "heterogeneous results: prior results had type map, this one has type array"))
   }
 
   test("default merge: scalars demand a custom merger (mux_runner.go:230)") {
-    val bad = graft.oracle.Merge.defaultMerger(Seq(JInt(1), JInt(2)))
+    val bad = graft.oracle.Merge.defaultMerger(Seq("1", "2"))
     assert(bad ===
       Left("type number is not supported for auto-merge, please provide a custom merge function"))
   }
 
+  /** The tree merge the text merger replaced, kept as the parity model:
+    * parse every partial, union or concatenate the trees, render.
+    */
+  private def treeMerge(results: Seq[JValue]): Either[String, JValue] = {
+    def typeName(v: JValue): String = v match {
+      case _: JObject => "map"
+      case _: JArray  => "array"
+      case _: JString => "string"
+      case _: JBool   => "bool"
+      case JNull      => "null"
+      case _          => "number"
+    }
+    def shown(v: JValue): String = v match {
+      case JString(s)  => s
+      case JInt(i)     => i.toString
+      case JDouble(d)  => d.toString
+      case JBool(b)    => b.toString
+      case JNull       => "null"
+      case other       => JsonMethods.compact(JsonMethods.render(other))
+    }
+    if (results.isEmpty) return Right(JNull)
+    val t0 = typeName(results.head)
+    results.find(r => typeName(r) != t0).foreach { bad =>
+      return Left(s"heterogeneous results: prior results had type $t0, " +
+        s"this one has type ${typeName(bad)}")
+    }
+    results.head match {
+      case _: JObject =>
+        val acc = scala.collection.mutable.LinkedHashMap.empty[String, JValue]
+        for (JObject(fields) <- results; (k, v) <- fields) {
+          acc.get(k) match {
+            case Some(v1) =>
+              return Left("merge conflict: multiple results define key " +
+                s"$k: oldValue='${shown(v1)}', newValue='${shown(v)}'")
+            case None => acc(k) = v
+          }
+        }
+        Right(JObject(acc.toList))
+      case _: JArray =>
+        Right(JArray(results.flatMap { case JArray(xs) => xs; case _ => Nil }.toList))
+      case other =>
+        Left(s"type ${typeName(other)} is not supported for auto-merge, " +
+          "please provide a custom merge function")
+    }
+  }
+
+  test("the text merger answers what parse, tree merge and render answer, keys sorted") {
+    val rnd = new scala.util.Random(17)
+    val texts = Vector("", "a", "Z", "é", "ключ", "日本語", "\uD83D\uDE00x", "q\"uote",
+      "back\\slash", "nl\n", "tab\t", "ctl\u0001", "</tag>", "\u2028", "k1", "k10", "k2")
+    def num(): JValue = rnd.nextInt(6) match {
+      case 0 => JInt(rnd.nextInt(2001) - 1000)
+      case 1 => JInt(BigInt(2).pow(53) + rnd.nextInt(1000))
+      case 2 => JInt(-BigInt(2).pow(64) - rnd.nextInt(1000))
+      case 3 => JDouble((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(40) - 20))
+      case 4 => JDouble(math.pow(10, 16 + rnd.nextInt(8)) + rnd.nextInt(9) * 1e15)
+      case _ => JLong(rnd.nextLong())
+    }
+    def key(space: Int): String =
+      if (rnd.nextInt(4) == 0) texts(rnd.nextInt(texts.size)) else s"k${rnd.nextInt(space)}"
+    def value(depth: Int): JValue = rnd.nextInt(if (depth > 2) 4 else 6) match {
+      case 0 => num()
+      case 1 => JString(texts(rnd.nextInt(texts.size)))
+      case 2 => JBool(rnd.nextBoolean())
+      case 3 => JNull
+      case 4 => JArray(List.fill(rnd.nextInt(4))(value(depth + 1)))
+      case _ => obj(depth + 1, 3)
+    }
+    def obj(depth: Int, space: Int): JObject =
+      JObject(List.fill(rnd.nextInt(5))(key(space) -> value(depth)))
+    val outcomes = (1 to 600).map { _ =>
+      val space = Seq(4, 60, 100000)(rnd.nextInt(3))
+      val parts = Seq.fill(1 + rnd.nextInt(4))(rnd.nextInt(10) match {
+        case k if k < 6 => obj(0, space)
+        case k if k < 9 => JArray(List.fill(rnd.nextInt(4))(value(0)))
+        case _ => value(0)
+      })
+      val wire = parts.map(p => graft.oracle.Merge.toWire(p).fold(m => fail(m), w => w))
+      val want = treeMerge(wire.map(w => JsonMethods.parse(w))).flatMap {
+        case JObject(fs) => graft.oracle.Merge.toWire(JObject(fs.sortBy(_._1)))
+        case v => graft.oracle.Merge.toWire(v)
+      }
+      assert(graft.oracle.Merge.defaultMerger(wire) === want, wire.mkString("partials: ", " | ", ""))
+      want.isRight
+    }
+    // the seeded sets reach both merged results and every error kind
+    assert(outcomes.count(ok => ok) > 100 && outcomes.count(ok => !ok) > 100)
+  }
+
   test("user merger failure is reported (mux_runner.go:159-192)") {
     val boom: Seq[JValue] => JValue = _ => throw new RuntimeException("nope")
-    val r = graft.oracle.Merge.merge(Seq(JInt(1)), Some(boom))
+    val r = graft.oracle.Merge.merge(Seq("1"), Some(boom))
     assert(r === Left("merger function failed: nope"))
   }
 

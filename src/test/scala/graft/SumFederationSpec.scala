@@ -13,6 +13,20 @@ import graft.service.{CallResponse, FindResponse, LocalEngine, NodeEngine,
   */
 class SumFederationSpec extends SparkSpec {
 
+  /** The reference's canonical findSimilar oracle. */
+  private val findSimilar =
+    """function findSimilar(id, threshold) {
+      |  var v = records.Find(id);
+      |  if (v.IsNull()) { return ctx.Error('Vector ' + id + ' not found.'); }
+      |  var all = records.AllBut(v);
+      |  var results = {};
+      |  for (var i = 0; i < all.length; i++) {
+      |    var s = v.Cosine(all[i]);
+      |    if (s >= threshold) results['' + all[i].ID] = s;
+      |  }
+      |  return results;
+      |}""".stripMargin
+
   private def engineWith(ids: Range): SumService = {
     val svc = SumService(spark)
     assert(svc.createRecordsWithId(ids.map(i =>
@@ -130,18 +144,7 @@ class SumFederationSpec extends SparkSpec {
     // lives on exactly ONE node, so without master-side resolution +
     // PatchCode every other node sees a null record and errors out
     // (master/mux_runner.go:49-79, master/ast_raccoon.go:94-149)
-    val code =
-      """function findSimilar(id, threshold) {
-        |  var v = records.Find(id);
-        |  if (v.IsNull()) { return ctx.Error('Vector ' + id + ' not found.'); }
-        |  var all = records.AllBut(v);
-        |  var results = {};
-        |  for (var i = 0; i < all.length; i++) {
-        |    var s = v.Cosine(all[i]);
-        |    if (s >= threshold) results['' + all[i].ID] = s;
-        |  }
-        |  return results;
-        |}""".stripMargin
+    val code = findSimilar
     val oracle = fed.oracles.createJs("findSimilar", code)
       .fold(m => fail(s"compile failed: $m"), identity)
     val resp = fed.run(oracle.id, Seq("42", "0.0"))
@@ -169,6 +172,63 @@ class SumFederationSpec extends SparkSpec {
     assert(!bad.success)
     assert(bad.msg.startsWith("Unable to parse record id form parameter #0"),
       bad.msg)
+  }
+
+  test("a default-merged map answers the bytes of one engine holding every record") {
+    val fed = new SumFederation
+    fed.addNode("a", engineWith(1 to 30))
+    fed.addNode("b", SumService(spark))
+    fed.addNode("c", SumService(spark))
+    // the balance leaves each node a run of ids out of String order
+    assert(fed.listNodes().map(_.records) === Seq(10L, 10L, 10L))
+    val one = engineWith(1 to 30)
+    val args = Seq("7", "0.0")
+    def answer(resp: CallResponse): String = {
+      assert(resp.success, resp.msg)
+      Payload.openString(resp.data.get)
+    }
+    val fedOracle = fed.oracles.createJs("findSimilar", findSimilar)
+      .fold(m => fail(s"compile failed: $m"), identity)
+    val oneOracle = one.oracles.createJs("findSimilar", findSimilar)
+      .fold(m => fail(s"compile failed: $m"), identity)
+    val whole = answer(one.run(oneOracle.id, args))
+    assert(whole.startsWith("""{"1":""") && whole.contains(""","10":"""))
+    assert(answer(fed.run(fedOracle.id, args)) === whole)
+  }
+
+  test("sequential fan-outs reuse idle workers instead of starting new ones") {
+    val fed = new SumFederation
+    fed.addNode("a", engineWith(1 to 30))
+    fed.addNode("b", SumService(spark))
+    fed.addNode("c", SumService(spark))
+    (1 to 100).foreach(i => assert(fed.readRecord(i % 30 + 1L).success))
+    // three exchanges per read, plus slack for a worker that is not yet
+    // back in its queue poll when the next read arrives
+    assert(fed.fanOutWorkers <= 8, s"${fed.fanOutWorkers} live fan-out workers")
+  }
+
+  test("a fan-out pool past its bound queues tasks in order and never exceeds the bound") {
+    import java.util.concurrent.{Callable, CountDownLatch, TimeUnit}
+    val pool = service.FanOutPools.make(2)
+    try {
+      val release = new CountDownLatch(1)
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val tasks = (1 to 6).map(i => pool.submit(new Callable[Int] {
+        def call(): Int = {
+          started.incrementAndGet()
+          assert(release.await(20, TimeUnit.SECONDS))
+          i
+        }
+      }))
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(20)
+      while (started.get < 2 && System.nanoTime() < deadline) Thread.sleep(5)
+      // two run; the other four wait in submission order
+      assert(started.get === 2)
+      assert(pool.getQueue.toArray.toSeq === tasks.drop(2))
+      release.countDown()
+      assert(tasks.map(_.get(20, TimeUnit.SECONDS)) === (1 to 6))
+      assert(pool.getLargestPoolSize <= 2)
+    } finally pool.shutdownNow()
   }
 
   test("a helper declared before the entry does not hide the entry's record lookups") {
@@ -338,6 +398,23 @@ class SumFederationSpec extends SparkSpec {
     assert(!r2.success)
     assert(r2.msg.startsWith("Errors from nodes: ["), r2.msg)
     assert(r2.msg.contains("returned an empty payload"), r2.msg)
+
+    // node answers Run successfully with a payload that is not JSON: the
+    // node's worker exception, not a merge message, even where the other
+    // node's partial would conflict with what was read before the fault
+    val partials = Iterator("""{"a":1}""", "not json", """{"a":2,""")
+    val fed3 = new SumFederation
+    Seq("ok", "not-json", "cut-short").foreach { name =>
+      val payload = partials.next()
+      fed3.attach(name, new StubEngine("7",
+        _ => CallResponse(success = true, "", Some(Payload.buildString(payload)))))
+    }
+    val o3 = fed3.oracles.createJs("one", code)
+      .fold(m => fail(s"compile failed: $m"), identity)
+    val r3 = fed3.run(o3.id, Seq.empty)
+    assert(!r3.success)
+    assert(r3.msg.startsWith("Errors from nodes: [Worker exception: "), r3.msg)
+    assert(r3.msg.split("Worker exception: ").length === 3, r3.msg)
   }
 
   test("distributed Run scatters nodes CONCURRENTLY (paralleliser.go)") {
@@ -542,5 +619,13 @@ class SumFederationSpec extends SparkSpec {
     assert(after.map(_.records).sum === 121L)
     assert(after.map(_.records) === Seq(60L, 61L))
     assert(fed.deleteNode(99L).msg === "node 99 not found.")
+  }
+}
+
+package service {
+  /** The fan-out pool factory, for SumFederationSpec. */
+  private[graft] object FanOutPools {
+    def make(maxWorkers: Int): java.util.concurrent.ThreadPoolExecutor =
+      SumFederation.fanOutPool(maxWorkers)
   }
 }
